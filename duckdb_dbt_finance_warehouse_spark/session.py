@@ -23,6 +23,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+# Entries in Spark's JVM-wide cache of compiled generated classes
+# (static conf, default 100). A steady-state warehouse batch (ingest,
+# incremental build of the 13 models, the 48 declared tests) asks for
+# about 270 distinct classes, so at 100 entries the LRU has evicted each
+# one before the next batch asks for it again: every batch recompiles
+# 267 classes with Janino, and an identical no-op batch about 250. 1000
+# holds a batch's working set several times over, with room for the
+# set-up's and the suite's classes: measured on 4 cores with the
+# 200-account benchmark feed, 22-36 compiles per batch, and the memory
+# kept by the process rose 1.3% (533 -> 540 MiB).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
@@ -65,6 +78,7 @@ def get_spark(
             "-XX:ReservedCodeCacheSize=1g -XX:+UseCodeCacheFlushing",
         )
         .config("spark.ui.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # spark.sql.codegen.maxFields stays at its 100 default: the
         # 48-sum SimHash fingerprint (97 fields) runs interpreted, and
         # raising the cap to 200 DID make the isolated aggregate 1.8x
@@ -83,3 +97,20 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def engine_counters(spark: SparkSession) -> tuple[int, int]:
+    """(Spark jobs started, generated classes compiled) so far, read from
+    Spark's own bookkeeping: the highest job id in the status store,
+    which is kept with the UI disabled, after draining the listener bus,
+    and the JVM-wide count of Janino compiles — each one a miss of the
+    codegen cache. Take the difference of two readings around a call."""
+    jvm = spark._jvm
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().store().view(
+        jvm.java.lang.Class.forName("org.apache.spark.status.JobDataWrapper")
+    ).reverse().max(1).iterator()
+    started = int(jobs.next().info().jobId()) + 1 if jobs.hasNext() else 0
+    compiled = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return started, int(compiled.getCount())

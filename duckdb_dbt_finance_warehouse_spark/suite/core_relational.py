@@ -1551,11 +1551,17 @@ def a8_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (F.col("_cum") - F.col("_c") <= idx) & (idx < F.col("_cum"))
 
     hits = cum.filter(
-        price.isNotNull()
-        & (
-            _covers(0.5, F.floor) | _covers(0.5, F.ceil)
-            | _covers(0.9, F.floor) | _covers(0.9, F.ceil)
+        (
+            price.isNotNull()
+            & (
+                _covers(0.5, F.floor) | _covers(0.5, F.ceil)
+                | _covers(0.9, F.floor) | _covers(0.9, F.ceil)
+            )
         )
+        # a flag whose prices are all null keeps its one (null) value
+        # row, so it surfaces with null p50/p90 and its n, as
+        # percentile() and quantile_cont give
+        | (F.col("_n_nn") == 0)
     )
     picked = hits.groupBy("l_returnflag").agg(
         *[

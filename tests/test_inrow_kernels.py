@@ -135,3 +135,26 @@ def test_a8_percentiles_match_spark_percentile_aggregate(spark):
     assert set(old) == set(new)
     for flag in old:
         assert bits(old[flag]) == bits(new[flag]), flag
+
+
+def test_a8_percentiles_keep_an_all_null_group(spark, tmp_path):
+    """A flag group whose prices are all null surfaces with null p50/p90
+    and its row count, as ``percentile()`` and DuckDB's quantile_cont
+    give — it must not vanish from the output."""
+    from pyspark.sql import types as T
+
+    from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
+
+    schema = T.StructType(
+        [
+            T.StructField("l_returnflag", T.StringType()),
+            T.StructField("l_extendedprice", T.DoubleType()),
+        ]
+    )
+    rows = [("A", 1.0), ("A", 2.0), ("A", None), ("A", 4.0), ("N", None), ("N", None)]
+    spark.createDataFrame(rows, schema).write.parquet(str(tmp_path / "lineitem.parquet"))
+    got = {
+        r["l_returnflag"]: (r["p50"], r["p90"], r["n"])
+        for r in REGISTRY["a8_exact_percentiles"].fn(spark, str(tmp_path)).collect()
+    }
+    assert got == {"A": (2.0, 3.6, 4), "N": (None, None, 2)}

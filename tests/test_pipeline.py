@@ -15,6 +15,7 @@ import pytest
 
 from duckdb_dbt_finance_warehouse_spark.models import build_pipeline
 from duckdb_dbt_finance_warehouse_spark.plans import testing as tst
+from duckdb_dbt_finance_warehouse_spark.session import engine_counters
 from duckdb_dbt_finance_warehouse_spark.sources.csv import ingest_csv
 from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
@@ -219,6 +220,94 @@ def test_full_declared_matrix_after_three_batches(spark, wh):
         name: viol.count() for name, viol in checks.items() if viol.count() > 0
     }
     assert failures == {}
+
+
+def _tables(wh: Warehouse) -> list[tuple[str, str]]:
+    return [
+        (schema, table)
+        for schema in sorted(os.listdir(wh.root))
+        for table in sorted(os.listdir(os.path.join(wh.root, schema)))
+        if not table.startswith("_")
+    ]
+
+
+def _jobs(spark, fn):
+    """(fn's result, Spark jobs it started)."""
+    j0 = engine_counters(spark)[0]
+    out = fn()
+    return out, engine_counters(spark)[0] - j0
+
+
+def test_read_reuses_written_schema_and_frame(spark, tmp_path_factory):
+    """Warehouse.read passes the schema recorded at write time instead
+    of inferring it, and returns the same DataFrame while the table
+    directory is unchanged. The recorded schema must be the one
+    inference gives, after a full and after an incremental build, and a
+    table changed behind the warehouse's back must be inferred again."""
+    import shutil
+
+    from pyspark.sql import functions as F
+
+    w = Warehouse(spark, str(tmp_path_factory.mktemp("reuse_wh")))
+    tmpdir = str(tmp_path_factory.mktemp("csv"))
+    for batch, full in (("b1", True), ("b2", False)):
+        ingest_batch(w, tmpdir, batch)
+        build_pipeline().run(spark, w, variables=VARS, full_refresh=full)
+        tables = _tables(w)
+        assert len(tables) == 14
+        for s, t in tables:
+            assert w.read(s, t).schema == spark.read.parquet(w.path(s, t)).schema, (batch, s, t)
+            again, jobs = _jobs(spark, lambda: w.read(s, t))
+            assert again is w.read(s, t) and jobs == 0, (batch, s, t, jobs)
+
+    # a plain Spark append into a partitioned fact table, new month
+    fsm = w.read("mart", "fct_subscription_month")
+    n = fsm.count()
+    row = fsm.orderBy("subscription_id", "month_start_date").limit(1)
+    extra = spark.createDataFrame(row.collect(), row.schema).withColumn(
+        "month_start_date", F.lit(date(2030, 1, 1))
+    )
+    extra.write.mode("append").partitionBy("month_start_date").parquet(
+        w.path("mart", "fct_subscription_month")
+    )
+    grown, jobs = _jobs(spark, lambda: w.read("mart", "fct_subscription_month"))
+    assert grown is not fsm and jobs >= 1  # inferred, not reused
+    assert grown.count() == n + 1
+    assert grown.filter(F.col("month_start_date") == date(2030, 1, 1)).count() == 1
+
+    # another directory swapped in under the table's name
+    dd = w.read("mart", "dim_date")
+    n = dd.count()
+    swap = str(tmp_path_factory.mktemp("swap") / "dim_date")
+    spark.createDataFrame(dd.collect() * 2, dd.schema).write.parquet(swap)
+    old = str(tmp_path_factory.mktemp("old") / "dim_date")
+    os.rename(w.path("mart", "dim_date"), old)
+    shutil.move(swap, w.path("mart", "dim_date"))
+    swapped, jobs = _jobs(spark, lambda: w.read("mart", "dim_date"))
+    assert swapped is not dd and jobs >= 1
+    assert swapped.count() == 2 * n
+
+
+def test_repeated_batch_reuses_generated_classes(spark, tmp_path_factory):
+    """A steady-state batch must find its generated classes in Spark's
+    codegen cache: the same no-op incremental build plus the 48 declared
+    tests, run twice, compiles almost nothing the second time. With
+    Spark's default 100-entry cache the second run recompiles about 250
+    classes."""
+    w = Warehouse(spark, str(tmp_path_factory.mktemp("codegen_wh")))
+    ingest_batch(w, str(tmp_path_factory.mktemp("csv")), "b1")
+    build_pipeline().run(spark, w, variables=VARS, full_refresh=True)
+
+    def batch() -> int:
+        c0 = engine_counters(spark)[1]
+        build_pipeline().run(spark, w, variables=VARS, full_refresh=False)
+        checks = tst.declared_reference_tests(w)
+        assert len(checks) == 48
+        assert {k: v.count() for k, v in checks.items() if v.count()} == {}
+        return engine_counters(spark)[1] - c0
+
+    first, second = batch(), batch()
+    assert second <= 40, (first, second)
 
 
 def test_dag_listing_is_topological():

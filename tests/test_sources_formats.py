@@ -98,3 +98,39 @@ def test_jsonl_ingest_quarantines_corrupt_lines(spark, tmp_path):
     ingest_jsonl(wh, str(p), "documents", DOCUMENT_SCHEMA, mode="append")
     assert wh.read("raw", "documents").count() == 4
     assert wh.read("raw", "documents__quarantine").count() == 6
+
+
+def test_load_testdata_reuses_schema_until_the_file_changes(spark, tmp_path):
+    """The second load of an unchanged file passes the schema inferred
+    the first time (no Spark job); a file replaced under the same name
+    is inferred again and its new rows and columns are visible."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from duckdb_dbt_finance_warehouse_spark.session import engine_counters
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["AFRICA", "AMERICA"]}), path)
+
+    def load():
+        j0 = engine_counters(spark)[0]
+        df = load_testdata(spark, str(tmp_path), "region")["region"]
+        return df, engine_counters(spark)[0] - j0
+
+    first, jobs = load()
+    assert jobs >= 1 and first.count() == 2
+    again, jobs = load()
+    assert jobs == 0 and again.schema == first.schema and again.count() == 2
+
+    nxt = str(tmp_path / "next.parquet")
+    pq.write_table(
+        pa.table({"r_regionkey": [0, 1, 2], "r_name": ["A", "B", "C"], "r_comment": ["x"] * 3}),
+        nxt,
+    )
+    os.replace(nxt, path)
+    changed, jobs = load()
+    assert jobs >= 1
+    assert changed.columns == ["r_regionkey", "r_name", "r_comment"]
+    assert changed.count() == 3
