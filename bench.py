@@ -22,13 +22,13 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from duckdb_dbt_finance_warehouse_spark.operators.dedup import (
-    release_persisted,
-    reset_stored_state,
-)
 from duckdb_dbt_finance_warehouse_spark.session import (
     default_parallelism,
     get_spark,
+)
+from duckdb_dbt_finance_warehouse_spark.state import (
+    release_persisted,
+    reset_stored_state,
 )
 from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
 
@@ -210,7 +210,7 @@ MEDIAN3_ALWAYS = {
 # is a WARM serving read — the documented stored-state credit. The cold
 # build cost (first construction with every memo empty) was invisible in
 # r13's numbers (r13 VERDICT #1); the ``build`` map below times it
-# explicitly — reset_stored_state() empties every PlanMemo/ModelMemo,
+# explicitly — reset_stored_state() empties every state.stored memo,
 # then one timed construction+execution pays the full build. The
 # headline and micro maps are unchanged and stay comparable across
 # rounds; ``build`` is additive telemetry.

@@ -33,6 +33,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import stored
 from .dedup import normalize_text, spread_input
 
 END_MARKER = "</w>"
@@ -68,35 +69,30 @@ def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-# memoized stored merge tables (dedup.PlanMemo — the frozen-model
-# lifecycle: ANN index frames, bloom words frames, the bigram LM, and
-# this).  A tokenizer's merge table is trained ONCE and then ships with
-# the model; every consumer (the encode pass, fertility audits, vocab
+# stored merge tables (state.stored — the frozen-model lifecycle: ANN
+# index frames, bloom words frames, the bigram LM, and this).  A
+# tokenizer's merge table is trained ONCE and then ships with the
+# model; every consumer (the encode pass, fertility audits, vocab
 # coverage) reads the same frozen artifact.  Rebuilding the 5-round
 # training chain per consumer mis-models that lifecycle — the r12
 # verdict's m2-recomputes-m1 finding, applied to the BPE family
 # (x_bpe_segment paid the full training run inline).
-_MERGE_FRAMES = None
 
 
 def bpe_merge_frame(df: DataFrame, text_col: str, n_merges: int = 5) -> DataFrame:
     """The learned merge table as STORED state: persisted and memoized
-    by corpus-plan semantics (``dedup.PlanMemo``).  First construction
+    by corpus-plan semantics (``state.stored``).  First construction
     runs the training rounds (each round's localCheckpoint executes its
     stages at call time); repeat constructions over the same corpus
     plan return the already-trained frame — the honest model for a
     frozen tokenizer artifact, identical to ``lsh_index_frame`` /
     ``bigram_lm_frame``."""
-    from .dedup import PlanMemo
-
-    global _MERGE_FRAMES
-    if _MERGE_FRAMES is None:
-        _MERGE_FRAMES = PlanMemo()
-    key = (text_col, n_merges, "bpe_merges")
-    hit = _MERGE_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
-    return _MERGE_FRAMES.put(df, key, _bpe_train_rounds(df, text_col, n_merges))
+    return stored(
+        "bpe.merges",
+        df,
+        (text_col, n_merges, "bpe_merges"),
+        lambda: _bpe_train_rounds(df, text_col, n_merges),
+    )
 
 
 def bpe_train(df: DataFrame, text_col: str, n_merges: int = 5) -> DataFrame:
@@ -182,15 +178,17 @@ def bpe_train_batched(
         )
     # same frozen-model lifecycle as bpe_merge_frame — the batched
     # trainer produces the same shipped artifact, keyed on its params
-    from .dedup import PlanMemo
+    return stored(
+        "bpe.merges",
+        df,
+        (text_col, n_rounds, batch, overfetch, "bpe_merges_batched"),
+        lambda: _bpe_train_batched_rounds(df, text_col, n_rounds, batch, overfetch),
+    )
 
-    global _MERGE_FRAMES
-    if _MERGE_FRAMES is None:
-        _MERGE_FRAMES = PlanMemo()
-    key = (text_col, n_rounds, batch, overfetch, "bpe_merges_batched")
-    hit = _MERGE_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
+
+def _bpe_train_batched_rounds(
+    df: DataFrame, text_col: str, n_rounds: int, batch: int, overfetch: int
+) -> DataFrame:
     top_c = overfetch * batch
     greedy = (
         "aggregate(_cands, named_struct("
@@ -263,15 +261,13 @@ def bpe_train_batched(
                 )
             )
         ).select("word", "wc", F.expr(batch_fold).alias("syms"))
-    out = reduce(DataFrame.unionByName, merges)
-    out = out.select(
+    return reduce(DataFrame.unionByName, merges).select(
         "merge_round",
         "lhs",
         "rhs",
         F.concat("lhs", "rhs").alias("merged"),
         "pair_count",
     )
-    return _MERGE_FRAMES.put(df, key, out)
 
 
 def bpe_segment(

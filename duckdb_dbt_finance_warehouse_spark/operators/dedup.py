@@ -24,152 +24,8 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-# Persisted signature frames, registered so callers can release them:
-# signatures are deliberately cached (referenced 3x per pipeline — band
-# explode + both verify-join sides), but the cache outlives the returned
-# plan, so long-lived sessions (bench loops, notebooks) should call
-# ``release_persisted()`` after consuming results.
-_PERSISTED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _PERSISTED.append(df)
-    return df
-
-
-def release_persisted() -> None:
-    """Unpersist every signature cache created by the minhash pipelines —
-    call after the returned DataFrames have been consumed."""
-    while _PERSISTED:
-        _PERSISTED.pop().unpersist()
-
-
-def reset_stored_state() -> None:
-    """Drop EVERY memoized stored frame and frozen model (all PlanMemo /
-    ModelMemo instances across operator modules) and unpersist their
-    blocks — the next build over any input is a true first construction.
-
-    This is measurement infrastructure (bench.py's cold ``build`` map),
-    not part of the stored-state lifecycle: production state lives for
-    the session, and ``release_persisted()`` (block drop, memo kept) is
-    the between-queries housekeeping call."""
-    release_persisted()
-    for memo in PlanMemo._ALL:
-        memo.clear()
-
-
-class PlanMemo:
-    """(input-plan semantics, params) -> persisted frame memo — the
-    STORED-state lifecycle shared by the Bloom words frame, the LSH
-    bucket index, and the bigram-LM table: an Arrow/HOF build plan
-    embeds a fresh closure per construction, so two invocations over
-    the same input never cache-match in CacheManager; memoizing the
-    DataFrame object itself (keyed on ``sameSemantics`` of the input
-    plan + the build parameters) restores the dedup CacheManager does
-    for pure-Column plans.
-
-    LRU-capped (r12 ADVICE: an unbounded memo pays one sameSemantics
-    py4j round-trip per stored entry per miss and pins plans for the
-    process lifetime — a long-lived session building state over many
-    distinct inputs degrades linearly and leaks driver references).
-    Hits move to MRU; past ``cap`` the oldest entry is dropped and its
-    frame unpersisted (a consumer still holding an evicted frame just
-    recomputes — persist is a hint, never semantics)."""
-
-    # every live memo, in creation order — bench.py's cold-build
-    # telemetry resets ALL stored state through this registry so a
-    # "build" timing measures the first construction, not a memo hit
-    _ALL: list["PlanMemo"] = []
-
-    def __init__(self, cap: int = 8) -> None:
-        self.cap = cap
-        self._entries: list[tuple[DataFrame, tuple, DataFrame]] = []
-        PlanMemo._ALL.append(self)
-
-    def clear(self) -> None:
-        while self._entries:
-            _, _, old = self._entries.pop()
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # model value / stopped session — nothing to release
-
-    def get(self, df: DataFrame, key: tuple) -> DataFrame | None:
-        for stored_df, stored_key, frame in list(self._entries):
-            try:
-                # session identity guards the sameSemantics match: in a
-                # JVM hosting TWO live sessions (test fixtures next to a
-                # driver session) a plan from the other session can be
-                # semantically equal, but its frame is bound to that
-                # session — handing it across would serve dead state
-                # (r13 ADVICE).
-                same = (
-                    stored_key == key
-                    and stored_df.sparkSession is df.sparkSession
-                    and df.sameSemantics(stored_df)
-                )
-            except Exception:  # frame belongs to a stopped session
-                self._entries.remove((stored_df, stored_key, frame))
-                continue
-            if same:
-                # move to MRU; re-mark persist (release_persisted() may
-                # have dropped the blocks — persist on an already-cached
-                # plan is a no-op)
-                self._entries.remove((stored_df, stored_key, frame))
-                self._entries.append((stored_df, stored_key, frame))
-                return _persist(frame)
-        return None
-
-    def put(self, df: DataFrame, key: tuple, frame: DataFrame) -> DataFrame:
-        frame = _persist(frame)
-        self._entries.append((df, key, frame))
-        while len(self._entries) > self.cap:
-            _, _, old = self._entries.pop(0)
-            try:
-                old.unpersist()
-            except Exception:
-                pass  # stopped session — nothing to release
-        return frame
-
-
-class ModelMemo(PlanMemo):
-    """PlanMemo for DRIVER-SIDE model objects (collected centroids,
-    codebooks — KB-scale frozen artifacts): the same
-    (input-plan semantics, params) keying, but values are plain Python
-    state, so eviction is a list drop with no unpersist.  Training is
-    the build event of the frozen-model lifecycle; a trained model is
-    shipped state every consumer loads, not something each consumer
-    re-derives (the BPE merge-table argument applied to numeric
-    models).  Callers must treat returned models as immutable."""
-
-    def get(self, df: DataFrame, key: tuple):
-        for stored_df, stored_key, val in list(self._entries):
-            try:
-                # same session-identity guard as PlanMemo.get — a model
-                # value is session-free, but its key plan is not, and a
-                # cross-session sameSemantics hit would alias state the
-                # other session trained (r13 ADVICE)
-                same = (
-                    stored_key == key
-                    and stored_df.sparkSession is df.sparkSession
-                    and df.sameSemantics(stored_df)
-                )
-            except Exception:  # plan belongs to a stopped session
-                self._entries.remove((stored_df, stored_key, val))
-                continue
-            if same:
-                self._entries.remove((stored_df, stored_key, val))
-                self._entries.append((stored_df, stored_key, val))
-                return val
-        return None
-
-    def put(self, df: DataFrame, key: tuple, val):
-        self._entries.append((df, key, val))
-        while len(self._entries) > self.cap:
-            self._entries.pop(0)
-        return val
+# release_persisted stays importable from this module for existing callers
+from ..state import persist, release_persisted, stored  # noqa: F401
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -309,7 +165,7 @@ def minhash_lsh_dedup(
     shingle explode + 64-way min aggregation per reference triples the
     cost. At 100 TB signatures are ~0.1% of corpus size — materializing
     them is exactly what a production near-dup pass does."""
-    sigs = _persist(minhash_signatures(df, id_col, text_col, k, n_hashes))
+    sigs = persist(minhash_signatures(df, id_col, text_col, k, n_hashes))
     pairs = lsh_candidate_pairs(sigs, id_col, bands, n_hashes // bands)
     a = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
     b = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
@@ -389,6 +245,20 @@ def simhash(
     return agg.select(F.col(id_col), fp.alias("simhash"))
 
 
+_TOKEN_BLOCK = 65536  # tokens/shingles per numpy block in the in-row kernels
+
+
+def _require_unique_ids(ids, id_col: str) -> None:
+    """The in-row kernels emit one row per input row; the aggregate
+    forms they replace merge rows that share an id."""
+    if ids.duplicated().any():
+        raise ValueError(
+            f"in-row kernel: duplicate {id_col} values in one batch "
+            f"(e.g. {ids[ids.duplicated()].iloc[0]!r}); ids must be unique "
+            "per row — use in_row=False to merge duplicates"
+        )
+
+
 def _simhash_in_row(
     df: DataFrame, id_col: str, text_col: str, bits: int
 ) -> DataFrame:
@@ -397,7 +267,10 @@ def _simhash_in_row(
     the normalizer guarantees (both engines keep the empty token of an
     empty text — ``split`` with limit -1 and ``str.split(' ')`` agree);
     a null text emits no row, matching explode-of-null in the aggregate
-    form."""
+    form. Per-bit counts accumulate over ``_TOKEN_BLOCK``-token blocks,
+    so a document's working matrix is bounded. Raises on a duplicate
+    id within one Arrow batch (the aggregate form would merge those
+    rows); duplicates in different batches are not detected."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -418,6 +291,7 @@ def _simhash_in_row(
         from hashlib import md5
 
         for pdf in batches:
+            _require_unique_ids(pdf["_id"], id_col)
             ids, fps = [], []
             for id_, t in zip(pdf["_id"], pdf["_t"]):
                 if t is None:
@@ -430,7 +304,9 @@ def _simhash_in_row(
                     dtype=np.int64,
                 )
                 # ±1 sums per bit: sum over tokens of (2*bit - 1)
-                ones = ((th[:, None] >> shifts) & 1).sum(axis=0)
+                ones = np.zeros(bits, dtype=np.int64)
+                for s in range(0, th.size, _TOKEN_BLOCK):
+                    ones += ((th[s : s + _TOKEN_BLOCK, None] >> shifts) & 1).sum(axis=0)
                 pos = 2 * ones > th.size  # sum(+1/-1) > 0
                 fps.append(int((weights * pos).sum()))
                 ids.append(id_)
@@ -490,8 +366,9 @@ def portable_signatures(
     (pytest pins kernel == aggregate). Default (None) routes per-doc
     multiset callers (distinct=False) to the kernel; REQUIRES id_col
     unique per row (true for every document table — the aggregate path
-    would merge duplicate ids, the kernel treats each row as its own
-    doc). Group-keyed / distinct callers keep the aggregate form."""
+    would merge duplicate ids; the kernel raises on a duplicate within
+    one Arrow batch). Group-keyed / distinct callers keep the aggregate
+    form."""
     if in_row is None:
         in_row = not distinct
     if in_row:
@@ -603,7 +480,9 @@ def _portable_signatures_in_row(
     happens in Python), a null text yields an all-NULL signature row
     (matching the aggregate form, where ``greatest(length(null)-k+1,1)``
     resurrects one null shingle whose minima are all null), and shingle
-    slicing is code-point slicing in both engines."""
+    slicing is code-point slicing in both engines. Raises on a duplicate
+    id within one Arrow batch, like ``_simhash_in_row``; duplicates in
+    different batches are not detected."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
@@ -629,6 +508,7 @@ def _portable_signatures_in_row(
 
         int64_max = np.iinfo(np.int64).max
         for pdf in batches:
+            _require_unique_ids(pdf["_id"], id_col)
             ids, sigs = [], []
             for id_, t in zip(pdf["_id"], pdf["_t"]):
                 if t is None:
@@ -646,8 +526,8 @@ def _portable_signatures_in_row(
                     count=n_sh,
                 )
                 sig = np.full(n_hashes, int64_max)
-                for s in range(0, n_sh, 65536):  # bound the (64, n_sh) block
-                    block = (A * xs[s : s + 65536][None, :] + B) % PORTABLE_PRIME
+                for s in range(0, n_sh, _TOKEN_BLOCK):  # bound the (64, n_sh) block
+                    block = (A * xs[s : s + _TOKEN_BLOCK][None, :] + B) % PORTABLE_PRIME
                     np.minimum(sig, block.min(axis=1), out=sig)
                 ids.append(id_)
                 sigs.append(sig)
@@ -719,7 +599,7 @@ def minhash_lsh_dedup_portable(
     pipeline exactly. Use the murmur3 array variant for raw speed; use
     this one when cross-engine verifiability matters — and
     ``minhash_lsh_dedup_incremental`` when an index already exists."""
-    sigs = _persist(portable_signatures(df, id_col, text_col, k, n_hashes))
+    sigs = persist(portable_signatures(df, id_col, text_col, k, n_hashes))
     banded = portable_bands(sigs, id_col, bands, n_hashes)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bkey")
     b = banded.select(F.col(id_col).alias("id_b"), "band", "bkey")
@@ -732,8 +612,9 @@ def minhash_lsh_dedup_portable(
     return _verify_pairs(pairs, sigs, id_col, n_hashes, threshold)
 
 
-# Memoized stored near-dup DECISION tables (PlanMemo — the stored-table
-# lifecycle shared with the ANN index frames / bigram LM / BPE merges):
+# Memoized stored near-dup DECISION tables (state.stored — the
+# stored-table lifecycle shared with the ANN index frames / bigram LM /
+# BPE merges):
 # in a curation warehouse the verified LSH pair list and the cluster
 # map are MATERIALIZED tables (the DedupIndex lifecycle's batch
 # outputs — a keep/drop decision is written once and read by every
@@ -745,10 +626,6 @@ def minhash_lsh_dedup_portable(
 # (x_dedup_minhash_lsh, x_dedup_clusters, x_leakage_safe_split,
 # x_dedup_canonical), and the CC contraction on its pairs ran three
 # more times on top.
-_PAIRS_FRAMES: PlanMemo | None = None
-_CLUSTER_FRAMES: PlanMemo | None = None
-_GRAM_HASH_FRAMES: PlanMemo | None = None
-_SIMHASH_FRAMES: PlanMemo | None = None
 
 
 def minhash_pairs_frame(
@@ -764,21 +641,14 @@ def minhash_pairs_frame(
     memoized by corpus-plan semantics + parameters, so every consumer
     of the same corpus/parameter near-dup pass reads one materialized
     pair table instead of re-running the full LSH chain."""
-    global _PAIRS_FRAMES
-    if _PAIRS_FRAMES is None:
-        _PAIRS_FRAMES = PlanMemo()
-    key = (id_col, text_col, k, n_hashes, bands, threshold, "portable_pairs")
-    hit = _PAIRS_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
-    return _PAIRS_FRAMES.put(
+    return stored(
+        "dedup.pairs",
         df,
-        key,
-        minhash_lsh_dedup_portable(df, id_col, text_col, k, n_hashes, bands, threshold),
+        (id_col, text_col, k, n_hashes, bands, threshold, "portable_pairs"),
+        lambda: minhash_lsh_dedup_portable(
+            df, id_col, text_col, k, n_hashes, bands, threshold
+        ),
     )
-
-
-_INDEX_FRAMES: PlanMemo | None = None
 
 
 def portable_index_frames(
@@ -795,19 +665,18 @@ def portable_index_frames(
     any other index consumer over the same corpus plan read ONE build
     of the signature aggregation instead of re-running the shingle
     explode + 64-min pass per invocation."""
-    global _INDEX_FRAMES
-    if _INDEX_FRAMES is None:
-        _INDEX_FRAMES = PlanMemo()
-    key_s = (id_col, text_col, k, n_hashes, "index_sigs")
-    sigs = _INDEX_FRAMES.get(df, key_s)
-    if sigs is None:
-        sigs = _INDEX_FRAMES.put(
-            df, key_s, portable_signatures(df, id_col, text_col, k, n_hashes)
-        )
-    key_b = (id_col, text_col, k, n_hashes, bands, "index_bands")
-    bnd = _INDEX_FRAMES.get(df, key_b)
-    if bnd is None:
-        bnd = _INDEX_FRAMES.put(df, key_b, portable_bands(sigs, id_col, bands, n_hashes))
+    sigs = stored(
+        "dedup.index",
+        df,
+        (id_col, text_col, k, n_hashes, "index_sigs"),
+        lambda: portable_signatures(df, id_col, text_col, k, n_hashes),
+    )
+    bnd = stored(
+        "dedup.index",
+        df,
+        (id_col, text_col, k, n_hashes, bands, "index_bands"),
+        lambda: portable_bands(sigs, id_col, bands, n_hashes),
+    )
     return sigs, bnd
 
 
@@ -821,14 +690,12 @@ def dedup_clusters_frame(pairs: DataFrame, max_iterations: int = 20) -> DataFram
     guaranteed when ``pairs`` comes from ``minhash_pairs_frame`` (the
     same DataFrame object); a transient pair plan with embedded
     checkpoint scans simply never matches and ages out of the LRU."""
-    global _CLUSTER_FRAMES
-    if _CLUSTER_FRAMES is None:
-        _CLUSTER_FRAMES = PlanMemo()
-    key = (max_iterations, "cc_clusters")
-    hit = _CLUSTER_FRAMES.get(pairs, key)
-    if hit is not None:
-        return hit
-    return _CLUSTER_FRAMES.put(pairs, key, dedup_clusters(pairs, max_iterations))
+    return stored(
+        "dedup.clusters",
+        pairs,
+        (max_iterations, "cc_clusters"),
+        lambda: dedup_clusters(pairs, max_iterations),
+    )
 
 
 def minhash_lsh_dedup_incremental(
@@ -857,7 +724,7 @@ def minhash_lsh_dedup_incremental(
     index bands stored bucketBy(band, bkey) join with zero exchanges on
     the stored side — only the new batch shuffles into the bucket
     layout)."""
-    new_sigs = _persist(portable_signatures(new_docs, id_col, text_col, k, n_hashes))
+    new_sigs = persist(portable_signatures(new_docs, id_col, text_col, k, n_hashes))
     new_bands = portable_bands(new_sigs, id_col, bands, n_hashes)
     all_sigs = new_sigs.unionByName(index_sigs)
     nb = new_bands.select(F.col(id_col).alias("id_a"), "band", "bkey")
@@ -1281,15 +1148,12 @@ def simhash_near_dup(
     # memoize it like every other index frame — the banded self-join's
     # two sides then read ONE materialized build instead of re-running
     # the token explode + 48-bit-sum aggregation per side per timed run
-    global _SIMHASH_FRAMES
-    if _SIMHASH_FRAMES is None:
-        _SIMHASH_FRAMES = PlanMemo()
-    fkey = (id_col, text_col, bits, "simhash_md5")
-    fp = _SIMHASH_FRAMES.get(df, fkey)
-    if fp is None:
-        fp = _SIMHASH_FRAMES.put(
-            df, fkey, simhash(df, id_col, text_col, bits=bits, hash_fn="md5")
-        )
+    fp = stored(
+        "dedup.simhash",
+        df,
+        (id_col, text_col, bits, "simhash_md5"),
+        lambda: simhash(df, id_col, text_col, bits=bits, hash_fn="md5"),
+    )
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
@@ -1585,20 +1449,16 @@ def containment_pairs(
     # the oracle replays the identical md5 half, so distinct/intersect
     # counts stay bit-for-bit even in the collision case).
     # The distinct gram-hash table is a derived corpus projection —
-    # memoized STORED state (PlanMemo), with the localCheckpoint on top
+    # memoized STORED state (state.stored), with the localCheckpoint on top
     # keeping the plan its three consumers embed truncated and the
     # candidate-routing count's stages executed at construction; on a
     # warm cache the checkpoint is a block read, not a re-explode.
-    global _GRAM_HASH_FRAMES
-    if _GRAM_HASH_FRAMES is None:
-        _GRAM_HASH_FRAMES = PlanMemo()
-    gkey = (id_col, text_col, n, "word_gram_hashes")
-    cached = _GRAM_HASH_FRAMES.get(df, gkey)
-    if cached is None:
-        cached = _GRAM_HASH_FRAMES.put(
-            df, gkey, word_ngram_hashes(df, id_col, text_col, n)
-        )
-    grams = cached.localCheckpoint(eager=False)
+    grams = stored(
+        "dedup.gram_hashes",
+        df,
+        (id_col, text_col, n, "word_gram_hashes"),
+        lambda: word_ngram_hashes(df, id_col, text_col, n),
+    ).localCheckpoint(eager=False)
     # Candidate pairs come from ONE gram-keyed aggregation emitting the
     # in-gram id combinations (state bounded by max_gram_df ids per
     # gram, never a skew risk) — NOT a gram self-join: the gram frame is

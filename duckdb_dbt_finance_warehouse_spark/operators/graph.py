@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import persist, stored
+
 PR_SCALE = 10**12
 
 
@@ -56,7 +58,6 @@ def pagerank(
     the oracle replays bit-for-bit."""
     if not 0 < damping_pct < 100:
         raise ValueError(f"pagerank: damping_pct must be in (0,100), got {damping_pct}")
-    from .dedup import _persist
 
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -81,18 +82,18 @@ def pagerank(
     # routing job (triangle_stats_auto's pattern — catalog stats at
     # warehouse scale); e is persisted so the count's scan is reused by
     # the degree/encode builds.
-    e = _persist(e)
+    e = persist(e)
     n_edges = e.count()
     parts = max(1, -(-n_edges // 1_500_000))
     # id-ordered dense dictionary over ALL nodes (constant d): the
     # order is irrelevant to the arithmetic — only density matters
-    rdict = _persist(
+    rdict = persist(
         _dense_ids(nodes.select(F.col("node").alias("v"))).repartition(parts, "r")
     )
     deg = e.groupBy("src").agg(F.count("*").alias("od"))
     # the static per-round probe side: every edge with its src degree,
     # both endpoints rank-encoded (rs, rd int32; od long)
-    ed = _persist(
+    ed = persist(
         e.join(deg, "src")
         .join(rdict.withColumnsRenamed({"v": "src", "r": "rs"}).hint("shuffle_hash"), "src")
         .join(rdict.withColumnsRenamed({"v": "dst", "r": "rd"}).hint("shuffle_hash"), "dst")
@@ -205,14 +206,13 @@ def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str) -> DataFram
     )
 
 
-# memoized stored co-occurrence pair frames (dedup.PlanMemo — the
-# stored-table lifecycle): the co-purchase graph projection is derived
+# stored co-occurrence pair frames (state.stored — the stored-table
+# lifecycle): the co-purchase graph projection is derived
 # state every graph analysis reads (exact census, DOULION sample, the
 # wedge-routed auto entry) — in a warehouse it is a materialized
 # fact-derived edge table, built once per source snapshot, not rebuilt
 # per query.  Same argument as the ANN index frames / bigram LM / BPE
 # merge table.
-_PAIR_FRAMES = None
 
 
 def cooccurrence_pairs_frame(
@@ -223,16 +223,12 @@ def cooccurrence_pairs_frame(
     (``triangle_stats(..., _edges_prepared=True)`` and friends) skip
     their internal re-distinct — the frame is already distinct (a < b)
     and materialized."""
-    from .dedup import PlanMemo
-
-    global _PAIR_FRAMES
-    if _PAIR_FRAMES is None:
-        _PAIR_FRAMES = PlanMemo()
-    key = (group_col, item_col, "cooc_pairs")
-    hit = _PAIR_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
-    return _PAIR_FRAMES.put(df, key, cooccurrence_pairs(df, group_col, item_col))
+    return stored(
+        "graph.pairs",
+        df,
+        (group_col, item_col, "cooc_pairs"),
+        lambda: cooccurrence_pairs(df, group_col, item_col),
+    )
 
 
 def _vertex_ranks(
@@ -260,9 +256,7 @@ def _vertex_ranks(
     caller's sampled/sharded route is the default anyway."""
     from pyspark.sql import Window as W
 
-    from .dedup import _persist
-
-    b = _persist(
+    b = persist(
         deg.repartitionByRange(buckets, F.col("d"), F.col("v")).withColumn(
             "_bucket", F.spark_partition_id()
         )
@@ -321,9 +315,7 @@ def _dense_ids(
     persisted dictionary is read, not rebuilt."""
     from pyspark.sql import Window as W
 
-    from .dedup import _persist
-
-    b = _persist(
+    b = persist(
         ids.withColumn(
             "_bucket", F.pmod(F.xxhash64("v"), F.lit(buckets)).cast("int")
         )
@@ -393,7 +385,7 @@ def _degree_oriented(e: DataFrame, deg: DataFrame) -> DataFrame:
     )
 
 
-# memoized stored census-prep frames (dedup.PlanMemo — the stored-table
+# stored census-prep frames (state.stored — the stored-table
 # lifecycle): the undirected degree summary and the rank-encoded
 # degree-oriented adjacency projection are pure functions of the stored
 # edge table that a graph warehouse materializes NEXT TO it (every
@@ -404,32 +396,22 @@ def _degree_oriented(e: DataFrame, deg: DataFrame) -> DataFrame:
 # timed run instead of once in the stored build.  Keyed on the PREPARED
 # edge frame's plan; ``cooccurrence_pairs_frame`` hands every triangle
 # entry the same persisted object, so hits are guaranteed there.
-_CENSUS_FRAMES = None
 
 
-def _census_memo():
-    from .dedup import PlanMemo
-
-    global _CENSUS_FRAMES
-    if _CENSUS_FRAMES is None:
-        _CENSUS_FRAMES = PlanMemo()
-    return _CENSUS_FRAMES
-
-
-def census_degree_frame(e0: DataFrame) -> DataFrame:
-    """Undirected degree table (v, d) of a prepared (a < b, distinct)
-    edge frame as memoized STORED state."""
-    memo = _census_memo()
-    hit = memo.get(e0, ("census_deg",))
-    if hit is not None:
-        return hit
-    deg = (
+def _degrees(e0: DataFrame) -> DataFrame:
+    """Undirected degree table (v, d) of an (a, b) edge frame."""
+    return (
         e0.select(F.col("a").alias("v"))
         .unionByName(e0.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count("*").alias("d"))
     )
-    return memo.put(e0, ("census_deg",), deg)
+
+
+def census_degree_frame(e0: DataFrame) -> DataFrame:
+    """``_degrees`` of a prepared (a < b, distinct) edge frame as
+    memoized STORED state."""
+    return stored("graph.census", e0, ("census_deg",), lambda: _degrees(e0))
 
 
 def census_oriented_frame(e0: DataFrame, deg: DataFrame | None = None) -> DataFrame:
@@ -439,13 +421,14 @@ def census_oriented_frame(e0: DataFrame, deg: DataFrame | None = None) -> DataFr
     degree table (router, census) passes it through so a memo MISS
     doesn't build a second, semantically identical degree aggregate
     (r13 ADVICE)."""
-    memo = _census_memo()
-    hit = memo.get(e0, ("census_oriented",))
-    if hit is not None:
-        return hit
-    if deg is None:
-        deg = census_degree_frame(e0)
-    return memo.put(e0, ("census_oriented",), _degree_oriented(e0, deg))
+    return stored(
+        "graph.census",
+        e0,
+        ("census_oriented",),
+        lambda: _degree_oriented(
+            e0, census_degree_frame(e0) if deg is None else deg
+        ),
+    )
 
 
 def doulion_oriented_frame(e0: DataFrame, k: int, salt: str) -> DataFrame:
@@ -455,13 +438,17 @@ def doulion_oriented_frame(e0: DataFrame, k: int, salt: str) -> DataFrame:
     graph is derived state exactly like the full oriented projection —
     the sampled entry and the wedge-routed auto entry (past the census
     budget) read ONE build."""
+    return stored(
+        "graph.census",
+        e0,
+        ("doulion_oriented", k, salt),
+        lambda: _doulion_oriented(e0, k, salt),
+    )
+
+
+def _doulion_oriented(e0: DataFrame, k: int, salt: str) -> DataFrame:
     from .sampling import hash_uniform
 
-    memo = _census_memo()
-    key = ("doulion_oriented", k, salt)
-    hit = memo.get(e0, key)
-    if hit is not None:
-        return hit
     edge_key = F.concat_ws(
         ":", F.col("a").cast("string"), F.col("b").cast("string")
     )
@@ -470,13 +457,7 @@ def doulion_oriented_frame(e0: DataFrame, k: int, salt: str) -> DataFrame:
     )
     # degrees of the SAMPLED graph — that's the graph being counted: a
     # hub that survives sampling must not regrow the wedge hot spot
-    sdeg = (
-        es0.select(F.col("a").alias("v"))
-        .unionByName(es0.select(F.col("b").alias("v")))
-        .groupBy("v")
-        .agg(F.count("*").alias("d"))
-    )
-    return memo.put(e0, key, _degree_oriented(es0, sdeg))
+    return _degree_oriented(es0, _degrees(es0))
 
 
 def _closed_wedge_count(
@@ -614,23 +595,15 @@ def triangle_stats(
             # sameSemantics-match again, so memo insertion would only
             # evict genuinely reusable stored-graph frames (r13 ADVICE) —
             # build the oriented projection directly
-            deg = _deg if _deg is not None else (
-                e0.select(F.col("a").alias("v"))
-                .unionByName(e0.select(F.col("b").alias("v")))
-                .groupBy("v")
-                .agg(F.count("*").alias("d"))
-                .localCheckpoint(eager=False)
-            )
+            deg = _deg
+            if deg is None:
+                deg = _degrees(e0).localCheckpoint(eager=False)
             e = _degree_oriented(e0, deg).localCheckpoint(eager=False)
     else:
         e0 = edges.select("a", "b").distinct().localCheckpoint(eager=False)
-        deg = _deg if _deg is not None else (
-            e0.select(F.col("a").alias("v"))
-            .unionByName(e0.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-            .localCheckpoint(eager=False)
-        )
+        deg = _deg
+        if deg is None:
+            deg = _degrees(e0).localCheckpoint(eager=False)
         e = _degree_oriented(e0, deg).localCheckpoint(eager=False)
     wedges = deg.agg(
         F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges")
@@ -698,52 +671,21 @@ def triangle_sample_stats(
     driver-OOMs)."""
     if k & (k - 1):
         raise ValueError(f"k must be a power of two, got {k}")
-    from .sampling import hash_uniform
-
     if _edges_prepared and _census_memoize:
         # stored-graph path: the deterministic sampled sketch's oriented
         # projection is memoized stored state (see doulion_oriented_frame);
         # the checkpoint over the cache truncates the plan its four
         # consumer references would otherwise inline (census plan-size
         # lesson) and reads the stored frame's warmed blocks
-        es = doulion_oriented_frame(edges, k, salt).localCheckpoint(
-            eager=False
-        )
-    elif _edges_prepared:
-        # per-invocation prepared frame (triangle_stats_auto's ad-hoc
-        # route): never memo-matches again — build the sampled oriented
-        # projection directly instead of polluting the census LRU
-        key = F.concat_ws(
-            ":", F.col("a").cast("string"), F.col("b").cast("string")
-        )
-        es0 = edges.filter(hash_uniform(key, salt) < 1.0 / k).localCheckpoint(
-            eager=False
-        )
-        sdeg = (
-            es0.select(F.col("a").alias("v"))
-            .unionByName(es0.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-        )
-        es = _degree_oriented(es0, sdeg).localCheckpoint(eager=False)
+        es = doulion_oriented_frame(edges, k, salt)
     else:
-        e = edges.select("a", "b").distinct()
-        key = F.concat_ws(
-            ":", F.col("a").cast("string"), F.col("b").cast("string")
-        )
-        es0 = e.filter(hash_uniform(key, salt) < 1.0 / k).localCheckpoint(
-            eager=False
-        )
-        # same degree-orientation as the exact census (degrees of the
-        # SAMPLED graph — that's the graph being counted): a hub that
-        # survives sampling must not regrow the wedge hot spot
-        sdeg = (
-            es0.select(F.col("a").alias("v"))
-            .unionByName(es0.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-        )
-        es = _degree_oriented(es0, sdeg).localCheckpoint(eager=False)
+        # per-invocation prepared frame (triangle_stats_auto's ad-hoc
+        # route) never memo-matches again, and a raw edge list needs its
+        # dedup first — build the sampled oriented projection directly
+        # instead of polluting the census LRU
+        e = edges if _edges_prepared else edges.select("a", "b").distinct()
+        es = _doulion_oriented(e, k, salt)
+    es = es.localCheckpoint(eager=False)
     if broadcast_closing is None:
         broadcast_closing = es.count() <= MAX_CENSUS_EDGES
     tri = _closed_wedge_count(
@@ -827,13 +769,7 @@ def triangle_stats_auto(
         deg = census_degree_frame(e)
     else:
         e = edges.select("a", "b").distinct().localCheckpoint(eager=False)
-        deg = (
-            e.select(F.col("a").alias("v"))
-            .unionByName(e.select(F.col("b").alias("v")))
-            .groupBy("v")
-            .agg(F.count("*").alias("d"))
-            .localCheckpoint(eager=False)
-        )
+        deg = _degrees(e).localCheckpoint(eager=False)
     n_edges = e.count()
     n_wedges = (
         deg.agg(F.sum(F.expr("d * (d - 1) div 2")).alias("w")).first()["w"]
@@ -972,14 +908,12 @@ def label_propagation(
 def _lpa_prepare(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     """Symmetrize + persist the edge frame that every LPA round
     rejoins (stored state, partitioned by edge volume)."""
-    from .dedup import _persist
-
     # partition count from the PRE-distinct edge count (one cheap scan,
     # 2x for symmetrization — an upper bound is all the sizing needs),
     # so exactly ONE copy of the symmetrized frame is ever cached
     n_approx = 2 * edges.count()
     parts = max(1, -(-n_approx // 1_500_000))
-    return _persist(_undirected(edges, src_col, dst_col).repartition(parts, "a"))
+    return persist(_undirected(edges, src_col, dst_col).repartition(parts, "a"))
 
 
 def _lpa_states(u: DataFrame, rounds: int, keep: int) -> list[DataFrame]:
@@ -1270,7 +1204,6 @@ def khop_reach(
     bit-identical output."""
     if hops < 0:
         raise ValueError(f"khop_reach: hops must be >= 0, got {hops}")
-    from .dedup import _persist
 
     s = seeds.select(F.col("node")).distinct().localCheckpoint(eager=False)
     out = s.select("node", F.lit(0).alias("dist"))
@@ -1279,7 +1212,7 @@ def khop_reach(
     # same single-cached-copy sizing as label_propagation
     n_approx = 2 * edges.count()
     parts = max(1, -(-n_approx // 1_500_000))
-    u = _persist(_undirected(edges, src_col, dst_col).repartition(parts, "a"))
+    u = persist(_undirected(edges, src_col, dst_col).repartition(parts, "a"))
     reach = out
     frontier = s
     frontier_rows = s.count()  # free: checkpoint already ran the scan

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import persist
+
 _GRAINS = {"day": "1 day", "month": "1 month", "week": "1 week"}
 
 
@@ -102,7 +104,6 @@ def max_concurrency(
 
     Output (1 row): n_intervals, peak_concurrency, peak_at (epoch s,
     the earliest second the peak is reached)."""
-    from .dedup import _persist
     from .stats import ordered_prefix_sums
 
     s = (
@@ -125,7 +126,7 @@ def max_concurrency(
             F.coalesce("_ns", F.lit(0)).alias("_nsc"),
         )
     )
-    g = _persist(ordered_prefix_sums(g, "_t", ["_delta"], buckets))
+    g = persist(ordered_prefix_sums(g, "_t", ["_delta"], buckets))
     peak = g.agg(
         F.max("cum__delta").alias("_peak"), F.sum("_nsc").alias("_n")
     )

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import stored
+
 from . import similarity
 from .similarity import QUANT_SCALE, _np_quant
 
@@ -115,14 +117,6 @@ def _assign_kernel(bc, emit_sums: bool):
     return kernel
 
 
-# memoized trained models (dedup.ModelMemo — the frozen-model
-# lifecycle): a fitted quantizer is a shipped artifact; the coarse
-# IVF quantizer, SemDeDup's cluster model, and the k-means suite entry
-# all train the SAME (corpus, seed_mod, n_iter) model — r13 measured
-# three independent 3-round trainings per suite pass before this.
-_FITTED_MODELS = None
-
-
 def kmeans_fit(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -134,19 +128,22 @@ def kmeans_fit(
     and the QUANT_SCALE-scaled centroid matrix (driver-side model).
     Memoized by (corpus plan semantics, params): training is the build
     event of the frozen-model lifecycle, so repeat fits over the same
-    corpus return the stored model.  Treat the result as immutable."""
+    corpus return the stored model (the coarse IVF quantizer, SemDeDup's
+    cluster model and the k-means entry all train the same one).  Treat
+    the result as immutable."""
+    return stored(
+        "kmeans.models",
+        corpus,
+        (id_col, vec_col, seed_mod, n_iter, "kmeans_fit"),
+        lambda: _train_kmeans(corpus, id_col, vec_col, seed_mod, n_iter),
+    )
+
+
+def _train_kmeans(
+    corpus: DataFrame, id_col: str, vec_col: str, seed_mod: int, n_iter: int
+):
     import numpy as np
     from pyspark.sql import types as T
-
-    from .dedup import ModelMemo
-
-    global _FITTED_MODELS
-    if _FITTED_MODELS is None:
-        _FITTED_MODELS = ModelMemo()
-    memo_key = (id_col, vec_col, seed_mod, n_iter, "kmeans_fit")
-    hit = _FITTED_MODELS.get(corpus, memo_key)
-    if hit is not None:
-        return hit
 
     spark = corpus.sparkSession
     id_kind = corpus.schema[id_col].dataType.typeName()
@@ -189,7 +186,7 @@ def kmeans_fit(
     # enforce immutability instead of documenting it (r13 ADVICE)
     cids.setflags(write=False)
     C.setflags(write=False)
-    return _FITTED_MODELS.put(corpus, memo_key, (cids, C))
+    return cids, C
 
 
 def kmeans_cluster_stats(

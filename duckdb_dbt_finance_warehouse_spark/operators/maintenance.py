@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .dedup import _persist
+from ..state import persist
 
 
 def compaction_plan(
@@ -73,7 +73,7 @@ def compaction_plan(
     # the final join: persist the (tiny, bounded-cardinality) summaries
     # so the grouped count over the table + range exchange run once;
     # registered for release_persisted() like the minhash caches
-    bucketed = _persist(bucketed)
+    bucketed = persist(bucketed)
     w = (
         Window.partitionBy("_bucket")
         .orderBy(name)
@@ -243,7 +243,7 @@ def incremental_rollup(
     recompute — which is precisely what the oracle verifies by running
     the flat aggregation over all history."""
     d = day_col if not isinstance(day_col, str) else F.col(day_col)
-    stored = _persist(
+    stored = persist(
         daily_agg_states(
             df.filter(d < cutoff), key_cols, d, value_col, scale
         )

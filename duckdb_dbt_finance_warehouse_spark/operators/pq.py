@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..state import stored
 from . import similarity
 from .similarity import QUANT_SCALE, _np_quant
 
@@ -82,12 +83,6 @@ def pq_seed_codebooks(
     return np.asarray(cids, dtype=np.int64), Cq
 
 
-# memoized trained codebooks (dedup.ModelMemo — frozen-model lifecycle,
-# same as kmeans._FITTED_MODELS): the PQ and IVF-PQ trained entries fit
-# identical codebooks over the same corpus
-_TRAINED_CODEBOOKS = None
-
-
 def pq_train_codebooks(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -116,20 +111,29 @@ def pq_train_codebooks(
     the index lifecycle invariant). At 100 TB: n_iter linear scans, a
     KB-scale model on the driver.  Memoized by (corpus plan semantics,
     params) — training is the frozen model's build event; repeat fits
-    return the stored codebooks (treat as immutable)."""
+    return the stored codebooks (treat as immutable; the PQ and IVF-PQ
+    trained entries fit identical codebooks over the same corpus)."""
+    return stored(
+        "pq.codebooks",
+        corpus,
+        (id_col, vec_col, n_subspaces, seed_mod, n_iter, "pq_codebooks"),
+        lambda: _train_codebooks(
+            corpus, id_col, vec_col, n_subspaces, seed_mod, n_iter
+        ),
+    )
+
+
+def _train_codebooks(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    n_subspaces: int,
+    seed_mod: int,
+    n_iter: int,
+):
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
-
-    from .dedup import ModelMemo
-
-    global _TRAINED_CODEBOOKS
-    if _TRAINED_CODEBOOKS is None:
-        _TRAINED_CODEBOOKS = ModelMemo()
-    memo_key = (id_col, vec_col, n_subspaces, seed_mod, n_iter, "pq_codebooks")
-    hit = _TRAINED_CODEBOOKS.get(corpus, memo_key)
-    if hit is not None:
-        return hit
 
     cids, Cq = pq_seed_codebooks(corpus, id_col, vec_col, n_subspaces, seed_mod)
     spark = corpus.sparkSession
@@ -217,7 +221,7 @@ def pq_train_codebooks(
     # enforce immutability instead of documenting it (r13 ADVICE)
     cids.setflags(write=False)
     Cq.setflags(write=False)
-    return _TRAINED_CODEBOOKS.put(corpus, memo_key, (cids, Cq))
+    return cids, Cq
 
 
 def pq_encode(
@@ -273,21 +277,11 @@ def pq_encode(
     ).mapInPandas(encode, out_schema)
 
 
-# memoized stored code/list frames (dedup.PlanMemo — the stored-index
-# lifecycle shared with similarity._LIST_FRAMES / _BUCKET_FRAMES): the
+# stored code/list frames (state.stored — the stored-index lifecycle
+# shared with similarity.lsh_index_frame / ivf_lists_frame): the
 # encode/assign Arrow pass over the corpus is the index BUILD event;
 # every ADC/probe invocation over the same (corpus, frozen model(s))
 # reads the one materialized build.
-_CODE_FRAMES = None
-
-
-def _code_memo():
-    from .dedup import PlanMemo
-
-    global _CODE_FRAMES
-    if _CODE_FRAMES is None:
-        _CODE_FRAMES = PlanMemo()
-    return _CODE_FRAMES
 
 
 def pq_codes_frame(
@@ -301,13 +295,11 @@ def pq_codes_frame(
     (corpus plan semantics, frozen-codebook digest)."""
     from .similarity import _model_digest
 
-    memo = _code_memo()
-    key = (id_col, vec_col, n_subspaces, _model_digest(model[1]), "pq_codes")
-    hit = memo.get(corpus, key)
-    if hit is not None:
-        return hit
-    return memo.put(
-        corpus, key, pq_encode(corpus, model, id_col, vec_col, n_subspaces)
+    return stored(
+        "pq.codes",
+        corpus,
+        (id_col, vec_col, n_subspaces, _model_digest(model[1]), "pq_codes"),
+        lambda: pq_encode(corpus, model, id_col, vec_col, n_subspaces),
     )
 
 
@@ -323,7 +315,6 @@ def ivf_pq_lists_frame(
     (corpus plan semantics, both frozen-model digests)."""
     from .similarity import _model_digest
 
-    memo = _code_memo()
     key = (
         id_col,
         vec_col,
@@ -332,13 +323,13 @@ def ivf_pq_lists_frame(
         _model_digest(pq_model[1]),
         "ivf_pq_lists",
     )
-    hit = memo.get(corpus, key)
-    if hit is not None:
-        return hit
-    return memo.put(
+    return stored(
+        "pq.codes",
         corpus,
         key,
-        ivf_pq_build(corpus, ivf_model, pq_model, id_col, vec_col, n_subspaces),
+        lambda: ivf_pq_build(
+            corpus, ivf_model, pq_model, id_col, vec_col, n_subspaces
+        ),
     )
 
 

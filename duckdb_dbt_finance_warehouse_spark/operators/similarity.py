@@ -29,6 +29,8 @@ from functools import lru_cache
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..state import persist, stored
+
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
     " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
@@ -771,7 +773,7 @@ def ivf_incremental_topk(
     quantizer (kmeans_fit on base+batch) is the rebuild event, not the
     nightly path.
 
-    The MERGED lists are ``_persist``-ed: after the append, the stored
+    The MERGED lists are ``persist``-ed: after the append, the stored
     index table contains base + batch rows, and every probe batch
     serves from THAT table — persisting the merged frame (not just the
     base) is the in-memory model of the post-append stored table
@@ -779,15 +781,13 @@ def ivf_incremental_topk(
     the batch — the on-disk lifecycle a pytest drives end-to-end).
     Without it the whole index assignment would recompute per probe
     batch."""
-    from .dedup import _persist
-
     model3 = _ivf_model(
         base, id_col, vec_col, n_centroids_mod, model, "ivf_incremental_topk"
     )
     # the BASE lists are the stored index (memoized — repeat appends
     # over the same stored index read one build); only the NEW batch is
     # assigned fresh, which is the append's real cost at scale
-    merged = _persist(
+    merged = persist(
         ivf_lists_frame(base, model3, id_col, vec_col).unionByName(
             ivf_build_lists(batch, model3, id_col, vec_col)
         )
@@ -961,12 +961,7 @@ def lsh_build_buckets(
 # cache (measured: the recall audit's first run ballooned to 37 s under
 # the eviction pressure). The memo keys on the INPUT plan's semantics +
 # the index parameters and returns the same DataFrame object, which IS
-# cache-hittable. LRU-capped via the shared dedup.PlanMemo (r12
-# ADVICE: unbounded memos pay a sameSemantics py4j trip per stored
-# entry per miss and pin plans for the process lifetime).
-from .dedup import PlanMemo as _PlanMemo  # noqa: E402
-
-_BUCKET_FRAMES = _PlanMemo()
+# cache-hittable (state.stored).
 
 
 def lsh_index_frame(
@@ -981,12 +976,11 @@ def lsh_index_frame(
     the serving index — same lifecycle as the bloom words frame and the
     IVF centroid tables) and memoized by input-plan semantics so repeat
     constructions over the same corpus reuse one cached copy."""
-    key = (id_col, vec_col, n_tables, n_planes, dim)
-    hit = _BUCKET_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
-    return _BUCKET_FRAMES.put(
-        df, key, lsh_build_buckets(df, id_col, vec_col, n_tables, n_planes, dim)
+    return stored(
+        "similarity.buckets",
+        df,
+        (id_col, vec_col, n_tables, n_planes, dim),
+        lambda: lsh_build_buckets(df, id_col, vec_col, n_tables, n_planes, dim),
     )
 
 
@@ -1009,12 +1003,11 @@ def _model_digest(*arrays) -> str:
     return h.hexdigest()
 
 
-# memoized stored inverted-list frames — the IVF serving index's
-# stored-table lifecycle, exactly the _BUCKET_FRAMES argument: the
-# assignment Arrow pass over the corpus is the index BUILD event, and
-# every probe/serving invocation over the same (corpus, frozen model)
-# reads the one materialized build.
-_LIST_FRAMES = _PlanMemo()
+# stored inverted-list frames — the IVF serving index's stored-table
+# lifecycle, exactly the lsh_index_frame argument: the assignment Arrow
+# pass over the corpus is the index BUILD event, and every
+# probe/serving invocation over the same (corpus, frozen model) reads
+# the one materialized build.
 
 
 def ivf_lists_frame(
@@ -1025,12 +1018,11 @@ def ivf_lists_frame(
 ) -> DataFrame:
     """``ivf_build_lists`` as STORED state: persisted and memoized by
     (corpus plan semantics, frozen-model digest)."""
-    key = (id_col, vec_col, _model_digest(model3[0], model3[1]), "ivf_lists")
-    hit = _LIST_FRAMES.get(corpus, key)
-    if hit is not None:
-        return hit
-    return _LIST_FRAMES.put(
-        corpus, key, ivf_build_lists(corpus, model3, id_col, vec_col)
+    return stored(
+        "similarity.lists",
+        corpus,
+        (id_col, vec_col, _model_digest(model3[0], model3[1]), "ivf_lists"),
+        lambda: ivf_build_lists(corpus, model3, id_col, vec_col),
     )
 
 
@@ -1301,7 +1293,7 @@ def lsh_incremental_topk(
     tests/test_operators.py::test_lsh_incremental_*; the suite oracle
     replays the full-rebuild form for the same reason).
 
-    The MERGED buckets are ``_persist``-ed: after the append, the
+    The MERGED buckets are ``persist``-ed: after the append, the
     stored index table contains base + batch rows and every probe batch
     serves from THAT table — persisting the merged frame models the
     post-append stored table (Warehouse.write(partition_by=["tbl"]) +
@@ -1317,8 +1309,6 @@ def lsh_incremental_topk(
     stage is pure waste). Identical results by construction: hashing is
     per-vector under frozen planes. Exactly one of ``queries`` /
     ``probe_pred`` must be given."""
-    from .dedup import _persist
-
     if (queries is None) == (probe_pred is None):
         raise ValueError(
             "lsh_incremental_topk: pass exactly one of queries / probe_pred"
@@ -1327,7 +1317,7 @@ def lsh_incremental_topk(
     # corpus plan + params, so repeat appends over the same stored index
     # read one persisted build); only the NEW batch is hashed fresh,
     # which is the append's real cost at scale
-    merged = _persist(
+    merged = persist(
         lsh_index_frame(base, id_col, vec_col, n_tables, n_planes, dim)
         .unionByName(
             lsh_build_buckets(batch, id_col, vec_col, n_tables, n_planes, dim)
@@ -2025,7 +2015,7 @@ def ann_recall_audit(
     ``probe_pred``: when the panel is an INDEXED SUBSET of the corpus
     (the standing-panel production mode), pass a boolean Column over
     ``id_col`` instead of a ``probes`` frame — the audited bucket index
-    is then built ONCE and ``_persist``-ed (it IS the stored index
+    is then built ONCE and ``persist``-ed (it IS the stored index
     being audited; rebuilding it per audit run mis-models the
     lifecycle), the probe bucket rows are read straight out of it
     (flagged, no second Arrow hash stage), and the scoring pays ONE

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..state import persist
+
 
 def with_salt(df: DataFrame, n_salts: int, col_name: str = "_salt") -> DataFrame:
     """Deterministic salt from a stable row hash (not rand() — keeps
@@ -141,9 +143,7 @@ def join_size_estimate(
     j = a.join(b, "_k").select(
         "_k", "_na", "_nb", (F.col("_na") * F.col("_nb")).alias("_prod")
     )
-    from .dedup import _persist
-
-    j = _persist(j)
+    j = persist(j)
     totals = j.agg(
         F.sum("_na").alias("_sna"),
         F.sum("_nb").alias("_snb"),

@@ -20,6 +20,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import persist
+
 
 def corr_matrix(df: DataFrame, cols: list[tuple[str, int]]) -> DataFrame:
     """Pairwise Pearson correlations for ``cols`` = [(name, scale)]:
@@ -189,14 +191,12 @@ def ordered_prefix_sums(
     ``cum_<c>`` (long) per requested column."""
     from pyspark.sql import Window as W
 
-    from .dedup import _persist
-
     bucketed = df.repartitionByRange(buckets, F.col(order_col)).withColumn(
         "_bucket", F.spark_partition_id()
     )
     # consumed by the local-cumsum window AND the totals aggregate AND
     # the final join — persist the (value-grid-bounded) grouped rows
-    bucketed = _persist(bucketed)
+    bucketed = persist(bucketed)
     w = (
         W.partitionBy("_bucket")
         .orderBy(order_col)
@@ -313,8 +313,6 @@ def ks_drift(
     deterministic).
 
     Output (1 row): n_a, n_b, d_num, ks_at (value of max gap), ks."""
-    from .dedup import _persist
-
     p = F.col(part_col)
     g = (
         df.filter(p.isin(part_a, part_b))
@@ -334,7 +332,7 @@ def ks_drift(
     )
     # consumed by the max aggregate AND the argmax join-back; bounded by
     # the distinct-value grid, never the corpus
-    j = _persist(j)
+    j = persist(j)
     d = j.agg(F.max("_cross").alias("_dnum"))
     return (
         j.join(F.broadcast(d), F.col("_cross") == F.col("_dnum"))

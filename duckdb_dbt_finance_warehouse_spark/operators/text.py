@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..state import stored
 from .dedup import normalize_text, spread_input
 
 # tiny per-language stopword inventories for the n-gram/stopword heuristic
@@ -372,16 +373,11 @@ def bm25_search(
     )
 
 
-# memoized stored LM tables (dedup.PlanMemo — the index-lifecycle
-# pattern: bloom words frames, LSH bucket indexes, and this)
-_LM_FRAMES = None
-
-
 def bigram_lm_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """The trained add-one-smoothed bigram LM as STORED state: the
     per-gram quantized log-prob table (gram, q) with q = round_half_up
     (1e6 · ln((c(w1 w2) + 1) / (c(w1) + V))) — persisted and memoized
-    by corpus-plan semantics (``dedup.PlanMemo``), the same lifecycle
+    by corpus-plan semantics (``state.stored``), the same lifecycle
     as the ANN index frames. An LM is trained ONCE and serves many
     scoring passes (familiarity scoring, perplexity bucketing, mixture
     gating); rebuilding vocab-sized counts per scoring run mis-models
@@ -394,15 +390,15 @@ def bigram_lm_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     broadcastability) and a 1-row V cross. All counts reduce map-side;
     the stored table is distinct-bigram volume, ~0.1% of corpus
     bytes."""
-    from .dedup import PlanMemo
+    return stored(
+        "text.lm",
+        df,
+        (id_col, text_col, "bigram_lm"),
+        lambda: _train_bigram_lm(df, id_col, text_col),
+    )
 
-    global _LM_FRAMES
-    if _LM_FRAMES is None:
-        _LM_FRAMES = PlanMemo()
-    key = (id_col, text_col, "bigram_lm")
-    hit = _LM_FRAMES.get(df, key)
-    if hit is not None:
-        return hit
+
+def _train_bigram_lm(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     grams = word_ngrams_all(df, id_col, text_col, 2)
     c2 = grams.groupBy("gram").agg(F.count("*").alias("c2"))
     c1 = tokens(df, id_col, text_col).groupBy("tok").agg(
@@ -413,13 +409,12 @@ def bigram_lm_frame(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         (F.col("c2") + 1).cast("double") / (F.col("c1") + F.col("v"))
     )
     q = F.floor(lnp * 1000000 + F.lit(0.5)).cast("bigint")
-    qtable = (
+    return (
         c2.withColumn("w1", F.split(F.col("gram"), " ")[0])
         .join(F.broadcast(c1.withColumnRenamed("tok", "w1")), "w1")
         .crossJoin(F.broadcast(vocab))
         .select("gram", q.alias("q"))
     )
-    return _LM_FRAMES.put(df, key, qtable)
 
 
 def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -438,21 +433,21 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     run pays exactly ONE corpus gram scan + one broadcast join on the
     high-cardinality gram key, then one doc-keyed aggregation. No
     vocabulary ships to the driver (V is a 1-row broadcast inside the
-    stored build)."""
-    from .dedup import PlanMemo
+    stored build).
 
-    global _LM_FRAMES
-    if _LM_FRAMES is None:
-        _LM_FRAMES = PlanMemo()
-    # the per-doc score table is itself MATERIALIZED state in a curation
-    # pipeline (CCNet materializes per-doc perplexity before bucketing;
-    # the warehouse analogue is m1-as-stored-fact under m2): the scoring
-    # entry builds it, the bucketing mart reads it.  Memoized under the
-    # same PlanMemo lifecycle as the LM table it joins.
-    skey = (id_col, text_col, "bigram_scores")
-    hit = _LM_FRAMES.get(df, skey)
-    if hit is not None:
-        return hit
+    The per-doc score table is itself MATERIALIZED state in a curation
+    pipeline (CCNet materializes per-doc perplexity before bucketing):
+    the scoring entry builds it, the bucketing mart reads it — memoized
+    next to the LM table it joins."""
+    return stored(
+        "text.lm",
+        df,
+        (id_col, text_col, "bigram_scores"),
+        lambda: _score_bigram_lm(df, id_col, text_col),
+    )
+
+
+def _score_bigram_lm(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     qtable = bigram_lm_frame(df, id_col, text_col)
     grams = word_ngrams_all(df, id_col, text_col, 2)
     # qtable is distinct-gram volume — pin it as the broadcast build
@@ -461,7 +456,7 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     # the bpe vocab join hit — 9 s at sf1). For an open-vocabulary web
     # corpus whose bigram table outgrows broadcast, drop the hint and
     # take the two-sided gram-keyed shuffle join instead.
-    out = (
+    return (
         grams.join(F.broadcast(qtable), "gram")
         .select(F.col(id_col), "q")
         .groupBy(id_col)
@@ -477,7 +472,6 @@ def bigram_lm_scores(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
             ).alias("avg_logprob"),
         )
     )
-    return _LM_FRAMES.put(df, skey, out)
 
 
 def decontaminate(

@@ -1,0 +1,112 @@
+"""Stored state: persisted frames and trained models that outlive one query.
+
+The warehouse's precomputed tables (LSH and IVF indexes, the bigram LM,
+BPE merge tables, dedup decision tables) and its trained models (k-means
+centroids, PQ codebooks) are built once and read by every later query
+over the same input. This module is the only owner of that lifecycle;
+operators call ``stored`` and ``persist`` and never ``persist()`` /
+``unpersist()`` a frame themselves.
+
+Memo rules (``stored``):
+
+- An entry is keyed on the INPUT frame's plan plus a parameter tuple.
+  A lookup matches when, in this order, the key tuples are equal, the
+  input belongs to the same live SparkSession, and the two input plans
+  are ``sameSemantics``. An Arrow/HOF build plan embeds a fresh closure
+  per construction, so CacheManager never dedupes two builds over the
+  same input; memoizing the built object itself restores that reuse.
+- Session guard: in a JVM hosting two live sessions (test fixtures
+  next to an application session) a plan from the other session can be
+  semantically equal, but its frame is bound to that session; handing
+  it across would serve dead state. An entry whose session is stopped
+  is dropped when a lookup touches it.
+- A hit returns the SAME object the build returned. A DataFrame value
+  is persisted again on every hit (``release_persisted`` may have
+  dropped its blocks; persist on a cached plan is a no-op). Any other
+  value (a trained model) is returned as-is; callers treat it as
+  immutable.
+- Each ``name`` has its own LRU of at most ``CAP`` entries. A hit moves
+  the entry to most-recent; past the cap the oldest entry is dropped
+  and its frame unpersisted. A consumer still holding an evicted frame
+  just recomputes: persist is a hint, never semantics. The cap bounds
+  the ``sameSemantics`` round-trips a miss pays and the plans the memo
+  pins for the process lifetime.
+
+Between queries, ``release_persisted()`` drops the blocks of every
+registered frame and keeps the memo. ``reset_stored_state()`` also
+empties every memo, so the next build over any input is a true first
+construction; that is measurement infrastructure (bench.py's cold
+``build`` map), not part of the production lifecycle.
+"""
+
+from __future__ import annotations
+
+from typing import Any, Callable
+
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame
+
+CAP = 8  # entries per memo name
+
+_persisted: list[DataFrame] = []
+_memos: dict[str, list[tuple[DataFrame, tuple, Any]]] = {}
+
+
+def persist(df: DataFrame) -> DataFrame:
+    """Persist ``df`` and register it for ``release_persisted``."""
+    df = df.persist()
+    _persisted.append(df)
+    return df
+
+
+def _unpersist(df: DataFrame) -> None:
+    try:
+        df.unpersist()
+    except Py4JError:
+        pass  # its session is stopped: nothing left to release
+
+
+def release_persisted() -> None:
+    """Drop the blocks of every registered frame; memo entries stay and
+    re-persist on their next hit. Call after the returned DataFrames
+    have been consumed."""
+    while _persisted:
+        _unpersist(_persisted.pop())
+
+
+def reset_stored_state() -> None:
+    """Release every registered frame (every stored frame is one) and
+    empty every memo."""
+    release_persisted()
+    _memos.clear()
+
+
+def stored(name: str, df: DataFrame, key: tuple, build: Callable[[], Any]) -> Any:
+    """The value ``build()`` returns for input ``df`` and parameters
+    ``key``, built only on a miss in memo ``name`` (see the module
+    docstring for the match and eviction rules)."""
+    entries = _memos.setdefault(name, [])
+    for entry in list(entries):
+        stored_df, stored_key, value = entry
+        try:
+            same = (
+                stored_key == key
+                and stored_df.sparkSession is df.sparkSession
+                and df.sameSemantics(stored_df)
+            )
+        except Py4JError:  # the entry's session is stopped
+            entries.remove(entry)
+            continue
+        if same:
+            entries.remove(entry)
+            entries.append(entry)
+            return persist(value) if isinstance(value, DataFrame) else value
+    value = build()
+    if isinstance(value, DataFrame):
+        value = persist(value)
+    entries.append((df, key, value))
+    while len(entries) > CAP:
+        evicted = entries.pop(0)[2]
+        if isinstance(evicted, DataFrame):  # a model value holds no blocks
+            _unpersist(evicted)
+    return value

@@ -312,6 +312,7 @@ def stream_dedup_incremental(
     from pyspark.sql import functions as F2
 
     from ..operators import dedup
+    from ..state import release_persisted
 
     def dedup_epoch(batch_df: DataFrame, epoch_id: int) -> None:
         pairs, _sigs, _bands = dedup.minhash_lsh_dedup_incremental(
@@ -325,7 +326,7 @@ def stream_dedup_incremental(
             .partitionBy("_epoch")
             .parquet(out_path)
         )
-        dedup.release_persisted()
+        release_persisted()
 
     q = (
         doc_stream.writeStream.foreachBatch(dedup_epoch)

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from ..functions.cleaning import empty_to_null, lower_norm, negative_to_null, record_hash
 from ..functions.money import exact_sum, exact_sum_scaled
+from ..state import persist
 from ..sources.tables import load_testdata
 from .registry import query
 
@@ -872,7 +873,6 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical logical plan) instead of recomputing the two-shuffle
     chain per consumer; ``release_persisted()`` drops it."""
     from ..functions.money import exact_sum as _es
-    from ..operators.dedup import _persist
 
     o = T(spark, sf_dir, "orders")["orders"]
     monthly = o.groupBy(
@@ -917,7 +917,7 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         == 1,
     )
     begin, end = F.col("begin_rev"), F.col("end_rev")
-    return _persist(flagged.select(
+    return persist(flagged.select(
         "account_id",
         "month_start_date",
         "begin_rev",

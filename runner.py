@@ -119,6 +119,7 @@ def cmd_curate(args) -> int:
     from duckdb_dbt_finance_warehouse_spark.operators import dedup as ddp
     from duckdb_dbt_finance_warehouse_spark.operators import packing, sampling, text
     from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
     from pyspark.sql import functions as F
 
     spark = get_spark("curate")
@@ -153,7 +154,7 @@ def cmd_curate(args) -> int:
         kept, pairs, "doc_id", args.val_fraction
     ).select("doc_id", "text", "lang", "source", "n_chars", "split_group", "split")
     wh.write(split, "curated", "documents")
-    ddp.release_persisted()
+    release_persisted()
     split = wh.read("curated", "documents")
 
     toks = text.token_counts(split.filter("split = 'train'"), "doc_id", "text")
@@ -226,6 +227,7 @@ def cmd_audit(args) -> int:
     from duckdb_dbt_finance_warehouse_spark.operators import skew as skw
     from duckdb_dbt_finance_warehouse_spark.operators import stats, text
     from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
     from pyspark.sql import functions as F
 
     spark = get_spark("audit")
@@ -251,7 +253,7 @@ def cmd_audit(args) -> int:
         print(f"length KS drift {a} vs {b}: D={ks['ks']:.4f} at n_chars={ks['ks_at']}")
 
     prec = ddp.dedup_precision_audit(docs, "doc_id", "text").first()
-    ddp.release_persisted()
+    release_persisted()
     if prec["n_pairs"]:
         print(
             f"dedup index: {prec['n_pairs']} near-dup pairs, precision "

@@ -68,6 +68,38 @@ def test_simhash_kernel_matches_aggregate(spark):
         assert 4 not in row
 
 
+def test_simhash_kernel_blocks_a_long_document(spark):
+    """A document longer than one 65,536-token block: the blocked per-bit
+    counts must give the aggregate form's fingerprint."""
+    text = " ".join(f"w{(i * 7919) % 50021}" for i in range(70_000))
+    df = spark.createDataFrame([(1, text), (2, "short doc")], ["doc_id", "text"])
+    agg = {
+        r["doc_id"]: r["simhash"]
+        for r in dedup.simhash(df, "doc_id", "text", in_row=False).collect()
+    }
+    row = {
+        r["doc_id"]: r["simhash"]
+        for r in dedup.simhash(df, "doc_id", "text", in_row=True).collect()
+    }
+    assert agg == row
+
+
+def test_in_row_kernels_reject_duplicate_ids(spark):
+    """The aggregate forms merge rows sharing an id; the in-row kernels
+    would emit one row each, so a duplicate id in a batch must raise.
+    Every row here has the same id, so any batch of two rows holds a
+    duplicate however the input is spread."""
+    import pytest
+
+    df = spark.range(0, 256, 1, 1).selectExpr("7 AS doc_id", "concat('w ', id) AS text")
+    for build in (
+        lambda: dedup.simhash(df, "doc_id", "text", in_row=True),
+        lambda: dedup.portable_signatures(df, "doc_id", "text", in_row=True),
+    ):
+        with pytest.raises(Exception, match="duplicate doc_id"):
+            build().collect()
+
+
 def test_group_arrow_minima_match_aggregate(spark):
     """The distinct=True GROUP path (dataset_overlap's shape): the Arrow
     segmented-min must equal the pure SQL wide-min aggregate, including

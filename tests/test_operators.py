@@ -8,7 +8,6 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
-from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
 from duckdb_dbt_finance_warehouse_spark.operators import (
     asof,
     dedup,
@@ -17,6 +16,7 @@ from duckdb_dbt_finance_warehouse_spark.operators import (
     similarity,
     text,
 )
+from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
 SF = "/root/testdata/sf0.001"
 
@@ -1630,27 +1630,6 @@ def test_kmeans_fit_is_memoized_frozen_model(spark):
     # different params retrain
     c = km.kmeans_fit(corpus(), "vec_id", "embedding", seed_mod=8, n_iter=1)
     assert c is not a
-
-
-def test_plan_memo_lru_caps_and_evicts(spark):
-    from duckdb_dbt_finance_warehouse_spark.operators.dedup import PlanMemo
-
-    memo = PlanMemo(cap=2)
-    frames = []
-    for i in range(3):
-        df = spark.range(10 + i)
-        assert memo.get(df, ("k",)) is None
-        frames.append(memo.put(df, ("k",), df.selectExpr("id * 2 AS x")))
-    # the oldest entry was evicted and unpersisted; the newest two hit
-    assert len(memo._entries) == 2
-    assert not frames[0].storageLevel.useMemory
-    assert memo.get(spark.range(12), ("k",)) is frames[2]
-    assert memo.get(spark.range(10), ("k",)) is None  # evicted
-    # a hit moves to MRU: inserting one more now evicts range(11)
-    assert memo.get(spark.range(11), ("k",)) is frames[1]
-    memo.put(spark.range(99), ("k",), spark.range(99).selectExpr("id AS x"))
-    assert memo.get(spark.range(11), ("k",)) is frames[1]
-    assert memo.get(spark.range(12), ("k",)) is None
 
 
 def test_zvalue_interleaves_bits(spark):

@@ -464,7 +464,7 @@ def test_incremental_index_invariant_under_batching(spark, vals, mod):
     full-rebuild serving — batch boundaries cannot change assignment,
     so they cannot change any probe's top-k."""
     from duckdb_dbt_finance_warehouse_spark.operators import similarity
-    from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
     rows = [
         # first component >=1 so no vector has zero norm
@@ -552,7 +552,7 @@ def test_label_propagation_matches_sequential(spark, edges, rounds):
     from collections import Counter
 
     from duckdb_dbt_finance_warehouse_spark.operators import graph
-    from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
     e = spark.createDataFrame(edges, "src long, dst long")
     got = {
@@ -597,7 +597,7 @@ def test_khop_reach_matches_bfs(spark, edges, seeds, hops):
     ``hops`` — every reached node at its MINIMAL distance, seeds always
     present at 0 even when absent from the graph."""
     from duckdb_dbt_finance_warehouse_spark.operators import graph
-    from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
     e = spark.createDataFrame(edges, "src long, dst long")
     sdf = spark.createDataFrame([(s,) for s in seeds], "node long")

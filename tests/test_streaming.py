@@ -215,6 +215,7 @@ def test_stream_dedup_incremental_matches_batch(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from duckdb_dbt_finance_warehouse_spark.operators import dedup
+    from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
     docs = load_testdata(spark, SF, "documents")["documents"]
     index_docs = docs.filter(F.col("doc_id") % 4 != 0)
@@ -259,7 +260,7 @@ def test_stream_dedup_incremental_matches_batch(spark, tmp_path_factory):
             k=4, n_hashes=32, bands=8, threshold=0.5,
         )
         want += [tuple(r) for r in pairs.select("id_a", "id_b").collect()]
-        dedup.release_persisted()
+        release_persisted()
     assert got and got == sorted(want)
 
     # restart on the drained checkpoint: no new epochs, no new rows

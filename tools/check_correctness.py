@@ -19,9 +19,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 
 import __spark_entry__ as entrymod
-from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
 from duckdb_dbt_finance_warehouse_spark.session import get_spark
 from duckdb_dbt_finance_warehouse_spark.sources.tables import TESTDATA_TABLES
+from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 from duckdb_dbt_finance_warehouse_spark.suite.parity import compare
 
 

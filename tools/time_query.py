@@ -18,8 +18,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from duckdb_dbt_finance_warehouse_spark.operators.dedup import release_persisted
 from duckdb_dbt_finance_warehouse_spark.session import engine_counters, get_spark
+from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
 
 
