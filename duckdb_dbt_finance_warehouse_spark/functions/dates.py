@@ -67,20 +67,3 @@ def date_spine(
             )
         ).alias(col_name)
     )
-
-
-def month_spine(
-    spark: SparkSession,
-    start_date: str,
-    end_date: str,
-    col_name: str = "month_start_date",
-) -> DataFrame:
-    """One row per month-start in [trunc(start), trunc(end)] inclusive."""
-    return spark.range(1).select(
-        F.explode(
-            F.expr(
-                f"sequence(trunc(to_date('{start_date}'), 'month'),"
-                f" trunc(to_date('{end_date}'), 'month'), interval 1 month)"
-            )
-        ).alias(col_name)
-    )

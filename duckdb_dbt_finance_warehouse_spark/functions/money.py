@@ -65,9 +65,3 @@ def exact_avg(c: Column | str, scale: int = 4, wide: bool = False) -> Column:
     return (
         (F.sum(F.floor(col * s + F.lit(0.5))) / F.lit(float(s))) / F.count(col)
     ).cast("double")
-
-
-def oracle_sum_sql(expr: str, scale: int = 4) -> str:
-    """DuckDB SQL equivalent of the fast-path exact_sum, for oracles."""
-    s = 10 ** scale
-    return f"SUM(CAST(floor(({expr}) * {s} + 0.5) AS BIGINT)) / {float(s)}"

@@ -12,13 +12,14 @@ accept/reject decisions — including its deterministic false positives —
 replay bit-for-bit in the DuckDB oracle, which an engine-private filter
 never could.
 
-Shape: the bit-set (DISTINCT set bit positions, <= M_BITS ints) is
-computed in one small job, collected to the driver, and applied as a
-native InSet predicate inside the probe scan's codegen stage — no
-shuffle of the probe side, no joins, no Python; a row failing hash 0
-short-circuits past the remaining hashes. A probe row survives iff all
-K of its bit positions are set: exactly Bloom semantics,
-false-positive rate ~(1 - e^(-K*n/M))^K.
+Shape: the filter is STORED state — one row ``(m, words)``, the packed
+m-bit bitmap, built JVM-side from the distinct build keys (no driver
+collect, no literal text in the plan) and sized in-plan from their
+count. It is broadcast into the probe stage, where each row's md5 is
+split into two halves once and K word probes test its double-hashed bit
+positions — no shuffle of the probe side, no Python. A probe row
+survives iff all K of its bit positions are set: exactly Bloom
+semantics, false-positive rate ~(1 - e^(-K*n/M))^K.
 """
 
 from __future__ import annotations
@@ -31,19 +32,19 @@ from ..state import stored
 BLOOM_K = 4  # hash functions
 BLOOM_M = 1 << 16  # minimum filter size in bits (m never sizes below this)
 BLOOM_BITS_PER_KEY = 16  # target m/n; K=4 hashes -> FP ~ 0.24%
-BLOOM_M_MAX = 1 << 20  # plan-size bound: m/64 literal words in the probe plan
+BLOOM_M_MAX = 1 << 20  # size bound: past it a real join is the right tool
 
 
 def bloom_m_for(n_keys: int) -> int:
-    """Size the filter from the OBSERVED build-side key count: the
+    """The sizing spec for ``n_keys`` distinct build-side keys: the
     smallest power of two >= BLOOM_BITS_PER_KEY * n_keys (never below
     BLOOM_M). A fixed m degrades sharply past a few thousand keys
     (m=2^16 at 30k keys -> FP ~ 0.49 — a filter that passes half the
     non-matching rows); sizing by key count holds FP near
-    (1 - e^(-K*n/m))^K ~ 0.24% at any build size. Bounded above by
-    BLOOM_M_MAX because the bitmap ships in the plan as m/64 constant
-    words — beyond that a Bloom filter is the wrong tool (use a real
-    join), so this RAISES rather than silently degrading."""
+    (1 - e^(-K*n/m))^K ~ 0.24% at any build size. Past BLOOM_M_MAX a
+    Bloom filter is the wrong tool (use a real join), so this RAISES
+    rather than silently degrading. ``_build_words_frame`` replays it
+    in-plan; tests pin the two equal."""
     m = BLOOM_M
     while m < BLOOM_BITS_PER_KEY * n_keys:
         m <<= 1
@@ -55,99 +56,17 @@ def bloom_m_for(n_keys: int) -> int:
     return m
 
 
-def count_bloom_keys(keys: DataFrame, key_col: str) -> int:
-    """Distinct non-null build-side keys — the one tiny job that sizes
-    the filter (the build side is small by assumption; that is why a
-    Bloom filter applies at all)."""
-    k = F.col(key_col)
-    return keys.filter(k.isNotNull()).select(key_col).distinct().count()
-
-
-def _bit(key: F.Column, j: int, m_bits: int | F.Column) -> F.Column:
+def _bit(key: F.Column, j: int, m: F.Column) -> F.Column:
     """j-th portable bit position via Kirsch–Mitzenmacher double
     hashing: ONE md5 per key yields two independent 60-bit halves
     (h1 = digest[1:15], h2 = digest[17:31]); position_j =
-    (h1 + j*h2) mod m. K positions share a single digest — codegen's
-    common-subexpression elimination evaluates the md5 once per row,
-    which is the dominant probe-side cost (the j-salted-md5-per-hash
-    form paid K digests per row for the same asymptotic FP rate).
-    h1 + 3*h2 < 2^62, no overflow.
-
-    ``m_bits`` may be a literal int (driver-held-bitmap path) or a
-    Column (stored-frame path, where m rides in the 1-row words frame)."""
+    (h1 + j*h2) mod m. K positions share a single digest (the
+    j-salted-md5-per-hash form paid K digests per row for the same
+    asymptotic FP rate). h1 + 3*h2 < 2^62, no overflow."""
     d = F.md5(key.cast("string"))
     h1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
     h2 = F.conv(F.substring(d, 17, 15), 16, 10).cast("long")
-    m = F.lit(m_bits) if isinstance(m_bits, int) else m_bits
     return F.pmod(h1 + F.lit(j) * h2, m)
-
-
-def bloom_bits(keys: DataFrame, key_col: str, m_bits: int = BLOOM_M) -> DataFrame:
-    """The filter itself: distinct set bit positions over the build-side
-    keys. One small aggregation; merge filters by UNION DISTINCT (same
-    m_bits on both sides)."""
-    k = F.col(key_col)
-    return (
-        keys.filter(k.isNotNull())
-        .select(
-            F.explode(
-                F.array(*[_bit(k, j, m_bits) for j in range(BLOOM_K)])
-            ).alias("bit")
-        )
-        .distinct()
-    )
-
-
-def _bit_sql(probe_col: str, j: int, m_bits: int) -> str:
-    """SQL text twin of ``_bit`` (same double-hashing expression, parsed
-    not built — see ``bloom_member_pred``)."""
-    d = f"md5(cast(`{probe_col}` as string))"
-    h1 = f"cast(conv(substring({d}, 1, 15), 16, 10) as bigint)"
-    h2 = f"cast(conv(substring({d}, 17, 15), 16, 10) as bigint)"
-    return f"pmod({h1} + {j} * {h2}, {m_bits})"
-
-
-def bloom_words(bits: list[int], m_bits: int = BLOOM_M) -> list[int]:
-    """Pack set bit positions into the classic bitmap form: m/64 signed
-    64-bit words (what a Bloom filter actually is on the wire)."""
-    words = [0] * (m_bits >> 6)
-    for b in bits:
-        words[b >> 6] |= 1 << (b & 63)
-    return [w - (1 << 64) if w >= (1 << 63) else w for w in words]
-
-
-def bloom_member_pred(
-    probe_col: str, bits: list[int], m_bits: int = BLOOM_M
-) -> F.Column:
-    """Membership predicate against a driver-held bit set, embedded in
-    the plan as the filter's natural form: a constant array of M/64
-    words probed with element_at + a bitwise AND — K O(1) word tests,
-    fully codegen'd, short-circuiting across hashes. A constant-array
-    plan node stays ~1k literals; encoding the same set as IN-lists
-    (10k+ literal nodes) measurably stalls Catalyst's optimizer passes,
-    and `Column.isin(10k values)` additionally pays a py4j round-trip
-    per literal."""
-    arr = "array(" + ",".join(f"{w}L" for w in bloom_words(bits, m_bits)) + ")"
-    tests = []
-    for j in range(BLOOM_K):
-        h = _bit_sql(probe_col, j, m_bits)  # value in [0, m_bits)
-        tests.append(
-            f"(element_at({arr}, cast(({h}) div 64 as int) + 1)"
-            f" & shiftleft(cast(1 as bigint), cast(({h}) % 64 as int))) != 0"
-        )
-    return F.expr(" AND ".join(tests))
-
-
-def collect_bloom_bits(keys: DataFrame, key_col: str) -> tuple[int, list[int]]:
-    """Materialize the filter driver-side — a Bloom filter IS a tiny
-    runtime artifact (<= m_bits ints, a few hundred KB worst-case); this
-    is the documented driver-side-model boundary (same pattern as the
-    IVF centroid table and LSH hyperplanes), matching how engines ship
-    runtime filters to scan tasks. Returns ``(m_bits, bits)`` with
-    m_bits sized from the observed distinct key count (``bloom_m_for``),
-    so the FP rate stays ~0.24% instead of collapsing at large builds."""
-    m_bits = bloom_m_for(count_bloom_keys(keys, key_col))
-    return m_bits, [r["bit"] for r in bloom_bits(keys, key_col, m_bits).collect()]
 
 
 def bloom_words_frame(keys: DataFrame, key_col: str) -> DataFrame:
@@ -285,8 +204,8 @@ def bloom_semi_join(
     oversize build surfaces as a ``SparkRuntimeException`` (wrapping
     the same "exceeds BLOOM_M_MAX ... use a real (broadcast) join"
     message) at FIRST MATERIALIZATION, i.e. mid-job after the probe
-    scan has launched. Callers that need fail-fast should precheck
-    ``count_bloom_keys`` themselves when the key count is cheap."""
+    scan has launched. Callers that need fail-fast should count the
+    distinct build keys and check them with ``bloom_m_for`` first."""
     return bloom_contains(
         probe, keys, probe_col, key_col, flag="_bloom_pass"
     ).filter(F.col("_bloom_pass")).drop("_bloom_pass")
@@ -299,8 +218,7 @@ def bloom_contains(
     """``probe`` plus a boolean ``flag`` column: does ``probe_col`` pass
     the Bloom filter built over ``keys.key_col``? Flag form instead of
     filtering, for plans that need pass/fail counts side by side in ONE
-    probe scan. Decisions are byte-identical to the driver-held-bitmap
-    path (same md5 bit positions, same sizing). Same failure contract
+    probe scan. Same failure contract
     as ``bloom_semi_join``: an oversize build raises at first
     materialization (executor-side), not at construction."""
     wf = bloom_words_frame(keys, key_col)
@@ -326,7 +244,7 @@ def bloom_contains(
 
 
 def bloom_oracle_m_sql(keys_sql: str, key_col: str) -> str:
-    """DuckDB scalar replaying ``bloom_m_for(count_bloom_keys(...))``:
+    """DuckDB scalar replaying ``bloom_m_for`` of the distinct key count:
     the smallest power of two >= BLOOM_BITS_PER_KEY * distinct keys
     (floor BLOOM_M, hard error past BLOOM_M_MAX — same raise as the
     Spark side). Wrap in a CTE and thread ``(SELECT m FROM <cte>)`` as

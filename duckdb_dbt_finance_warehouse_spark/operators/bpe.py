@@ -275,108 +275,87 @@ def bpe_segment(
     id_col: str,
     text_col: str,
     merges: DataFrame,
-    vocab_join: bool = True,
 ) -> DataFrame:
     """Apply a learned merge table to a corpus — the encode side of
     BPE: fold each merge (in rank order) over a word's symbols and emit
     per-doc token counts. Any unseen word encodes correctly (the fold
     degrades to character symbols).
 
-    ``vocab_join=True`` (the scale path, default): the folds run once
-    per DISTINCT word (vocab volume) inside ONE Arrow ``mapInPandas``
-    stage with the merge table as a broadcast model (r13 — the r12
-    verdict measured the interpreted nested-HOF fold as the entry's
-    whole cost, flat from sf0.1 to sf1 because it's per-distinct-word
-    overhead, not data; a tokenizer merge table is frozen model state
-    exactly like the IVF centroids, so collecting it is the documented
-    model-sized driver boundary). The corpus then joins the
-    (word -> token) table on the high-cardinality word key — corpus
-    work is one shuffle, zero Python. ``vocab_join=False`` keeps the
-    pure-Column HOF fold per word OCCURRENCE — same result (pinned by
-    pytest), linear-scan shape with zero driver state and zero Arrow
-    stages; keep it for streaming micro-batches where the distinct
-    step would dominate."""
+    The folds run once per DISTINCT word (vocab volume) inside ONE
+    Arrow ``mapInPandas`` stage with the merge table as a broadcast
+    model (r13 — the r12 verdict measured the interpreted nested-HOF
+    fold as the entry's whole cost, flat from sf0.1 to sf1 because it's
+    per-distinct-word overhead, not data; a tokenizer merge table is
+    frozen model state exactly like the IVF centroids, so collecting it
+    is the documented model-sized driver boundary). The corpus then
+    joins the (word -> token) table on the high-cardinality word key —
+    corpus work is one shuffle, zero Python. ``tests/test_operators.py``
+    pins the kernel to the pure-Column HOF fold per word occurrence."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
     words = spread_input(df).select(
         F.col(id_col),
         F.explode(F.split(normalize_text(text_col), " ")).alias("word"),
     )
-    if vocab_join:
-        import pandas as pd
-        from pyspark.sql import types as T
-
-        # the merge table is the frozen tokenizer model: bounded by
-        # n_merges (a production table is ~32k rows), never
-        # corpus-sized — the same driver-side model boundary as the
-        # collected IVF centroids. Collect in rank order once and ship
-        # via sc.broadcast.
-        merge_list = [
-            (r["lhs"], r["rhs"])
-            for r in merges.orderBy("merge_round").select("lhs", "rhs").collect()
+    # the merge table is the frozen tokenizer model: bounded by
+    # n_merges (a production table is ~32k rows), never
+    # corpus-sized — the same driver-side model boundary as the
+    # collected IVF centroids. Collect in rank order once and ship
+    # via sc.broadcast.
+    merge_list = [
+        (r["lhs"], r["rhs"])
+        for r in merges.orderBy("merge_round").select("lhs", "rhs").collect()
+    ]
+    bc = df.sparkSession.sparkContext.broadcast(merge_list)
+    out_schema = T.StructType(
+        [
+            T.StructField("word", T.StringType()),
+            T.StructField("token", T.StringType()),
         ]
-        bc = df.sparkSession.sparkContext.broadcast(merge_list)
-        out_schema = T.StructType(
-            [
-                T.StructField("word", T.StringType()),
-                T.StructField("token", T.StringType()),
-            ]
-        )
+    )
 
-        def segment(batches):
-            ms = bc.value
+    def segment(batches):
+        ms = bc.value
 
-            def fold(word):
-                # byte-identical to the _FOLD HOF: greedy left-to-right
-                # non-overlapping merge, one pass per merge rank
-                syms = list(word) + [END_MARKER]
-                for lhs, rhs in ms:
-                    acc: list[str] = []
-                    for x in syms:
-                        if acc and acc[-1] == lhs and x == rhs:
-                            acc[-1] = lhs + rhs
-                        else:
-                            acc.append(x)
-                    syms = acc
-                return syms
+        def fold(word):
+            # byte-identical to the _FOLD HOF: greedy left-to-right
+            # non-overlapping merge, one pass per merge rank
+            syms = list(word) + [END_MARKER]
+            for lhs, rhs in ms:
+                acc: list[str] = []
+                for x in syms:
+                    if acc and acc[-1] == lhs and x == rhs:
+                        acc[-1] = lhs + rhs
+                    else:
+                        acc.append(x)
+                syms = acc
+            return syms
 
-            for pdf in batches:
-                out_w: list[str] = []
-                out_t: list[str] = []
-                for w in pdf["word"]:
-                    toks = fold(w)
-                    out_w.extend([w] * len(toks))
-                    out_t.extend(toks)
-                yield pd.DataFrame({"word": out_w, "token": out_t})
+        for pdf in batches:
+            out_w: list[str] = []
+            out_t: list[str] = []
+            for w in pdf["word"]:
+                toks = fold(w)
+                out_w.extend([w] * len(toks))
+                out_t.extend(toks)
+            yield pd.DataFrame({"word": out_w, "token": out_t})
 
-        # the corpus word explode feeds BOTH the distinct-vocab step and
-        # the (word -> tokens) join — localCheckpoint so it runs once
-        # (CLAUDE.md intra-query-sharing rule; recomputed per run, not a
-        # stored table)
-        words = words.localCheckpoint(eager=False)
-        seg = words.select("word").distinct().mapInPandas(segment, out_schema)
-        # seg is VOCAB-volume by construction (distinct words x their
-        # tokens) — pin it as the broadcast build side. Left to size
-        # estimates Catalyst has no stats below the fold-explode and at
-        # sf1 picked BuildLeft: it broadcast the exploded CORPUS (doc,
-        # word) rows — 15.7 s for a 310-word vocab, and a driver-OOM at
-        # real scale. The hint is unconditional (never size-demoted);
-        # that is correct here because a tokenizer vocab is bounded
-        # (~100k entries), unlike the corpus side it replaces.
-        pairs = words.join(F.broadcast(seg), "word").select(id_col, "token")
-    else:
-        mt = merges.orderBy("merge_round").agg(
-            F.collect_list(F.struct("lhs", "rhs")).alias("_merges")
-        )
-        apply_all = (
-            "aggregate(_merges, concat(split(word, ''), array('%s')), (acc, m) -> "
-            "aggregate(acc, CAST(array() AS array<string>), (a, x) -> "
-            "CASE WHEN size(a) > 0 AND element_at(a, -1) = m.lhs AND x = m.rhs "
-            "THEN concat(slice(a, 1, size(a) - 1), array(concat(m.lhs, m.rhs))) "
-            "ELSE concat(a, array(x)) END))" % END_MARKER
-        )
-        pairs = (
-            words.crossJoin(F.broadcast(mt))
-            .select(F.col(id_col), F.explode(F.expr(apply_all)).alias("token"))
-        )
+    # the corpus word explode feeds BOTH the distinct-vocab step and
+    # the (word -> tokens) join — localCheckpoint so it runs once
+    # (CLAUDE.md intra-query-sharing rule; recomputed per run, not a
+    # stored table)
+    words = words.localCheckpoint(eager=False)
+    seg = words.select("word").distinct().mapInPandas(segment, out_schema)
+    # seg is VOCAB-volume by construction (distinct words x their
+    # tokens) — pin it as the broadcast build side. Left to size
+    # estimates Catalyst has no stats below the fold-explode and at
+    # sf1 picked BuildLeft: it broadcast the exploded CORPUS (doc,
+    # word) rows — 15.7 s for a 310-word vocab, and a driver-OOM at
+    # real scale. The hint is unconditional (never size-demoted);
+    # that is correct here because a tokenizer vocab is bounded
+    # (~100k entries), unlike the corpus side it replaces.
+    pairs = words.join(F.broadcast(seg), "word").select(id_col, "token")
     return pairs.groupBy(id_col, "token").agg(F.count("*").alias("n"))
 
 

@@ -1,14 +1,15 @@
 """Deduplication operators for 100 TB-scale corpora (SURVEY §7.6).
 
-Four tiers, all pure DataFrame ops (no Python UDFs — every hash is a
-JVM-side built-in, so the whole family runs inside whole-stage codegen):
+Four tiers, DataFrame ops plus vectorized Arrow kernels (no row-at-a-time
+Python UDFs); every hash is one DuckDB replays (md5 and plain integer
+arithmetic), so the oracle verifies each tier bit-for-bit:
 
 - exact          : md5 over normalized content, groupBy hash — one shuffle.
-- MinHash + LSH  : shingle -> n seeded murmur3 minima -> band -> bucket
-  join. Candidate generation is linear-ish (explode by bands, self-join
-  per bucket); only candidates pay the verification cost.
-- SimHash        : 64-bit sign-aggregated token hashes; near-dups share
-  fingerprints at small Hamming distance.
+- MinHash + LSH  : shingle -> n Carter-Wegman minima of an md5 prefix ->
+  band -> bucket join. Candidate generation is linear-ish (explode by
+  bands, self-join per bucket); only candidates pay the verification cost.
+- SimHash        : 60-bit sign-aggregated md5 token hashes; near-dups
+  share fingerprints at small Hamming distance.
 - n-gram Jaccard : exact set overlap for candidate verification.
 
 Scale notes: shingling multiplies rows by ~|text|; the LSH band join is
@@ -18,8 +19,6 @@ removes the bulk), then MinHash-LSH on the survivors.
 """
 
 from __future__ import annotations
-
-from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -96,185 +95,50 @@ def shingles(
     return out.distinct() if distinct else out
 
 
-def minhash_signatures(
-    df: DataFrame, id_col: str, text_col: str, k: int = 5, n_hashes: int = 64
-) -> DataFrame:
-    """MinHash signature per doc as ONE array column: element-wise min
-    over ``n_hashes`` seeded murmur3 hashes of the shingle set. One
-    groupBy shuffle on id; the array keeps the shuffle payload and any
-    downstream join compact (vs 64 separate int columns)."""
-    sh = shingles(df, id_col, text_col, k, distinct=False)
-    mins = [
-        F.min(F.hash(F.lit(i), F.col("shingle"))).alias(f"mh_{i}") for i in range(n_hashes)
-    ]
-    agg = sh.groupBy(id_col).agg(*mins)
-    return agg.select(
-        id_col, F.array(*[F.col(f"mh_{i}") for i in range(n_hashes)]).alias("sig")
-    )
-
-
-def lsh_candidate_pairs(
-    sigs: DataFrame, id_col: str, bands: int = 16, rows_per_band: int = 4
-) -> DataFrame:
-    """Band the signature array (bands x rows_per_band must cover its
-    length) and self-join per (band, band_hash) bucket -> candidate
-    pairs id_a < id_b. The join key is (band, bucket) — high-entropy, so
-    the shuffle is skew-resistant."""
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.hash(F.expr(f"slice(sig, {b * rows_per_band + 1}, {rows_per_band})")).alias(
-                "bucket"
-            ),
-        )
-        for b in range(bands)
-    ]
-    banded = sigs.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    a = banded.alias("a")
-    b = banded.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-
-
-def minhash_lsh_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    k: int = 5,
-    n_hashes: int = 64,
-    bands: int = 16,
-    threshold: float = 0.6,
-) -> DataFrame:
-    """Full near-dup pipeline: candidates via LSH, verified by estimated
-    Jaccard = fraction of matching signature components.
-
-    Signatures are persisted: the plan references them three times (band
-    explode + both sides of the verification join) and recomputing the
-    shingle explode + 64-way min aggregation per reference triples the
-    cost. At 100 TB signatures are ~0.1% of corpus size — materializing
-    them is exactly what a production near-dup pass does."""
-    sigs = persist(minhash_signatures(df, id_col, text_col, k, n_hashes))
-    pairs = lsh_candidate_pairs(sigs, id_col, bands, n_hashes // bands)
-    a = sigs.select(F.col(id_col).alias("id_a"), F.col("sig").alias("sig_a"))
-    b = sigs.select(F.col(id_col).alias("id_b"), F.col("sig").alias("sig_b"))
-    est = F.expr(
-        f"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m)) / {n_hashes}"
-    )
-    return (
-        pairs.join(a, "id_a")
-        .join(b, "id_b")
-        .select("id_a", "id_b", est.alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= threshold)
-    )
-
-
-def simhash(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    bits: int = 60,
-    hash_fn: str = "md5",
-    in_row: bool | None = None,
-) -> DataFrame:
-    """SimHash over whitespace tokens: per bit, sum +1/-1 by the token
-    hash's bit value; fingerprint bit = sign of the sum.
-
-    ``hash_fn='md5'`` (default, <=60 bits) takes the first 15 hex chars
-    of md5 — portable across engines, so the fingerprint is
-    oracle-verifiable. ``'xxhash64'`` (<=64 bits) is the faster
-    JVM-native variant.
-
-    ``in_row`` (r14, guide §4.2): a doc's fingerprint is a pure function
-    of its own token multiset, and the ``bits`` per-bit sign sums are a
-    >100-field aggregate that falls out of whole-stage codegen (the r13
-    maxFields lesson: it ran INTERPRETED in every build). The Arrow
-    kernel removes the token explode, the (id)-keyed exchange and the
-    interpreted wide aggregate — md5 runs in C (hashlib), the ±1 bit
-    sums vectorize in numpy int64 (exact), and pytest pins kernel ==
-    aggregate bit-for-bit. Default (None): kernel for md5 (requires
-    ``id_col`` unique per row — every document table), aggregate for
-    xxhash64 (no portable Python xxhash; its explode+agg path below is
-    unchanged)."""
-    if in_row is None:
-        in_row = hash_fn == "md5"
-    if in_row:
-        if hash_fn != "md5":
-            raise ValueError("simhash: in_row supports only hash_fn='md5'")
-        assert bits <= 60
-        return _simhash_in_row(df, id_col, text_col, bits)
-    toks = spread_input(df).select(
-        F.col(id_col),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
-    )
-    if hash_fn == "md5":
-        assert bits <= 60
-        toks = toks.withColumn(
-            "th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long")
-        )
-        top = bits  # 2^59 max: no sign-bit overflow
-    else:
-        toks = toks.withColumn("th", F.xxhash64("tok"))
-        top = min(bits, 63)  # bit 63 would overflow signed long
-    bit_sums = [
-        F.sum(
-            F.when(F.expr(f"(th >> {i}) & 1") == 1, 1).otherwise(-1)
-        ).alias(f"b{i}")
-        for i in range(bits)
-    ]
-    agg = toks.groupBy(id_col).agg(*bit_sums)
-    fp = reduce(
-        lambda acc, i: acc
-        + F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
-            F.lit(0).cast("long")
-        ),
-        range(top),
-        F.lit(0).cast("long"),
-    )
-    return agg.select(F.col(id_col), fp.alias("simhash"))
-
-
 _TOKEN_BLOCK = 65536  # tokens/shingles per numpy block in the in-row kernels
 
 
 def _require_unique_ids(ids, id_col: str) -> None:
-    """The in-row kernels emit one row per input row; the aggregate
-    forms they replace merge rows that share an id."""
+    """The in-row kernels emit one row per input row; a shared id would
+    give that id several fingerprints or signatures."""
     if ids.duplicated().any():
         raise ValueError(
             f"in-row kernel: duplicate {id_col} values in one batch "
             f"(e.g. {ids[ids.duplicated()].iloc[0]!r}); ids must be unique "
-            "per row — use in_row=False to merge duplicates"
+            "per row"
         )
 
 
-def _simhash_in_row(
-    df: DataFrame, id_col: str, text_col: str, bits: int
-) -> DataFrame:
-    """One-pass Arrow form of md5 ``simhash`` (see its ``in_row`` doc).
+def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 60) -> DataFrame:
+    """SimHash over whitespace tokens: per bit, sum +1/-1 by the token
+    hash's bit value; fingerprint bit = sign of the sum. A token's hash
+    is the first 15 hex chars of its md5 (<=60 bits, so no sign-bit
+    overflow) — portable across engines, so the fingerprint is
+    oracle-verifiable.
+
+    A doc's fingerprint is a pure function of its own token multiset, so
+    it is computed in one Arrow kernel (r14, guide §4.2): no token
+    explode, no (id)-keyed exchange, and no ``bits``-field sign-sum
+    aggregate (>100 output fields fall out of whole-stage codegen — the
+    r13 maxFields lesson). md5 runs in C (hashlib) and the ±1 bit sums
+    in numpy int64 (exact); ``tests/test_inrow_kernels.py`` pins the
+    kernel bit-for-bit to that explode + aggregate form, which is what
+    the DuckDB oracle replays.
+
     Normalization stays engine-side; Python splits on the literal space
     the normalizer guarantees (both engines keep the empty token of an
     empty text — ``split`` with limit -1 and ``str.split(' ')`` agree);
-    a null text emits no row, matching explode-of-null in the aggregate
-    form. Per-bit counts accumulate over ``_TOKEN_BLOCK``-token blocks,
-    so a document's working matrix is bounded. Raises on a duplicate
-    id within one Arrow batch (the aggregate form would merge those
-    rows); duplicates in different batches are not detected."""
+    a null text emits no row, as explode-of-null does. Per-bit counts
+    accumulate over ``_TOKEN_BLOCK``-token blocks, so a document's
+    working matrix is bounded. Requires ``id_col`` unique per row (every
+    document table): raises on a duplicate id within one Arrow batch;
+    duplicates in different batches are not detected."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
+    if bits > 60:
+        raise ValueError("simhash: bits must be <= 60 (15 hex chars of md5)")
     shifts = np.arange(bits, dtype=np.int64)[None, :]
     weights = (np.int64(1) << shifts.ravel()).astype(np.int64)
     schema = T.StructType(
@@ -334,91 +198,59 @@ def portable_signatures(
     k: int = 5,
     n_hashes: int = 64,
     distinct: bool = False,
-    in_row: bool | None = None,
-    group_arrow: bool = True,
 ) -> DataFrame:
     """(id, sig) engine-portable MinHash signatures: shingle -> 28-bit
     md5 prefix x, h_i = (a_i*x + b_i) mod (2^31-1) (products stay <
-    2^59 — no 64-bit overflow in engines that error on it).
+    2^59 — no 64-bit overflow in engines that error on it). Both forms
+    below avoid the n_hashes-min aggregate, which has >100 output fields,
+    falls out of whole-stage codegen (the r13 maxFields lesson) and ran
+    INTERPRETED; ``tests/test_inrow_kernels.py`` pins each bit-for-bit
+    to that explode + wide-min aggregate, which the DuckDB oracle
+    replays.
 
-    ``distinct``: min is multiset-invariant, so the result is identical
-    either way — this is a COST knob, applied BEFORE the md5. Per-DOC
-    signatures keep False (the CLAUDE.md rule: a (doc, shingle)
-    distinct is a corpus-sized exchange — the widest in any dedup
-    plan). GROUP-level signatures (``dataset_overlap``: the key is one
-    of a handful of slices) pass True: the distinct (slice, shingle)
-    set is VOCAB-bounded, its exchange is map-side-combined down to
-    per-partition-distinct rows, and the md5 + n_hashes·mulmod work
-    then runs once per distinct pair instead of once per occurrence —
-    measured 38x fewer hashed rows at sf1 (14.7M -> 388k).
+    ``distinct=False`` (per-DOC signatures): a signature is a pure
+    function of one row, so one Arrow kernel computes it (r14, guide
+    §4.2) — shingle in Python, md5 in C (hashlib), the minima as a
+    vectorized numpy (A·x + B) % P reduction — with no shingle explode
+    and no (id)-keyed exchange. Requires ``id_col`` unique per row
+    (every document table); the kernel raises on a duplicate within one
+    Arrow batch.
 
-    ``in_row`` (r14, guide §4.2): a PER-DOC signature is a pure function
-    of one row — its shingles come from that row's text and nowhere else
-    — so the whole signature can be computed inside ONE Arrow kernel:
-    shingle in Python, md5 in C (hashlib), and the n_hashes minima as a
-    vectorized numpy (A·x + B) % P reduction. That removes the shingle
-    explode, the per-shingle JVM md5 projection, the (id)-keyed exchange
-    AND the 64-min aggregate — which at n_hashes=64 has >100 output
-    fields, falls out of whole-stage codegen (the r13 maxFields lesson)
-    and ran INTERPRETED in every timed run. Arithmetic is bit-identical:
-    same UTF-8 bytes hashed, same 28-bit prefix, same int64 mul-mod
-    lattice (products < 2^59 are exact in numpy int64), same minima
-    (pytest pins kernel == aggregate). Default (None) routes per-doc
-    multiset callers (distinct=False) to the kernel; REQUIRES id_col
-    unique per row (true for every document table — the aggregate path
-    would merge duplicate ids; the kernel raises on a duplicate within
-    one Arrow batch). Group-keyed / distinct callers keep the aggregate
-    form."""
-    if in_row is None:
-        in_row = not distinct
-    if in_row:
-        if distinct:
-            raise ValueError(
-                "portable_signatures: in_row computes per-ROW multiset "
-                "signatures — the distinct=True group form needs the "
-                "aggregate path"
-            )
+    ``distinct=True`` (GROUP-level signatures, ``dataset_overlap``: the
+    key is one of a handful of slices): min is multiset-invariant, so
+    deduping (slice, shingle) BEFORE the md5 gives the same minima; the
+    distinct set is VOCAB-bounded, its exchange is map-side-combined,
+    and the md5 + n_hashes·mulmod work runs once per distinct pair
+    instead of once per occurrence — measured 38x fewer hashed rows at
+    sf1 (14.7M -> 388k). Per-doc callers must not pass it: a (doc,
+    shingle) distinct is a corpus-sized exchange, the widest in any
+    dedup plan."""
+    if not distinct:
         return _portable_signatures_in_row(df, id_col, text_col, k, n_hashes)
-    sh = shingles(df, id_col, text_col, k, distinct=distinct).withColumn(
+    sh = shingles(df, id_col, text_col, k, distinct=True).withColumn(
         "x", F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
     )
-    if group_arrow:
-        # GROUP-keyed aggregate path (r14, guide §4.2): the n_hashes-min
-        # aggregate is >100 output fields, out of whole-stage codegen
-        # (the r13 maxFields lesson) — it ran INTERPRETED over the full
-        # distinct stream on both sides of the exchange. An Arrow kernel
-        # computes per-(task-batch, group) partial minima in vectorized
-        # int64 (exact — same mul-mod lattice), and the wide min
-        # aggregate then merges only (batches × groups) partial rows —
-        # interpreted over hundreds of rows instead of the vocab-sized
-        # stream. Same minima bit-for-bit (min is associative; pytest
-        # pins arrow == aggregate).
-        return _portable_sig_group_minima(sh, id_col, n_hashes)
-    mins = []
-    for i in range(n_hashes):
-        a, b = portable_hash_params(i)
-        mins.append(
-            F.min((F.lit(a) * F.col("x") + F.lit(b)) % PORTABLE_PRIME).alias(f"mh_{i}")
-        )
-    return (
-        sh.groupBy(id_col)
-        .agg(*mins)
-        .select(
-            id_col, F.array(*[F.col(f"mh_{i}") for i in range(n_hashes)]).alias("sig")
-        )
-    )
+    return _portable_sig_group_minima(sh, id_col, n_hashes)
 
 
 def _portable_sig_group_minima(
     sh: DataFrame, id_col: str, n_hashes: int
 ) -> DataFrame:
-    """Arrow segmented-min for the GROUP-keyed portable signature (see
-    ``portable_signatures``'s group_arrow doc). Input: (id_col, x) rows
-    (x may be null — a null shingle hashes to null and the aggregate
-    min ignores it; a group with only nulls keeps an all-null sig, as
-    in the aggregate form). Output: (id_col, sig)."""
+    """Arrow segmented-min for the GROUP-keyed portable signature: an
+    Arrow kernel computes per-(task-batch, group) partial minima in
+    vectorized int64 (exact — same mul-mod lattice), and the wide min
+    aggregate then merges only (batches × groups) partial rows instead
+    of the vocab-sized stream. Input: (id_col, x) rows (x may be null —
+    a null shingle hashes to null and min ignores it; a group with only
+    nulls keeps an all-null sig). Output: (id_col, sig).
+
+    The kernel works on Arrow arrays, not pandas: pandas turns a
+    nullable int64 key into float64, which merges distinct keys above
+    2^53. Keys are dictionary-encoded with null as its own entry, so
+    the group key reaches the output unchanged whatever its type."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     A = np.array(
@@ -436,29 +268,33 @@ def _portable_sig_group_minima(
     src = sh.select(F.col(id_col).alias("_g"), "x")
 
     def kernel(batches):
-        int64_max = np.iinfo(np.int64).max
-        for pdf in batches:
-            if len(pdf) == 0:
+        none = np.iinfo(np.int64).max  # above every hash (< 2^31): "no value"
+        for rb in batches:
+            if rb.num_rows == 0:
                 continue
-            out_g, out_sig = [], []
-            for gid, sub in pdf.groupby("_g", sort=False, dropna=False):
-                xs = sub["x"].dropna()
-                if len(xs) == 0:
-                    out_g.append(gid)
-                    out_sig.append([None] * n_hashes)
-                    continue
-                xv = xs.to_numpy(dtype=np.int64)
-                sig = np.full(n_hashes, int64_max)
-                for s in range(0, len(xv), 65536):
-                    block = (A * xv[s : s + 65536][None, :] + B) % PORTABLE_PRIME
-                    np.minimum(sig, block.min(axis=1), out=sig)
-                out_g.append(gid)
-                out_sig.append(sig)
-            yield pd.DataFrame(
-                {"_g": out_g, "sig": pd.Series(out_sig, dtype=object)}
+            enc = pc.dictionary_encode(rb.column(0), null_encoding="encode")
+            codes = enc.indices.to_numpy(zero_copy_only=False)
+            x = rb.column(1)
+            valid = x.is_valid().to_numpy(zero_copy_only=False)
+            xv = x.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
+            order = np.argsort(codes, kind="stable")
+            sig = np.full((len(enc.dictionary), n_hashes), none, dtype=np.int64)
+            for s in range(0, len(order), _TOKEN_BLOCK):
+                idx = order[s : s + _TOKEN_BLOCK]
+                block = (A * xv[idx][None, :] + B) % PORTABLE_PRIME
+                block[:, ~valid[idx]] = none
+                cs = codes[idx]
+                starts = np.flatnonzero(np.r_[True, cs[1:] != cs[:-1]])
+                g = cs[starts]  # sorted, so each group once per block
+                sig[g] = np.minimum(sig[g], np.minimum.reduceat(block, starts, axis=1).T)
+            flat = sig.ravel()
+            offsets = np.arange(0, flat.size + 1, n_hashes, dtype=np.int32)
+            sigs = pa.ListArray.from_arrays(
+                pa.array(offsets), pa.array(flat, mask=flat == none)
             )
+            yield pa.RecordBatch.from_arrays([enc.dictionary, sigs], ["_g", "sig"])
 
-    partial = src.mapInPandas(kernel, part_schema)
+    partial = src.mapInArrow(kernel, part_schema)
     merged = partial.groupBy("_g").agg(
         *[
             F.min(F.element_at("sig", i + 1)).alias(f"mh_{i}")
@@ -474,14 +310,14 @@ def _portable_sig_group_minima(
 def _portable_signatures_in_row(
     df: DataFrame, id_col: str, text_col: str, k: int, n_hashes: int
 ) -> DataFrame:
-    """One-pass Arrow form of ``portable_signatures`` (see its
-    ``in_row`` doc): normalization stays engine-side (Java and Python
+    """Per-doc Arrow kernel of ``portable_signatures`` (see its
+    ``distinct=False`` doc): normalization stays engine-side (Java and Python
     regex whitespace classes differ — only the literal-space split
     happens in Python), a null text yields an all-NULL signature row
-    (matching the aggregate form, where ``greatest(length(null)-k+1,1)``
+    (as in the aggregate form, where ``greatest(length(null)-k+1,1)``
     resurrects one null shingle whose minima are all null), and shingle
     slicing is code-point slicing in both engines. Raises on a duplicate
-    id within one Arrow batch, like ``_simhash_in_row``; duplicates in
+    id within one Arrow batch, like ``simhash``; duplicates in
     different batches are not detected."""
     import numpy as np
     import pandas as pd
@@ -596,9 +432,8 @@ def minhash_lsh_dedup_portable(
     """Engine-portable MinHash+LSH near-dup pairs (full-corpus pass).
 
     Every hash is derivable in plain SQL, so a DuckDB oracle replays the
-    pipeline exactly. Use the murmur3 array variant for raw speed; use
-    this one when cross-engine verifiability matters — and
-    ``minhash_lsh_dedup_incremental`` when an index already exists."""
+    pipeline exactly. Use ``minhash_lsh_dedup_incremental`` when an
+    index already exists."""
     sigs = persist(portable_signatures(df, id_col, text_col, k, n_hashes))
     banded = portable_bands(sigs, id_col, bands, n_hashes)
     a = banded.select(F.col(id_col).alias("id_a"), "band", "bkey")
@@ -1152,7 +987,7 @@ def simhash_near_dup(
         "dedup.simhash",
         df,
         (id_col, text_col, bits, "simhash_md5"),
-        lambda: simhash(df, id_col, text_col, bits=bits, hash_fn="md5"),
+        lambda: simhash(df, id_col, text_col, bits=bits),
     )
     band_cols = [
         F.struct(

@@ -13,9 +13,9 @@ Two pieces:
   bounded-state argument as the quantile-sketch cells), never over the
   data, so the plan costs one grouped count of the table plus an
   O(#partitions) window.
-- ``Warehouse.compact`` (sources/tables.py) — the EXECUTING half:
-  rewrite a table into ceil(rows/target) evenly-sized files via the
-  crash-safe staged swap.
+- ``sources.maintenance.compact_table`` — the EXECUTING half: rewrite
+  a table to a target file count per partition via the crash-safe
+  staged swap.
 """
 
 from __future__ import annotations
@@ -154,8 +154,8 @@ def zorder_layout(
     One pass + one bucket-keyed shuffle at any scale: global min/max
     come from a 1-row broadcast aggregate; the z computation is
     per-row; the summary groups on at most 2^bucket_bits keys. The
-    actual rewrite (repartitionByRange(z) + write) is Warehouse.compact
-    composed over this plan."""
+    actual rewrite (repartitionByRange(z) + write) is
+    ``sources.maintenance.compact_table`` composed over this plan."""
     x = F.col(x_col) if isinstance(x_col, str) else x_col
     y = F.col(y_col) if isinstance(y_col, str) else y_col
     base = df.select(

@@ -190,61 +190,6 @@ def _np_bucket_ids(V, S, n_tables: int, n_planes: int):
     return (bits * weights[None, None, :]).sum(axis=2)
 
 
-def lsh_bucket_assignments(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str = "embedding",
-    n_tables: int = 8,
-    n_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """(id, tbl, bucket) — one row per (vector, hash table). Multiple
-    independent tables buy recall: a true neighbor colliding in ANY
-    table becomes a candidate.
-
-    One narrow Arrow stage: all n_tables x n_planes plane dots are a
-    single BLAS matmul per batch against the broadcast ±1 sign matrix
-    (quantized-exact — see ``_np_bucket_ids``; the interpreted
-    higher-order-function form costs ~10x more). Output is ids only (no
-    vector payload), so the downstream bucket self-join shuffles only
-    ids."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    S = _sign_matrix(n_tables, n_planes, dim)
-    bc = df.sparkSession.sparkContext.broadcast(S)
-    id_type = df.schema[id_col].dataType
-    schema = T.StructType(
-        [
-            T.StructField(id_col, id_type),
-            T.StructField("tbl", T.IntegerType()),
-            T.StructField("bucket", T.LongType()),
-        ]
-    )
-
-    def assign(batches):
-        S_ = bc.value
-        tbls = np.arange(n_tables, dtype=np.int32)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            buckets = _np_bucket_ids(V, S_, n_tables, n_planes)
-            n = len(pdf)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col].to_numpy().repeat(n_tables),
-                    "tbl": np.tile(tbls, n),
-                    "bucket": buckets.ravel(),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(vec_col).alias("_vec")).mapInPandas(
-        assign, schema
-    )
-
-
 def lsh_buckets_oracle_sql(
     src: str,
     id_col: str = "vec_id",

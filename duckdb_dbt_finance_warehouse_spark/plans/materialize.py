@@ -7,17 +7,14 @@ Scale design notes:
   rest of a 100 TB fact table is untouched. Requires
   ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in both the
   session factory and defensively here).
-- The keyed fallback (anti-join + union + full rewrite) reproduces dbt's
-  delete+insert for arbitrary unique keys but rewrites the table — kept
-  for parity, not the scale path.
+  A delete+insert model without a partition key is rejected: keyed
+  replacement over arbitrary unique keys is ``sources.tables.merge_upsert``.
 - ``incremental_append`` writes only the new batch's rows; the
   high-watermark filter itself lives in the model function (it is model
   logic, as in the reference: stg_accounts.sql:9-11).
 """
 
 from __future__ import annotations
-
-from pyspark.sql import functions as F
 
 from .registry import Context, Model
 
@@ -31,6 +28,9 @@ def materialize(ctx: Context, m: Model) -> None:
 
         run_snapshot(ctx, m)
         return
+
+    if m.materialization == "incremental_delete_insert" and not m.partition_by:
+        raise ValueError(f"{m.name}: incremental_delete_insert needs partition_by")
 
     df = m.fn(ctx)
 
@@ -53,24 +53,11 @@ def materialize(ctx: Context, m: Model) -> None:
         return
 
     if m.materialization == "incremental_delete_insert":
-        if m.partition_by:
-            # dynamic partition overwrite: replaces only partitions present in df
-            ctx.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            ctx.wh.write(
-                df, m.schema, m.name, mode="overwrite", partition_by=list(m.partition_by)
-            )
-        else:
-            # exact dbt delete+insert for arbitrary unique keys
-            if not m.unique_key:
-                raise ValueError(f"{m.name}: delete+insert needs unique_key or partition_by")
-            target = ctx.this(m.name)
-            keep = target.join(
-                df.select(*m.unique_key).distinct(), list(m.unique_key), "left_anti"
-            )
-            out = keep.unionByName(df)
-            # self-referential overwrite -> staged write + directory swap
-            # (the anti-join reads the files being replaced)
-            ctx.wh.write_staged(out, m.schema, m.name)
+        # dynamic partition overwrite: replaces only partitions present in df
+        ctx.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        ctx.wh.write(
+            df, m.schema, m.name, mode="overwrite", partition_by=list(m.partition_by)
+        )
         return
 
     raise ValueError(f"unknown materialization {m.materialization}")

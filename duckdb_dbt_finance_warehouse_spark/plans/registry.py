@@ -14,9 +14,8 @@ Materializations (SURVEY §2.1 S8-S12):
 - ``incremental_delete_insert`` : the model recomputes a rolling month
   window; the policy writes it with DYNAMIC PARTITION OVERWRITE on the
   partition key (month_start_date), replacing exactly the restated
-  months — the scale-correct translation of dbt's delete+insert. A
-  non-partitioned fallback (anti-join + union) exists for arbitrary
-  unique keys.
+  months — the scale-correct translation of dbt's delete+insert.
+  ``partition_by`` is required (materialize raises without it).
 - ``snapshot``                  : SCD2 check-strategy merge (plans/snapshot.py).
 """
 

@@ -25,10 +25,6 @@ from pyspark.sql import types as T
 from .tables import Warehouse
 
 
-def _s(*names: str) -> list[T.StructField]:
-    return [T.StructField(n, T.StringType(), True) for n in names]
-
-
 def _schema(fields: dict[str, T.DataType]) -> T.StructType:
     return T.StructType([T.StructField(n, t, True) for n, t in fields.items()])
 

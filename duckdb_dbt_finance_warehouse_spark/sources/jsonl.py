@@ -120,10 +120,3 @@ def ingest_jsonl(
             wh.write(df.limit(0), raw_schema, t, mode="overwrite")
         wh.write(df, raw_schema, t, mode=write_mode)
     return wh.read(raw_schema, table), wh.read(raw_schema, qtable)
-
-
-def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Export a frame as JSONL (the interchange format downstream
-    tokenizer/training jobs read). Plain distributed write — one file
-    per task, no driver involvement."""
-    df.write.mode(mode).json(path)

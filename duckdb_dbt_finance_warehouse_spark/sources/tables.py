@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import weakref
+from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -79,14 +80,33 @@ def _read_testdata(spark: SparkSession, path: str) -> DataFrame:
     return df
 
 
+def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
+    """Read an events table with ``read()`` (a batch or a streaming
+    reader) and normalize ``ts`` to a microsecond TimestampType.
+
+    ``events.ts`` is TIMESTAMP(NANOS) parquet in some driver rounds,
+    which Spark reads as a nanosecond long
+    (``spark.sql.legacy.parquet.nanosAsLong``); it is floored to micros —
+    the same ns->us truncation DuckDB's parquet reader applies, so both
+    engines see identical values. Other rounds write TIMESTAMP(MICROS,
+    isAdjustedToUTC=false): the naive value IS the UTC wall clock, and
+    under the UTC session zone the cast maps it to the same instants.
+    The two confs are runtime-settable and set here because the caller's
+    session may be vanilla (the driver builds its own)."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    df = read()
+    ts_kind = dict(df.dtypes).get("ts")
+    if ts_kind == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    if ts_kind == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
 def load_testdata(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:
     """Load driver-generated parquet tables; default = all of them.
-
-    ``events.ts`` is TIMESTAMP(NANOS) parquet, which Spark reads as a
-    nanosecond long (``spark.sql.legacy.parquet.nanosAsLong``). It is
-    normalized here to a microsecond TimestampType by flooring — the
-    same ns->us truncation DuckDB's parquet reader applies, so both
-    engines see identical values.
+    ``events`` goes through ``read_events``.
 
     Schemas are inferred once per session and file version (inode,
     mtime) and passed on later loads, so a query built again over
@@ -95,22 +115,11 @@ def load_testdata(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, Da
     names = names or TESTDATA_TABLES
     out: dict[str, DataFrame] = {}
     for n in names:
+        path = os.path.join(sf_dir, f"{n}.parquet")
         if n == "events":
-            # the caller's session may be vanilla (the driver builds its
-            # own); these are runtime-settable and required for parity
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            spark.conf.set("spark.sql.session.timeZone", "UTC")
-        df = _read_testdata(spark, os.path.join(sf_dir, f"{n}.parquet"))
-        ts_kind = dict(df.dtypes).get("ts") if n == "events" else None
-        if ts_kind == "bigint":
-            df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-        elif ts_kind == "timestamp_ntz":
-            # TIMESTAMP(MICROS, isAdjustedToUTC=false) parquet: the naive
-            # value IS the UTC wall clock; session tz is UTC (set above),
-            # so this cast maps it to the same TimestampType instants the
-            # nanos path produces — downstream epoch casts keep working.
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        out[n] = df
+            out[n] = read_events(spark, lambda: _read_testdata(spark, path))
+        else:
+            out[n] = _read_testdata(spark, path)
     return out
 
 
@@ -342,7 +351,7 @@ class Warehouse:
         otherwise (stale shadow). Returns counts: staging_removed /
         trash_restored / trash_removed. On a cluster this is a
         cloud-store prefix listing + renames — run it from the
-        maintenance schedule next to ``compact``."""
+        maintenance schedule next to ``sources.maintenance.compact_table``."""
         import shutil
         import time
 
@@ -373,25 +382,6 @@ class Warehouse:
                         os.rename(os.path.join(sdir, d), self.path(schema, table))
                         counts["trash_restored"] += 1
         return counts
-
-    def compact(
-        self, schema: str, table: str, target_rows_per_file: int
-    ) -> int:
-        """Rewrite ``schema.table`` into ceil(rows / target) evenly-sized
-        files — the maintenance pass that undoes small-file accretion
-        from incremental appends (see operators/maintenance). Uses the
-        crash-safe staged swap (``write_staged``), so a failure mid-
-        compaction leaves the original table intact. Returns the file
-        count written. Round-robin repartition gives equal-size outputs;
-        on a cluster each output file is one task's single sorted write.
-        For PARTITIONED tables use ``sources.maintenance.compact_table``
-        — it preserves the partition layout (and can fold away
-        bookkeeping partitions like the streaming appenders' _epoch)."""
-        df = self.read(schema, table)
-        n = df.count()
-        n_files = max(1, -(-n // target_rows_per_file))
-        self.write_staged(df.repartition(n_files), schema, table)
-        return n_files
 
 
 def merge_upsert(

@@ -11,9 +11,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
-
-from .sources.tables import Warehouse, load_testdata
+from .sources.tables import Warehouse
 
 
 def register_warehouse(wh: Warehouse) -> list[str]:
@@ -106,11 +104,3 @@ def analyze_warehouse_catalog(
         if columns:
             spark.sql(stmt + " FOR ALL COLUMNS")
     return names
-
-
-def register_testdata(spark: SparkSession, sf_dir: str) -> list[str]:
-    """Register the driver corpus tables under their bare names."""
-    dfs = load_testdata(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return sorted(dfs)

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..sources.tables import read_events
+
 EVENT_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -41,21 +43,13 @@ EVENT_SCHEMA = T.StructType(
 
 def read_event_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream over an events parquet directory; ``ts``
-    normalized to TimestampType exactly like the batch loader
-    (``sources.tables.load_testdata``): TIMESTAMP(NANOS)-as-long files
-    are floored to micros, TIMESTAMP_NTZ files are mapped to the same
-    UTC instants. The file schema is probed with one batch-read of the
-    footer (streams need an explicit schema up front)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    static_schema = spark.read.parquet(path).schema
-    raw = spark.readStream.schema(static_schema).parquet(path)
-    kind = dict((f.name, f.dataType.typeName()) for f in static_schema.fields).get("ts")
-    if kind == "long":
-        return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    if kind == "timestamp_ntz":
-        return raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
+    normalized to TimestampType by ``sources.tables.read_events``, as
+    the batch loader does. The file schema is probed with one batch-read
+    of the footer (streams need an explicit schema up front)."""
+    return read_events(
+        spark,
+        lambda: spark.readStream.schema(spark.read.parquet(path).schema).parquet(path),
+    )
 
 
 def stream_raw_to_staging(

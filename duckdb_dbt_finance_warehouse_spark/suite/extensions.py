@@ -6,8 +6,7 @@ Every entry is oracle-paired except the one Arrow/mapInPandas query
 binary plumbing is oracle-verified separately by x_multimodal_bytestats).
 Hash-seeded operators use engine-portable hashes on the judged surface
 (md5 / Carter-Wegman / literal ±1 hyperplanes) so DuckDB replays them
-bit-for-bit; Spark-native murmur3/xxhash64 variants remain in
-operators/ as documented fast paths, pinned by tests/test_operators.py.
+bit-for-bit.
 """
 
 from __future__ import annotations
@@ -99,7 +98,7 @@ def x_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """60-bit SimHash fingerprints from portable md5 token hashes,
     sign-aggregated per bit (operators/dedup.simhash) — fully
     oracle-verified."""
-    return dedup.simhash(_docs(spark, sf_dir), "doc_id", "text", bits=60, hash_fn="md5")
+    return dedup.simhash(_docs(spark, sf_dir), "doc_id", "text", bits=60)
 
 
 @query(
@@ -277,10 +276,7 @@ def x_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(32)+LSH(8x4) near-dup pairs at shingle k=4 — a second,
     differently-tuned LSH configuration (fewer/wider bands trade recall
     for candidate volume), fully oracle-replayed via the portable
-    Carter-Wegman hashes. The murmur3 array variant
-    (operators/dedup.minhash_lsh_dedup) is the bench-only fast path,
-    pinned for determinism + known answers in tests/test_operators.py.
-    Served from the memoized stored pair table (minhash_pairs_frame) —
+    Carter-Wegman hashes. Served from the memoized stored pair table (minhash_pairs_frame) —
     the SAME frame x_dedup_clusters / x_leakage_safe_split /
     x_dedup_canonical consume (one build, four readers)."""
     return dedup.minhash_pairs_frame(
@@ -2441,8 +2437,8 @@ def x_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE encode over the corpus with the just-trained merges
-    (operators/bpe.bpe_segment, vocab_join path): the interpreted folds
-    run once per DISTINCT word, then the corpus joins the (word ->
+    (operators/bpe.bpe_segment): the folds run once per DISTINCT word
+    in an Arrow kernel, then the corpus joins the (word ->
     tokens) table on the word key and counts per doc — corpus work is
     one shuffle, no interpreted expressions. Oracle: the training CTE
     chain's final vocab IS the segmentation; join words back and
@@ -3308,9 +3304,10 @@ def x_maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction planning (operators/maintenance.compaction_plan):
     adjacent order months are binned into ~{target}-row compaction
     groups by one prefix sum over the per-month counts — the rewrite
-    schedule a maintenance job executes (Warehouse.compact). The window
-    runs over month SUMMARIES (bounded cardinality at any corpus size),
-    never over the fact rows."""
+    schedule a maintenance job executes
+    (sources.maintenance.compact_table). The window runs over month
+    SUMMARIES (bounded cardinality at any corpus size), never over the
+    fact rows."""
     orders = load_testdata(spark, sf_dir, "orders")["orders"]
     return maintenance.compaction_plan(
         orders,

@@ -1,16 +1,22 @@
 """r14 in-row Arrow kernel pins: the per-doc MinHash signature and the
 md5 SimHash fingerprint are pure functions of one row, so both moved
 off the explode + wide interpreted aggregate onto one mapInPandas
-kernel (guide §4.2; the r13 maxFields lesson).  These tests pin the
-kernel BIT-IDENTICAL to the aggregate form it replaced — the aggregate
-form is what the DuckDB oracle replays, so kernel == aggregate is the
-oracle-parity guarantee.  Synthetic edge rows cover the parity traps:
-empty text (both forms hash one empty token/shingle), short text
-(< k chars: one truncated shingle), null text (doc emits NO row in
-either form), multi-space originals (normalization stays engine-side),
-and non-ASCII code points (UTF-8 bytes + code-point slicing agree)."""
+kernel (guide §4.2; the r13 maxFields lesson), and the group-keyed
+signature merges Arrow partial minima.  These tests pin each kernel
+BIT-IDENTICAL to the aggregate form it replaced, kept here as a
+test-local oracle — the aggregate form is what the DuckDB oracle
+replays, so kernel == aggregate is the oracle-parity guarantee.
+Synthetic edge rows cover the parity traps: empty text (both forms
+hash one empty token/shingle), short text (< k chars: one truncated
+shingle), null text (doc emits NO row in either form), multi-space
+originals (normalization stays engine-side), and non-ASCII code points
+(UTF-8 bytes + code-point slicing agree)."""
 
 from __future__ import annotations
+
+from functools import reduce
+
+from pyspark.sql import functions as F
 
 from duckdb_dbt_finance_warehouse_spark.operators import dedup
 
@@ -29,13 +35,56 @@ def _edge_df(spark):
     return spark.createDataFrame(EDGE_DOCS, ["doc_id", "text"])
 
 
+def simhash_aggregate(df, id_col, text_col, bits=60):
+    """Reference SimHash: explode whitespace tokens, hash each with the
+    first 15 hex chars of md5, sum ±1 per bit in one wide aggregate and
+    set each fingerprint bit from the sign of its sum."""
+    toks = df.select(
+        F.col(id_col),
+        F.explode(F.split(dedup.normalize_text(text_col), " ")).alias("tok"),
+    ).withColumn("th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"))
+    bit_sums = [
+        F.sum(F.when(F.expr(f"(th >> {i}) & 1") == 1, 1).otherwise(-1)).alias(f"b{i}")
+        for i in range(bits)
+    ]
+    fp = reduce(
+        lambda acc, i: acc
+        + F.when(F.col(f"b{i}") > 0, F.shiftleft(F.lit(1).cast("long"), i)).otherwise(
+            F.lit(0).cast("long")
+        ),
+        range(bits),
+        F.lit(0).cast("long"),
+    )
+    return toks.groupBy(id_col).agg(*bit_sums).select(F.col(id_col), fp.alias("simhash"))
+
+
+def portable_signatures_aggregate(df, id_col, text_col, k=5, n_hashes=64, distinct=False):
+    """Reference portable MinHash signature: explode shingles, hash each
+    to a 28-bit md5 prefix x and take min((a_i*x + b_i) mod P) per key in
+    one wide aggregate — rows sharing a key merge into one signature."""
+    sh = dedup.shingles(df, id_col, text_col, k, distinct=distinct).withColumn(
+        "x", F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
+    )
+    mins = []
+    for i in range(n_hashes):
+        a, b = dedup.portable_hash_params(i)
+        mins.append(
+            F.min((F.lit(a) * F.col("x") + F.lit(b)) % dedup.PORTABLE_PRIME).alias(f"mh_{i}")
+        )
+    return (
+        sh.groupBy(id_col)
+        .agg(*mins)
+        .select(id_col, F.array(*[F.col(f"mh_{i}") for i in range(n_hashes)]).alias("sig"))
+    )
+
+
 def test_portable_signatures_kernel_matches_aggregate(spark):
     df = _edge_df(spark)
     for k, n_hashes in ((5, 64), (4, 32), (8, 16)):
         agg = {
             r["doc_id"]: list(r["sig"])
-            for r in dedup.portable_signatures(
-                df, "doc_id", "text", k, n_hashes, in_row=False, group_arrow=False
+            for r in portable_signatures_aggregate(
+                df, "doc_id", "text", k, n_hashes
             ).collect()
         }
         row = {
@@ -54,15 +103,11 @@ def test_simhash_kernel_matches_aggregate(spark):
     for bits in (60, 48):
         agg = {
             r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(
-                df, "doc_id", "text", bits=bits, hash_fn="md5", in_row=False
-            ).collect()
+            for r in simhash_aggregate(df, "doc_id", "text", bits=bits).collect()
         }
         row = {
             r["doc_id"]: r["simhash"]
-            for r in dedup.simhash(
-                df, "doc_id", "text", bits=bits, hash_fn="md5"
-            ).collect()
+            for r in dedup.simhash(df, "doc_id", "text", bits=bits).collect()
         }
         assert agg == row, f"kernel != aggregate at bits={bits}"
         assert 4 not in row
@@ -75,11 +120,11 @@ def test_simhash_kernel_blocks_a_long_document(spark):
     df = spark.createDataFrame([(1, text), (2, "short doc")], ["doc_id", "text"])
     agg = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash(df, "doc_id", "text", in_row=False).collect()
+        for r in simhash_aggregate(df, "doc_id", "text").collect()
     }
     row = {
         r["doc_id"]: r["simhash"]
-        for r in dedup.simhash(df, "doc_id", "text", in_row=True).collect()
+        for r in dedup.simhash(df, "doc_id", "text").collect()
     }
     assert agg == row
 
@@ -93,8 +138,8 @@ def test_in_row_kernels_reject_duplicate_ids(spark):
 
     df = spark.range(0, 256, 1, 1).selectExpr("7 AS doc_id", "concat('w ', id) AS text")
     for build in (
-        lambda: dedup.simhash(df, "doc_id", "text", in_row=True),
-        lambda: dedup.portable_signatures(df, "doc_id", "text", in_row=True),
+        lambda: dedup.simhash(df, "doc_id", "text"),
+        lambda: dedup.portable_signatures(df, "doc_id", "text"),
     ):
         with pytest.raises(Exception, match="duplicate doc_id"):
             build().collect()
@@ -108,26 +153,44 @@ def test_group_arrow_minima_match_aggregate(spark):
     df = spark.createDataFrame(rows, ["src", "text"])
     agg = {
         r["src"]: list(r["sig"])
-        for r in dedup.portable_signatures(
-            df, "src", "text", 5, 64, distinct=True, in_row=False, group_arrow=False
+        for r in portable_signatures_aggregate(
+            df, "src", "text", 5, 64, distinct=True
         ).collect()
     }
     arrow = {
         r["src"]: list(r["sig"])
         for r in dedup.portable_signatures(
-            df, "src", "text", 5, 64, distinct=True, in_row=False
+            df, "src", "text", 5, 64, distinct=True
         ).collect()
     }
     assert agg == arrow
 
 
-def test_in_row_rejects_group_semantics():
-    import pytest
+def test_group_minima_keep_int64_keys_above_2_pow_53_apart(spark):
+    """Group keys 2^53 and 2^53 + 1 are equal as float64; with a null
+    key beside them (one partition, so one Arrow batch) the group kernel
+    must still return three groups with the aggregate's minima."""
+    from pyspark.sql import types as T
 
-    with pytest.raises(ValueError):
-        dedup.portable_signatures(
-            None, "doc_id", "text", 5, 64, distinct=True, in_row=True
-        )
+    schema = T.StructType(
+        [T.StructField("src", T.LongType()), T.StructField("text", T.StringType())]
+    )
+    rows = [
+        (2**53, "the quick brown fox jumps"),
+        (2**53 + 1, "completely different words here"),
+        (None, "a third document with no key"),
+    ]
+    df = spark.createDataFrame(rows, schema).coalesce(1)
+    agg = {
+        r["src"]: list(r["sig"])
+        for r in portable_signatures_aggregate(df, "src", "text", 5, 8, distinct=True).collect()
+    }
+    got = {
+        r["src"]: list(r["sig"])
+        for r in dedup.portable_signatures(df, "src", "text", 5, 8, distinct=True).collect()
+    }
+    assert len(agg) == 3
+    assert got == agg
 
 
 def test_a8_percentiles_match_spark_percentile_aggregate(spark):

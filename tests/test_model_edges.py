@@ -74,6 +74,25 @@ def test_full_refresh_replaces_stale_partitions(spark, tmp_path_factory):
     assert len(got) == 1 and got[0]["v"] == 9  # the Feb partition is GONE
 
 
+def test_delete_insert_without_partition_key_raises(spark, tmp_path_factory):
+    """incremental_delete_insert is dynamic partition overwrite; a model
+    declaring it without ``partition_by`` is rejected before its
+    function runs."""
+    from duckdb_dbt_finance_warehouse_spark.plans.materialize import materialize
+    from duckdb_dbt_finance_warehouse_spark.plans.registry import Context, Model, Pipeline
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
+
+    def never(ctx):
+        raise AssertionError("model function ran")
+
+    m = Model("keyed", "mart", never, (), "incremental_delete_insert", unique_key=("id",))
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh")))
+    pipeline = Pipeline()
+    pipeline.register(m)
+    with pytest.raises(ValueError, match="keyed: incremental_delete_insert needs partition_by"):
+        materialize(Context(spark, wh, pipeline), m)
+
+
 def test_scd2_month_dim_backdates_only_earliest_version(spark):
     """Two versions opening inside the entity's FIRST month: only the
     earliest may cover pre-history months (the reference backdates both

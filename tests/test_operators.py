@@ -43,7 +43,7 @@ def test_exact_dedup_normalizes_case_and_whitespace(spark):
 def test_minhash_lsh_finds_near_dup_and_is_deterministic(spark):
     run = lambda: sorted(
         (r["id_a"], r["id_b"])
-        for r in dedup.minhash_lsh_dedup(
+        for r in dedup.minhash_lsh_dedup_portable(
             docs_df(spark), "doc_id", "text", threshold=0.5
         ).collect()
     )
@@ -607,24 +607,28 @@ def test_sessionize_without_tiebreak_column(spark):
     assert sorted(r["session_id"] for r in out) == ["100-1", "100-2", "200-1"]
 
 
-def test_lsh_bucket_assignments_index_workflow(spark):
-    """lsh_bucket_assignments is the persisted-index building block (at
-    100 TB you materialize (id, tbl, bucket) once and join query buckets
+def test_lsh_build_buckets_index_workflow(spark):
+    """lsh_build_buckets is the persisted-index building block (at
+    100 TB you materialize (tbl, bucket, id) once and join query buckets
     against it): assignments must be rerun-stable and joining a vector's
     own buckets back must find it (same vector -> same buckets)."""
     from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
 
     emb = load_testdata(spark, SF, "embeddings")["embeddings"]
-    b1 = similarity.lsh_bucket_assignments(emb, "vec_id", n_tables=4, n_planes=4)
-    b2 = similarity.lsh_bucket_assignments(emb, "vec_id", n_tables=4, n_planes=4)
+    b1, b2 = (
+        similarity.lsh_build_buckets(emb, "vec_id", n_tables=4, n_planes=4).select(
+            "tbl", "bucket", "cand_id"
+        )
+        for _ in range(2)
+    )
     rows1 = sorted(map(tuple, b1.collect()))
     assert rows1 == sorted(map(tuple, b2.collect()))
     n = emb.count()
     assert len(rows1) == n * 4  # one row per (vector, table)
     # self-join on (tbl, bucket): every vector collides with itself in
     # all tables -> at least n*4 matched pairs
-    a = b1.withColumnRenamed("vec_id", "a")
-    assert a.join(b2.withColumnRenamed("vec_id", "b"), ["tbl", "bucket"]).filter(
+    a = b1.withColumnRenamed("cand_id", "a")
+    assert a.join(b2.withColumnRenamed("cand_id", "b"), ["tbl", "bucket"]).filter(
         "a = b"
     ).count() == n * 4
 
@@ -1160,6 +1164,26 @@ def test_bloom_semi_join_no_false_negatives(spark):
     assert passed == passed2  # deterministic decisions
 
 
+def test_bloom_words_frame_sizes_like_bloom_m_for(spark):
+    """The stored words frame sizes the filter in-plan; it must pick
+    ``bloom_m_for``'s size at each power-of-two boundary and raise the
+    BLOOM_M_MAX error when the build side is too large."""
+    import pytest
+
+    from duckdb_dbt_finance_warehouse_spark.operators import bloom
+
+    try:
+        for n in (0, 1, 4096, 4097, 65536):
+            keys = spark.range(n).withColumnRenamed("id", "k")
+            got = bloom.bloom_words_frame(keys, "k").select("_bloom_m").first()[0]
+            assert got == bloom.bloom_m_for(n), n
+        too_many = spark.range(65537).withColumnRenamed("id", "k")
+        with pytest.raises(Exception, match="BLOOM_M_MAX"):
+            bloom.bloom_words_frame(too_many, "k").collect()
+    finally:
+        release_persisted()
+
+
 def test_dedup_clusters_random_graphs_match_union_find(spark):
     """Seeded random graphs (varying density, incl. chains + isolated
     pairs): large-star/small-star must agree exactly with a driver-side
@@ -1306,12 +1330,13 @@ def test_pack_sequences_invariants(spark):
 
 def test_compaction_plan_and_compact_rewrite(spark, tmp_path):
     """compaction_plan groups adjacent partitions by the prefix-sum rule;
-    Warehouse.compact rewrites to the expected file count, preserves
-    every row, and stays crash-safe (staged swap)."""
+    compact_table rewrites to the expected file count, preserves every
+    row, and stays crash-safe (staged swap)."""
     import glob
     import os
 
     from duckdb_dbt_finance_warehouse_spark.operators import maintenance
+    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import compact_table
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
     df = spark.range(1000).withColumn("part", F.col("id") % 10)
@@ -1326,7 +1351,7 @@ def test_compaction_plan_and_compact_rewrite(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path))
     wh.write(df.repartition(20), "main", "t")
     assert len(glob.glob(os.path.join(str(tmp_path), "main", "t", "*.parquet"))) == 20
-    n_files = wh.compact("main", "t", 500)
+    n_files = compact_table(wh, "main", "t", target_files=2)
     assert n_files == 2
     assert len(glob.glob(os.path.join(str(tmp_path), "main", "t", "*.parquet"))) == 2
     got = wh.read("main", "t")
@@ -1792,11 +1817,39 @@ def test_bpe_segment_matches_training_vocab(spark):
     assert out == again
 
 
+def bpe_segment_hof(df, id_col, text_col, merges):
+    """Reference BPE encode: the pure-Column HOF fold of every merge (in
+    rank order) over each word OCCURRENCE's symbols, then per-doc token
+    counts."""
+    from duckdb_dbt_finance_warehouse_spark.operators import bpe
+
+    words = df.select(
+        F.col(id_col),
+        F.explode(F.split(dedup.normalize_text(text_col), " ")).alias("word"),
+    )
+    mt = merges.orderBy("merge_round").agg(
+        F.collect_list(F.struct("lhs", "rhs")).alias("_merges")
+    )
+    apply_all = (
+        "aggregate(_merges, concat(split(word, ''), array('%s')), (acc, m) -> "
+        "aggregate(acc, CAST(array() AS array<string>), (a, x) -> "
+        "CASE WHEN size(a) > 0 AND element_at(a, -1) = m.lhs AND x = m.rhs "
+        "THEN concat(slice(a, 1, size(a) - 1), array(concat(m.lhs, m.rhs))) "
+        "ELSE concat(a, array(x)) END))" % bpe.END_MARKER
+    )
+    return (
+        words.crossJoin(F.broadcast(mt))
+        .select(F.col(id_col), F.explode(F.expr(apply_all)).alias("token"))
+        .groupBy(id_col, "token")
+        .agg(F.count("*").alias("n"))
+    )
+
+
 def test_bpe_segment_arrow_kernel_matches_hof_fold(spark):
-    """The vocab_join=True Arrow kernel (r13) must be byte-identical to
-    the pure-Column HOF fold path (vocab_join=False) — same greedy
-    left-to-right non-overlapping merge, including single-letter words
-    that fully merge and words no merge touches."""
+    """The Arrow kernel (r13) must be byte-identical to the pure-Column
+    HOF fold — same greedy left-to-right non-overlapping merge,
+    including single-letter words that fully merge and words no merge
+    touches."""
     from duckdb_dbt_finance_warehouse_spark.operators import bpe
 
     df = spark.createDataFrame(
@@ -1813,9 +1866,7 @@ def test_bpe_segment_arrow_kernel_matches_hof_fold(spark):
     }
     slow = {
         (r["doc_id"], r["token"]): r["n"]
-        for r in bpe.bpe_segment(
-            df, "doc_id", "text", merges, vocab_join=False
-        ).collect()
+        for r in bpe_segment_hof(df, "doc_id", "text", merges).collect()
     }
     assert fast == slow
 
