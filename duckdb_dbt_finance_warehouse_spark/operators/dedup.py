@@ -1015,7 +1015,8 @@ def simhash_near_dup(
         # hamming verify BEFORE the dedup: bit_count(xor) is two codegen
         # integer ops per collision, so the multi-band duplicate drop
         # pays a survivor-sized exchange, never a candidate-sized one
-        # (dedup the output-sized remainder — the _lsh_topk rule)
+        # (dedup the output-sized remainder — the dense top-k rule of
+        # similarity._query_topk)
         .select(
             "id_a",
             "id_b",

@@ -4,7 +4,7 @@ the trained coarse quantizer the IVF index docstring promises
 engine-portable and the DuckDB oracle replays every round bit-for-bit.
 
 Determinism stack (same contract as operators/similarity):
-- components quantized to the 2^-18 grid (``_np_quant`` /
+- components quantized to the 2^-18 grid (``similarity._np_quant`` /
   ``round(x * 262144.0)``) — every dot product and squared norm is an
   exact integer below 2^53, summation-order-free;
 - assignment = argmax quantized cosine, exact ties to the LOWEST
@@ -26,40 +26,21 @@ At 100 TB: rounds are linear scans; the model stays KBs.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..state import stored
-
-from . import similarity
-from .similarity import QUANT_SCALE, _np_quant
-
-
-def _seed_centroids(corpus: DataFrame, id_col: str, vec_col: str, seed_mod: int):
-    """Stride-seeded initial centroids. The collect is the model (k x
-    dim), not the data — but k = corpus/seed_mod grows with the corpus,
-    so it carries the same MAX_SEED_COLLECT cap as the IVF seeding
-    (checked via limit(cap+1); past it, raise rather than pull a
-    runaway row count onto the driver — pick a larger seed_mod)."""
-    import numpy as np
-
-    cap = similarity.MAX_SEED_COLLECT
-    rows = (
-        corpus.filter((F.col(id_col) % seed_mod) == 0)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy("cid")
-        .limit(cap + 1)
-        .collect()
-    )
-    if len(rows) > cap:
-        raise ValueError(
-            f"kmeans seeding would collect >{cap} centroids to the driver "
-            f"(corpus/{seed_mod} grows with the corpus) — raise seed_mod so "
-            "k stays model-sized"
-        )
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    C = _np_quant(np.array([r["cvec"] for r in rows], dtype=np.float64))
-    return cids, C
+from .similarity import (
+    QUANT_SCALE,
+    _np_cell_sums,
+    _np_half_away,
+    _np_nearest,
+    _np_norms,
+    _np_quant_rows,
+    _seed_centroids,
+)
 
 
 def _assign_kernel(bc, emit_sums: bool):
@@ -67,12 +48,11 @@ def _assign_kernel(bc, emit_sums: bool):
     (quantized cosine, ties to lowest cid). emit_sums=True -> per-batch
     per-cluster component sums (dim rows) + a dim=-1 count row;
     emit_sums=False -> (cluster_id, member_id) rows."""
-    import numpy as np
     import pandas as pd
 
     def kernel(batches):
         cids, C = bc.value
-        cn = np.sqrt((C * C).sum(axis=1))
+        cn = _np_norms(C)
         # zero-norm guard: a 0-vector makes cosine NaN and argmax would
         # silently pick centroid 0 while the SQL `cos = mx` predicate
         # drops the row — raise instead (house policy: checks raise,
@@ -82,14 +62,10 @@ def _assign_kernel(bc, emit_sums: bool):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            Vq = _np_quant(V)
-            vn = np.sqrt((Vq * Vq).sum(axis=1))
+            Vq, vn = _np_quant_rows(pdf["_vec"])
             if np.any(vn == 0):
                 raise ValueError("kmeans: zero-norm embedding vector")
-            cos = (Vq @ C.T) / (vn[:, None] * cn[None, :])
-            # first max = lowest cid (centroids are cid-sorted)
-            idx = np.argmax(cos, axis=1)
+            idx = _np_nearest(Vq, vn, C, cn)
             if not emit_sums:
                 yield pd.DataFrame(
                     {
@@ -98,23 +74,27 @@ def _assign_kernel(bc, emit_sums: bool):
                     }
                 )
                 continue
-            out_cid, out_dim, out_s = [], [], []
-            for i in np.unique(idx):
-                rows = np.nonzero(idx == i)[0]
-                sums = Vq[rows].sum(axis=0)  # exact ints in f64
-                dims = np.arange(len(sums), dtype=np.int32)
-                out_cid.append(np.full(len(sums) + 1, cids[i]))
-                out_dim.append(np.concatenate([dims, [-1]]))
-                out_s.append(np.concatenate([sums, [float(rows.size)]]))
-            yield pd.DataFrame(
-                {
-                    "cid": np.concatenate(out_cid),
-                    "dim": np.concatenate(out_dim).astype(np.int32),
-                    "s": np.concatenate(out_s).astype(np.int64),
-                }
-            )
+            cell, dim, s = _np_cell_sums(Vq, idx)
+            yield pd.DataFrame({"cid": cids[cell], "dim": dim, "s": s})
 
     return kernel
+
+
+def _assignments(
+    corpus: DataFrame, model, id_col: str, vec_col: str
+) -> DataFrame:
+    """(cluster_id, member_id) for every corpus row under the frozen
+    ``model`` — one narrow Arrow pass (the final assignment of
+    ``kmeans_cluster_stats`` and SemDeDup's cluster split)."""
+    bc = corpus.sparkSession.sparkContext.broadcast(model)
+    asg_schema = T.StructType(
+        [
+            T.StructField("cluster_id", T.LongType()),
+            T.StructField("member_id", corpus.schema[id_col].dataType),
+        ]
+    )
+    src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
+    return src.mapInPandas(_assign_kernel(bc, emit_sums=False), asg_schema)
 
 
 def kmeans_fit(
@@ -142,14 +122,8 @@ def kmeans_fit(
 def _train_kmeans(
     corpus: DataFrame, id_col: str, vec_col: str, seed_mod: int, n_iter: int
 ):
-    import numpy as np
-    from pyspark.sql import types as T
-
     spark = corpus.sparkSession
-    id_kind = corpus.schema[id_col].dataType.typeName()
-    if id_kind not in ("byte", "short", "integer", "long"):
-        raise TypeError(f"kmeans seeding needs an integral {id_col!r}; got {id_kind}")
-    cids, C = _seed_centroids(corpus, id_col, vec_col, seed_mod)
+    cids, C = _seed_centroids(corpus, id_col, vec_col, seed_mod, "kmeans_fit")
     src = corpus.select(
         F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec")
     )
@@ -168,6 +142,10 @@ def _train_kmeans(
             .agg(F.sum("s").alias("s"))
             .collect()
         )
+        # the round's scan is complete and the next round rebinds bc —
+        # release this model's driver+executor copies now, or a
+        # long-lived session keeps one per round
+        bc.destroy()
         counts = {r["cid"]: r["s"] for r in cells if r["dim"] == -1}
         sums: dict[int, np.ndarray] = {}
         for r in cells:
@@ -177,8 +155,7 @@ def _train_kmeans(
         for i, cid in enumerate(cids):
             n = counts.get(int(cid))
             if n:
-                mean = sums[int(cid)].astype(np.float64) / float(n)
-                newC[i] = np.sign(mean) * np.floor(np.abs(mean) + 0.5)
+                newC[i] = _np_half_away(sums[int(cid)].astype(np.float64) / float(n))
         C = newC
     # freeze the memoized arrays: every later hit returns these SAME
     # objects, and an in-place mutation by one consumer would corrupt
@@ -199,21 +176,8 @@ def kmeans_cluster_stats(
     """Fit + final assignment -> (cluster_id, n_members, min_member_id):
     the order-free integer summary of the final clustering (exactly what
     the DuckDB oracle can replay without float-accumulation hazards)."""
-    from pyspark.sql import types as T
-
-    spark = corpus.sparkSession
-    cids, C = kmeans_fit(corpus, id_col, vec_col, seed_mod, n_iter)
-    bc = spark.sparkContext.broadcast((cids, C))
-    id_type = corpus.schema[id_col].dataType
-    asg_schema = T.StructType(
-        [
-            T.StructField("cluster_id", T.LongType()),
-            T.StructField("member_id", id_type),
-        ]
-    )
-    src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    asg = src.mapInPandas(_assign_kernel(bc, emit_sums=False), asg_schema)
-    return asg.groupBy("cluster_id").agg(
+    model = kmeans_fit(corpus, id_col, vec_col, seed_mod, n_iter)
+    return _assignments(corpus, model, id_col, vec_col).groupBy("cluster_id").agg(
         F.count("*").alias("n_members"),
         F.min("member_id").alias("min_member_id"),
     )

@@ -12,7 +12,7 @@ dominate. Run it per ingest batch next to ``similarity.centroid_drift``
 and alert on jumps.
 
 Determinism stack (same contract as operators/kmeans):
-- components quantized to the 2^-18 grid (``_np_quant`` /
+- components quantized to the 2^-18 grid (``similarity._np_quant`` /
   ``round(x * 262144.0)``) — every Gram cell is an exact integer;
 - the covariance NUMERATOR ``A[i][j] = n·Σ(q_i·q_j) − Σq_i·Σq_j`` is
   exact (integer cross-multiplication, never a mean subtraction — the

@@ -15,7 +15,7 @@ Arrow stages.
 
 Determinism contract (same stack as operators/similarity and
 operators/kmeans, so the DuckDB oracle replays everything bit-for-bit):
-- components quantized to the 2^-18 grid (``_np_quant``) — every
+- components quantized to the 2^-18 grid (``similarity._np_quant``) — every
   subspace squared distance is an exact integer; the full ADC sum is
   bounded by dim·(2·|x|·2^18)², so it stays exact in float64 while
   |x| <= ~15 at dim=64 (the embeddings here are |x| <= ~1 — ample
@@ -43,13 +43,27 @@ instead of vectors.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
+from pyspark.sql import types as T
 
 from ..state import stored
 from . import similarity
-from .similarity import QUANT_SCALE, _np_quant
+from .similarity import (
+    QUANT_SCALE,
+    _model_digest,
+    _np_adc,
+    _np_cell_sums,
+    _np_half_away,
+    _np_nearest,
+    _np_pairs,
+    _np_pq_encode,
+    _np_pq_luts,
+    _np_quant_rows,
+    _pair_schema,
+    _query_topk,
+)
 
 
 def pq_seed_codebooks(
@@ -64,23 +78,18 @@ def pq_seed_codebooks(
     subspace s is row m's s-th subvector. K = corpus/seed_mod rows on
     the driver (the model, not the data) — capped like every seeding
     collect; train per-subspace k-means for a fixed K in production."""
-    import numpy as np
-
-    id_kind = corpus.schema[id_col].dataType.typeName()
-    if id_kind not in ("byte", "short", "integer", "long"):
-        raise TypeError(
-            f"pq_seed_codebooks requires an integral {id_col!r} (codebooks "
-            f"are seeded by id % {seed_mod}); got {id_kind}"
-        )
     cids, Cq = similarity._seed_centroids(
         corpus, id_col, vec_col, seed_mod, "pq_seed_codebooks"
     )
-    Cq = np.asarray(Cq, dtype=np.float64)
+    _check_subspaces(Cq, n_subspaces)
+    return cids, Cq
+
+
+def _check_subspaces(Cq, n_subspaces: int) -> None:
     if Cq.shape[1] % n_subspaces != 0:
         raise ValueError(
             f"pq: dim {Cq.shape[1]} not divisible into {n_subspaces} subspaces"
         )
-    return np.asarray(cids, dtype=np.int64), Cq
 
 
 def pq_train_codebooks(
@@ -131,9 +140,7 @@ def _train_codebooks(
     seed_mod: int,
     n_iter: int,
 ):
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     cids, Cq = pq_seed_codebooks(corpus, id_col, vec_col, n_subspaces, seed_mod)
     spark = corpus.sparkSession
@@ -155,33 +162,16 @@ def _train_codebooks(
             for pdf in batches:
                 if len(pdf) == 0:
                     continue
-                V = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-                out_m, out_code, out_d, out_s = [], [], [], []
+                V = _np_quant_rows(pdf["_vec"])[0]
+                codes = _np_pq_encode(V, C, n_subspaces)
+                parts = []
                 for m in range(n_subspaces):
-                    Vm = V[:, m * dsub : (m + 1) * dsub]
-                    Cm = C[:, m * dsub : (m + 1) * dsub]
-                    d2 = (
-                        (Vm * Vm).sum(axis=1)[:, None]
-                        - 2.0 * (Vm @ Cm.T)
-                        + (Cm * Cm).sum(axis=1)[None, :]
+                    code, d, s = _np_cell_sums(
+                        V[:, m * dsub : (m + 1) * dsub], codes[:, m]
                     )
-                    idx = np.argmin(d2, axis=1)  # tie -> lowest code id
-                    for c in np.unique(idx):
-                        rows = np.nonzero(idx == c)[0]
-                        sums = Vm[rows].sum(axis=0)  # exact ints in f64
-                        ds = np.arange(dsub, dtype=np.int32)
-                        out_m.append(np.full(dsub + 1, m, dtype=np.int32))
-                        out_code.append(np.full(dsub + 1, c, dtype=np.int32))
-                        out_d.append(np.concatenate([ds, [-1]]))
-                        out_s.append(np.concatenate([sums, [float(rows.size)]]))
-                yield pd.DataFrame(
-                    {
-                        "m": np.concatenate(out_m),
-                        "code": np.concatenate(out_code),
-                        "d": np.concatenate(out_d).astype(np.int32),
-                        "s": np.concatenate(out_s).astype(np.int64),
-                    }
-                )
+                    m_col = np.full(len(code), m, dtype=np.int32)
+                    parts.append(pd.DataFrame({"m": m_col, "code": code, "d": d, "s": s}))
+                yield pd.concat(parts)
 
         return kernel
 
@@ -211,9 +201,7 @@ def _train_codebooks(
                 n = counts.get((m, c))
                 if n:
                     mean = sums[(m, c)].astype(np.float64) / float(n)
-                    newC[c, m * dsub : (m + 1) * dsub] = np.sign(mean) * np.floor(
-                        np.abs(mean) + 0.5
-                    )
+                    newC[c, m * dsub : (m + 1) * dsub] = _np_half_away(mean)
         Cq = newC
     # freeze the memoized arrays: every later hit returns these SAME
     # objects, and an in-place mutation by one consumer would corrupt
@@ -236,12 +224,9 @@ def pq_encode(
     broadcast codebooks, exact-integer squared distances, ties to the
     lowest code id. Output (cand_id, codes array<int> length M) — the
     stored PQ index; 30-60x smaller than the vector table."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    _cids, Cq = model
-    bc = corpus.sparkSession.sparkContext.broadcast(np.asarray(Cq, np.float64))
+    bc = corpus.sparkSession.sparkContext.broadcast(np.asarray(model[1], np.float64))
     out_schema = T.StructType(
         [
             T.StructField("cand_id", corpus.schema[id_col].dataType),
@@ -251,23 +236,10 @@ def pq_encode(
 
     def encode(batches):
         C = bc.value
-        K, dim = C.shape
-        dsub = dim // n_subspaces
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            n = len(pdf)
-            codes = np.empty((n, n_subspaces), dtype=np.int32)
-            for m in range(n_subspaces):
-                Vm = V[:, m * dsub : (m + 1) * dsub]
-                Cm = C[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    (Vm * Vm).sum(axis=1)[:, None]
-                    - 2.0 * (Vm @ Cm.T)
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                )
-                codes[:, m] = np.argmin(d2, axis=1)  # tie -> lowest code id
+            codes = _np_pq_encode(_np_quant_rows(pdf["_vec"])[0], C, n_subspaces)
             yield pd.DataFrame(
                 {"cand_id": pdf["_id"].to_numpy(), "codes": list(codes)}
             )
@@ -293,8 +265,6 @@ def pq_codes_frame(
 ) -> DataFrame:
     """``pq_encode`` as STORED state: persisted and memoized by
     (corpus plan semantics, frozen-codebook digest)."""
-    from .similarity import _model_digest
-
     return stored(
         "pq.codes",
         corpus,
@@ -313,8 +283,6 @@ def ivf_pq_lists_frame(
 ) -> DataFrame:
     """``ivf_pq_build`` as STORED state: persisted and memoized by
     (corpus plan semantics, both frozen-model digests)."""
-    from .similarity import _model_digest
-
     key = (
         id_col,
         vec_col,
@@ -350,55 +318,18 @@ def pq_adc_topk(
     query-keyed window ranks ascending by the exact-integer approximate
     distance (ties to lowest cand_id). Output (query_id, cand_id,
     adist, rank)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    id_kind = queries.schema[id_col].dataType.typeName()
-    if id_kind not in ("byte", "short", "integer", "long"):
-        # same structural guard as similarity._ivf_model: the LUT/kernel
-        # paths carry ids as int64 numpy arrays
-        raise TypeError(
-            f"pq_adc_topk requires an integral {id_col!r}; got {id_kind}"
-        )
-    rows = similarity._collect_queries(
-        queries, id_col, vec_col, "pq_adc_topk", "ivf_ann_topk_probe_table"
+    # the LUT/kernel paths carry ids as int64 numpy arrays
+    similarity._integral_id(queries, id_col, "pq_adc_topk")
+    C = np.asarray(model[1], np.float64)
+    # an empty query frame (an upstream filter matching nothing in a
+    # scheduled job) is a (0, dim) panel and degrades to an empty
+    # result with the serving schema, not a hard failure (r8 ADVICE)
+    qids, Q, _ = similarity._query_panel(
+        queries, id_col, vec_col, "pq_adc_topk", "ivf_ann_topk_probe_table",
+        C.shape[1],
     )
-    if not rows:
-        # a legitimately-empty query frame (an upstream filter matching
-        # nothing in a scheduled job) degrades to an empty result with
-        # the output schema, not a hard failure (r8 ADVICE)
-        out = T.StructType(
-            [
-                T.StructField("query_id", queries.schema[id_col].dataType),
-                T.StructField("cand_id", codes.schema["cand_id"].dataType),
-                T.StructField("adist", T.LongType()),
-                T.StructField("rank", T.IntegerType()),
-            ]
-        )
-        return queries.sparkSession.createDataFrame([], out)
-    _cids, Cq = model
-    C = np.asarray(Cq, np.float64)
-    K, dim = C.shape
-    dsub = dim // n_subspaces
-    qids = np.array([r["query_id"] for r in rows], dtype=np.int64)
-    Q = _np_quant(np.array([r["q_vec"] for r in rows], dtype=np.float64))
-    luts = np.empty((n_subspaces, len(qids), K), dtype=np.float64)
-    for m in range(n_subspaces):
-        Qm = Q[:, m * dsub : (m + 1) * dsub]
-        Cm = C[:, m * dsub : (m + 1) * dsub]
-        luts[m] = (
-            (Qm * Qm).sum(axis=1)[:, None]
-            - 2.0 * (Qm @ Cm.T)
-            + (Cm * Cm).sum(axis=1)[None, :]
-        )
-    bc = codes.sparkSession.sparkContext.broadcast((qids, luts))
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("cand_id", codes.schema["cand_id"].dataType),
-            T.StructField("adist", T.LongType()),
-        ]
+    bc = codes.sparkSession.sparkContext.broadcast(
+        (qids, _np_pq_luts(Q, C, n_subspaces))
     )
 
     def score(batches):
@@ -406,32 +337,14 @@ def pq_adc_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Cd = np.stack(pdf["codes"].to_numpy()).astype(np.int64)
-            n = len(pdf)
-            S = np.zeros((len(qids_), n), dtype=np.float64)
-            for m in range(n_subspaces):
-                S += luts_[m][:, Cd[:, m]]
-            cand = pdf["cand_id"].to_numpy()
-            qi, ci = np.meshgrid(
-                np.arange(len(qids_)), np.arange(n), indexing="ij"
-            )
-            qi, ci = qi.ravel(), ci.ravel()
-            keep = qids_[qi] != cand[ci]
-            yield pd.DataFrame(
-                {
-                    "query_id": qids_[qi[keep]],
-                    "cand_id": cand[ci[keep]],
-                    "adist": S[qi[keep], ci[keep]].astype(np.int64),
-                }
-            )
+            S = _np_adc(luts_, pdf["codes"])
+            yield _np_pairs(qids_, pdf["cand_id"].to_numpy(), S, "adist")
 
-    scored = codes.mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "adist", "rank")
+    out_schema = _pair_schema(
+        queries.schema[id_col].dataType, codes.schema["cand_id"].dataType, "adist"
     )
+    scored = codes.mapInPandas(score, out_schema)
+    return _query_topk(scored, k, score="adist", asc=True)
 
 
 def pq_ann_topk(
@@ -471,16 +384,10 @@ def ivf_pq_build(
     instead of raw vectors — 30-60x smaller, which is what makes the
     list scan affordable at 100 TB. Both models are frozen, so batch
     append == full rebuild, same as every index here."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    cids, Cq, cnorms = ivf_model if len(ivf_model) == 3 else (*ivf_model, None)
-    if cnorms is None:
-        cnorms = np.sqrt((Cq * Cq).sum(axis=1))
-    _pq_ids, PQC = pq_model
     bc = corpus.sparkSession.sparkContext.broadcast(
-        (cids, Cq, cnorms, np.asarray(PQC, np.float64))
+        (*similarity._model3(ivf_model), np.asarray(pq_model[1], np.float64))
     )
     out_schema = T.StructType(
         [
@@ -492,30 +399,15 @@ def ivf_pq_build(
 
     def build(batches):
         cids_, Cq_, cn_, PQC_ = bc.value
-        K, dim = PQC_.shape
-        dsub = dim // n_subspaces
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            vn = np.sqrt((V * V).sum(axis=1))
-            cos = (V @ Cq_.T) / (vn[:, None] * cn_[None, :])
-            n = len(pdf)
-            codes = np.empty((n, n_subspaces), dtype=np.int32)
-            for m in range(n_subspaces):
-                Vm = V[:, m * dsub : (m + 1) * dsub]
-                Cm = PQC_[:, m * dsub : (m + 1) * dsub]
-                d2 = (
-                    (Vm * Vm).sum(axis=1)[:, None]
-                    - 2.0 * (Vm @ Cm.T)
-                    + (Cm * Cm).sum(axis=1)[None, :]
-                )
-                codes[:, m] = np.argmin(d2, axis=1)
+            V, vn = _np_quant_rows(pdf["_vec"])
             yield pd.DataFrame(
                 {
-                    "centroid_id": cids_[np.argmax(cos, axis=1)],
+                    "centroid_id": cids_[_np_nearest(V, vn, Cq_, cn_)],
                     "cand_id": pdf["_id"].to_numpy(),
-                    "codes": list(codes),
+                    "codes": list(_np_pq_encode(V, PQC_, n_subspaces)),
                 }
             )
 
@@ -555,11 +447,7 @@ def ivf_pq_topk(
         if ivf_model is None and seed_mod == n_centroids_mod:
             # both untrained models seed from the SAME stride rows —
             # reuse the ivf collect instead of scanning the seeds twice
-            if ivf3[1].shape[1] % n_subspaces != 0:
-                raise ValueError(
-                    f"pq: dim {ivf3[1].shape[1]} not divisible into "
-                    f"{n_subspaces} subspaces"
-                )
+            _check_subspaces(ivf3[1], n_subspaces)
             pq_model = (ivf3[0], ivf3[1])
         else:
             pq_model = pq_seed_codebooks(
@@ -593,109 +481,29 @@ def ivf_pq_probe_lists_topk(
     (centroid_id, cand_id, codes). Probe fan-out, per-list ADC, and the
     top-k window are identical to ``ivf_pq_topk``'s tail — both models
     must be the FROZEN pair the index was built under."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    ivf3 = ivf_model if len(ivf_model) == 3 else (
-        np.asarray(ivf_model[0], np.int64),
-        np.asarray(ivf_model[1], np.float64),
-        np.sqrt((np.asarray(ivf_model[1], np.float64) ** 2).sum(axis=1)),
-    )
-    cids, Cq, cnorms = ivf3
-    _pq_ids, PQC = pq_model
-    n_probes_eff = min(n_probes, len(cids))
-    bc = queries.sparkSession.sparkContext.broadcast(
-        (cids, Cq, cnorms, np.asarray(PQC, np.float64))
-    )
-    probe_schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("_vec", queries.schema[vec_col].dataType),
-        ]
+    probes = similarity._ivf_probe_frame(queries, ivf_model, id_col, vec_col, n_probes)
+    PQC = np.asarray(pq_model[1], np.float64)
+    bc = queries.sparkSession.sparkContext.broadcast(PQC)
+    dim = PQC.shape[1]
+    out_schema = _pair_schema(
+        queries.schema[id_col].dataType,
+        _corpus_id_type or lists.schema["cand_id"].dataType,
+        "adist",
     )
 
-    def assign_probes(batches):
-        cids_, Cq_, cn_, _ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Qq = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            qn = np.sqrt((Qq * Qq).sum(axis=1))
-            cos = (Qq @ Cq_.T) / (qn[:, None] * cn_[None, :])
-            # stable sort on -cos keeps cid-ascending order among ties
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :n_probes_eff]
-            n = len(pdf)
-            idx = np.repeat(np.arange(n), n_probes_eff)
-            yield pd.DataFrame(
-                {
-                    "centroid_id": cids_[order.ravel()],
-                    "query_id": pdf["query_id"].to_numpy()[idx],
-                    "_vec": pdf["_vec"].to_numpy()[idx],
-                }
-            )
-
-    probes = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_vec")
-    ).mapInPandas(assign_probes, probe_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField(
-                "cand_id", _corpus_id_type or lists.schema["cand_id"].dataType
-            ),
-            T.StructField("adist", T.LongType()),
-        ]
-    )
-
-    def score(cands: "pd.DataFrame", prbs: "pd.DataFrame") -> "pd.DataFrame":
-        if len(cands) == 0 or len(prbs) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "cand_id": [], "adist": []}
-            ).astype({"adist": "int64"})
-        _, _, _, PQC_ = bc.value
-        K, dim = PQC_.shape
-        dsub = dim // n_subspaces
-        Q = _np_quant(np.stack(prbs["_vec"].to_numpy()).astype(np.float64))
-        Cd = np.stack(cands["codes"].to_numpy()).astype(np.int64)
-        S = np.zeros((len(prbs), len(cands)), dtype=np.float64)
-        for m in range(n_subspaces):
-            Qm = Q[:, m * dsub : (m + 1) * dsub]
-            Cm = PQC_[:, m * dsub : (m + 1) * dsub]
-            lut = (
-                (Qm * Qm).sum(axis=1)[:, None]
-                - 2.0 * (Qm @ Cm.T)
-                + (Cm * Cm).sum(axis=1)[None, :]
-            )
-            S += lut[:, Cd[:, m]]
-        qids = prbs["query_id"].to_numpy()
-        cand = cands["cand_id"].to_numpy()
-        qi, ci = np.meshgrid(
-            np.arange(len(qids)), np.arange(len(cand)), indexing="ij"
-        )
-        qi, ci = qi.ravel(), ci.ravel()
-        keep = qids[qi] != cand[ci]
-        return pd.DataFrame(
-            {
-                "query_id": qids[qi[keep]],
-                "cand_id": cand[ci[keep]],
-                "adist": S[qi[keep], ci[keep]].astype(np.int64),
-            }
-        )
+    def score(cands, prbs):
+        # each call builds its probes' LUTs locally against the
+        # broadcast codebook; an empty side is a (0, dim) panel
+        luts = _np_pq_luts(_np_quant_rows(prbs["_vec"], dim)[0], bc.value, n_subspaces)
+        S = _np_adc(luts, cands["codes"])
+        return _np_pairs(prbs["query_id"].to_numpy(), cands["cand_id"].to_numpy(), S, "adist")
 
     scored = (
         lists.groupBy("centroid_id")
         .cogroup(probes.groupBy("centroid_id"))
         .applyInPandas(score, out_schema)
     )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "adist", "rank")
-    )
+    return _query_topk(scored, k, score="adist", asc=True)
 
 
 def _pq_base_ctes(

@@ -13,8 +13,12 @@
   assigns corpus AND queries (union), probe lists joined by centroid.
 - ``embedding_near_dup_pairs_lsh`` : embedding-level dedup at scale —
   LSH bucket candidates + exact-cosine verify, never all-pairs.
-- ``embedding_near_dup_pairs`` : the exact all-pairs baseline (O(N²),
-  kept for verification at small N only — NOT the judged/scale path).
+
+Every vector kernel here, in operators/kmeans and in operators/pq keeps
+one quantized-exact contract, written once in the ``_np_*`` helpers
+below: components quantized to ``QUANT_SCALE``, exact integer dots,
+ROUND(·, 6) half away from zero, ties to the lowest id, and one rank
+window per top-k output (``_query_topk``).
 
 Scale notes: brute force is O(|Q| x |C|) — fine for |Q| small (probe
 queries) but not for all-pairs; LSH turns it into per-bucket work. The
@@ -26,8 +30,10 @@ from __future__ import annotations
 import hashlib
 from functools import lru_cache
 
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..state import persist, stored
 
@@ -47,6 +53,291 @@ def cosine_expr(a: str, b: str) -> F.Column:
     )
 
 
+# ---------------------------------------------------------------------------
+# the quantized-exact contract (shared with operators/kmeans and pq)
+# ---------------------------------------------------------------------------
+
+# Quantization scale for every vector metric: components are rounded to
+# integer multiples of 2^-18. A power of two makes v * SCALE exact in
+# float64, and every quantized product / partial sum is an integer far
+# below 2^53 — so dots and squared norms are EXACT in float64 regardless
+# of summation order. BLAS np.dot, a JVM fold, and DuckDB's list_sum all
+# produce the same bits by construction; no round-before-compare is
+# needed anywhere in an assignment.
+QUANT_SCALE = float(1 << 18)
+
+MAX_SEED_COLLECT = 4096
+MAX_QUERY_COLLECT = 1 << 17
+
+_INTEGRAL = ("byte", "short", "integer", "long")
+
+
+def _np_half_away(X):
+    """Round to an integer half away from zero, as SQL round() does in
+    both engines (numpy's own rounding is half-to-even)."""
+    return np.sign(X) * np.floor(np.abs(X) + 0.5)
+
+
+def _np_quant(V):
+    """V * QUANT_SCALE rounded half away from zero; V * QUANT_SCALE is
+    exact, so both engines round the same value."""
+    return _np_half_away(V * QUANT_SCALE)
+
+
+def _np_round6(X):
+    """ROUND(x, 6) half away from zero — every published cosine."""
+    return _np_half_away(X * 1e6) / 1e6
+
+
+def _np_norms(Xq):
+    """Row L2 norms of a quantized matrix: sqrt of an exact-integer sum."""
+    return np.sqrt((Xq * Xq).sum(axis=1))
+
+
+def _np_quant_rows(vecs, dim: int = 0):
+    """(Vq, norms) for a batch of vectors — an Arrow list column or
+    collected lists. An empty batch gives (0, ``dim``) and (0,) arrays,
+    so the panel math downstream needs no special case."""
+    if len(vecs) == 0:
+        Vq = np.zeros((0, dim))
+    else:
+        Vq = _np_quant(np.stack(list(vecs)).astype(np.float64))
+    return Vq, _np_norms(Vq)
+
+
+def _np_cos(Xq, xn, Cq, cn):
+    """Quantized-cosine matrix, rows of Xq by rows of Cq: exact-integer
+    dots (BLAS, any summation order) over exact-integer norms, then one
+    IEEE multiply and one divide — bit-identical to any SQL replay of
+    the same quantized expression."""
+    return (Xq @ Cq.T) / (xn[:, None] * cn[None, :])
+
+
+def _np_nearest(Xq, xn, Cq, cn):
+    """Index of each row's nearest centroid by quantized cosine. argmax
+    returns the FIRST max and models are cid-sorted, so exact ties go
+    to the lowest cid (the oracle's min(cid) WHERE cos = max(cos))."""
+    return np.argmax(_np_cos(Xq, xn, Cq, cn), axis=1)
+
+
+def _np_probe_order(Qq, qn, Cq, cn, n_probes: int):
+    """Indexes of each query's ``n_probes`` nearest centroids, nearest
+    first; the stable sort on -cos keeps cid-ascending order among
+    ties."""
+    return np.argsort(-_np_cos(Qq, qn, Cq, cn), axis=1, kind="stable")[:, :n_probes]
+
+
+def _np_pairs(qids, cids, S, score: str = "cosine"):
+    """One (query_id, cand_id, ``score``) row per cell of the probe x
+    candidate score matrix ``S``, self matches (query_id == cand_id)
+    dropped. Ids keep their native dtype; the output schema casts."""
+    import pandas as pd
+
+    qi, ci = np.nonzero(qids[:, None] != cids[None, :])
+    return pd.DataFrame({"query_id": qids[qi], "cand_id": cids[ci], score: S[qi, ci]})
+
+
+def _np_cos_pairs(q_vecs, qids, x_vecs, cids):
+    """``_np_pairs`` over ROUND(quantized cosine, 6) of every probe
+    against every candidate — the scoring of one co-located group."""
+    if len(qids) == 0 or len(cids) == 0:
+        S = np.zeros((len(qids), len(cids)))
+    else:
+        Qq, qn = _np_quant_rows(q_vecs)
+        Xq, xn = _np_quant_rows(x_vecs)
+        S = _np_round6(_np_cos(Qq, qn, Xq, xn))
+    return _np_pairs(qids, cids, S)
+
+
+def _np_triu_pairs(vecs, ids, threshold: float):
+    """Every unordered pair of one group at ROUND(quantized cosine, 6)
+    >= ``threshold``, as (id_a, id_b, cosine) with id_a < id_b."""
+    import pandas as pd
+
+    Xq, xn = _np_quant_rows(vecs)
+    C = _np_round6(_np_cos(Xq, xn, Xq, xn))
+    ia, ib = np.triu_indices(len(ids), k=1)
+    keep = C[ia, ib] >= threshold
+    ia, ib = ia[keep], ib[keep]
+    a, b = ids[ia], ids[ib]
+    return pd.DataFrame(
+        {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b), "cosine": C[ia, ib]}
+    )
+
+
+def _np_cell_sums(V, labels):
+    """Map-side combine of one Lloyd round: for each label present, the
+    exact component sums of its rows (dim 0..d-1) and its row count
+    (dim -1), as long-form (label, dim, s) arrays."""
+    d = V.shape[1]
+    keys = np.unique(labels)
+    sums = []
+    for key in keys:
+        rows = V[labels == key]
+        sums.append(np.append(rows.sum(axis=0), len(rows)))  # exact ints in f64
+    return (
+        np.repeat(keys, d + 1),
+        np.tile(np.append(np.arange(d), -1), len(keys)).astype(np.int32),
+        np.concatenate(sums).astype(np.int64),
+    )
+
+
+def _np_sub_d2(V, C, m: int, n_subspaces: int):
+    """Squared L2 distances between the m-th subvectors of V's rows and
+    of C's rows, as |v|² - 2·v·c + |c|²: every term an exact integer
+    for quantized V and C, so the sum is exact too."""
+    dsub = C.shape[1] // n_subspaces
+    Vm = V[:, m * dsub : (m + 1) * dsub]
+    Cm = C[:, m * dsub : (m + 1) * dsub]
+    return (
+        (Vm * Vm).sum(axis=1)[:, None]
+        - 2.0 * (Vm @ Cm.T)
+        + (Cm * Cm).sum(axis=1)[None, :]
+    )
+
+
+def _np_pq_encode(V, C, n_subspaces: int):
+    """(n, M) int32 PQ codes of quantized rows: per subspace the nearest
+    codeword, ties to the lowest code id (argmin's first occurrence ==
+    SQL min(code) WHERE d2 = min_d2)."""
+    return np.stack(
+        [np.argmin(_np_sub_d2(V, C, m, n_subspaces), axis=1) for m in range(n_subspaces)],
+        axis=1,
+    ).astype(np.int32)
+
+
+def _np_pq_luts(Q, C, n_subspaces: int):
+    """(M, nq, K) ADC lookup tables: the exact squared distance from each
+    query's subvector m to every codeword's."""
+    return np.stack([_np_sub_d2(Q, C, m, n_subspaces) for m in range(n_subspaces)])
+
+
+def _np_adc(luts, codes):
+    """(nq, n) int64 approximate distances of coded rows (an Arrow list
+    column): the sum of M exact LUT lookups."""
+    Cd = np.array(list(codes), dtype=np.int64).reshape(len(codes), len(luts))
+    S = np.zeros((luts.shape[1], len(Cd)))
+    for m in range(len(luts)):
+        S += luts[m][:, Cd[:, m]]
+    return S.astype(np.int64)
+
+
+def _pair_schema(qid_type, cid_type, score: str = "cosine"):
+    """Output schema of a pair-scoring kernel: (query_id, cand_id,
+    cosine DOUBLE), or (…, adist BIGINT) for the PQ ADC kernels."""
+    score_type = T.LongType() if score == "adist" else T.DoubleType()
+    return T.StructType(
+        [
+            T.StructField("query_id", qid_type),
+            T.StructField("cand_id", cid_type),
+            T.StructField(score, score_type),
+        ]
+    )
+
+
+def _query_topk(
+    scored: DataFrame,
+    k: int,
+    by: str = "query_id",
+    score: str = "cosine",
+    asc: bool = False,
+    dense: bool = False,
+) -> DataFrame:
+    """Per-``by`` top-k under the total order (``score`` best first,
+    cand_id ASC) — the one rank window of every top-k output here and
+    in operators/pq; WindowGroupLimit pushdown applies to both rank
+    functions.
+
+    ``dense``: for a RAW stream of collision-duplicated pairs (LSH
+    multi-table hits). Exact duplicates carry identical (score,
+    cand_id) keys, so ``dense_rank`` gives them one rank — dense_rank
+    <= k over the raw stream equals row_number <= k over the deduped
+    stream — and the leftover duplicates (at most n_tables x k per
+    query) go in a DISTINCT that is output-sized, never a pair-sized
+    dedup exchange before the window."""
+    order = F.asc(score) if asc else F.desc(score)
+    w = Window.partitionBy(by).orderBy(order, F.asc("cand_id"))
+    rank = (F.dense_rank() if dense else F.row_number()).over(w)
+    top = scored.withColumn("rank", rank).filter(F.col("rank") <= k)
+    return (top.distinct() if dense else top).select(*scored.columns, "rank")
+
+
+def _integral_id(df: DataFrame, id_col: str, caller: str) -> None:
+    """Raise unless ``id_col`` is integral: stride seeding (id % mod)
+    and the int64 id arrays of the model and LUT kernels need it."""
+    kind = df.schema[id_col].dataType.typeName()
+    if kind not in _INTEGRAL:
+        raise TypeError(
+            f"{caller} requires an integral {id_col!r} (models are seeded "
+            f"by id stride and carry int64 ids); got {kind}"
+        )
+
+
+def _query_panel(queries, id_col, vec_col, caller: str, table_variant: str, dim: int = 0):
+    """Driver-side probe panel for the small-probe serving paths:
+    (qids, Qq, qnorms), ids int64 for an integral id column and native
+    objects otherwise; an empty panel gives (0, ``dim``) arrays.
+    Capped (via limit(cap+1) — the probe job never pulls the runaway
+    set): a query side big enough to trip this is a TABLE, and the
+    cogrouped table-probe path handles it without any driver collect."""
+    rows = (
+        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
+        .limit(MAX_QUERY_COLLECT + 1)
+        .collect()
+    )
+    if len(rows) > MAX_QUERY_COLLECT:
+        raise ValueError(
+            f"{caller}: >{MAX_QUERY_COLLECT} query vectors is a probe TABLE, "
+            f"not a driver-side probe set — use {table_variant} (cogrouped "
+            "bucket/centroid join, no driver collect)"
+        )
+    integral = queries.schema[id_col].dataType.typeName() in _INTEGRAL
+    qids = np.array(
+        [r["query_id"] for r in rows], dtype=np.int64 if integral else object
+    )
+    return (qids, *_np_quant_rows([r["q_vec"] for r in rows], dim))
+
+
+def _seed_centroids(corpus, id_col, vec_col, seed_mod, caller: str):
+    """Driver-side stride seeding — every ``id % seed_mod == 0`` row,
+    cid-sorted, quantized: the untrained IVF quantizer, the PQ seed
+    codebooks and k-means' initial centroids. The seed count grows
+    linearly with the corpus, so it is hard-capped at
+    ``MAX_SEED_COLLECT`` (checked via ``limit(cap+1)`` — the job scans
+    at most cap+1 rows, never the runaway set). Past the cap, raise the
+    stride or train centroids distributed (operators/kmeans.kmeans_fit —
+    the x_ann_ivf_trained flow) and pass them as ``model=``; seeding by
+    id stride was only ever a deterministic stand-in for training."""
+    _integral_id(corpus, id_col, caller)
+    rows = (
+        corpus.filter((F.col(id_col) % seed_mod) == 0)
+        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
+        .orderBy("cid")
+        .limit(MAX_SEED_COLLECT + 1)
+        .collect()
+    )
+    if len(rows) > MAX_SEED_COLLECT:
+        raise ValueError(
+            f"{caller}: stride seeding would collect >{MAX_SEED_COLLECT} "
+            f"rows to the driver (corpus/{seed_mod} grows with the corpus). "
+            "Raise seed_mod so k stays model-sized, or train centroids with "
+            "operators/kmeans.kmeans_fit and pass model=(ids, vectors) — "
+            "see the x_ann_ivf_trained suite entry."
+        )
+    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
+    return cids, _np_quant_rows([r["cvec"] for r in rows])[0]
+
+
+def _model3(model):
+    """A frozen centroid model as (cids int64, Cq float64, cnorms):
+    ``model`` is (cids, Cq) — kmeans_fit, the stride seeding, a loaded
+    index model — or already that triple."""
+    if len(model) == 3:
+        return model
+    Cq = np.asarray(model[1], dtype=np.float64)
+    return np.asarray(model[0], dtype=np.int64), Cq, _np_norms(Cq)
+
+
 def cosine_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -59,7 +350,7 @@ def cosine_topk(
     is audited against.
 
     The probe panel is collected driver-side (model-sized state, capped
-    by ``_collect_queries`` — a panel past the cap is a probe TABLE and
+    by ``_query_panel`` — a panel past the cap is a probe TABLE and
     takes the cogrouped path) and broadcast into ONE numpy map stage
     over the corpus: dense vector math through the interpreted
     higher-order-function route paid ~5x (CodegenFallback per element;
@@ -72,26 +363,14 @@ def cosine_topk(
     top-k per query under the total order (cosine DESC, cand_id ASC)
     — no ties possible, ids are unique — so the global window's input
     is (batches x panel x k), never corpus-sized: the 100 TB shape."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    rows = _collect_queries(
+    qids, Qq, qn = _query_panel(
         queries, id_col, vec_col, "cosine_topk",
         "lsh_probe_buckets_topk / ivf_probe_table_topk",
     )
-    qids = np.array([r["query_id"] for r in rows])
-    Qq = _np_quant(np.array([r["q_vec"] for r in rows], dtype=np.float64))
-    qn = np.sqrt((Qq * Qq).sum(axis=1))
     bc = corpus.sparkSession.sparkContext.broadcast((qids, Qq, qn))
     id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("cand_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def score(batches):
         qids_, Qq_, qn_ = bc.value
@@ -99,11 +378,8 @@ def cosine_topk(
         for pdf in batches:
             if len(pdf) == 0 or nq == 0:
                 continue
-            X = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            xn = np.sqrt((X * X).sum(axis=1))
-            C = (Qq_ @ X.T) / (qn_[:, None] * xn[None, :])
-            # ROUND(x, 6) half away from zero, as both SQL engines do
-            C = np.sign(C) * np.floor(np.abs(C) * 1e6 + 0.5) / 1e6
+            X, xn = _np_quant_rows(pdf["_vec"])
+            C = _np_round6(_np_cos(Qq_, qn_, X, xn))
             cids = pdf["_cid"].to_numpy()
             out_q, out_c, out_s = [], [], []
             kk = min(k, len(cids))
@@ -133,13 +409,8 @@ def cosine_topk(
 
     scored = corpus.select(
         F.col(id_col).alias("_cid"), F.col(vec_col).alias("_vec")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    ).mapInPandas(score, _pair_schema(id_type, id_type))
+    return _query_topk(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -164,8 +435,6 @@ def plane_signs(table: int, plane: int, dim: int) -> tuple[float, ...]:
 def _sign_matrix(n_tables: int, n_planes: int, dim: int):
     """(n_tables*n_planes, dim) ±1 matrix from ``plane_signs``, row
     t*n_planes+p = plane p of table t."""
-    import numpy as np
-
     return np.array(
         [
             plane_signs(t, p, dim)
@@ -176,16 +445,15 @@ def _sign_matrix(n_tables: int, n_planes: int, dim: int):
     )
 
 
-def _np_bucket_ids(V, S, n_tables: int, n_planes: int):
-    """(B, n_tables) bucket ids: bit p of table t set iff the QUANTIZED
-    dot with plane (t, p) is positive. Quantized components make every
-    plane dot an exact float64 integer (products are ±quantized values,
-    partial sums integers << 2^53), so the sign — and therefore the
-    bucket — is engine-independent with no rounding rule at all."""
-    import numpy as np
-
-    P = _np_quant(V) @ S.T  # exact integers
-    bits = (P > 0).astype(np.int64).reshape(len(V), n_tables, n_planes)
+def _np_bucket_ids(Vq, S, n_tables: int, n_planes: int):
+    """(B, n_tables) bucket ids of QUANTIZED rows ``Vq``: bit p of table
+    t set iff the dot with plane (t, p) is positive. Quantized
+    components make every plane dot an exact float64 integer (products
+    are ±quantized values, partial sums integers << 2^53), so the sign —
+    and therefore the bucket — is engine-independent with no rounding
+    rule at all."""
+    P = Vq @ S.T  # exact integers
+    bits = (P > 0).astype(np.int64).reshape(len(Vq), n_tables, n_planes)
     weights = (1 << np.arange(n_planes)).astype(np.int64)
     return (bits * weights[None, None, :]).sum(axis=2)
 
@@ -219,87 +487,6 @@ def lsh_buckets_oracle_sql(
             f" CAST({' + '.join(bits)} AS BIGINT) AS bucket FROM {src}"
         )
     return "(" + "\nUNION ALL\n".join(selects) + ")"
-
-
-# Quantization scale for the IVF assignment metric: components are
-# rounded to integer multiples of 2^-18. A power of two makes v * SCALE
-# exact in float64, and every quantized product / partial sum is an
-# integer far below 2^53 — so dots and squared norms are EXACT in
-# float64 regardless of summation order. BLAS np.dot, a JVM fold, and
-# DuckDB's list_sum all produce the same bits by construction; no
-# round-before-compare is needed anywhere in the assignment.
-QUANT_SCALE = float(1 << 18)
-
-
-def _np_quant(V):
-    """Half-away-from-zero round of V * QUANT_SCALE (matches SQL
-    round()); V * QUANT_SCALE is exact, so both engines round the same
-    value."""
-    import numpy as np
-
-    Y = V * QUANT_SCALE
-    return np.sign(Y) * np.floor(np.abs(Y) + 0.5)
-
-
-def _np_quant_cos_pre(Xq, Cq, xnorms, cnorms):
-    """Quantized-cosine matrix for pre-quantized sides: exact integer
-    dots (BLAS) over exact integer norms — deterministic IEEE ops only,
-    bit-identical to any SQL replay of the same quantized expression."""
-    return (Xq @ Cq.T) / (xnorms[:, None] * cnorms[None, :])
-
-
-MAX_SEED_COLLECT = 4096
-MAX_QUERY_COLLECT = 1 << 17
-
-
-def _collect_queries(queries, id_col, vec_col, caller: str, table_variant: str):
-    """Driver-side query collect for the small-probe serving paths.
-    Capped (via limit(cap+1) — the probe job never pulls the runaway
-    set): a query side big enough to trip this is a TABLE, and the
-    cogrouped table-probe path handles it without any driver collect."""
-    rows = (
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
-        .limit(MAX_QUERY_COLLECT + 1)
-        .collect()
-    )
-    if len(rows) > MAX_QUERY_COLLECT:
-        raise ValueError(
-            f"{caller}: >{MAX_QUERY_COLLECT} query vectors is a probe TABLE, "
-            f"not a driver-side probe set — use {table_variant} (cogrouped "
-            "bucket/centroid join, no driver collect)"
-        )
-    return rows
-
-
-def _seed_centroids(corpus, id_col, vec_col, n_centroids_mod, caller: str):
-    """Driver-side centroid seeding for the UNTRAINED IVF path: collect
-    every ``id % n_centroids_mod == 0`` row. The seed count grows
-    linearly with the corpus, so it is hard-capped at
-    ``MAX_SEED_COLLECT`` (checked via ``limit(cap+1)`` — the job
-    scans at most cap+1 rows, never the runaway set). Past the cap,
-    train centroids distributed (operators/kmeans.kmeans_fit — the
-    x_ann_ivf_trained flow) and pass them as ``model=``; seeding by id
-    stride was only ever a deterministic stand-in for training."""
-    import numpy as np
-
-    cent_rows = (
-        corpus.filter((F.col(id_col) % n_centroids_mod) == 0)
-        .select(F.col(id_col).alias("cid"), F.col(vec_col).alias("cvec"))
-        .orderBy("cid")
-        .limit(MAX_SEED_COLLECT + 1)
-        .collect()
-    )
-    if len(cent_rows) > MAX_SEED_COLLECT:
-        raise ValueError(
-            f"{caller}: untrained centroid seeding would collect "
-            f">{MAX_SEED_COLLECT} rows to the driver (corpus/"
-            f"{n_centroids_mod} grows with the corpus). Train centroids "
-            "with operators/kmeans.kmeans_fit and pass model=(ids, "
-            "vectors) — see the x_ann_ivf_trained suite entry."
-        )
-    cids = np.array([r["cid"] for r in cent_rows], dtype=np.int64)
-    Cq = _np_quant(np.array([r["cvec"] for r in cent_rows], dtype=np.float64))
-    return cids, Cq
 
 
 def ivf_ann_topk(
@@ -350,141 +537,63 @@ def ivf_ann_topk(
     At 100 TB you would persist the inverted lists (partitioned by
     centroid_id) once and let query batches prune to their probed
     partitions; the per-batch scoring kernel is unchanged."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    spark = corpus.sparkSession
     # centroid seeding is `id % n_centroids_mod` and probe_map keys on
     # int(cid): this operator structurally requires an integral id column
     # (unlike lsh_ann_topk / embed_near_dup_pairs, which are id-agnostic)
-    id_kind = corpus.schema[id_col].dataType.typeName()
-    if id_kind not in ("byte", "short", "integer", "long"):
-        raise TypeError(
-            f"ivf_ann_topk requires an integral {id_col!r} (centroids are "
-            f"seeded by id % {n_centroids_mod}); got {id_kind}"
-        )
-    if model is not None:
-        cids, Cq = np.asarray(model[0], dtype=np.int64), np.asarray(model[1], dtype=np.float64)
-    else:
-        cids, Cq = _seed_centroids(corpus, id_col, vec_col, n_centroids_mod, "ivf_ann_topk")
-    cnorms = np.sqrt((Cq * Cq).sum(axis=1))
-    n_probes_eff = min(n_probes, len(cids))
-
-    q_rows = _collect_queries(
-        queries, id_col, vec_col, "ivf_ann_topk", "ivf_ann_topk_probe_table"
+    cids, Cq, cnorms = _ivf_model(
+        corpus, id_col, vec_col, n_centroids_mod, model, "ivf_ann_topk"
     )
-    qids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    Qq = _np_quant(np.array([r["q_vec"] for r in q_rows], dtype=np.float64)) if q_rows else np.zeros((0, 1))
-    qnorms = np.sqrt((Qq * Qq).sum(axis=1))
-    # probe map: centroid_id -> query indexes probing that list
+    qids, Qq, qn = _query_panel(
+        queries, id_col, vec_col, "ivf_ann_topk", "ivf_ann_topk_probe_table",
+        Cq.shape[1],
+    )
+    # probe map: centroid_id -> indexes of the queries probing that list
     probe_map: dict[int, list[int]] = {}
-    if q_rows:
-        r_cos = _np_quant_cos_pre(Qq, Cq, qnorms, cnorms)
-        # stable sort on -cos keeps cid-ascending order among ties
-        order = np.argsort(-r_cos, axis=1, kind="stable")[:, :n_probes_eff]
-        for qi in range(len(q_rows)):
-            for j in order[qi]:
-                probe_map.setdefault(int(cids[j]), []).append(qi)
-
-    bc = spark.sparkContext.broadcast((cids, Cq, cnorms, qids, Qq, qnorms, probe_map))
-    id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("cand_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    for qi, probed in enumerate(_np_probe_order(Qq, qn, Cq, cnorms, n_probes)):
+        for j in probed:
+            probe_map.setdefault(int(cids[j]), []).append(qi)
+    probe_map = {cid: np.array(qs) for cid, qs in probe_map.items()}
+    bc = corpus.sparkSession.sparkContext.broadcast(
+        (cids, Cq, cnorms, qids, Qq, qn, probe_map)
     )
+    id_type = corpus.schema[id_col].dataType
 
     def score_batches(batches):
         cids_, Cq_, cn_, qids_, Qq_, qn_, pm_ = bc.value
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Xq = _np_quant(np.stack(pdf["c_vec"].to_numpy()).astype(np.float64))
-            xnorm = np.sqrt((Xq * Xq).sum(axis=1))
-            cos_mat = (Xq @ Cq_.T) / (xnorm[:, None] * cn_[None, :])
-            # argmax returns the FIRST max; centroids are cid-sorted, so
-            # exact ties break to the lowest cid (matches the oracle)
-            assigned = cids_[np.argmax(cos_mat, axis=1)]
+            Xq, xn = _np_quant_rows(pdf["c_vec"])
+            assigned = cids_[_np_nearest(Xq, xn, Cq_, cn_)]
             ids = pdf["cand_id"].to_numpy()
-            out_q, out_c, out_s = [], [], []
-            for cid, q_idxs in pm_.items():
+            out = []
+            for cid, qs in pm_.items():
                 rows = np.nonzero(assigned == cid)[0]
-                if rows.size == 0:
-                    continue
-                for qi in q_idxs:
-                    cos = (Xq[rows] @ Qq_[qi]) / (xnorm[rows] * qn_[qi])
-                    keep = ids[rows] != qids_[qi]
-                    out_q.append(np.full(keep.sum(), qids_[qi]))
-                    out_c.append(ids[rows][keep])
-                    # ROUND(x, 6) half away from zero, as both SQL engines do
-                    c6 = cos[keep]
-                    out_s.append(np.sign(c6) * np.floor(np.abs(c6) * 1e6 + 0.5) / 1e6)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
+                if rows.size:
+                    S = _np_round6(_np_cos(Qq_[qs], qn_[qs], Xq[rows], xn[rows]))
+                    out.append(_np_pairs(qids_[qs], ids[rows], S))
+            if out:
+                yield pd.concat(out)
 
     pair_scored = corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("c_vec")
-    ).mapInPandas(score_batches, out_schema)
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        pair_scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
+    ).mapInPandas(score_batches, _pair_schema(id_type, id_type))
+    return _query_topk(pair_scored, k)
+
+
+def _pair_score_cogroup(cands, probes):
+    """Cogroup scoring kernel shared by the probe-table ANN paths: for
+    one co-located group (an IVF inverted list or an LSH bucket),
+    block-matmul the quantized cosine of every (probe, candidate) pair,
+    drop self-matches, and emit rounded scores. All arithmetic is
+    quantized-exact (``QUANT_SCALE``), so the DuckDB oracle replays it
+    bit-for-bit."""
+    return _np_cos_pairs(
+        probes["_vec"], probes["query_id"].to_numpy(),
+        cands["_vec"], cands["cand_id"].to_numpy(),
     )
-
-
-def _pair_score_cogroup_fn():
-    """Build the cogroup scoring kernel shared by the probe-table ANN
-    paths: given (candidates, probes) pandas frames for one co-located
-    group (an IVF inverted list or an LSH bucket), block-matmul the
-    quantized cosine of every (probe, candidate) pair, drop self-matches,
-    and emit rounded scores. All arithmetic is quantized-exact
-    (``QUANT_SCALE``), so the DuckDB oracle replays it bit-for-bit."""
-    import numpy as np
-    import pandas as pd
-
-    empty = {
-        "query_id": np.array([], dtype=object),
-        "cand_id": np.array([], dtype=object),
-        "cosine": np.array([], dtype=np.float64),
-    }
-
-    def score(cands: pd.DataFrame, probes: pd.DataFrame) -> pd.DataFrame:
-        if len(cands) == 0 or len(probes) == 0:
-            return pd.DataFrame(empty)
-        Xq = _np_quant(np.stack(cands["_vec"].to_numpy()).astype(np.float64))
-        Qq = _np_quant(np.stack(probes["_vec"].to_numpy()).astype(np.float64))
-        xn = np.sqrt((Xq * Xq).sum(axis=1))
-        qn = np.sqrt((Qq * Qq).sum(axis=1))
-        C = (Qq @ Xq.T) / np.outer(qn, xn)
-        # ROUND(x, 6) half away from zero, as both SQL engines do
-        C = np.sign(C) * np.floor(np.abs(C) * 1e6 + 0.5) / 1e6
-        qids = probes["query_id"].to_numpy()
-        cids = cands["cand_id"].to_numpy()
-        qi, ci = np.meshgrid(
-            np.arange(len(qids)), np.arange(len(cids)), indexing="ij"
-        )
-        qi, ci = qi.ravel(), ci.ravel()
-        keep = qids[qi] != cids[ci]
-        return pd.DataFrame(
-            {
-                "query_id": qids[qi[keep]],
-                "cand_id": cids[ci[keep]],
-                "cosine": C[qi[keep], ci[keep]],
-            }
-        )
-
-    return score
 
 
 def _ivf_model(corpus, id_col, vec_col, n_centroids_mod, model, caller):
@@ -492,20 +601,10 @@ def _ivf_model(corpus, id_col, vec_col, n_centroids_mod, model, caller):
     (trained k-means or a loaded index model), else the deterministic
     id-sample seeding. Returns (cids, Cq, cnorms) ready to broadcast —
     KB-scale, the only thing these paths ever collect."""
-    import numpy as np
-
-    id_kind = corpus.schema[id_col].dataType.typeName()
-    if id_kind not in ("byte", "short", "integer", "long"):
-        raise TypeError(
-            f"{caller} requires an integral {id_col!r} (centroids are "
-            f"seeded by id % {n_centroids_mod}); got {id_kind}"
-        )
-    if model is not None:
-        cids = np.asarray(model[0], dtype=np.int64)
-        Cq = np.asarray(model[1], dtype=np.float64)
-    else:
-        cids, Cq = _seed_centroids(corpus, id_col, vec_col, n_centroids_mod, caller)
-    return cids, Cq, np.sqrt((Cq * Cq).sum(axis=1))
+    _integral_id(corpus, id_col, caller)
+    if model is None:
+        model = _seed_centroids(corpus, id_col, vec_col, n_centroids_mod, caller)
+    return _model3(model)
 
 
 def ivf_build_lists(
@@ -524,21 +623,14 @@ def ivf_build_lists(
     frozen model, so appending a new batch's lists to a stored index
     is EXACTLY equivalent to a full rebuild — the invariant
     ``ivf_incremental_topk`` serves under and tests pin."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    cids, Cq, cnorms = model if len(model) == 3 else (*model, None)
-    if cnorms is None:
-        cnorms = np.sqrt((Cq * Cq).sum(axis=1))
-    bc = corpus.sparkSession.sparkContext.broadcast((cids, Cq, cnorms))
-    id_type = corpus.schema[id_col].dataType
-    vec_type = corpus.schema[vec_col].dataType
+    bc = corpus.sparkSession.sparkContext.broadcast(_model3(model))
     cand_schema = T.StructType(
         [
             T.StructField("centroid_id", T.LongType()),
-            T.StructField("cand_id", id_type),
-            T.StructField("_vec", vec_type),
+            T.StructField("cand_id", corpus.schema[id_col].dataType),
+            T.StructField("_vec", corpus.schema[vec_col].dataType),
         ]
     )
 
@@ -547,14 +639,10 @@ def ivf_build_lists(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Xq = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            xn = np.sqrt((Xq * Xq).sum(axis=1))
-            cos = (Xq @ Cq_.T) / (xn[:, None] * cn_[None, :])
-            # argmax returns the FIRST max; centroids are cid-sorted, so
-            # exact ties break to the lowest cid (matches the oracle)
+            Xq, xn = _np_quant_rows(pdf["_vec"])
             yield pd.DataFrame(
                 {
-                    "centroid_id": cids_[np.argmax(cos, axis=1)],
+                    "centroid_id": cids_[_np_nearest(Xq, xn, Cq_, cn_)],
                     "cand_id": pdf["cand_id"].to_numpy(),
                     "_vec": pdf["_vec"].to_numpy(),
                 }
@@ -563,6 +651,45 @@ def ivf_build_lists(
     return corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_vec")
     ).mapInPandas(assign_corpus, cand_schema)
+
+
+def _ivf_probe_frame(
+    queries: DataFrame, model, id_col: str, vec_col: str, n_probes: int
+) -> DataFrame:
+    """IVF probe fan-out: one Arrow stage emits (centroid_id, query_id,
+    _vec) for each probe's ``n_probes`` nearest centroids under the
+    frozen ``model`` — the probe side of the centroid_id cogroup, for
+    raw-vector and PQ-code lists alike."""
+    import pandas as pd
+
+    bc = queries.sparkSession.sparkContext.broadcast(_model3(model))
+    probe_schema = T.StructType(
+        [
+            T.StructField("centroid_id", T.LongType()),
+            T.StructField("query_id", queries.schema[id_col].dataType),
+            T.StructField("_vec", queries.schema[vec_col].dataType),
+        ]
+    )
+
+    def assign_probes(batches):
+        cids_, Cq_, cn_ = bc.value
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            Qq, qn = _np_quant_rows(pdf["_vec"])
+            order = _np_probe_order(Qq, qn, Cq_, cn_, n_probes)
+            idx = np.repeat(np.arange(len(pdf)), order.shape[1])
+            yield pd.DataFrame(
+                {
+                    "centroid_id": cids_[order.ravel()],
+                    "query_id": pdf["query_id"].to_numpy()[idx],
+                    "_vec": pdf["_vec"].to_numpy()[idx],
+                }
+            )
+
+    return queries.select(
+        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_vec")
+    ).mapInPandas(assign_probes, probe_schema)
 
 
 def ivf_probe_lists_topk(
@@ -582,69 +709,19 @@ def ivf_probe_lists_topk(
     against exactly the probes that probe it. When ``lists`` is a
     stored table partitioned by centroid_id, the probed lists prune at
     the scan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    cids, Cq, cnorms = model if len(model) == 3 else (*model, None)
-    if cnorms is None:
-        cnorms = np.sqrt((Cq * Cq).sum(axis=1))
-    n_probes_eff = min(n_probes, len(cids))
-    bc = queries.sparkSession.sparkContext.broadcast((cids, Cq, cnorms))
-    probe_schema = T.StructType(
-        [
-            T.StructField("centroid_id", T.LongType()),
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("_vec", queries.schema[vec_col].dataType),
-        ]
+    probes = _ivf_probe_frame(queries, model, id_col, vec_col, n_probes)
+    out_schema = _pair_schema(
+        queries.schema[id_col].dataType, lists.schema["cand_id"].dataType
     )
-
-    def assign_probes(batches):
-        cids_, Cq_, cn_ = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            Qq = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-            qn = np.sqrt((Qq * Qq).sum(axis=1))
-            cos = (Qq @ Cq_.T) / (qn[:, None] * cn_[None, :])
-            # stable sort on -cos keeps cid-ascending order among ties
-            order = np.argsort(-cos, axis=1, kind="stable")[:, :n_probes_eff]
-            n = len(pdf)
-            idx = np.repeat(np.arange(n), n_probes_eff)
-            yield pd.DataFrame(
-                {
-                    "centroid_id": cids_[order.ravel()],
-                    "query_id": pdf["query_id"].to_numpy()[idx],
-                    "_vec": pdf["_vec"].to_numpy()[idx],
-                }
-            )
-
-    probes = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("_vec")
-    ).mapInPandas(assign_probes, probe_schema)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", queries.schema[id_col].dataType),
-            T.StructField("cand_id", lists.schema["cand_id"].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    score = _pair_score_cogroup_fn()
     scored = (
         lists.groupBy("centroid_id")
         .cogroup(probes.groupBy("centroid_id"))
-        .applyInPandas(score, out_schema)
+        .applyInPandas(_pair_score_cogroup, out_schema)
     )
     # (query, cand) appears at most once: a candidate lives in exactly
     # one inverted list and a probe visits each list at most once — no
     # distinct needed before the top-k window.
-    wk = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    return _query_topk(scored, k)
 
 
 def ivf_ann_topk_probe_table(
@@ -829,12 +906,12 @@ def lsh_ann_topk_probe_table(
         )
     if probe_pred is not None:
         buckets = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
-        return _lsh_topk(_lsh_flagged_scores(buckets, probe_pred), k)
+        return _query_topk(_lsh_flagged_scores(buckets, probe_pred), k, dense=True)
     scored = _lsh_scored_pairs(
         corpus, queries, id_col, vec_col, n_tables, n_planes, dim,
         prune_to_probed=prune_to_probed, dedup=False,
     )
-    return _lsh_topk(scored, k)
+    return _query_topk(scored, k, dense=True)
 
 
 def lsh_build_buckets(
@@ -859,9 +936,7 @@ def lsh_build_buckets(
     frozen planes, so appending a new batch's bucket rows to a stored
     index is EXACTLY equivalent to a full rebuild — the invariant
     ``lsh_incremental_topk`` serves under and tests pin."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     S = _sign_matrix(n_tables, n_planes, dim)
     bc = df.sparkSession.sparkContext.broadcast(S)
@@ -880,8 +955,7 @@ def lsh_build_buckets(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            B = _np_bucket_ids(V, S_, n_tables, n_planes)
+            B = _np_bucket_ids(_np_quant_rows(pdf["_vec"])[0], S_, n_tables, n_planes)
             n = len(pdf)
             idx = np.repeat(np.arange(n), n_tables)
             yield pd.DataFrame(
@@ -935,10 +1009,6 @@ def _model_digest(*arrays) -> str:
     models hash equal, so consumers share one stored build; a retrained
     or drifted model can never alias a stale index (the digest changes
     with any single centroid bit)."""
-    import hashlib
-
-    import numpy as np
-
     h = hashlib.md5()
     for a in arrays:
         a = np.ascontiguousarray(np.asarray(a))
@@ -1031,52 +1101,27 @@ def _lsh_score_prehashed(
     probe panel is an indexed subset, so its rows come straight out of
     the stored/persisted index instead of re-hashing through an extra
     Arrow stage)."""
-    from pyspark.sql import types as T
-
     if prune_to_probed:
         probed_keys = probes.select("tbl", "bucket").distinct()
         buckets = buckets.join(
             F.broadcast(probed_keys), ["tbl", "bucket"], "left_semi"
         )
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", qid_type),
-            T.StructField("cand_id", buckets.schema["cand_id"].dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    score = _pair_score_cogroup_fn()
     scored = (
         buckets.groupBy("tbl", "bucket")
         .cogroup(probes.groupBy("tbl", "bucket"))
-        .applyInPandas(score, out_schema)
+        .applyInPandas(
+            _pair_score_cogroup,
+            _pair_schema(qid_type, buckets.schema["cand_id"].dataType),
+        )
     )
     # dedup=False: a top-k consumer folds the multi-table dedup into its
-    # rank window (_lsh_topk) instead of paying a pair-sized exchange
+    # dense rank window (_query_topk) instead of paying a pair-sized
+    # exchange
     return scored.distinct() if dedup else scored
 
 
-def _lsh_topk(scored_raw: DataFrame, k: int) -> DataFrame:
-    """Top-k over RAW (collision-duplicated) scored pairs in ONE window
-    pass: exact duplicates carry identical (cosine, cand_id) keys, so
-    ``dense_rank`` assigns them one rank — dense_rank <= k over the raw
-    stream equals row_number <= k over the deduped stream, and the
-    leftover duplicate rows (at most n_tables x k per query) are
-    dropped by a DISTINCT that is output-sized, not pair-sized. Saves
-    the full pair-sized dedup exchange the old distinct-then-rank form
-    paid; rank-function group-limit pushdown (WindowGroupLimit) applies
-    to dense_rank the same as row_number."""
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored_raw.withColumn("rank", F.dense_rank().over(w))
-        .filter(F.col("rank") <= k)
-        .distinct()
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
-
-
 def _pair_score_flagged_fn(probes_are_candidates: bool = True):
-    """Single-frame variant of ``_pair_score_cogroup_fn`` for probe
+    """Single-frame variant of ``_pair_score_cogroup`` for probe
     panels that are INDEXED SUBSETS: one group's rows carry an
     ``_is_probe`` flag, the kernel splits probes out and scores them
     against the group. Lets the serving plan pay ONE (tbl, bucket)
@@ -1090,41 +1135,14 @@ def _pair_score_flagged_fn(probes_are_candidates: bool = True):
     reported as contaminated corpus docs) scores probes against the
     non-probe rows only, matching the cogroup form whose corpus side
     excluded the eval set."""
-    import numpy as np
-    import pandas as pd
 
-    empty = {
-        "query_id": np.array([], dtype=object),
-        "cand_id": np.array([], dtype=object),
-        "cosine": np.array([], dtype=np.float64),
-    }
-
-    def score(pdf: pd.DataFrame) -> pd.DataFrame:
+    def score(pdf):
         pr = pdf[pdf["_is_probe"]]
         if not probes_are_candidates:
             pdf = pdf[~pdf["_is_probe"]]
-        if len(pdf) == 0 or len(pr) == 0:
-            return pd.DataFrame(empty)
-        Xq = _np_quant(np.stack(pdf["_vec"].to_numpy()).astype(np.float64))
-        Qq = _np_quant(np.stack(pr["_vec"].to_numpy()).astype(np.float64))
-        xn = np.sqrt((Xq * Xq).sum(axis=1))
-        qn = np.sqrt((Qq * Qq).sum(axis=1))
-        C = (Qq @ Xq.T) / np.outer(qn, xn)
-        # ROUND(x, 6) half away from zero, as both SQL engines do
-        C = np.sign(C) * np.floor(np.abs(C) * 1e6 + 0.5) / 1e6
-        qids = pr["cand_id"].to_numpy()
-        cids = pdf["cand_id"].to_numpy()
-        qi, ci = np.meshgrid(
-            np.arange(len(qids)), np.arange(len(cids)), indexing="ij"
-        )
-        qi, ci = qi.ravel(), ci.ravel()
-        keep = qids[qi] != cids[ci]
-        return pd.DataFrame(
-            {
-                "query_id": qids[qi[keep]],
-                "cand_id": cids[ci[keep]],
-                "cosine": C[qi[keep], ci[keep]],
-            }
+        return _np_cos_pairs(
+            pr["_vec"], pr["cand_id"].to_numpy(),
+            pdf["_vec"], pdf["cand_id"].to_numpy(),
         )
 
     return score
@@ -1134,38 +1152,33 @@ def _lsh_flagged_scores(
     buckets: DataFrame,
     probe_pred,
     probes_are_candidates: bool = True,
+    pred_col: str = "cand_id",
 ) -> DataFrame:
     """Score an INDEXED-SUBSET probe panel straight from the index
     stream (the CLAUDE.md indexed-subset probe rule shared by the
-    incremental/decontaminate/probe-table entries): flag the panel's
-    rows with ``probe_pred`` (a boolean Column over ``cand_id``), pay
-    ONE (tbl, bucket) exchange, and let the flagged kernel split probes
+    incremental/decontaminate/probe-table/recall-audit entries): flag
+    the panel's rows with ``probe_pred`` (a boolean Column over
+    ``pred_col``, which the index carries as ``cand_id``), pay ONE
+    (tbl, bucket) exchange, and let the flagged kernel split probes
     from candidates inside the group — no cogroup second exchange, no
     probe re-hash Arrow stage. Returns the raw per-collision
     (query_id, cand_id, cosine) stream; callers add top-k or threshold
     semantics (and the output-sized dedup — never a pair-sized one)."""
-    from pyspark.sql import types as T
-
-    id_type = buckets.schema["cand_id"].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("cand_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-    return (
+    flagged = (
+        # rename around the flag so ONE predicate serves the index frame
+        # and the caller's own ``pred_col`` frames (a same-name rename
+        # is free: the projections collapse)
+        buckets.withColumnRenamed("cand_id", pred_col)
         # coalesce: a NULL predicate result (nullable id column) must
-        # mean "not a probe", not a NaN that breaks the kernel's
-        # pandas boolean mask
-        buckets.withColumn(
-            "_is_probe",
-            F.coalesce(probe_pred.cast("boolean"), F.lit(False)),
-        )
-        .groupBy("tbl", "bucket")
-        .applyInPandas(
-            _pair_score_flagged_fn(probes_are_candidates), out_schema
-        )
+        # mean "not a probe", not a NaN that breaks the kernel's pandas
+        # boolean mask
+        .withColumn("_is_probe", F.coalesce(probe_pred.cast("boolean"), F.lit(False)))
+        .withColumnRenamed(pred_col, "cand_id")
+    )
+    id_type = buckets.schema["cand_id"].dataType
+    return flagged.groupBy("tbl", "bucket").applyInPandas(
+        _pair_score_flagged_fn(probes_are_candidates),
+        _pair_schema(id_type, id_type),
     )
 
 
@@ -1211,7 +1224,7 @@ def lsh_probe_buckets_topk(
         buckets, queries, id_col, vec_col, n_tables, n_planes, dim,
         dedup=False,
     )
-    return _lsh_topk(scored, k)
+    return _query_topk(scored, k, dense=True)
 
 
 def lsh_incremental_topk(
@@ -1273,7 +1286,9 @@ def lsh_incremental_topk(
         # exchange at all: flag them and let a SINGLE (tbl, bucket)
         # groupBy split probes from candidates inside the kernel — one
         # exchange instead of the cogroup's two, bit-identical scores
-        return _lsh_topk(_lsh_flagged_scores(merged, probe_pred), k)
+        return _query_topk(
+            _lsh_flagged_scores(merged, probe_pred), k, dense=True
+        )
     return lsh_probe_buckets_topk(
         merged, queries, id_col, vec_col, k, n_tables, n_planes, dim
     )
@@ -1367,27 +1382,6 @@ def semantic_decontaminate(
     )
 
 
-def embedding_near_dup_pairs(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs (id_a < id_b, cosine >=
-    threshold) — brute-force all-pairs, the exactness baseline for
-    embedding dedup. O(N²): verification-only at small N; production
-    dedup is ``embedding_near_dup_pairs_lsh``."""
-    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
-    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a", "id_b", F.round(cosine_expr("va", "vb"), 6).alias("cosine")
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def embedding_near_dup_pairs_lsh(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -1410,10 +1404,6 @@ def embedding_near_dup_pairs_lsh(
     raise it for denser corpora. The DuckDB oracle replays bucket
     assignment, pairing, and scoring bit-for-bit (exact-integer
     quantized arithmetic, ``QUANT_SCALE``)."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     id_type = corpus.schema[id_col].dataType
     # the bucket rows come from the memoized STORED index
     # (lsh_index_frame — the same persisted build the serving and
@@ -1423,7 +1413,6 @@ def embedding_near_dup_pairs_lsh(
     buckets = lsh_index_frame(
         corpus, id_col, vec_col, n_tables, n_planes, dim
     ).withColumnRenamed("cand_id", id_col)
-
     pair_schema = T.StructType(
         [
             T.StructField("id_a", id_type),
@@ -1431,30 +1420,9 @@ def embedding_near_dup_pairs_lsh(
             T.StructField("cosine", T.DoubleType()),
         ]
     )
-    # object dtype: ids keep their native Python values (int, str, ...)
-    # and Arrow casts them to the declared id_type — no int64 assumption
-    empty = {"id_a": np.array([], dtype=object),
-             "id_b": np.array([], dtype=object),
-             "cosine": np.array([], dtype=np.float64)}
 
     def bucket_pairs(pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(empty)
-        V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-        Xq = _np_quant(V)
-        xn = np.sqrt((Xq * Xq).sum(axis=1))
-        C = (Xq @ Xq.T) / np.outer(xn, xn)
-        # ROUND(x, 6) half away from zero, as both SQL engines do
-        C = np.sign(C) * np.floor(np.abs(C) * 1e6 + 0.5) / 1e6
-        ia, ib = np.triu_indices(n, k=1)
-        ids = pdf[id_col].to_numpy()
-        a, b, cs = ids[ia], ids[ib], C[ia, ib]
-        keep = cs >= threshold
-        a, b, cs = a[keep], b[keep], cs[keep]
-        return pd.DataFrame(
-            {"id_a": np.minimum(a, b), "id_b": np.maximum(a, b), "cosine": cs}
-        )
+        return _np_triu_pairs(pdf["_vec"], pdf[id_col].to_numpy(), threshold)
 
     return (
         buckets.groupBy("tbl", "bucket")
@@ -1488,76 +1456,37 @@ def lsh_ann_topk(
     those candidates reach the final top-k window shuffle. All scores
     are quantized-exact (``QUANT_SCALE``), replayed verbatim by the
     DuckDB oracle."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
-    spark = corpus.sparkSession
     S = _sign_matrix(n_tables, n_planes, dim)
-    q_rows = _collect_queries(
-        queries, id_col, vec_col, "lsh_ann_topk", "lsh_ann_topk_probe_table"
+    qids, Qq, qn = _query_panel(
+        queries, id_col, vec_col, "lsh_ann_topk", "lsh_ann_topk_probe_table", dim
     )
-    # object dtype keeps ids native (int, str, ...); the output schema
-    # advertises the input id column's type, so no int64 coercion here
-    qids = np.array([r["query_id"] for r in q_rows], dtype=object)
-    Qq = _np_quant(np.array([r["q_vec"] for r in q_rows], dtype=np.float64)) if q_rows else np.zeros((0, dim))
-    qnorms = np.sqrt((Qq * Qq).sum(axis=1))
-    qbuckets = _np_bucket_ids(
-        np.array([r["q_vec"] for r in q_rows], dtype=np.float64), S, n_tables, n_planes
-    ) if q_rows else np.zeros((0, n_tables), dtype=np.int64)
-
-    bc = spark.sparkContext.broadcast((S, qids, Qq, qnorms, qbuckets))
+    qbuckets = _np_bucket_ids(Qq, S, n_tables, n_planes)
+    bc = corpus.sparkSession.sparkContext.broadcast((S, qids, Qq, qn, qbuckets))
     id_type = corpus.schema[id_col].dataType
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", id_type),
-            T.StructField("cand_id", id_type),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
 
     def score(batches):
         S_, qids_, Qq_, qn_, qb_ = bc.value
         for pdf in batches:
             if len(pdf) == 0 or len(qids_) == 0:
                 continue
-            V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-            Xq = _np_quant(V)
-            xnorm = np.sqrt((Xq * Xq).sum(axis=1))
-            B = _np_bucket_ids(V, S_, n_tables, n_planes)
+            Xq, xn = _np_quant_rows(pdf["_vec"])
+            B = _np_bucket_ids(Xq, S_, n_tables, n_planes)
             ids = pdf["cand_id"].to_numpy()
-            out_q, out_c, out_s = [], [], []
+            out = []
             for qi in range(len(qids_)):
                 # candidate iff the row shares qi's bucket in ANY table
-                mask = (B == qb_[qi][None, :]).any(axis=1)
-                mask &= ids != qids_[qi]
-                rows = np.nonzero(mask)[0]
-                if rows.size == 0:
-                    continue
-                cos = (Xq[rows] @ Qq_[qi]) / (xnorm[rows] * qn_[qi])
-                out_q.append(np.full(rows.size, qids_[qi]))
-                out_c.append(ids[rows])
-                # ROUND(x, 6) half away from zero, as both SQL engines do
-                out_s.append(np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6)
-            if not out_q:
-                continue
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    "cand_id": np.concatenate(out_c),
-                    "cosine": np.concatenate(out_s),
-                }
-            )
+                rows = np.nonzero((B == qb_[qi][None, :]).any(axis=1))[0]
+                q = slice(qi, qi + 1)
+                S = _np_round6(_np_cos(Qq_[q], qn_[q], Xq[rows], xn[rows]))
+                out.append(_np_pairs(qids_[q], ids[rows], S))
+            yield pd.concat(out)
 
     scored = corpus.select(
         F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_vec")
-    ).mapInPandas(score, out_schema)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "cand_id", "cosine", "rank")
-    )
+    ).mapInPandas(score, _pair_schema(id_type, id_type))
+    return _query_topk(scored, k)
 
 
 def semantic_dedup_pairs(
@@ -1590,26 +1519,12 @@ def semantic_dedup_pairs(
     DuckDB oracle (kmeans CTE replay + pairwise quantized cosine)
     matches bit-for-bit. Returns (cluster_id, id_a, id_b, cosine),
     id_a < id_b."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
+    from .kmeans import _assignments, kmeans_fit
 
-    from .kmeans import _assign_kernel, kmeans_fit
-
-    spark = corpus.sparkSession
     if model is None:
         model = kmeans_fit(corpus, id_col, vec_col, seed_mod, n_iter)
-    bc = spark.sparkContext.broadcast(model)
     id_type = corpus.schema[id_col].dataType
-    asg_schema = T.StructType(
-        [
-            T.StructField("cluster_id", T.LongType()),
-            T.StructField("member_id", id_type),
-        ]
-    )
-    src = corpus.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_vec"))
-    asg = src.mapInPandas(_assign_kernel(bc, emit_sums=False), asg_schema)
-    members = asg.join(
+    members = _assignments(corpus, model, id_col, vec_col).join(
         corpus.select(
             F.col(id_col).alias("member_id"), F.col(vec_col).alias("_vec")
         ),
@@ -1623,36 +1538,11 @@ def semantic_dedup_pairs(
             T.StructField("cosine", T.DoubleType()),
         ]
     )
-    empty = {
-        "cluster_id": np.array([], dtype=np.int64),
-        "id_a": np.array([], dtype=object),
-        "id_b": np.array([], dtype=object),
-        "cosine": np.array([], dtype=np.float64),
-    }
 
     def cluster_pairs(pdf):
-        n = len(pdf)
-        if n < 2:
-            return pd.DataFrame(empty)
-        V = np.stack(pdf["_vec"].to_numpy()).astype(np.float64)
-        Xq = _np_quant(V)
-        xn = np.sqrt((Xq * Xq).sum(axis=1))
-        Cm = (Xq @ Xq.T) / np.outer(xn, xn)
-        # ROUND(x, 6) half away from zero, as both SQL engines do
-        Cm = np.sign(Cm) * np.floor(np.abs(Cm) * 1e6 + 0.5) / 1e6
-        ia, ib = np.triu_indices(n, k=1)
-        ids = pdf["member_id"].to_numpy()
-        a, b, cs = ids[ia], ids[ib], Cm[ia, ib]
-        keep = cs >= threshold
-        a, b, cs = a[keep], b[keep], cs[keep]
-        return pd.DataFrame(
-            {
-                "cluster_id": np.full(len(a), pdf["cluster_id"].iloc[0]),
-                "id_a": np.minimum(a, b),
-                "id_b": np.maximum(a, b),
-                "cosine": cs,
-            }
-        )
+        out = _np_triu_pairs(pdf["_vec"], pdf["member_id"].to_numpy(), threshold)
+        out.insert(0, "cluster_id", np.full(len(out), pdf["cluster_id"].iloc[0]))
+        return out
 
     return members.groupBy("cluster_id").applyInPandas(cluster_pairs, pair_schema)
 
@@ -1692,12 +1582,7 @@ def hard_negatives(
             F.round(cosine_expr("q_vec", "c_vec"), 6).alias("cosine"),
         )
     )
-    w = Window.partitionBy("anchor_id").orderBy(F.desc("cosine"), F.asc("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("anchor_id", "anchor_label", "cand_id", "cand_label", "cosine", "rank")
-    )
+    return _query_topk(scored, k, by="anchor_id")
 
 
 def projection_signs(out_dim: int, dim: int):
@@ -1738,9 +1623,7 @@ def random_project(
     matrix, BLAS matmul per batch — higher-order functions are
     CodegenFallback and ~8x slower); no shuffle at all. At 100 TB this
     is a pure map over the corpus partitions."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     S = np.array(projection_signs(out_dim, dim), dtype=np.float64)
     id_type = df.schema[id_col].dataType
@@ -1756,8 +1639,7 @@ def random_project(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            Xq = _np_quant(np.stack(pdf["_v"].to_numpy()).astype(np.float64))
-            Y = Xq @ S.T  # exact integers < 2^26 * dim
+            Y = _np_quant_rows(pdf["_v"])[0] @ S.T  # exact integers < 2^26 * dim
             ids = pdf["_id"].to_numpy()
             n = len(ids)
             yield pd.DataFrame(
@@ -1985,8 +1867,6 @@ def ann_recall_audit(
         .localCheckpoint(eager=False)
     )
     if probe_pred is not None:
-        from pyspark.sql import types as T
-
         buckets = lsh_index_frame(
             corpus, id_col, vec_col, n_tables, n_planes, dim
         )
@@ -2000,33 +1880,14 @@ def ann_recall_audit(
             .select("tbl", "bucket")
             .distinct()
         )
-        id_type = buckets.schema["cand_id"].dataType
-        out_schema = T.StructType(
-            [
-                T.StructField("query_id", id_type),
-                T.StructField("cand_id", id_type),
-                T.StructField("cosine", T.DoubleType()),
-            ]
+        # probe_pred is written over ``id_col`` (it also filters the
+        # corpus for the exact side)
+        scored = _lsh_flagged_scores(
+            buckets.join(F.broadcast(probe_keys), ["tbl", "bucket"], "left_semi"),
+            probe_pred,
+            pred_col=id_col,
         )
-        flagged = (
-            # probe_pred is written over ``id_col`` (it also filters the
-            # corpus for the exact side); the index frame carries the id
-            # as cand_id — rename around the flag so ONE predicate
-            # serves both frames
-            buckets.withColumnRenamed("cand_id", id_col)
-            .withColumn(
-                "_is_probe",
-                # coalesce: NULL predicate (nullable id) means "not a
-                # probe", never a NaN in the kernel's pandas mask
-                F.coalesce(probe_pred.cast("boolean"), F.lit(False)),
-            )
-            .withColumnRenamed(id_col, "cand_id")
-            .join(F.broadcast(probe_keys), ["tbl", "bucket"], "left_semi")
-        )
-        scored = flagged.groupBy("tbl", "bucket").applyInPandas(
-            _pair_score_flagged_fn(), out_schema
-        )
-        approx = _lsh_topk(scored, k).select("query_id", "cand_id")
+        approx = _query_topk(scored, k, dense=True).select("query_id", "cand_id")
     else:
         approx = lsh_ann_topk_probe_table(
             corpus, probes, id_col, vec_col, k, n_tables, n_planes, dim,

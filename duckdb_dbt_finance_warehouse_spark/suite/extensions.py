@@ -1357,8 +1357,8 @@ def x_embed_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     let the DuckDB oracle replay candidate generation verbatim; planes
     are sized to the corpus (similarity.lsh_planes_for), holding
     per-bucket O(|bucket|²) pair work flat as the corpus grows. The
-    O(N²) exact baseline (embedding_near_dup_pairs) is verification-only
-    at small N (tests assert the LSH recall against it)."""
+    O(N²) exact all-pairs baseline is a test-local oracle
+    (tests/test_operators.py asserts the LSH recall against it)."""
     emb = load_testdata(spark, sf_dir, "embeddings")["embeddings"]
     return similarity.embedding_near_dup_pairs_lsh(
         emb, threshold=0.45, n_planes=_lsh_probe_planes(sf_dir)

@@ -510,6 +510,22 @@ def test_lsh_probe_suite_entry_sizes_planes_per_sf():
     assert spec.resolved_oracle() != spec.oracle_for("/root/testdata/sf0.1")
 
 
+def embedding_near_dup_pairs(corpus, id_col="vec_id", vec_col="embedding", threshold=0.9):
+    """Test-local oracle: embedding-cosine near-duplicate pairs (id_a <
+    id_b, cosine >= threshold), brute-force all-pairs over the float
+    cosine. O(N²), so small fixtures only."""
+    a = corpus.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"))
+    b = corpus.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"))
+    return (
+        a.join(b, F.col("id_a") < F.col("id_b"))
+        .select(
+            "id_a", "id_b",
+            F.round(similarity.cosine_expr("va", "vb"), 6).alias("cosine"),
+        )
+        .filter(F.col("cosine") >= threshold)
+    )
+
+
 def test_embed_near_dup_lsh_subset_of_exact_with_recall(spark):
     """The scale path (LSH bucket candidates + exact verify) must emit a
     subset of the all-pairs baseline with identical cosines, and recall
@@ -522,7 +538,7 @@ def test_embed_near_dup_lsh_subset_of_exact_with_recall(spark):
     # right at the threshold boundary
     exact = {
         (r["id_a"], r["id_b"]): r["cosine"]
-        for r in similarity.embedding_near_dup_pairs(emb, threshold=0.399).collect()
+        for r in embedding_near_dup_pairs(emb, threshold=0.399).collect()
     }
     strict = {p for p, c in exact.items() if c >= 0.401}
     lsh = {

@@ -1,7 +1,8 @@
 """Generate OPERATORS.md — one row per registry entry (name, source
 module, oracle pairing, first docstring sentence) — so users and
-reviewers can navigate the 160-entry surface without reading
-suite/*.py. Rerun after adding entries:
+reviewers can navigate the registry without reading suite/*.py. Rerun
+after adding or editing entries (tests/test_operators_doc.py fails
+while the committed file differs from ``render()``):
 
     python tools/gen_opsdoc.py
 """
@@ -27,8 +28,13 @@ def first_sentence(doc: str | None) -> str:
     return s.replace("|", "\\|")
 
 
-def main() -> None:
-    out = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md")
+OUT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "OPERATORS.md"
+)
+
+
+def render() -> str:
+    """OPERATORS.md's full text for the current registry."""
     lines = [
         "# Operator reference (generated — `python tools/gen_opsdoc.py`)",
         "",
@@ -52,9 +58,13 @@ def main() -> None:
             f"{'yes' if spec.has_oracle else 'rows-only'} | "
             f"{'yes' if name in window else ''} | {first_sentence(spec.doc)} |"
         )
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out} ({len(REGISTRY)} entries)")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OUT, "w") as f:
+        f.write(render())
+    print(f"wrote {OUT} ({len(REGISTRY)} entries)")
 
 
 if __name__ == "__main__":
