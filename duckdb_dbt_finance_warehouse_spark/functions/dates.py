@@ -6,9 +6,10 @@ Reference citations:
 - month index since 1970-01-01     -> dim_date.sql:32
 - strftime '%B' month name         -> dim_date.sql:40
 - dbt_utils.date_spine (END-EXCLUSIVE day spine) -> dim_date.sql:9-13
+- month spine per entity (J1)      -> fct_subscription_month.sql:56-64
 
-The spine is generated with explode(sequence(...)) — a constant-folded
-in-engine generator, no driver-side loop, no nested-loop range join.
+Spines are generated with explode(sequence(...)) — an in-engine
+generator, no driver-side loop, no nested-loop range join.
 """
 
 from __future__ import annotations
@@ -26,22 +27,34 @@ def month_start(c: Column | str) -> Column:
     return F.trunc(_col(c), "month")
 
 
-def end_of_month(c: Column | str) -> Column:
-    return F.last_day(_col(c))
+def date_kit(d: Column, m: Column) -> dict[str, Column]:
+    """F11-F18: every dim_date derivation of the day ``d`` whose month
+    start is ``m`` (``month_start(d)`` or a column already holding it),
+    keyed by dim_date's column names, in its column order. The month
+    index counts months since 1970-01-01 — integral on first-of-month
+    dates, matching DuckDB's boundary-crossing datediff('month', ...)."""
+    eom = F.last_day(d)
+    return {
+        "month_start_date": m,
+        "month_index": F.months_between(m, F.lit("1970-01-01").cast("date")).cast("int"),
+        "year": F.year(d),
+        "quarter": F.quarter(d),
+        "month": F.month(d),
+        "year_month": (F.year(d) * 100 + F.month(d)).cast("int"),
+        "month_name": F.date_format(d, "MMMM"),
+        "month_end_date": eom,
+        "is_month_start": d == m,
+        "is_month_end": d == eom,
+        "prev_month_start_date": F.add_months(m, -1),
+        "next_month_start_date": F.add_months(m, 1),
+    }
 
 
-def add_months(c: Column | str, n: int) -> Column:
-    return F.add_months(_col(c), n)
-
-
-def month_index(c: Column | str, epoch: str = "1970-01-01") -> Column:
-    """Months elapsed since ``epoch`` — integral on first-of-month dates,
-    matching DuckDB's boundary-crossing datediff('month', ...)."""
-    return F.months_between(_col(c), F.lit(epoch).cast("date")).cast("int")
-
-
-def month_name(c: Column | str) -> Column:
-    return F.date_format(_col(c), "MMMM")
+def month_spine(first: Column | str, last: Column | str) -> Column:
+    """J1: one row per month start in [first, last] (both month starts)
+    — explode(sequence(..., interval 1 month)), linear in the output,
+    in place of a nested-loop BETWEEN join against a calendar."""
+    return F.explode(F.sequence(_col(first), _col(last), F.expr("interval 1 month")))
 
 
 def date_spine(

@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.dates import date_spine
+from ..functions.dates import date_kit, date_spine, month_start
+from ..functions.mrr import first_version_backdated, valid_at
 from ..plans.registry import Context
 
 
@@ -23,26 +24,9 @@ def dim_date(ctx: Context) -> DataFrame:
     end = ctx.var("dim_date_end_date", "2025-12-31")
     spine = date_spine(ctx.spark, start, end, end_exclusive=True, col_name="date_day")
     d = F.col("date_day")
-    m = F.col("month_start_date")
-    return (
-        spine.withColumn("month_start_date", F.trunc(d, "month"))
-        .select(
-            d.alias("date_day"),
-            m.alias("month_start_date"),
-            F.months_between(m, F.lit("1970-01-01").cast("date"))
-            .cast("int")
-            .alias("month_index"),
-            F.year(d).alias("year"),
-            F.quarter(d).alias("quarter"),
-            F.month(d).alias("month"),
-            (F.year(d) * 100 + F.month(d)).cast("int").alias("year_month"),
-            F.date_format(d, "MMMM").alias("month_name"),
-            F.last_day(d).alias("month_end_date"),
-            (d == m).alias("is_month_start"),
-            (d == F.last_day(d)).alias("is_month_end"),
-            F.add_months(m, -1).alias("prev_month_start_date"),
-            F.add_months(m, 1).alias("next_month_start_date"),
-        )
+    kit = date_kit(d, F.col("month_start_date"))
+    return spine.withColumn("month_start_date", month_start(d)).select(
+        d.alias("date_day"), *[c.alias(n) for n, c in kit.items()]
     )
 
 
@@ -113,20 +97,12 @@ def dim_subscription(ctx: Context) -> DataFrame:
     # not_null/FK tests). Each account's FIRST version opens at
     # 1900-01-01 — exactly the facts layer's first-version backfill.
     wa = Window.partitionBy("account_id").orderBy("valid_from", "account_key")
-    a = (
-        a.withColumn("_rn", F.row_number().over(wa))
-        .withColumn(
-            "effective_valid_from",
-            F.when(
-                F.col("_rn") == 1, F.lit("1900-01-01").cast("timestamp")
-            ).otherwise(F.col("valid_from")),
-        )
-        .drop("_rn", "valid_from")
-    )
-    cond = (
-        (s.account_id == a.account_id)
-        & (s.dbt_valid_from >= a.effective_valid_from)
-        & (a.valid_to.isNull() | (s.dbt_valid_from < a.valid_to))
+    a = a.withColumn("_rn", F.row_number().over(wa))
+    a = a.withColumn(
+        "effective_valid_from", first_version_backdated(a, F.col("_rn"), "valid_from")
+    ).drop("_rn", "valid_from")
+    cond = (s.account_id == a.account_id) & valid_at(
+        s.dbt_valid_from, a.effective_valid_from, a.valid_to
     )
     joined = s.join(F.broadcast(a), cond, "left").drop(a.account_id)
     return joined.select(

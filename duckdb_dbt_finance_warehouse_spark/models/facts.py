@@ -23,10 +23,14 @@ Key Spark-first choices:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.dates import month_spine
 from ..functions.money import exact_sum
+from ..functions.mrr import (
+    ever_before, first_version_backdated, lag_or_zero, movement_amounts, movement_type, valid_at,
+)
 from ..plans.registry import Context
 
 
@@ -74,10 +78,19 @@ def _scd2_month_dim(
     d = d.withColumn("_rn", F.row_number().over(w))
     return d.withColumn(
         "effective_valid_from_month",
-        F.when(F.col("_rn") == 1, F.lit("1900-01-01").cast("date")).otherwise(
-            F.col("valid_from_month")
-        ),
+        first_version_backdated(d, F.col("_rn"), "valid_from_month"),
     ).drop("_vf", "_rn")
+
+
+def _valid_in_month(f: str, d: str, key: str) -> Column:
+    """Join condition of fact alias ``f`` onto month dim alias ``d``
+    (``_scd2_month_dim``): equal ``key`` and the version valid (J3) at
+    the fact's month."""
+    return (F.col(f"{d}.{key}") == F.col(f"{f}.{key}")) & valid_at(
+        F.col(f"{f}.month_start_date"),
+        F.col(f"{d}.effective_valid_from_month"),
+        F.col(f"{d}.valid_to_month"),
+    )
 
 
 def fct_subscription_month(ctx: Context) -> DataFrame:
@@ -121,9 +134,7 @@ def fct_subscription_month(ctx: Context) -> DataFrame:
         "end_date",
         "is_trial",
         "mrr_amount",
-        F.explode(
-            F.expr("sequence(gen_start, end_month, interval 1 month)")
-        ).alias("month_start_date"),
+        month_spine("gen_start", "end_month").alias("month_start_date"),
     ).withColumn("next_month_start_date", F.add_months("month_start_date", 1))
 
     eom = F.date_sub(F.col("next_month_start_date"), 1)
@@ -161,29 +172,13 @@ def fct_subscription_month(ctx: Context) -> DataFrame:
 
     f = base.alias("f")
     sd = F.broadcast(sub_dim.alias("sd"))
-    with_sub = f.join(
-        sd,
-        (F.col("sd.subscription_id") == F.col("f.subscription_id"))
-        & (F.col("f.month_start_date") >= F.col("sd.effective_valid_from_month"))
-        & (
-            F.col("sd.valid_to_month").isNull()
-            | (F.col("f.month_start_date") < F.col("sd.valid_to_month"))
-        ),
-        "left",
-    ).select("f.*", "sd.subscription_key", "sd.subscription_account_key")
+    with_sub = f.join(sd, _valid_in_month("f", "sd", "subscription_id"), "left").select(
+        "f.*", "sd.subscription_key", "sd.subscription_account_key"
+    )
 
     w = with_sub.alias("w")
     ad = F.broadcast(acct_dim.alias("ad"))
-    final = w.join(
-        ad,
-        (F.col("ad.account_id") == F.col("w.account_id"))
-        & (F.col("w.month_start_date") >= F.col("ad.effective_valid_from_month"))
-        & (
-            F.col("ad.valid_to_month").isNull()
-            | (F.col("w.month_start_date") < F.col("ad.valid_to_month"))
-        ),
-        "left",
-    ).select(
+    final = w.join(ad, _valid_in_month("w", "ad", "account_id"), "left").select(
         F.col("w.subscription_key"),
         F.coalesce("w.subscription_account_key", "ad.account_key").alias("account_key"),
         F.col("w.subscription_id"),
@@ -212,11 +207,7 @@ def fct_account_month(ctx: Context) -> DataFrame:
     spine = (
         bounds.select(
             "account_id",
-            F.explode(
-                F.expr(
-                    "sequence(first_month, add_months(last_month, 1), interval 1 month)"
-                )
-            ).alias("month_start_date"),
+            month_spine("first_month", F.add_months("last_month", 1)).alias("month_start_date"),
         )
         # respect dim_date coverage, as the reference's JOIN months does
         .join(F.broadcast(months), "month_start_date", "left_semi")
@@ -232,48 +223,20 @@ def fct_account_month(ctx: Context) -> DataFrame:
     )
 
     w_ord = Window.partitionBy("account_id").orderBy("month_start_date")
-    with_flags = (
-        spined.withColumn(
-            "mrr_begin_mrr", F.coalesce(F.lag("mrr_end_mrr").over(w_ord), F.lit(0.0))
-        )
-        .withColumn("mrr_delta", F.col("mrr_end_mrr") - F.col("mrr_begin_mrr"))
-        .withColumn(
-            "has_paid_before",
-            F.coalesce(
-                F.max(F.when(F.col("mrr_end_mrr") > 0, 1).otherwise(0)).over(
-                    w_ord.rowsBetween(Window.unboundedPreceding, -1)
-                ),
-                F.lit(0),
-            )
-            == 1,
-        )
-    )
-
     begin, end, delta = F.col("mrr_begin_mrr"), F.col("mrr_end_mrr"), F.col("mrr_delta")
-    classified = with_flags.withColumn(
-        "movement_type",
-        F.when((begin == 0) & (end > 0) & ~F.col("has_paid_before"), "new")
-        .when((begin == 0) & (end > 0) & F.col("has_paid_before"), "reactivation")
-        .when((begin > 0) & (end == 0), "churn")
-        .when((begin > 0) & (end > 0) & (delta > 0), "upgrade")
-        .when((begin > 0) & (end > 0) & (delta < 0), "downgrade")
-        .when((begin == 0) & (end == 0), "zero")
-        .otherwise("no_change"),
+    classified = (
+        spined.withColumn("mrr_begin_mrr", lag_or_zero("mrr_end_mrr", w_ord))
+        .withColumn("mrr_delta", end - begin)
+        .withColumn("has_paid_before", ever_before(end > 0, w_ord) == 1)
+        .withColumn(
+            "movement_type", movement_type(begin, end, delta, F.col("has_paid_before"))
+        )
     )
 
     acct_dim = _scd2_month_dim(ctx.ref("dim_account"), "account_id", "account_key")
     c = classified.alias("c")
     ad = F.broadcast(acct_dim.alias("ad"))
-    final = c.join(
-        ad,
-        (F.col("ad.account_id") == F.col("c.account_id"))
-        & (F.col("c.month_start_date") >= F.col("ad.effective_valid_from_month"))
-        & (
-            F.col("ad.valid_to_month").isNull()
-            | (F.col("c.month_start_date") < F.col("ad.valid_to_month"))
-        ),
-        "left",
-    ).select(
+    final = c.join(ad, _valid_in_month("c", "ad", "account_id"), "left").select(
         F.col("ad.account_key"),
         F.col("c.account_id"),
         F.col("c.month_start_date"),
@@ -281,15 +244,10 @@ def fct_account_month(ctx: Context) -> DataFrame:
         F.col("c.mrr_end_mrr"),
         F.col("c.mrr_delta"),
         F.col("c.movement_type"),
-        F.when(F.col("c.movement_type") == "new", end).otherwise(0.0).alias("new_mrr"),
-        F.when(F.col("c.movement_type") == "reactivation", end)
-        .otherwise(0.0)
-        .alias("reactivation_mrr"),
-        F.when(F.col("c.movement_type") == "upgrade", delta).otherwise(0.0).alias("upgrade_mrr"),
-        F.when(F.col("c.movement_type") == "downgrade", F.abs(delta))
-        .otherwise(0.0)
-        .alias("downgrade_mrr"),
-        F.when(F.col("c.movement_type") == "churn", begin).otherwise(0.0).alias("churn_mrr"),
+        *[
+            amount.alias(f"{k}_mrr")
+            for k, amount in movement_amounts(F.col("c.movement_type"), begin, end, delta).items()
+        ],
     )
 
     cutoff = _month_cutoff(ctx, "fct_account_month")

@@ -8,29 +8,15 @@ WindowGroupLimit prunes to the per-key top row before the final sort.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
+from ..functions.lineage import ARRIVAL_ORDER, latest_per_key
 from ..plans.registry import Context
 
 
-def _latest_per_key(df: DataFrame, key: str) -> DataFrame:
-    # record_hash is the FINAL tie-break: a key duplicated within one
-    # file ties on (ingested_at, source_file), and row_number would
-    # pick an arbitrary winner per EXECUTION — consecutive snapshot
-    # runs over unchanged stg data could see a flipped hash and emit a
-    # spurious SCD2 close+reopen. (The reference view orders by
-    # ingested_at alone and shares the flap; determinism is this
-    # repo's documented deviation.)
-    w = Window.partitionBy(key).orderBy(
-        F.desc("ingested_at"), F.desc("source_file"), F.desc("record_hash")
-    )
-    return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
-
-
 def int_accounts_current(ctx: Context) -> DataFrame:
-    return _latest_per_key(ctx.ref("stg_accounts"), "account_id")
+    return latest_per_key(ctx.ref("stg_accounts"), "account_id", ARRIVAL_ORDER)
 
 
 def int_subscriptions_current(ctx: Context) -> DataFrame:
-    return _latest_per_key(ctx.ref("stg_subscriptions"), "subscription_id")
+    return latest_per_key(ctx.ref("stg_subscriptions"), "subscription_id", ARRIVAL_ORDER)

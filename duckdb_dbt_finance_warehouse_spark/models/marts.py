@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.money import exact_sum
+from ..functions.mrr import CHURN, NEW, REACTIVATION
 from ..plans.registry import Context
 
 
@@ -38,13 +39,13 @@ def mart_mrr_waterfall_month(ctx: Context) -> DataFrame:
             F.when(F.col("mrr_end_mrr") > 0, F.col("account_id"))
         ).alias("active_accounts"),
         F.countDistinct(
-            F.when(F.col("movement_type") == "churn", F.col("account_id"))
+            F.when(F.col("movement_type") == CHURN, F.col("account_id"))
         ).alias("churned_accounts"),
         F.countDistinct(
-            F.when(F.col("movement_type") == "new", F.col("account_id"))
+            F.when(F.col("movement_type") == NEW, F.col("account_id"))
         ).alias("new_accounts"),
         F.countDistinct(
-            F.when(F.col("movement_type") == "reactivation", F.col("account_id"))
+            F.when(F.col("movement_type") == REACTIVATION, F.col("account_id"))
         ).alias("reactivated_accounts"),
     )
 

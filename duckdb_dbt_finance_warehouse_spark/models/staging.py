@@ -12,7 +12,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import empty_to_null, negative_to_null, record_hash, trim_clean
+from ..functions.cleaning import (
+    empty_to_null, lower_norm, negative_to_null, record_hash, trim_clean,
+)
 from ..plans.registry import Context
 
 
@@ -68,7 +70,7 @@ def stg_subscriptions(ctx: Context) -> DataFrame:
         F.col("upgrade_flag").cast("boolean"),
         F.col("downgrade_flag").cast("boolean"),
         F.col("churn_flag").cast("boolean"),
-        F.lower(empty_to_null("billing_frequency")),
+        lower_norm("billing_frequency"),
         F.col("auto_renew_flag").cast("boolean"),
     ]
     return src.select(
@@ -86,7 +88,7 @@ def stg_subscriptions(ctx: Context) -> DataFrame:
         F.col("upgrade_flag").cast("boolean").alias("upgrade_flag"),
         F.col("downgrade_flag").cast("boolean").alias("downgrade_flag"),
         F.col("churn_flag").cast("boolean").alias("churn_flag"),
-        F.lower(empty_to_null("billing_frequency")).alias("billing_frequency"),
+        lower_norm("billing_frequency").alias("billing_frequency"),
         F.col("auto_renew_flag").cast("boolean").alias("auto_renew_flag"),
         "ingested_at",
         "source_file",
@@ -106,7 +108,7 @@ def stg_support_tickets(ctx: Context) -> DataFrame:
         F.col("submitted_at").cast("timestamp"),
         F.col("closed_at").cast("timestamp"),
         res_h,
-        F.lower(empty_to_null("priority")),
+        lower_norm("priority"),
         frt_m,
         sat,
         F.col("escalation_flag").cast("boolean"),
@@ -118,7 +120,7 @@ def stg_support_tickets(ctx: Context) -> DataFrame:
         F.col("closed_at").cast("timestamp").alias("closed_at"),
         res_h.alias("resolution_time_hours_raw"),
         negative_to_null(res_h).alias("resolution_time_hours"),
-        F.lower(empty_to_null("priority")).alias("priority"),
+        lower_norm("priority").alias("priority"),
         frt_m.alias("first_response_time_minutes_raw"),
         negative_to_null(frt_m).alias("first_response_time_minutes"),
         sat.alias("satisfaction_score"),

@@ -38,12 +38,10 @@ overflows); past that, coarsen the quantization.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .similarity import QUANT_SCALE, _np_quant
+from .similarity import QUANT_SCALE, _np_quant, _np_round6
 
 
 def _gram_kernel(dim: int):
@@ -159,10 +157,7 @@ def top_component(
         ]
     vav = sum(v[i] * A[i][j] * v[j] for i in range(dim) for j in range(dim))
     vv = sum(x * x for x in v)
-    raw = float(vav) / (float(vv) * float(trace))
-    # HALF-UP (away from zero), matching SQL round() — Python round()
-    # is banker's half-even and would break oracle parity on a .xxxxxx5
-    share = math.copysign(math.floor(abs(raw) * 1e6 + 0.5) / 1e6, raw)
+    share = float(_np_round6(float(vav) / (float(vv) * float(trace))))
     return spark.createDataFrame(
         [(i, v[i], n, share) for i in range(dim)],
         T.StructType(

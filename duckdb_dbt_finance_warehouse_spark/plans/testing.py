@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.lineage import ARRIVAL_ORDER, latest_per_key
+
 
 def not_null(df: DataFrame, col: str) -> DataFrame:
     return df.filter(F.col(col).isNull())
@@ -109,12 +111,10 @@ def declared_reference_tests(wh) -> dict[str, DataFrame]:
     (latest arrival per key), the invariant the declaration means.
     dim_feature / mart_subscription_month_enriched tests target models
     that do not exist in the reference (anomaly A3) and are skipped."""
-    from ..models.intermediate import _latest_per_key
-
     stg_a = wh.read("stg", "stg_accounts")
     stg_s = wh.read("stg", "stg_subscriptions")
-    cur_a = _latest_per_key(stg_a, "account_id")
-    cur_s = _latest_per_key(stg_s, "subscription_id")
+    cur_a = latest_per_key(stg_a, "account_id", ARRIVAL_ORDER)
+    cur_s = latest_per_key(stg_s, "subscription_id", ARRIVAL_ORDER)
     dim_a = wh.read("mart", "dim_account")
     dim_s = wh.read("mart", "dim_subscription")
     dim_d = wh.read("mart", "dim_date")

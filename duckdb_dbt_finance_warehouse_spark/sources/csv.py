@@ -6,7 +6,8 @@ Replicates the reference loader's observable behavior
 - one UTC batch timestamp per run, stamped on every row (``ingested_at``)
 - the source filename stamped per row (``source_file``)
 - ``replace`` mode = create-or-replace (S2); ``append`` mode = insert
-  into existing table, creating it empty-first if missing (S3+S4).
+  into the existing table, or create it from this batch when missing
+  (S3+S4).
 
 Deviation from the reference (deliberate): schemas are EXPLICIT
 (StructType), not inferred — inference differences across engines are a
@@ -16,12 +17,12 @@ header+inferSchema for ad-hoc use.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.lineage import lineage_columns
 from .tables import Warehouse
 
 
@@ -124,24 +125,20 @@ def ingest_csv(
     listing.
     """
     spark: SparkSession = wh.spark
-    batch_ts = batch_ts or datetime.now(timezone.utc)
-    ts_str = batch_ts.strftime("%Y-%m-%d %H:%M:%S")
-
     if schema is None:
         schema = RAW_SCHEMAS.get(table)
     reader = spark.read.option("header", True)
     reader = reader.schema(schema) if schema is not None else reader.option("inferSchema", True)
-    df = reader.csv(csv_path)
-
-    name = csv_path.rsplit("/", 1)[-1]
-    df = df.withColumn("ingested_at", F.lit(ts_str).cast("timestamp")).withColumn(
-        "source_file", F.lit(name)
-    )
-
-    if mode == "replace" or not wh.exists(raw_schema, table):
-        wh.write(df, raw_schema, table, mode="overwrite")
-    elif mode == "append":
-        wh.write(df, raw_schema, table, mode="append")
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
+    df = reader.csv(csv_path).withColumns(lineage_columns(csv_path, batch_ts))
+    write_raw(wh, df, raw_schema, table, mode)
     return wh.read(raw_schema, table)
+
+
+def write_raw(wh: Warehouse, df: DataFrame, raw_schema: str, table: str, mode: str) -> None:
+    """Land one batch: ``replace`` overwrites; ``append`` inserts, and
+    a table that does not exist yet is created by one overwrite. The
+    mode is checked before anything is written."""
+    if mode not in ("replace", "append"):
+        raise ValueError(f"unknown mode {mode!r}")
+    append = mode == "append" and wh.exists(raw_schema, table)
+    wh.write(df, raw_schema, table, mode="append" if append else "overwrite")

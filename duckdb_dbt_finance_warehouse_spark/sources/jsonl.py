@@ -23,12 +23,14 @@ were omitted. Schemas are EXPLICIT, same rule as sources/csv.py.
 
 from __future__ import annotations
 
-from datetime import datetime, timezone
+from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.lineage import lineage_columns
+from .csv import write_raw
 from .tables import Warehouse
 
 #: Raw-layer schema for JSONL document corpora (mirrors testdata
@@ -95,28 +97,9 @@ def ingest_jsonl(
     At 100 TB this is one distributed text->parquet job per output: the
     text scan splits on byte ranges, from_json runs in whole-stage
     codegen, lineage columns are constants — no shuffle anywhere."""
-    spark = wh.spark
-    batch_ts = batch_ts or datetime.now(timezone.utc)
-    ts_str = batch_ts.strftime("%Y-%m-%d %H:%M:%S")
-    name = jsonl_path.rsplit("/", 1)[-1]
-
-    good, quarantined = parse_jsonl(spark, jsonl_path, schema)
-    lineage = [
-        F.lit(ts_str).cast("timestamp").alias("ingested_at"),
-        F.lit(name).alias("source_file"),
-    ]
-    good = good.select("*", *lineage)
-    quarantined = quarantined.select("*", *lineage)
-
+    lineage = lineage_columns(jsonl_path, batch_ts)
+    good, quarantined = parse_jsonl(wh.spark, jsonl_path, schema)
     qtable = f"{table}__quarantine"
-    if mode == "replace":
-        write_mode = "overwrite"
-    elif mode == "append":
-        write_mode = "append"
-    else:
-        raise ValueError(f"unknown mode {mode!r}")
     for t, df in ((table, good), (qtable, quarantined)):
-        if mode == "append" and not wh.exists(raw_schema, t):
-            wh.write(df.limit(0), raw_schema, t, mode="overwrite")
-        wh.write(df, raw_schema, t, mode=write_mode)
+        write_raw(wh, df.withColumns(lineage), raw_schema, t, mode)
     return wh.read(raw_schema, table), wh.read(raw_schema, qtable)

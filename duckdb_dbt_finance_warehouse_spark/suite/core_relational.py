@@ -19,11 +19,21 @@ why the plan survives 100 TB.
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.cleaning import empty_to_null, lower_norm, negative_to_null, record_hash
+from ..functions.cleaning import (
+    empty_to_null, lower_norm, negative_to_null, record_hash, trim_clean,
+)
+from ..functions.dates import date_kit, date_spine, month_spine, month_start
+from ..functions.lineage import latest_per_key, lineage_columns
 from ..functions.money import exact_sum, exact_sum_scaled
+from ..functions.mrr import (
+    CHURN, ever_before, first_version_backdated, lag_or_zero, movement_amounts, movement_type,
+    valid_at,
+)
 from ..state import persist
 from ..sources.tables import load_testdata
 from .registry import query
@@ -52,11 +62,8 @@ def s5_lineage_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference: scripts/load_csvs_to_duckdb.py:47-50). Constant columns —
     no shuffle, survives any scale."""
     li = T(spark, sf_dir, "lineitem")["lineitem"]
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        F.lit("2026-01-01 00:00:00").cast("timestamp").alias("ingested_at"),
-        F.lit("lineitem.parquet").alias("source_file"),
+    return li.select("l_orderkey", "l_linenumber").withColumns(
+        lineage_columns("lineitem.parquet", datetime(2026, 1, 1))
     )
 
 
@@ -108,7 +115,7 @@ def p3_clean_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = T(spark, sf_dir, "customer")["customer"]
     return c.select(
         "c_custkey",
-        F.trim("c_name").alias("name"),
+        trim_clean("c_name").alias("name"),
         empty_to_null("c_name").alias("name_nullable"),
         lower_norm("c_mktsegment").alias("segment"),
     )
@@ -287,10 +294,7 @@ def j1_month_spine_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trunc(F.max("o_orderdate"), "month").alias("last_month"),
     )
     return bounds.select(
-        "account_id",
-        F.explode(
-            F.expr("sequence(first_month, last_month, interval 1 month)")
-        ).alias("month_start_date"),
+        "account_id", month_spine("first_month", "last_month").alias("month_start_date")
     )
 
 
@@ -337,6 +341,18 @@ _J3_DIM_SQL = """
 """
 
 
+def _signup_versions(e: DataFrame) -> DataFrame:
+    """The versioned dim of J3/J4: one version per signup event, valid
+    until the user's next signup."""
+    w = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
+    return (
+        e.filter(F.col("event_type") == "signup")
+        .select("user_id", F.col("ts").alias("valid_from"), "event_id")
+        .withColumn("valid_to", F.lead("valid_from").over(w))
+        .withColumn("version", F.row_number().over(w))
+    )
+
+
 @query(
     "j3_validity_asof_join",
     oracle=f"""
@@ -356,24 +372,11 @@ def j3_validity_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     as a hash join and the interval as a post-join filter; the dim side is
     small per key, so broadcast at scale."""
     e = T(spark, sf_dir, "events")["events"]
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    dim = (
-        e.filter(F.col("event_type") == "signup")
-        .select("user_id", F.col("ts").alias("valid_from"), "event_id")
-        .withColumn("valid_to", F.lead("valid_from").over(
-            Window.partitionBy("user_id").orderBy("valid_from", "event_id")))
-        .withColumn("version", F.row_number().over(
-            Window.partitionBy("user_id").orderBy("valid_from", "event_id")))
-        .drop("event_id")
-    )
+    dim = _signup_versions(e).drop("event_id")
     fact = e.filter(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts", "value"
     )
-    cond = (
-        (fact.user_id == dim.user_id)
-        & (fact.ts >= dim.valid_from)
-        & (dim.valid_to.isNull() | (fact.ts < dim.valid_to))
-    )
+    cond = (fact.user_id == dim.user_id) & valid_at(fact.ts, dim.valid_from, dim.valid_to)
     return fact.join(F.broadcast(dim), cond, "left").select(
         fact.event_id, fact.user_id, fact.ts, fact.value, dim.valid_from, dim.version
     )
@@ -400,25 +403,13 @@ def j4_first_version_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     so facts predating the first observed version still resolve
     (reference: fct_subscription_month.sql:131-137)."""
     e = T(spark, sf_dir, "events")["events"]
-    wv = Window.partitionBy("user_id").orderBy("valid_from", "event_id")
-    dim = (
-        e.filter(F.col("event_type") == "signup")
-        .select("user_id", F.col("ts").alias("valid_from"), "event_id")
-        .withColumn("valid_to", F.lead("valid_from").over(wv))
-        .withColumn("version", F.row_number().over(wv))
-        .withColumn(
-            "effective_valid_from",
-            F.when(F.col("version") == 1, F.lit("1900-01-01").cast("timestamp")).otherwise(
-                F.col("valid_from")
-            ),
-        )
-        .drop("event_id", "valid_from")
-    )
+    dim = _signup_versions(e)
+    dim = dim.withColumn(
+        "effective_valid_from", first_version_backdated(dim, F.col("version"), "valid_from")
+    ).drop("event_id", "valid_from")
     fact = e.filter(F.col("event_type") == "purchase").select("event_id", "user_id", "ts")
-    cond = (
-        (fact.user_id == dim.user_id)
-        & (fact.ts >= dim.effective_valid_from)
-        & (dim.valid_to.isNull() | (fact.ts < dim.valid_to))
+    cond = (fact.user_id == dim.user_id) & valid_at(
+        fact.ts, dim.effective_valid_from, dim.valid_to
     )
     return fact.join(F.broadcast(dim), cond, "left").select(
         fact.event_id, fact.user_id, fact.ts, dim.version, dim.effective_valid_from
@@ -679,11 +670,7 @@ def a7_spine_zero_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.trunc(F.min("o_orderdate"), "month").alias("min_m"),
             F.trunc(F.max("o_orderdate"), "month").alias("max_m"),
         )
-        .select(
-            F.explode(F.expr("sequence(min_m, max_m, interval 1 month)")).alias(
-                "month_start_date"
-            )
-        )
+        .select(month_spine("min_m", "max_m").alias("month_start_date"))
     )
     rev = o.groupBy(F.trunc("o_orderdate", "month").alias("m")).agg(
         exact_sum("o_totalprice").alias("revenue"),
@@ -720,11 +707,8 @@ def w1_latest_row_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     int_accounts_current.sql:4-10). row_number over (key ORDER BY ts DESC)
     = 1; one shuffle on the natural key."""
     e = T(spark, sf_dir, "events")["events"]
-    w = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type")
+    return latest_per_key(e, "user_id", ("ts", "event_id")).select(
+        "user_id", "event_id", "ts", "event_type"
     )
 
 
@@ -750,7 +734,7 @@ def w2_lag_prev_month(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey", F.trunc("o_orderdate", "month").alias("month_start_date")
     ).agg(exact_sum("o_totalprice").alias("revenue"))
     w = Window.partitionBy("o_custkey").orderBy("month_start_date")
-    return m.withColumn("prev_revenue", F.coalesce(F.lag("revenue").over(w), F.lit(0.0)))
+    return m.withColumn("prev_revenue", lag_or_zero("revenue", w))
 
 
 @query(
@@ -777,17 +761,8 @@ def w3_prior_history_flag(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = o.groupBy(
         "o_custkey", F.trunc("o_orderdate", "month").alias("month_start_date")
     ).agg(exact_sum("o_totalprice").alias("revenue"))
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("month_start_date")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    return m.withColumn(
-        "had_big_month_before",
-        F.coalesce(
-            F.max(F.when(F.col("revenue") > 200000, 1).otherwise(0)).over(w), F.lit(0)
-        ),
-    )
+    w = Window.partitionBy("o_custkey").orderBy("month_start_date")
+    return m.withColumn("had_big_month_before", ever_before(F.col("revenue") > 200000, w))
 
 
 @query(
@@ -872,13 +847,11 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     call then reuses one cached copy (CacheManager dedupes the
     identical logical plan) instead of recomputing the two-shuffle
     chain per consumer; ``release_persisted()`` drops it."""
-    from ..functions.money import exact_sum as _es
-
     o = T(spark, sf_dir, "orders")["orders"]
     monthly = o.groupBy(
         F.col("o_custkey").alias("account_id"),
         F.trunc("o_orderdate", "month").alias("m"),
-    ).agg(_es("o_totalprice").alias("rev"))
+    ).agg(exact_sum("o_totalprice").alias("rev"))
     # single-shuffle zero-filled spine: fold each account's months into a
     # map, explode the month sequence, look revenue up in the map. The
     # groupBy leaves data hash-partitioned on account_id, which is
@@ -892,9 +865,7 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     spined = per_acct.select(
         "account_id",
-        F.explode(
-            F.expr("sequence(first_m, add_months(last_m, 1), interval 1 month)")
-        ).alias("month_start_date"),
+        month_spine("first_m", F.add_months("last_m", 1)).alias("month_start_date"),
         "rev_by_month",
     ).select(
         "account_id",
@@ -904,33 +875,17 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("end_rev"),
     )
     w = Window.partitionBy("account_id").orderBy("month_start_date")
-    flagged = spined.withColumn(
-        "begin_rev", F.coalesce(F.lag("end_rev").over(w), F.lit(0.0))
-    ).withColumn(
-        "has_paid_before",
-        F.coalesce(
-            F.max(F.when(F.col("end_rev") > 0, 1).otherwise(0)).over(
-                w.rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        )
-        == 1,
-    )
     begin, end = F.col("begin_rev"), F.col("end_rev")
+    flagged = spined.withColumn("begin_rev", lag_or_zero("end_rev", w)).withColumn(
+        "has_paid_before", ever_before(end > 0, w) == 1
+    )
     return persist(flagged.select(
         "account_id",
         "month_start_date",
         "begin_rev",
         "end_rev",
         (end - begin).alias("delta"),
-        F.when((begin == 0) & (end > 0) & ~F.col("has_paid_before"), "new")
-        .when((begin == 0) & (end > 0) & F.col("has_paid_before"), "reactivation")
-        .when((begin > 0) & (end == 0), "churn")
-        .when((begin > 0) & (end > 0) & (end - begin > 0), "upgrade")
-        .when((begin > 0) & (end > 0) & (end - begin < 0), "downgrade")
-        .when((begin == 0) & (end == 0), "zero")
-        .otherwise("no_change")
-        .alias("movement_type"),
+        movement_type(begin, end, end - begin, F.col("has_paid_before")).alias("movement_type"),
     ))
 
 
@@ -1239,28 +1194,18 @@ def m2_waterfall_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver corpus."""
     base = m1_movement_classification(spark, sf_dir)
     mt = F.col("movement_type")
+    amounts = movement_amounts(mt, F.col("begin_rev"), F.col("end_rev"), F.col("delta"))
+    names = ("new_rev", "reactivation_rev", "expansion_rev", "contraction_rev", "churn_rev")
     return base.groupBy("month_start_date").agg(
         exact_sum("begin_rev").alias("begin_rev"),
         exact_sum("end_rev").alias("end_rev"),
-        exact_sum(F.when(mt == "new", F.col("end_rev")).otherwise(0.0)).alias("new_rev"),
-        exact_sum(
-            F.when(mt == "reactivation", F.col("end_rev")).otherwise(0.0)
-        ).alias("reactivation_rev"),
-        exact_sum(F.when(mt == "upgrade", F.col("delta")).otherwise(0.0)).alias(
-            "expansion_rev"
-        ),
-        exact_sum(
-            F.when(mt == "downgrade", F.abs(F.col("delta"))).otherwise(0.0)
-        ).alias("contraction_rev"),
-        exact_sum(F.when(mt == "churn", F.col("begin_rev")).otherwise(0.0)).alias(
-            "churn_rev"
-        ),
+        *[exact_sum(amount).alias(n) for amount, n in zip(amounts.values(), names)],
         # (account_id, month) is the input's unique grain, so distinct
         # account counts degrade to conditional row counts — no expand
         F.sum(F.when(F.col("end_rev") > 0, 1).otherwise(0)).cast("bigint").alias(
             "active_accounts"
         ),
-        F.sum(F.when(mt == "churn", 1).otherwise(0)).cast("bigint").alias(
+        F.sum(F.when(mt == CHURN, 1).otherwise(0)).cast("bigint").alias(
             "churned_accounts"
         ),
     )
@@ -1439,20 +1384,18 @@ def f_date_kit(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite year-month key, month name, month index since 1970."""
     o = T(spark, sf_dir, "orders")["orders"]
     d = F.col("o_orderdate")
+    kit = date_kit(d, month_start(d))
+    picked = (
+        "month_start_date", "month_end_date", "prev_month_start_date", "next_month_start_date",
+        "year", "quarter", "month", "year_month", "month_name", "month_index",
+    )
+    renamed = {
+        "prev_month_start_date": "prev_month_start",
+        "next_month_start_date": "next_month_start",
+        "year_month": "year_month_key",
+    }
     return o.select(
-        d.cast("date").alias("d"),
-        F.trunc(d, "month").alias("month_start_date"),
-        F.last_day(d).alias("month_end_date"),
-        F.add_months(F.trunc(d, "month"), -1).alias("prev_month_start"),
-        F.add_months(F.trunc(d, "month"), 1).alias("next_month_start"),
-        F.year(d).alias("year"),
-        F.quarter(d).alias("quarter"),
-        F.month(d).alias("month"),
-        (F.year(d) * 100 + F.month(d)).alias("year_month_key"),
-        F.date_format(d, "MMMM").alias("month_name"),
-        F.months_between(F.trunc(d, "month"), F.lit("1970-01-01").cast("date"))
-        .cast("int")
-        .alias("month_index"),
+        d.cast("date").alias("d"), *[kit[k].alias(renamed.get(k, k)) for k in picked]
     ).distinct()
 
 
@@ -1467,8 +1410,6 @@ def f19_date_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F19: day-grain date spine, END-EXCLUSIVE like dbt_utils.date_spine
     (reference: dim_date.sql:9-13) — [2024-01-01, 2024-04-01) = 91 days.
     Generated with explode(sequence(...)): constant-folded, engine-side."""
-    from ..functions.dates import date_spine
-
     return date_spine(spark, "2024-01-01", "2024-04-01", end_exclusive=True)
 
 

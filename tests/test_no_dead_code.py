@@ -3,9 +3,11 @@ package must be referenced somewhere — by the package itself, the
 bench and runner entry points, ``tools/``, ``perfbench/`` or the tests.
 
 A reference is a ``Name`` or ``Attribute`` node or an import alias in
-the AST, so a mention in a docstring or comment does not count. A
-function registered with the suite's ``@query`` decorator is used by
-the registry; dunder methods are called by Python itself.
+the AST, so a mention in a docstring or comment does not count; nor
+does a package ``__init__.py`` re-exporting a name, which keeps a
+function importable without anything calling it. A function registered
+with the suite's ``@query`` decorator is used by the registry; dunder
+methods are called by Python itself.
 """
 
 from __future__ import annotations
@@ -71,12 +73,13 @@ def _references() -> set[str]:
     names: set[str] = set()
     for user in USERS:
         for path in _py_files(user):
+            reexport = path.startswith(PKG) and os.path.basename(path) == "__init__.py"
             for node in ast.walk(_parse(path)):
                 if isinstance(node, ast.Name):
                     names.add(node.id)
                 elif isinstance(node, ast.Attribute):
                     names.add(node.attr)
-                elif isinstance(node, ast.alias):
+                elif isinstance(node, ast.alias) and not reexport:
                     names.add(node.name.rsplit(".", 1)[-1])
                     if node.asname:
                         names.add(node.asname)

@@ -100,6 +100,57 @@ def test_jsonl_ingest_quarantines_corrupt_lines(spark, tmp_path):
     assert wh.read("raw", "documents__quarantine").count() == 6
 
 
+def _ingest_inputs(spark, tmp_path):
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
+
+    csv = tmp_path / "accounts.csv"
+    csv.write_text("account_id,account_name\nA1,Acme\n")
+    jsonl = tmp_path / "docs.jsonl"
+    doc = '{"doc_id": 1, "text": "hi", "lang": "en", "source": "web", "n_chars": 2}'
+    jsonl.write_text(doc + "\n{x\n")
+    return Warehouse(spark, str(tmp_path / "wh")), str(csv), str(jsonl)
+
+
+def test_unknown_ingest_mode_raises_before_writing(spark, tmp_path):
+    """An unknown mode raises even when the target does not exist yet,
+    and nothing is written."""
+    from duckdb_dbt_finance_warehouse_spark.sources.csv import ingest_csv
+    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import DOCUMENT_SCHEMA, ingest_jsonl
+
+    wh, csv, jsonl = _ingest_inputs(spark, tmp_path)
+    with pytest.raises(ValueError, match="unknown mode"):
+        ingest_csv(wh, csv, "accounts", mode="upsert")
+    with pytest.raises(ValueError, match="unknown mode"):
+        ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="upsert")
+    assert not wh.exists("raw", "accounts")
+    assert not wh.exists("raw", "docs") and not wh.exists("raw", "docs__quarantine")
+
+
+def test_append_to_a_missing_table_is_one_write_per_output(spark, tmp_path, monkeypatch):
+    """``append`` to a missing table creates it with one overwrite of
+    the batch (not an empty write followed by an append); later batches
+    append."""
+    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import DOCUMENT_SCHEMA, ingest_jsonl
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
+
+    wh, _, jsonl = _ingest_inputs(spark, tmp_path)
+    writes = []
+    real = Warehouse.write
+
+    def recording(self, df, schema, table, mode="overwrite", **kw):
+        writes.append((table, mode))
+        return real(self, df, schema, table, mode=mode, **kw)
+
+    monkeypatch.setattr(Warehouse, "write", recording)
+    ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="append")
+    assert writes == [("docs", "overwrite"), ("docs__quarantine", "overwrite")]
+    assert wh.read("raw", "docs").count() == 1
+    assert wh.read("raw", "docs__quarantine").count() == 1
+    ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="append")
+    assert writes[2:] == [("docs", "append"), ("docs__quarantine", "append")]
+    assert wh.read("raw", "docs").count() == 2
+
+
 def test_load_testdata_reuses_schema_until_the_file_changes(spark, tmp_path):
     """The second load of an unchanged file passes the schema inferred
     the first time (no Spark job); a file replaced under the same name

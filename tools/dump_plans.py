@@ -1,11 +1,16 @@
-"""Dump `.explain("formatted")` for named suite entries to files.
+"""Dump `.explain("formatted")` for named suite entries or pipeline models.
 
 Usage:
-    python tools/dump_plans.py --out plans/r13 --suffix _after [--sf-dir DIR] name [name ...]
+    python tools/dump_plans.py --out DIR [--suffix _after] [--sf-dir DIR] name [name ...]
+    python tools/dump_plans.py --out DIR [--suffix _after] --warehouse WH [model ...]
 
-Writes <out>/<name><suffix>.txt per query — the judge-facing evidence
-for plan-shape claims in OPTIMIZATION_r13.md.  Run from an old git
-worktree with --suffix _before to capture the pre-change plans.
+Writes <out>/<name><suffix>.txt per query — the evidence for plan-shape
+claims. With ``--warehouse`` each name is a pipeline model (default: all
+of them, in build order) and the plan dumped is ``m.fn(ctx)`` over that
+warehouse's current state, exactly what the next ``runner.py build``
+would materialize: incremental models see their existing targets. Run
+the same command from a checkout of the old commit with
+``--suffix _before`` to capture the pre-change plans.
 """
 
 from __future__ import annotations
@@ -22,26 +27,47 @@ from duckdb_dbt_finance_warehouse_spark.session import get_spark
 from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
 
 
+def _plans(spark, args):
+    """Yield (name, DataFrame) for every requested suite entry or model."""
+    if args.warehouse is None:
+        for name in args.names:
+            spec = REGISTRY.get(name)
+            if spec is None:
+                print(f"SKIP {name}: not in registry", flush=True)
+                continue
+            yield name, spec.fn(spark, args.sf_dir)
+        return
+    from duckdb_dbt_finance_warehouse_spark.models import build_pipeline
+    from duckdb_dbt_finance_warehouse_spark.plans.registry import Context
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
+
+    pipe = build_pipeline()
+    ctx = Context(spark, Warehouse(spark, args.warehouse), pipe)
+    for name in args.names or pipe.topo_order():
+        if name not in pipe.models:
+            print(f"SKIP {name}: not a pipeline model", flush=True)
+            continue
+        yield name, pipe.models[name].fn(ctx)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="+")
+    ap.add_argument("names", nargs="*")
     ap.add_argument("--out", required=True)
     ap.add_argument("--suffix", default="_after")
     ap.add_argument(
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     )
+    ap.add_argument("--warehouse", default=None, help="dump pipeline models over this root")
     args = ap.parse_args()
+    if args.warehouse is None and not args.names:
+        ap.error("name the suite entries to dump, or pass --warehouse")
 
     os.makedirs(args.out, exist_ok=True)
     spark = get_spark("dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    for name in args.names:
-        spec = REGISTRY.get(name)
-        if spec is None:
-            print(f"SKIP {name}: not in registry", flush=True)
-            continue
-        df = spec.fn(spark, args.sf_dir)
+    for name, df in _plans(spark, args):
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
