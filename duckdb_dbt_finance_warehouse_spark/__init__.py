@@ -16,8 +16,6 @@ Layout
 - ``operators``  : scale-out extension operators (dedup, similarity
                    search, text analysis, sessionization, as-of joins,
                    multimodal plumbing).
-- ``streaming``  : Structured Streaming variants of the incremental
-                   models.
 
 Everything here derives from public knowledge only: the Apache Spark /
 PySpark API, the reference repo's observable behavior, and published

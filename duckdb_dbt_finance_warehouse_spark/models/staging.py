@@ -29,6 +29,27 @@ def _hwm_filter(ctx: Context, df: DataFrame, model_name: str) -> DataFrame:
     return df.filter(F.col("ingested_at") > F.lit(hwm))
 
 
+def _staged(
+    src: DataFrame,
+    cleaned: dict,
+    derived: dict | None = None,
+) -> DataFrame:
+    """Select the ``cleaned`` columns in order, each followed by the
+    columns derived from it (``derived[name]``, a name -> Column dict),
+    then the lineage columns and a ``record_hash`` over exactly the
+    cleaned columns — so the hash always covers what the row holds."""
+    cols = []
+    for name, col in cleaned.items():
+        cols.append(col.alias(name))
+        cols += [c.alias(n) for n, c in (derived or {}).get(name, {}).items()]
+    return src.select(
+        *cols,
+        "ingested_at",
+        "source_file",
+        record_hash(list(cleaned.values())).alias("record_hash"),
+    )
+
+
 def stg_accounts(ctx: Context) -> DataFrame:
     """reference: models/staging/stg_accounts.sql:14-49"""
     src = _hwm_filter(ctx, ctx.source("raw", "accounts"), "stg_accounts")
@@ -44,12 +65,7 @@ def stg_accounts(ctx: Context) -> DataFrame:
         "signup_is_trial": F.col("is_trial").cast("boolean"),
         "churn_flag": F.col("churn_flag").cast("boolean"),
     }
-    return src.select(
-        *[c.alias(n) for n, c in cleaned.items()],
-        "ingested_at",
-        "source_file",
-        record_hash(list(cleaned.values())).alias("record_hash"),
-    )
+    return _staged(src, cleaned)
 
 
 def stg_subscriptions(ctx: Context) -> DataFrame:
@@ -57,43 +73,29 @@ def stg_subscriptions(ctx: Context) -> DataFrame:
     src = _hwm_filter(ctx, ctx.source("raw", "subscriptions"), "stg_subscriptions")
     mrr = F.col("mrr_amount").cast("double")
     arr = F.col("arr_amount").cast("double")
-    hashed = [
-        trim_clean("subscription_id"),
-        trim_clean("account_id"),
-        F.col("start_date").cast("date"),
-        F.col("end_date").cast("date"),
-        empty_to_null("plan_tier"),
-        F.col("seats").cast("int"),
-        mrr,
-        arr,
-        F.col("is_trial").cast("boolean"),
-        F.col("upgrade_flag").cast("boolean"),
-        F.col("downgrade_flag").cast("boolean"),
-        F.col("churn_flag").cast("boolean"),
-        lower_norm("billing_frequency"),
-        F.col("auto_renew_flag").cast("boolean"),
-    ]
-    return src.select(
-        trim_clean("subscription_id").alias("subscription_id"),
-        trim_clean("account_id").alias("account_id"),
-        F.col("start_date").cast("date").alias("start_date"),
-        F.col("end_date").cast("date").alias("end_date"),
-        empty_to_null("plan_tier").alias("plan_tier"),
-        F.col("seats").cast("int").alias("seats"),
-        mrr.alias("mrr_amount_raw"),
-        arr.alias("arr_amount_raw"),
-        negative_to_null(mrr).alias("mrr_amount"),
-        negative_to_null(arr).alias("arr_amount"),
-        F.col("is_trial").cast("boolean").alias("is_trial"),
-        F.col("upgrade_flag").cast("boolean").alias("upgrade_flag"),
-        F.col("downgrade_flag").cast("boolean").alias("downgrade_flag"),
-        F.col("churn_flag").cast("boolean").alias("churn_flag"),
-        lower_norm("billing_frequency").alias("billing_frequency"),
-        F.col("auto_renew_flag").cast("boolean").alias("auto_renew_flag"),
-        "ingested_at",
-        "source_file",
-        record_hash(hashed).alias("record_hash"),
-    )
+    cleaned = {
+        "subscription_id": trim_clean("subscription_id"),
+        "account_id": trim_clean("account_id"),
+        "start_date": F.col("start_date").cast("date"),
+        "end_date": F.col("end_date").cast("date"),
+        "plan_tier": empty_to_null("plan_tier"),
+        "seats": F.col("seats").cast("int"),
+        "mrr_amount_raw": mrr,
+        "arr_amount_raw": arr,
+        "is_trial": F.col("is_trial").cast("boolean"),
+        "upgrade_flag": F.col("upgrade_flag").cast("boolean"),
+        "downgrade_flag": F.col("downgrade_flag").cast("boolean"),
+        "churn_flag": F.col("churn_flag").cast("boolean"),
+        "billing_frequency": lower_norm("billing_frequency"),
+        "auto_renew_flag": F.col("auto_renew_flag").cast("boolean"),
+    }
+    derived = {
+        "arr_amount_raw": {
+            "mrr_amount": negative_to_null(mrr),
+            "arr_amount": negative_to_null(arr),
+        }
+    }
+    return _staged(src, cleaned, derived)
 
 
 def stg_support_tickets(ctx: Context) -> DataFrame:
@@ -101,32 +103,23 @@ def stg_support_tickets(ctx: Context) -> DataFrame:
     src = ctx.source("raw", "support_tickets")
     res_h = F.col("resolution_time_hours").cast("double")
     frt_m = F.col("first_response_time_minutes").cast("double")
-    sat = F.col("satisfaction_score").cast("double")
-    hashed = [
-        trim_clean("ticket_id"),
-        trim_clean("account_id"),
-        F.col("submitted_at").cast("timestamp"),
-        F.col("closed_at").cast("timestamp"),
-        res_h,
-        lower_norm("priority"),
-        frt_m,
-        sat,
-        F.col("escalation_flag").cast("boolean"),
-    ]
-    return src.select(
-        trim_clean("ticket_id").alias("ticket_id"),
-        trim_clean("account_id").alias("account_id"),
-        F.col("submitted_at").cast("timestamp").alias("submitted_at"),
-        F.col("closed_at").cast("timestamp").alias("closed_at"),
-        res_h.alias("resolution_time_hours_raw"),
-        negative_to_null(res_h).alias("resolution_time_hours"),
-        lower_norm("priority").alias("priority"),
-        frt_m.alias("first_response_time_minutes_raw"),
-        negative_to_null(frt_m).alias("first_response_time_minutes"),
-        sat.alias("satisfaction_score"),
-        F.col("escalation_flag").cast("boolean").alias("escalation_flag"),
-        F.col("closed_at").cast("timestamp").isNotNull().alias("is_closed"),
-        "ingested_at",
-        "source_file",
-        record_hash(hashed).alias("record_hash"),
-    )
+    closed_at = F.col("closed_at").cast("timestamp")
+    cleaned = {
+        "ticket_id": trim_clean("ticket_id"),
+        "account_id": trim_clean("account_id"),
+        "submitted_at": F.col("submitted_at").cast("timestamp"),
+        "closed_at": closed_at,
+        "resolution_time_hours_raw": res_h,
+        "priority": lower_norm("priority"),
+        "first_response_time_minutes_raw": frt_m,
+        "satisfaction_score": F.col("satisfaction_score").cast("double"),
+        "escalation_flag": F.col("escalation_flag").cast("boolean"),
+    }
+    derived = {
+        "resolution_time_hours_raw": {"resolution_time_hours": negative_to_null(res_h)},
+        "first_response_time_minutes_raw": {
+            "first_response_time_minutes": negative_to_null(frt_m)
+        },
+        "escalation_flag": {"is_closed": closed_at.isNotNull()},
+    }
+    return _staged(src, cleaned, derived)

@@ -1,16 +1,11 @@
-"""As-of joins.
+"""As-of joins beyond the SCD2 validity-interval join (suite J3/J4).
 
-Two variants beyond the SCD2 validity-interval join (suite J3/J4):
-
-- ``asof_nearest_prior``: classic as-of — attach the RIGHT row with the
-  greatest timestamp <= the left row's timestamp, per key. Implemented
-  shuffle-once with the union+window trick: tag both sides, union, sort
-  within key by time, propagate the last right-side payload forward with
-  ``last(..., ignorenulls)``. No UDF, no range explosion; works at any
-  scale because it is a single window over the union.
-- ``merge_asof_pandas``: per-group ``pd.merge_asof`` via applyInPandas —
-  kept as the escape hatch for tolerance/backward-forward variants that
-  the window trick doesn't express.
+``asof_nearest_prior``: classic as-of — attach the RIGHT row with the
+greatest timestamp <= the left row's timestamp, per key. Implemented
+shuffle-once with the union+window trick: tag both sides, union, sort
+within key by time, propagate the last right-side payload forward with
+``last(..., ignorenulls)``. No UDF, no range explosion; works at any
+scale because it is a single window over the union.
 """
 
 from __future__ import annotations
@@ -75,49 +70,3 @@ def asof_nearest_prior(
     )
     return filled.filter(F.col("_side") == 1).drop("_ts", "_side")
 
-
-def merge_asof_pandas(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    left_ts: str,
-    right_ts: str,
-    payload_cols: list[str],
-    tolerance_secs: int | None = None,
-) -> DataFrame:
-    """Arrow-batched per-key pd.merge_asof — the slow-path variant kept
-    for tolerance windows; prefer asof_nearest_prior."""
-    import pandas as pd
-    from pyspark.sql.types import StructField, StructType
-
-    out_schema = StructType(
-        list(left.schema.fields)
-        + [StructField(f"asof_{c}", right.schema[c].dataType, True) for c in payload_cols]
-    )
-    r_small = right.select(key, right_ts, *payload_cols)
-
-    # cogrouped applyInPandas: each key's left/right slices meet in one
-    # pandas call — Arrow-batched, parallel per key group
-    def cogroup_merge(l_pdf: "pd.DataFrame", r_pdf: "pd.DataFrame") -> "pd.DataFrame":
-        l_sorted = l_pdf.sort_values(left_ts)
-        r_sorted = (
-            r_pdf.sort_values(right_ts)[[right_ts, *payload_cols]]
-            .rename(columns={c: f"asof_{c}" for c in payload_cols})
-            .rename(columns={right_ts: "_rts"})  # avoid colliding with left ts
-        )
-        tol = pd.Timedelta(seconds=tolerance_secs) if tolerance_secs else None
-        out = pd.merge_asof(
-            l_sorted,
-            r_sorted,
-            left_on=left_ts,
-            right_on="_rts",
-            tolerance=tol,
-            direction="backward",
-        )
-        return out.drop(columns=["_rts"], errors="ignore")
-
-    return (
-        left.groupBy(key)
-        .cogroup(r_small.groupBy(key))
-        .applyInPandas(lambda lk, rk: cogroup_merge(lk, rk), schema=out_schema)
-    )

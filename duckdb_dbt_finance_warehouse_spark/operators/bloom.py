@@ -35,27 +35,6 @@ BLOOM_BITS_PER_KEY = 16  # target m/n; K=4 hashes -> FP ~ 0.24%
 BLOOM_M_MAX = 1 << 20  # size bound: past it a real join is the right tool
 
 
-def bloom_m_for(n_keys: int) -> int:
-    """The sizing spec for ``n_keys`` distinct build-side keys: the
-    smallest power of two >= BLOOM_BITS_PER_KEY * n_keys (never below
-    BLOOM_M). A fixed m degrades sharply past a few thousand keys
-    (m=2^16 at 30k keys -> FP ~ 0.49 — a filter that passes half the
-    non-matching rows); sizing by key count holds FP near
-    (1 - e^(-K*n/m))^K ~ 0.24% at any build size. Past BLOOM_M_MAX a
-    Bloom filter is the wrong tool (use a real join), so this RAISES
-    rather than silently degrading. ``_build_words_frame`` replays it
-    in-plan; tests pin the two equal."""
-    m = BLOOM_M
-    while m < BLOOM_BITS_PER_KEY * n_keys:
-        m <<= 1
-    if m > BLOOM_M_MAX:
-        raise ValueError(
-            f"bloom filter over {n_keys} keys needs m={m} bits"
-            f" > BLOOM_M_MAX={BLOOM_M_MAX}; use a real (broadcast) join"
-        )
-    return m
-
-
 def _bit(key: F.Column, j: int, m: F.Column) -> F.Column:
     """j-th portable bit position via Kirsch–Mitzenmacher double
     hashing: ONE md5 per key yields two independent 60-bit halves
@@ -78,10 +57,14 @@ def bloom_words_frame(keys: DataFrame, key_col: str) -> DataFrame:
     IVF centroid and LSH bucket tables (append == rebuild: re-deriving
     the frame from the same keys cache-matches the stored copy).
 
-    Sizing replays ``bloom_m_for`` exactly with integer CASE arms over
-    the five legal power-of-two sizes (no float log2), and past
-    ``BLOOM_M_MAX`` raises at materialization with the same message —
-    beyond that a Bloom filter is the wrong tool.
+    Sizing: m is the smallest power of two >= BLOOM_BITS_PER_KEY *
+    distinct keys, never below BLOOM_M. A fixed m degrades sharply past
+    a few thousand keys (m=2^16 at 30k keys -> FP ~ 0.49 — a filter
+    that passes half the non-matching rows); sizing by key count holds
+    FP near (1 - e^(-K*n/m))^K ~ 0.24% at any build size. It is
+    computed in-plan with integer CASE arms over the five legal
+    power-of-two sizes (no float log2), and past ``BLOOM_M_MAX`` raises
+    at materialization — beyond that a Bloom filter is the wrong tool.
 
     Memoized by (keys-plan semantics, key_col): the SAME build side
     recurs across invocations (bench warmup + timed run, repeated
@@ -189,28 +172,6 @@ def _member_pred(h1: F.Column, h2: F.Column, m: F.Column, words: F.Column) -> F.
     return pred
 
 
-def bloom_semi_join(
-    probe: DataFrame, keys: DataFrame, probe_col: str, key_col: str
-) -> DataFrame:
-    """Rows of ``probe`` whose ``probe_col`` passes the Bloom filter
-    built over ``keys.key_col`` — a superset of the true semi-join with
-    deterministic false positives. The stored bitmap row is broadcast
-    into the probe stage (1-row bound); the probe side is never
-    shuffled and the filter state is persisted across invocations.
-
-    Failure contract (changed in r12, documented per r12 ADVICE): a
-    build side past ``BLOOM_M_MAX`` no longer raises ``ValueError`` on
-    the driver at construction — sizing now happens in-plan, so the
-    oversize build surfaces as a ``SparkRuntimeException`` (wrapping
-    the same "exceeds BLOOM_M_MAX ... use a real (broadcast) join"
-    message) at FIRST MATERIALIZATION, i.e. mid-job after the probe
-    scan has launched. Callers that need fail-fast should count the
-    distinct build keys and check them with ``bloom_m_for`` first."""
-    return bloom_contains(
-        probe, keys, probe_col, key_col, flag="_bloom_pass"
-    ).filter(F.col("_bloom_pass")).drop("_bloom_pass")
-
-
 def bloom_contains(
     probe: DataFrame, keys: DataFrame, probe_col: str, key_col: str,
     flag: str = "in_bloom",
@@ -218,9 +179,14 @@ def bloom_contains(
     """``probe`` plus a boolean ``flag`` column: does ``probe_col`` pass
     the Bloom filter built over ``keys.key_col``? Flag form instead of
     filtering, for plans that need pass/fail counts side by side in ONE
-    probe scan. Same failure contract
-    as ``bloom_semi_join``: an oversize build raises at first
-    materialization (executor-side), not at construction."""
+    probe scan. The stored bitmap row is broadcast into the probe stage
+    (1-row bound); the probe side is never shuffled.
+
+    Failure contract: sizing happens in-plan, so a build side past
+    ``BLOOM_M_MAX`` surfaces as a ``SparkRuntimeException`` (wrapping
+    the "exceeds BLOOM_M_MAX ... use a real (broadcast) join" message)
+    at FIRST MATERIALIZATION, not at construction. Callers that need
+    fail-fast should count the distinct build keys first."""
     wf = bloom_words_frame(keys, key_col)
     d = F.md5(F.col(probe_col).cast("string"))
     flagged = (
@@ -244,7 +210,7 @@ def bloom_contains(
 
 
 def bloom_oracle_m_sql(keys_sql: str, key_col: str) -> str:
-    """DuckDB scalar replaying ``bloom_m_for`` of the distinct key count:
+    """DuckDB scalar replaying the filter size of the distinct key count:
     the smallest power of two >= BLOOM_BITS_PER_KEY * distinct keys
     (floor BLOOM_M, hard error past BLOOM_M_MAX — same raise as the
     Spark side). Wrap in a CTE and thread ``(SELECT m FROM <cte>)`` as

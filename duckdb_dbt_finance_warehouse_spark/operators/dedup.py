@@ -451,10 +451,9 @@ def minhash_lsh_dedup_portable(
 # stored-table lifecycle shared with the ANN index frames / bigram LM /
 # BPE merges):
 # in a curation warehouse the verified LSH pair list and the cluster
-# map are MATERIALIZED tables (the DedupIndex lifecycle's batch
-# outputs — a keep/drop decision is written once and read by every
-# downstream consumer: cluster formation, canonical selection,
-# leakage-safe splitting).  Rebuilding the shingle -> signature ->
+# map are MATERIALIZED tables — a keep/drop decision is written once
+# and read by every downstream consumer: cluster formation, canonical
+# selection, leakage-safe splitting.  Rebuilding the shingle -> signature ->
 # band -> verify chain per consumer is the m2-recomputes-m1
 # anti-pattern at corpus scale — measured r13 at sf0.1: the
 # (4,32,8,.5) chain was built independently by FOUR suite entries
@@ -495,8 +494,8 @@ def portable_index_frames(
     bands: int = 16,
 ) -> tuple[DataFrame, DataFrame]:
     """The persisted MinHash index pair-of-tables (sigs, bands) as
-    memoized STORED state — the ``DedupIndex`` warehouse tables without
-    the filesystem round-trip.  The incremental dedup entry point and
+    memoized STORED state — what ``minhash_lsh_dedup_incremental``
+    probes a new batch against.  The incremental dedup entry point and
     any other index consumer over the same corpus plan read ONE build
     of the signature aggregation instead of re-running the shingle
     explode + 64-min pass per invocation."""
@@ -811,78 +810,6 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     return nbrs.groupBy(F.col("u").alias("member_id")).agg(
         F.least(F.min("v"), F.first("u")).alias("cluster_id")
     )
-
-
-class DedupIndex:
-    """The flagship 100 TB operating mode as a maintained LIFECYCLE: a
-    standing MinHash index persisted as warehouse tables
-    (``<schema>.<prefix>_sigs`` / ``<prefix>_bands``), with every new
-    batch deduped against it in O(batch) and its signatures appended.
-
-    The decomposition is LOSSLESS by construction: for batches A, B, C
-    appended in order, the union of the returned pair sets equals the
-    full-corpus ``minhash_lsh_dedup_portable`` pairs over A∪B∪C with the
-    same parameters (each append emits its batch's internal pairs plus
-    all pairs against everything already indexed; band collisions are a
-    pure function of the signatures, which don't depend on batch
-    boundaries) — pinned by
-    tests/test_operators.test_dedup_index_lifecycle_lossless.
-
-    Storage is the Warehouse parquet convention (append mode — S10's
-    arrival-log semantics applied to index rows). On a cluster, write
-    the band table bucketed by (band, bkey) so the per-batch join never
-    shuffles the stored side (tests/test_bucketing proves the plan)."""
-
-    def __init__(
-        self,
-        wh,
-        schema: str = "index",
-        prefix: str = "minhash",
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        k: int = 5,
-        n_hashes: int = 64,
-        bands: int = 16,
-        threshold: float = 0.6,
-    ) -> None:
-        self.wh = wh
-        self.schema = schema
-        self.sigs_table = f"{prefix}_sigs"
-        self.bands_table = f"{prefix}_bands"
-        self.id_col = id_col
-        self.text_col = text_col
-        self.k = k
-        self.n_hashes = n_hashes
-        self.bands = bands
-        self.threshold = threshold
-
-    def _stored(self, table: str, empty_like: DataFrame) -> DataFrame:
-        if self.wh.exists(self.schema, table):
-            return self.wh.read(self.schema, table)
-        return empty_like.limit(0)
-
-    def append(self, new_docs: DataFrame) -> DataFrame:
-        """Dedup ``new_docs`` against the standing index + themselves,
-        APPEND their signatures/bands to the index tables, and return
-        the verified pairs (id_a = new doc; id_b = any). The returned
-        frame is materialized (the operator's persisted sigs back it)
-        before the index append so results are stable across the
-        write."""
-        probe_sigs = portable_signatures(
-            new_docs.limit(0), self.id_col, self.text_col, self.k, self.n_hashes
-        )
-        probe_bands = portable_bands(probe_sigs, self.id_col, self.bands, self.n_hashes)
-        index_sigs = self._stored(self.sigs_table, probe_sigs)
-        index_bands = self._stored(self.bands_table, probe_bands)
-        pairs, new_sigs, new_bands = minhash_lsh_dedup_incremental(
-            new_docs, index_sigs, index_bands, self.id_col, self.text_col,
-            k=self.k, n_hashes=self.n_hashes, bands=self.bands,
-            threshold=self.threshold,
-        )
-        pairs = pairs.localCheckpoint()  # settle results before the append
-        self.wh.write(new_sigs, self.schema, self.sigs_table, mode="append")
-        self.wh.write(new_bands, self.schema, self.bands_table, mode="append")
-        return pairs
 
 
 def passage_dedup(

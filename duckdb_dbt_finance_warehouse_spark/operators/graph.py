@@ -895,13 +895,13 @@ def label_propagation(
     combinable; nothing ever materializes beyond edge volume. Labels
     stay raw ids (no rank dictionary): like dedup_clusters (r9 A/B,
     PERF.md), the per-round rows are two longs — the four dictionary
-    joins would cost more than they save. Fixed-round by design;
-    ``lpa_convergence_audit`` measures whether a round count actually
-    settled (r10 VERDICT task 7) — run it before trusting community
-    output on a new graph family."""
+    joins would cost more than they save. Fixed-round by design: on
+    (near-)bipartite graphs synchronous LPA runs a period-2 orbit that
+    never reaches a lag-1 fixpoint (``label_propagation_damped`` breaks
+    it)."""
     if rounds < 1:
         raise ValueError(f"label_propagation: rounds must be >= 1, got {rounds}")
-    labels = _lpa_states(_lpa_prepare(edges, src_col, dst_col), rounds, keep=1)[-1]
+    labels = _lpa_rounds(_lpa_prepare(edges, src_col, dst_col), rounds)
     return labels.select("node", F.col("lbl").alias("label"))
 
 
@@ -916,26 +916,15 @@ def _lpa_prepare(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
     return persist(_undirected(edges, src_col, dst_col).repartition(parts, "a"))
 
 
-def _lpa_states(u: DataFrame, rounds: int, keep: int) -> list[DataFrame]:
+def _lpa_rounds(u: DataFrame, rounds: int) -> DataFrame:
     """Run the synchronous LPA loop over a prepared (symmetrized,
-    persisted) edge frame, returning the last ``keep`` label states
-    oldest-first — label_propagation keeps 1, the convergence audit 3.
-
-    With ``keep > 1`` every round's node-sized state is
-    localCheckpointed: the returned states share their round prefix,
-    and without the checkpoints joining three of them re-executes the
-    chain ~3x (the r4 recompute lesson, caught by the r11 review).
-    ``keep == 1`` stays one unbroken lazy plan — the oracle-replayed
-    query path is unchanged."""
+    persisted) edge frame and return the last round's (node, lbl)."""
     # round 1 needs no join: every neighbor's label is the neighbor id
     # (and u is cached partitioned on the grouping key — no exchange)
     labels = (
         u.groupBy(F.col("a").alias("node"))
         .agg(F.min(F.col("b")).alias("lbl"))
     )
-    if keep > 1:
-        labels = labels.localCheckpoint(eager=False)
-    states = [labels]
     arg = F.min(F.struct((-F.col("cnt")).alias("negcnt"), F.col("lbl")))
     for _ in range(rounds - 1):
         # join on 'a' — the cached frame's partitioning key — so only
@@ -951,73 +940,7 @@ def _lpa_states(u: DataFrame, rounds: int, keep: int) -> list[DataFrame]:
             .groupBy("node")
             .agg(arg.getField("lbl").alias("lbl"))
         )
-        if keep > 1:
-            labels = labels.localCheckpoint(eager=False)
-        states.append(labels)
-        if len(states) > keep:
-            states.pop(0)
-    return states
-
-
-def lpa_convergence_audit(
-    edges: DataFrame,
-    src_col: str = "src",
-    dst_col: str = "dst",
-    rounds: int = 3,
-) -> DataFrame:
-    """Fixpoint audit for the fixed-round ``label_propagation`` (r10
-    VERDICT task 7: fixed-round community output must not silently
-    under-converge as graphs grow). One row:
-
-      (n_nodes, changed_vs_prev, changed_vs_prev2)
-
-    where ``changed_vs_prev`` counts nodes whose label differs between
-    rounds N-1 and N, and ``changed_vs_prev2`` between rounds N-2 and
-    N.  Reading the pair is the CONTRACT — synchronous LPA has two
-    stable regimes, not one:
-
-      * changed_vs_prev == 0 — true fixpoint; more rounds are a no-op.
-      * changed_vs_prev > 0 but changed_vs_prev2 == 0 — a period-2
-        orbit: on (near-)bipartite structure synchronous updates swap
-        the two sides' labels forever (the sf0.001 citation graph does
-        exactly this — every node flips every round), so lag-1 deltas
-        NEVER reach zero and lag-2 is the honest convergence signal.
-        Either phase of the orbit is a valid community assignment.
-      * both > 0 — still mixing: raise ``rounds`` (or pick the other
-        phase) before trusting the communities.
-
-    Cost: the same per-round work as ``label_propagation`` plus two
-    node-sized joins at the end — the kept states are
-    localCheckpointed inside ``_lpa_states`` so joining three of them
-    does NOT re-execute the shared round prefix (without that the
-    audit ran ~2.6x the rounds; r11 review) — and the symmetrized edge
-    frame is the same single persisted copy. ``rounds`` must be >= 3
-    so both lags exist."""
-    if rounds < 3:
-        raise ValueError(
-            f"lpa_convergence_audit: rounds must be >= 3, got {rounds}"
-        )
-    u = _lpa_prepare(edges, src_col, dst_col)
-    prev2, prev, cur = _lpa_states(u, rounds, keep=3)
-    return (
-        cur.join(
-            prev.withColumnsRenamed({"lbl": "_lbl_prev"}).hint("shuffle_hash"),
-            "node",
-        )
-        .join(
-            prev2.withColumnsRenamed({"lbl": "_lbl_prev2"}).hint("shuffle_hash"),
-            "node",
-        )
-        .agg(
-            F.count("*").alias("n_nodes"),
-            F.sum(
-                (F.col("lbl") != F.col("_lbl_prev")).cast("long")
-            ).alias("changed_vs_prev"),
-            F.sum(
-                (F.col("lbl") != F.col("_lbl_prev2")).cast("long")
-            ).alias("changed_vs_prev2"),
-        )
-    )
+    return labels
 
 
 def label_propagation_damped(
@@ -1031,14 +954,14 @@ def label_propagation_damped(
     label alongside its neighbors' labels before the frequency argmax
     (ties still break toward the smallest label). On (near-)bipartite
     structure plain synchronous LPA swaps the two sides' labels
-    forever (the period-2 orbit ``lpa_convergence_audit`` measures —
-    the sf0.001 citation graph does exactly this); the self-vote
-    anchors each node, so a swap must now OUTVOTE the incumbent
-    instead of merely tying it, and the bipartite fixture reaches a
-    lag-1 fixpoint (pytest-pinned). Deterministic and oracle-replayed:
-    the self-vote is one extra node-sized UNION ALL into the per-round
-    count — same cost shape as ``label_propagation`` (stored
-    symmetrized edge frame, node-sized state, edge-sized rounds)."""
+    forever (a period-2 orbit — the sf0.001 citation graph does
+    exactly this); the self-vote anchors each node, so a swap must now
+    OUTVOTE the incumbent instead of merely tying it, and the bipartite
+    fixture reaches a lag-1 fixpoint (pytest-pinned). Deterministic and
+    oracle-replayed: the self-vote is one extra node-sized UNION ALL
+    into the per-round count — same cost shape as ``label_propagation``
+    (stored symmetrized edge frame, node-sized state, edge-sized
+    rounds)."""
     if rounds < 1:
         raise ValueError(
             f"label_propagation_damped: rounds must be >= 1, got {rounds}"

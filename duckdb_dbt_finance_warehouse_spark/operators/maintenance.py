@@ -4,18 +4,14 @@ accrete small files/partitions, and read amplification grows until
 someone coalesces them (DuckDB-side the reference gets this for free
 from single-file tables; engines call it OPTIMIZE / rewrite_data_files).
 
-Two pieces:
-
-- ``compaction_plan`` — the DECLARATIVE half: group adjacent (by sort
-  order) partitions into target-row compaction groups with one prefix
-  sum over the per-partition row counts. The window is over PARTITION
-  SUMMARIES (dozens-to-thousands of rows at any corpus size, same
-  bounded-state argument as the quantile-sketch cells), never over the
-  data, so the plan costs one grouped count of the table plus an
-  O(#partitions) window.
-- ``sources.maintenance.compact_table`` — the EXECUTING half: rewrite
-  a table to a target file count per partition via the crash-safe
-  staged swap.
+``compaction_plan`` is the DECLARATIVE half: group adjacent (by sort
+order) partitions into target-row compaction groups with one prefix
+sum over the per-partition row counts. The window is over PARTITION
+SUMMARIES (dozens-to-thousands of rows at any corpus size, same
+bounded-state argument as the quantile-sketch cells), never over the
+data, so the plan costs one grouped count of the table plus an
+O(#partitions) window. Executing the rewrite is left to the engine's
+own OPTIMIZE or a staged rewrite per group.
 """
 
 from __future__ import annotations
@@ -154,8 +150,7 @@ def zorder_layout(
     One pass + one bucket-keyed shuffle at any scale: global min/max
     come from a 1-row broadcast aggregate; the z computation is
     per-row; the summary groups on at most 2^bucket_bits keys. The
-    actual rewrite (repartitionByRange(z) + write) is
-    ``sources.maintenance.compact_table`` composed over this plan."""
+    actual rewrite is repartitionByRange(z) + write."""
     x = F.col(x_col) if isinstance(x_col, str) else x_col
     y = F.col(y_col) if isinstance(y_col, str) else y_col
     base = df.select(

@@ -14,10 +14,9 @@ nearest-neighbor resamples in pixel space, and re-encodes with the same
 codec; ``synthesize_y4m_blobs``/``extract_video_frames`` round-trip
 genuine YUV4MPEG2 streams (``operators/y4m`` — the raw-planar container
 ffmpeg/mjpegtools read) with strided keyframe selection over decoded
-frames. The older ``extract_features``/``resize_stub``/``frame_sample``
-byte-level paths remain as the format-agnostic plumbing twins — at
-100 TB the no-Python ``frame_sample`` slicer is still the right first
-pass when frames are fixed-offset slices.
+frames. The byte-level ``frame_sample`` path remains as the
+format-agnostic plumbing twin — at 100 TB the no-Python slicer is still
+the right first pass when frames are fixed-offset slices.
 
 The synthesize_* encoders run heavy per-row Python codec work, so their
 inputs route through ``dedup.spread_input`` — a byte-compact documents
@@ -415,45 +414,6 @@ def extract_audio_features(blobs: DataFrame, id_col: str = "doc_id") -> DataFram
     return blobs.select(id_col, "payload").mapInPandas(run, AUDIO_FEATURE_SCHEMA)
 
 
-FEATURE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("n_bytes", T.IntegerType()),
-        T.StructField("byte_mean", T.DoubleType()),
-        T.StructField("byte_max", T.IntegerType()),
-        T.StructField("distinct_bytes", T.IntegerType()),
-    ]
-)
-
-
-def _fake_decode(payload: bytes) -> tuple[float, int, int]:
-    """STUB decoder — deterministic byte stats standing in for a real
-    image/audio decode. Replace with PIL/librosa in deployment."""
-    if not payload:
-        return 0.0, 0, 0
-    return sum(payload) / len(payload), max(payload), len(set(payload))
-
-
-def extract_features(blobs: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched feature extraction over binary payloads."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            feats = [_fake_decode(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col],
-                    "n_bytes": [len(p) for p in pdf["payload"]],
-                    "byte_mean": [f[0] for f in feats],
-                    "byte_max": [f[1] for f in feats],
-                    "distinct_bytes": [f[2] for f in feats],
-                }
-            )
-
-    return blobs.select(id_col, "payload").mapInPandas(run, FEATURE_SCHEMA)
-
-
 def frame_sample(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -473,7 +433,7 @@ def frame_sample(
     Python; payload bytes never leave the scan task. A real video
     decoder replaces the substring slicer with a mapInPandas stage
     (same output schema, same no-shuffle shape — see
-    ``extract_features`` for that pattern); frames here are CHARACTER
+    ``extract_image_features`` for that pattern); frames here are CHARACTER
     slices of the text stand-in payload because the DuckDB oracle has
     no BLOB substring — on the Spark side ``substring`` works on
     ``binary`` directly, so the production form is the same expression
@@ -507,73 +467,6 @@ def frame_sample(
     )
 
 
-def resize_stub(
-    blobs: DataFrame,
-    id_col: str = "doc_id",
-    target_bytes: int = 32,
-) -> DataFrame:
-    """RESIZE plumbing (binary in -> binary out, metadata updated) with
-    the decode/re-encode STUBBED: the deterministic fake "resamples"
-    each payload to exactly ``target_bytes`` by strided byte selection
-    (downscale) or cyclic repetition (upscale) — the same batch shape,
-    schema contract, and narrow no-shuffle plan a real
-    PIL ``Image.resize`` + re-encode would use; swap the body of
-    ``_fake_resize`` at deployment, nothing else changes.
-
-    Output mirrors the input (id, payload, media_meta) with the new
-    byte length and a bumped version in the metadata struct — resized
-    payloads can re-enter every downstream blob operator
-    (``extract_features``, ``frame_sample``) unchanged. Payload bytes
-    never leave the scan task; at 100 TB this is a pure map stage whose
-    output is strictly smaller than its input when downscaling."""
-    import pandas as pd
-
-    if target_bytes < 1:
-        raise ValueError(f"resize_stub: target_bytes must be >= 1 (got {target_bytes})")
-
-    def _fake_resize(payload: bytes) -> bytes:
-        if not payload:
-            return b""
-        n = len(payload)
-        # strided nearest-neighbor byte sampling, exact target size
-        return bytes(payload[(i * n) // target_bytes] for i in range(target_bytes))
-
-    out_schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField(
-                "media_meta",
-                T.StructType(
-                    [
-                        T.StructField("mime", T.StringType()),
-                        T.StructField("n_bytes", T.IntegerType()),
-                        T.StructField("version", T.IntegerType()),
-                    ]
-                ),
-            ),
-        ]
-    )
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            resized = [_fake_resize(p) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "payload": resized,
-                    "media_meta": [
-                        {"mime": m["mime"], "n_bytes": len(r), "version": int(m["version"]) + 1}
-                        for m, r in zip(pdf["media_meta"], resized)
-                    ],
-                }
-            )
-
-    return blobs.select(
-        F.col(id_col).alias("doc_id"), "payload", "media_meta"
-    ).mapInPandas(run, out_schema)
-
-
 def resize_image(
     blobs: DataFrame,
     id_col: str = "doc_id",
@@ -585,7 +478,7 @@ def resize_image(
     resample in PIXEL space (source index per axis =
     ``(dst * src_dim) // dst_dim`` — the same strided selection a
     box-filterless ``PIL.Image.resize(..., NEAREST)`` computes), and
-    re-encode with ``encode_png``. Output mirrors the input
+    re-encode with ``png.encode_png_batch``. Output mirrors the input
     (id, payload, media_meta) with the true re-encoded byte length and
     a bumped version — resized payloads re-enter every downstream blob
     operator (``extract_image_features``, ``frame_sample``) unchanged.

@@ -7,24 +7,21 @@ This module implements both directions for 8-bit non-interlaced
 greyscale/RGB/RGBA so the multimodal pipeline's decode step is a
 genuine image decode, not a byte-stat stand-in:
 
-- ``encode_png`` deliberately cycles through ALL five filter types
-  (row y uses filter y % 5), so a round-trip exercises every defilter
-  path — a decoder that faked any predictor could not reproduce the
-  pixels.
-- ``decode_png`` validates the signature and every chunk CRC, merges
-  IDAT chunks, inflates, and defilters scanline by scanline.
+- ``encode_png_batch`` deliberately cycles through ALL five filter
+  types (row y uses filter y % 5), so a round-trip exercises every
+  defilter path — a decoder that faked any predictor could not
+  reproduce the pixels.
+- ``_decode_png_groups`` validates the signature and every chunk CRC,
+  merges IDAT chunks, inflates, and defilters.
 
-Images here are small (the synthesized corpus thumbnails), so the
-scalar ``encode_png``/``decode_png`` keep readable per-scanline
-Python — but at corpus scale the Arrow kernels decode/encode tens of
-thousands of thumbnails per batch, and per-PIXEL Python dominated the
-resize entry (r10 VERDICT task 5: sf0.1 0.20 -> 0.75 s). The
-``*_batch`` variants below vectorize the filter arithmetic with numpy
-ACROSS the whole stack of same-shaped images (per-row numpy would
-LOSE on 24-byte scanlines — the win is the n_images axis), falling
-back per odd-shaped image to the scalar path. Outputs are pinned
-bit-identical to the scalar codec (same y%5 filter cycle, same zlib
-level, same CRC validation) so oracle parity is untouched.
+At corpus scale the Arrow kernels decode/encode tens of thousands of
+thumbnails per batch, and per-PIXEL Python dominated the resize entry
+(r10 VERDICT task 5: sf0.1 0.20 -> 0.75 s). Both directions therefore
+vectorize the filter arithmetic with numpy ACROSS the whole stack of
+same-shaped images (per-row numpy would LOSE on 24-byte scanlines — the
+win is the n_images axis). The tests pin both bit-identical to a
+scalar per-scanline codec (same y%5 filter cycle, same zlib level,
+same CRC validation).
 """
 
 from __future__ import annotations
@@ -38,18 +35,6 @@ _COLOR_TYPE = {1: 0, 3: 2, 4: 6}  # channels -> PNG color type
 _CHANNELS = {0: 1, 2: 3, 6: 4}
 
 
-def _paeth(a: int, b: int, c: int) -> int:
-    """The Paeth predictor (PNG spec §9.4): nearest of left/up/up-left
-    to the linear estimate a + b - c, ties in that order."""
-    p = a + b - c
-    pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-    if pa <= pb and pa <= pc:
-        return a
-    if pb <= pc:
-        return b
-    return c
-
-
 def _chunk(tag: bytes, data: bytes) -> bytes:
     return (
         struct.pack(">I", len(data))
@@ -59,114 +44,11 @@ def _chunk(tag: bytes, data: bytes) -> bytes:
     )
 
 
-def encode_png(pixels: bytes, width: int, height: int, channels: int = 3) -> bytes:
-    """Encode raw 8-bit samples (row-major, interleaved channels) as a
-    valid PNG. Row y is filtered with type y % 5 so every predictor
-    appears in the stream — deterministic output for identical input."""
-    if channels not in _COLOR_TYPE:
-        raise ValueError(f"encode_png: channels must be 1, 3 or 4 (got {channels})")
-    stride = width * channels
-    if len(pixels) != stride * height:
-        raise ValueError(
-            f"encode_png: got {len(pixels)} bytes for {width}x{height}x{channels}"
-        )
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, _COLOR_TYPE[channels], 0, 0, 0)
-    raw = bytearray()
-    prev = bytes(stride)
-    for y in range(height):
-        line = pixels[y * stride : (y + 1) * stride]
-        ft = y % 5
-        raw.append(ft)
-        if ft == 0:
-            raw += line
-        elif ft == 1:  # Sub
-            raw += bytes(
-                (line[x] - (line[x - channels] if x >= channels else 0)) & 0xFF
-                for x in range(stride)
-            )
-        elif ft == 2:  # Up
-            raw += bytes((line[x] - prev[x]) & 0xFF for x in range(stride))
-        elif ft == 3:  # Average
-            raw += bytes(
-                (line[x] - ((line[x - channels] if x >= channels else 0) + prev[x]) // 2)
-                & 0xFF
-                for x in range(stride)
-            )
-        else:  # Paeth
-            raw += bytes(
-                (
-                    line[x]
-                    - _paeth(
-                        line[x - channels] if x >= channels else 0,
-                        prev[x],
-                        prev[x - channels] if x >= channels else 0,
-                    )
-                )
-                & 0xFF
-                for x in range(stride)
-            )
-        prev = line
-    return (
-        SIGNATURE
-        + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(bytes(raw), 6))
-        + _chunk(b"IEND", b"")
-    )
-
-
-def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
-    """Decode a PNG to (width, height, channels, raw 8-bit samples).
-    Verifies the signature and every chunk CRC; supports 8-bit
-    non-interlaced greyscale/RGB/RGBA (what ``encode_png`` emits and
-    what the synthesized corpus uses); raises on anything else. The
-    chunk walk is shared with the batch decoder (``_parse_png``) so
-    the two paths cannot drift; only the defilter loop is scalar."""
-    width, height, channels, raw = _parse_png(data)
-    stride = width * channels
-    out = bytearray()
-    prev = bytes(stride)
-    for y in range(height):
-        ft = raw[y * (stride + 1)]
-        line = bytearray(raw[y * (stride + 1) + 1 : (y + 1) * (stride + 1)])
-        if ft == 1:
-            for x in range(stride):
-                line[x] = (line[x] + (line[x - channels] if x >= channels else 0)) & 0xFF
-        elif ft == 2:
-            for x in range(stride):
-                line[x] = (line[x] + prev[x]) & 0xFF
-        elif ft == 3:
-            for x in range(stride):
-                line[x] = (
-                    line[x] + ((line[x - channels] if x >= channels else 0) + prev[x]) // 2
-                ) & 0xFF
-        elif ft == 4:
-            for x in range(stride):
-                line[x] = (
-                    line[x]
-                    + _paeth(
-                        line[x - channels] if x >= channels else 0,
-                        prev[x],
-                        prev[x - channels] if x >= channels else 0,
-                    )
-                ) & 0xFF
-        elif ft != 0:
-            raise ValueError(f"decode_png: unknown filter type {ft} on row {y}")
-        out += line
-        prev = bytes(line)
-    return width, height, channels, bytes(out)
-
-
-# ---------------------------------------------------------------------------
-# batch codec: numpy-vectorized across a stack of same-shaped images
-# ---------------------------------------------------------------------------
-
-
 def _parse_png(data: bytes) -> tuple[int, int, int, bytes]:
-    """Chunk walk shared with the batch decoder: validate signature and
-    every CRC, return (width, height, channels, inflated filtered
-    stream). Same checks and error messages as ``decode_png``."""
+    """Chunk walk: validate signature and every CRC, return (width,
+    height, channels, inflated filtered stream)."""
     if data[:8] != SIGNATURE:
-        raise ValueError("decode_png: bad signature — not a PNG")
+        raise ValueError("png decode: bad signature — not a PNG")
     pos = 8
     idat = bytearray()
     width = height = channels = None
@@ -176,18 +58,18 @@ def _parse_png(data: bytes) -> tuple[int, int, int, bytes]:
         body = data[pos + 8 : pos + 8 + length]
         (crc,) = struct.unpack(">I", data[pos + 8 + length : pos + 12 + length])
         if zlib.crc32(tag + body) & 0xFFFFFFFF != crc:
-            raise ValueError(f"decode_png: CRC mismatch in {tag!r} chunk")
+            raise ValueError(f"png decode: CRC mismatch in {tag!r} chunk")
         if tag == b"IHDR":
             width, height, depth, color, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
             if depth != 8 or comp != 0 or filt != 0 or interlace != 0:
                 raise NotImplementedError(
-                    "decode_png: only 8-bit non-interlaced PNGs are supported "
+                    "png decode: only 8-bit non-interlaced PNGs are supported "
                     f"(depth={depth}, interlace={interlace})"
                 )
             if color not in _CHANNELS:
-                raise NotImplementedError(f"decode_png: color type {color}")
+                raise NotImplementedError(f"png decode: color type {color}")
             channels = _CHANNELS[color]
         elif tag == b"IDAT":
             idat += body
@@ -195,19 +77,20 @@ def _parse_png(data: bytes) -> tuple[int, int, int, bytes]:
             break
         pos += 12 + length
     if width is None or not idat:
-        raise ValueError("decode_png: missing IHDR/IDAT")
+        raise ValueError("png decode: missing IHDR/IDAT")
     raw = zlib.decompress(bytes(idat))
     stride = width * channels
     if len(raw) != (stride + 1) * height:
-        raise ValueError("decode_png: inflated size does not match dimensions")
+        raise ValueError("png decode: inflated size does not match dimensions")
     return width, height, channels, raw
 
 
 def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
     """Encode a stack of same-shaped rasters (an iterable of
     ``width*height*channels`` byte strings, or an equally-shaped uint8
-    ndarray) into a list of PNG blobs, each BIT-IDENTICAL to
-    ``encode_png`` on the same raster.
+    ndarray) into a list of PNG blobs. Row y is filtered with type
+    y % 5 so every predictor appears in the stream — deterministic
+    output for identical input.
 
     All five filter residuals are computed as whole-stack 2D shifts
     (the encoder predicts from the RAW previous scanline, so there is
@@ -217,7 +100,7 @@ def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
     import numpy as np
 
     if channels not in _COLOR_TYPE:
-        raise ValueError(f"encode_png: channels must be 1, 3 or 4 (got {channels})")
+        raise ValueError(f"png encode: channels must be 1, 3 or 4 (got {channels})")
     stride = width * channels
     if isinstance(rasters, np.ndarray):
         # validate as strictly as the bytes path: a mis-shaped stack
@@ -225,7 +108,7 @@ def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
         # non-uint8 dtype must not silently truncate-cast
         if rasters.dtype != np.uint8:
             raise ValueError(
-                f"encode_png: raster stack must be uint8 (got {rasters.dtype})"
+                f"png encode: raster stack must be uint8 (got {rasters.dtype})"
             )
         if rasters.ndim not in (2, 3) or (
             rasters.ndim == 2 and rasters.shape[1] != stride * height
@@ -233,7 +116,7 @@ def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
             rasters.ndim == 3 and rasters.shape[1:] != (height, stride)
         ):
             raise ValueError(
-                f"encode_png: raster stack shape {rasters.shape} does not "
+                f"png encode: raster stack shape {rasters.shape} does not "
                 f"match (n, {height * stride}) or (n, {height}, {stride}) "
                 f"for {width}x{height}x{channels}"
             )
@@ -247,7 +130,7 @@ def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
         for r in rasters:
             if len(r) != stride * height:
                 raise ValueError(
-                    f"encode_png: got {len(r)} bytes for "
+                    f"png encode: got {len(r)} bytes for "
                     f"{width}x{height}x{channels}"
                 )
         img = np.frombuffer(b"".join(rasters), dtype=np.uint8).reshape(
@@ -288,36 +171,20 @@ def encode_png_batch(rasters, width: int, height: int, channels: int = 3):
     ]
 
 
-def decode_png_batch(blobs):
-    """Decode a list of PNG blobs to a list of (width, height,
-    channels, raw-bytes) tuples — elementwise identical to
-    ``decode_png``, with the same signature/CRC/size validation.
-
-    Blobs are grouped by shape; each same-shape group defilters as ONE
-    numpy stack: Up is a pure 2D add, Sub a per-lane cumulative sum,
-    and Average/Paeth walk the 24-odd columns sequentially (their
-    in-row data dependency) with each step vectorized across the
-    n_images axis — the axis that is actually large at corpus scale.
-    A row whose filter byte differs across the group splits into
-    per-filter sub-stacks, so mixed-provenance batches stay correct."""
-    flat_groups = _decode_png_groups(blobs)
-    n = sum(len(idxs) for _, idxs, _ in flat_groups)
-    out: list[tuple[int, int, int, bytes] | None] = [None] * n
-    for (w, h, ch), idxs, pix in flat_groups:
-        flat = pix.reshape(len(idxs), h * w * ch)
-        for k, i in enumerate(idxs):
-            out[i] = (w, h, ch, flat[k].tobytes())
-    return out
-
-
 def _decode_png_groups(blobs):
     """Batch-decode core: returns a list of
     ``((width, height, channels), input_indices, pixel_stack)`` where
     ``pixel_stack`` is a uint8 ndarray of shape (n, height,
     width*channels) — one entry per distinct shape, indices mapping
-    stack rows back to input order. Kernels that keep computing in
-    numpy (feature stats, resample) consume this directly and skip the
-    per-image ``tobytes`` round-trip ``decode_png_batch`` performs."""
+    stack rows back to input order, so kernels that keep computing in
+    numpy (feature stats, resample) skip a per-image ``tobytes``.
+
+    Each same-shape group defilters as ONE numpy stack: Up is a pure 2D
+    add, Sub a per-lane cumulative sum, and Average/Paeth walk the
+    columns sequentially (their in-row data dependency) with each step
+    vectorized across the n_images axis. A row whose filter byte
+    differs across the group splits into per-filter sub-stacks, so
+    mixed-provenance batches stay correct."""
     import numpy as np
 
     parsed = [_parse_png(bytes(d)) for d in blobs]
@@ -335,7 +202,7 @@ def _decode_png_groups(blobs):
         if bad.any():
             k, y = np.argwhere(bad)[0]
             raise ValueError(
-                f"decode_png: unknown filter type {fts[k, y]} on row {y}"
+                f"png decode: unknown filter type {fts[k, y]} on row {y}"
             )
         pix = np.empty((len(idxs), h, stride), dtype=np.uint8)
         prev = np.zeros((len(idxs), stride), dtype=np.uint8)

@@ -476,8 +476,7 @@ def ivf_pq_probe_lists_topk(
 ) -> DataFrame:
     """IVF-PQ SERVING over a pre-built (possibly STORED) codes index —
     the production read path for an index maintained by batch append
-    (``ivf_pq_build`` + Warehouse append) or the streaming twin
-    (``streaming.pipeline.stream_ivf_pq_index_append``): ``lists`` is
+    (``ivf_pq_build`` + Warehouse append): ``lists`` is
     (centroid_id, cand_id, codes). Probe fan-out, per-list ADC, and the
     top-k window are identical to ``ivf_pq_topk``'s tail — both models
     must be the FROZEN pair the index was built under."""

@@ -1,6 +1,5 @@
 """Event-stream batch operators: gap sessionization, tumbling windows,
-JSON property extraction. All window/groupBy compositions — the batch
-twins of the Structured Streaming versions in ``streaming/``.
+JSON property extraction. All window/groupBy compositions.
 """
 
 from __future__ import annotations
@@ -67,8 +66,8 @@ def session_stats(
 def tumbling_window(
     df: DataFrame, ts_col: str = "ts", unit: str = "hour"
 ) -> DataFrame:
-    """Tumbling event-time window aggregate (batch twin of streaming
-    window(ts, '1 hour'))."""
+    """Tumbling event-time window aggregate (``date_trunc`` to one
+    ``unit``)."""
     return df.groupBy(
         F.date_trunc(unit, F.col(ts_col)).alias("window_start"),
         F.col("event_type"),
@@ -85,8 +84,8 @@ def hopping_window(
     slide_minutes: int = 15,
 ) -> DataFrame:
     """Hopping (sliding) event-time windows: each event lands in
-    ``size/slide`` overlapping windows (batch twin of streaming
-    ``window(ts, '60 minutes', '15 minutes')``).
+    ``size/slide`` overlapping windows (``window(ts, '60 minutes',
+    '15 minutes')``).
 
     Uses Spark's native ``F.window`` with a slide: the TimeWindow rule
     expands each row into size/slide window rows (a projection, no
@@ -99,8 +98,7 @@ def hopping_window(
 
     ``size_minutes`` must be a multiple of ``slide_minutes`` (Spark
     allows non-divisible slides; the oracle replay grid assumes the
-    divisible case, which is also the only shape the streaming twin
-    supports)."""
+    divisible case)."""
     if size_minutes % slide_minutes:
         raise ValueError("size_minutes must be a multiple of slide_minutes")
     w = F.window(

@@ -68,6 +68,10 @@ QUANT_SCALE = float(1 << 18)
 
 MAX_SEED_COLLECT = 4096
 MAX_QUERY_COLLECT = 1 << 17
+# cosine_topk scores its probe panel against each Arrow batch this many
+# queries at a time, so one float64 block x batch score matrix stays
+# bounded (1024 x 10,000 rows = 82 MB) however large the panel is.
+TOPK_QUERY_BLOCK = 1024
 
 _INTEGRAL = ("byte", "short", "integer", "long")
 
@@ -371,6 +375,7 @@ def cosine_topk(
     )
     bc = corpus.sparkSession.sparkContext.broadcast((qids, Qq, qn))
     id_type = corpus.schema[id_col].dataType
+    block = TOPK_QUERY_BLOCK  # read here: the kernel runs in Python workers
 
     def score(batches):
         qids_, Qq_, qn_ = bc.value
@@ -379,24 +384,28 @@ def cosine_topk(
             if len(pdf) == 0 or nq == 0:
                 continue
             X, xn = _np_quant_rows(pdf["_vec"])
-            C = _np_round6(_np_cos(Qq_, qn_, X, xn))
             cids = pdf["_cid"].to_numpy()
             out_q, out_c, out_s = [], [], []
             kk = min(k, len(cids))
-            for qi in range(nq):
-                scores = C[qi]
-                mask = cids != qids_[qi]  # self-match drop
-                c_ids = cids[mask]
-                s = scores[mask]
-                if len(c_ids) == 0:
-                    continue
-                # exact local top-k under (cosine DESC, cand_id ASC):
-                # lexsort is a total order (ids unique), so merging
-                # per-batch top-k equals the global top-k
-                order = np.lexsort((c_ids, -s))[:kk]
-                out_q.append(np.repeat(qids_[qi], len(order)))
-                out_c.append(c_ids[order])
-                out_s.append(s[order])
+            # each query's row of scores is exact integer math, so
+            # scoring the panel block by block gives the same bits
+            for b0 in range(0, nq, block):
+                C = _np_round6(
+                    _np_cos(Qq_[b0 : b0 + block], qn_[b0 : b0 + block], X, xn)
+                )
+                for qi in range(b0, min(b0 + block, nq)):
+                    mask = cids != qids_[qi]  # self-match drop
+                    c_ids = cids[mask]
+                    s = C[qi - b0][mask]
+                    if len(c_ids) == 0:
+                        continue
+                    # exact local top-k under (cosine DESC, cand_id ASC):
+                    # lexsort is a total order (ids unique), so merging
+                    # per-batch top-k equals the global top-k
+                    order = np.lexsort((c_ids, -s))[:kk]
+                    out_q.append(np.repeat(qids_[qi], len(order)))
+                    out_c.append(c_ids[order])
+                    out_s.append(s[order])
             if not out_q:
                 continue
             yield pd.DataFrame(

@@ -25,7 +25,7 @@ shuffle. Sketches of disjoint partitions merge by bucket-wise max
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 B_BITS = 8
@@ -138,36 +138,6 @@ def _cms_bucket(item: F.Column, row: int) -> F.Column:
     return F.pmod(h, F.lit(CMS_W))
 
 
-def cms_sketch(df: DataFrame, col: str) -> DataFrame:
-    """Count-min sketch of ``col``'s frequency distribution ->
-    (row, bucket, cnt) cells.
-
-    The sketch is CMS_D x CMS_W cells REGARDLESS of item cardinality —
-    map-side combine collapses every partition to at most d*w rows
-    before the exchange, so sketching a 100 TB column costs one narrow
-    scan plus a ~16k-row shuffle (the same scale shape as the HLL
-    above). Sketches of disjoint partitions merge by cell-wise SUM,
-    which is what makes the sketch streamable / incrementally
-    refreshable. Estimates are upper bounds: est >= true count, with
-    overestimates bounded by sum(cnt)/W per row and d rows to take the
-    min over."""
-    items = df.filter(F.col(col).isNotNull()).select(F.col(col).alias("_item"))
-    cells = items.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(r).cast("int").alias("row"),
-                        _cms_bucket(F.col("_item"), r).alias("bucket"),
-                    )
-                    for r in range(CMS_D)
-                ]
-            )
-        ).alias("c")
-    ).select("c.row", "c.bucket")
-    return cells.groupBy("row", "bucket").agg(F.count("*").alias("cnt"))
-
-
 def cms_estimate(sketch: DataFrame, probes: DataFrame, col: str) -> DataFrame:
     """Point-estimate the count of every probe item: min over the d
     cells the item hashes to. The sketch (<= d*w rows) is broadcast —
@@ -210,11 +180,17 @@ def cms_oracle_cells_sql(items_cte: str) -> str:
 
 
 def cms_sketch_from_counts(counts: DataFrame, col: str, cnt_col: str) -> DataFrame:
-    """Build the same (row, bucket, cnt) cells from a pre-aggregated
-    (item, count) table — when a frequency table already exists (or the
-    raw items were already grouped once), weighting cells by the counts
-    avoids re-exploding the raw stream d times. Identical cells to
-    ``cms_sketch`` over the raw items."""
+    """Count-min sketch -> (row, bucket, cnt) cells, built from a
+    pre-aggregated (item, count) table: weighting cells by the counts
+    avoids re-exploding the raw stream d times, and the cells are
+    identical to sketching the raw items one by one.
+
+    The sketch is CMS_D x CMS_W cells REGARDLESS of item cardinality —
+    map-side combine collapses every partition to at most d*w rows
+    before the exchange (the same scale shape as the HLL above).
+    Sketches of disjoint partitions merge by cell-wise SUM. Estimates
+    are upper bounds: est >= true count, with overestimates bounded by
+    sum(cnt)/W per row and d rows to take the min over."""
     items = counts.filter(F.col(col).isNotNull()).select(
         F.col(col).alias("_item"), F.col(cnt_col).alias("_n")
     )

@@ -171,38 +171,3 @@ def url_canonical_dedup(
         .withColumn("is_dup", F.row_number().over(w) > 1)
     )
 
-
-def url_canonical_incremental(
-    batch: DataFrame, index_urls: DataFrame, id_col: str, url: Column
-) -> DataFrame:
-    """Dedup an ingest BATCH against the standing canonical-URL index:
-    output (id, url, canonical_url, is_dup) where ``is_dup`` is true
-    for every row whose canonical form is already in ``index_urls``
-    (column ``canonical_url``) OR appears earlier (smaller id) in the
-    same batch — the same first-wins rule as ``url_canonical_dedup``,
-    extended by the index membership test.
-
-    Scale shape: the batch's distinct canonical key set BROADCASTS
-    into a semi-join against the index (bounded by trigger size — the
-    index is the corpus-scale side and only ever streams through a
-    scan), and the surviving hit set — at most batch-sized — joins
-    back broadcast. O(batch) exchanged bytes per trigger; appending
-    the batch's new canonicals to the index is the compaction job's
-    business, not this operator's."""
-    flagged = url_canonical_dedup(batch, id_col, url)
-    hits = (
-        index_urls.select("canonical_url")
-        .join(
-            F.broadcast(flagged.select("canonical_url").distinct()),
-            "canonical_url",
-            "left_semi",
-        )
-        .distinct()
-        .withColumn("_hit", F.lit(True))
-    )
-    return flagged.join(F.broadcast(hits), "canonical_url", "left").select(
-        F.col(id_col),
-        "url",
-        "canonical_url",
-        (F.col("is_dup") | F.coalesce(F.col("_hit"), F.lit(False))).alias("is_dup"),
-    )

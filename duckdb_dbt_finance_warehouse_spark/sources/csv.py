@@ -118,27 +118,23 @@ def ingest_csv(
     raw_schema: str = "raw",
 ) -> DataFrame:
     """Read one CSV into ``raw.<table>`` with lineage columns.
+    ``replace`` overwrites; ``append`` inserts, and a table that does
+    not exist yet is created by one overwrite. The mode is checked
+    before anything is written.
 
     At 100 TB this is a plain distributed CSV->parquet job: executors
     read byte-range splits, stamp constant lineage columns (no shuffle),
     and write parquet. Nothing here touches the driver except the path
     listing.
     """
+    if mode not in ("replace", "append"):
+        raise ValueError(f"unknown mode {mode!r}")
     spark: SparkSession = wh.spark
     if schema is None:
         schema = RAW_SCHEMAS.get(table)
     reader = spark.read.option("header", True)
     reader = reader.schema(schema) if schema is not None else reader.option("inferSchema", True)
     df = reader.csv(csv_path).withColumns(lineage_columns(csv_path, batch_ts))
-    write_raw(wh, df, raw_schema, table, mode)
-    return wh.read(raw_schema, table)
-
-
-def write_raw(wh: Warehouse, df: DataFrame, raw_schema: str, table: str, mode: str) -> None:
-    """Land one batch: ``replace`` overwrites; ``append`` inserts, and
-    a table that does not exist yet is created by one overwrite. The
-    mode is checked before anything is written."""
-    if mode not in ("replace", "append"):
-        raise ValueError(f"unknown mode {mode!r}")
     append = mode == "append" and wh.exists(raw_schema, table)
     wh.write(df, raw_schema, table, mode="append" if append else "overwrite")
+    return wh.read(raw_schema, table)

@@ -81,8 +81,8 @@ def _read_testdata(spark: SparkSession, path: str) -> DataFrame:
 
 
 def read_events(spark: SparkSession, read: Callable[[], DataFrame]) -> DataFrame:
-    """Read an events table with ``read()`` (a batch or a streaming
-    reader) and normalize ``ts`` to a microsecond TimestampType.
+    """Read an events table with ``read()`` and normalize ``ts`` to a
+    microsecond TimestampType.
 
     ``events.ts`` is TIMESTAMP(NANOS) parquet in some driver rounds,
     which Spark reads as a nanosecond long
@@ -313,27 +313,6 @@ class Warehouse:
         shutil.rmtree(trash, ignore_errors=True)
         self._record(schema, table, df, partition_by, None, True)
 
-    def register_catalog(self) -> list[str]:
-        """Register the warehouse layout in the Spark catalog so users
-        address tables by name (``spark.table("mart.fct_account_month")``)
-        — one database per schema directory, one external parquet table
-        per materialized table. Delegates to
-        ``sql.register_warehouse_catalog`` (the BI entry point); exposed
-        here so warehouse construction and catalog registration read as
-        one flow (SURVEY S6, scripts/load_csvs_to_duckdb.py:34)."""
-        from ..sql import register_warehouse_catalog
-
-        return register_warehouse_catalog(self)
-
-    def analyze(self, columns: bool = True) -> list[str]:
-        """Register (if needed) and ANALYZE every table in the session
-        catalog — row counts + per-column stats for Catalyst's
-        cost-based optimizer. Delegates to
-        ``sql.analyze_warehouse_catalog``."""
-        from ..sql import analyze_warehouse_catalog
-
-        return analyze_warehouse_catalog(self, columns)
-
     def vacuum(self, staging_min_age_s: float = 900.0) -> dict[str, int]:
         """Warehouse-wide janitor for the staged-swap lifecycle: a crash
         BEFORE the swap leaves an orphaned ``_staging_<table>`` sibling
@@ -351,7 +330,7 @@ class Warehouse:
         otherwise (stale shadow). Returns counts: staging_removed /
         trash_restored / trash_removed. On a cluster this is a
         cloud-store prefix listing + renames — run it from the
-        maintenance schedule next to ``sources.maintenance.compact_table``."""
+        maintenance schedule."""
         import shutil
         import time
 
@@ -419,31 +398,3 @@ def merge_upsert(
     survivors = target.join(source.select(*keys).distinct(), keys, "left_anti")
     return survivors.unionByName(merged_src)
 
-
-def purge_keys(
-    wh: "Warehouse",
-    schema: str,
-    table: str,
-    key_col: str,
-    keys: DataFrame,
-) -> int:
-    """Right-to-be-forgotten delete: remove every row of
-    ``schema.table`` whose ``key_col`` appears in ``keys`` (a
-    one-column DataFrame — arrives as a table, never an IN-list, per
-    the bitmap/no-literal-lists invariant) and rewrite via the
-    crash-safe staged swap, so a failure mid-purge leaves the original
-    intact rather than half-deleted. Returns the number of rows
-    removed (the audit number a deletion request must report).
-
-    Scale: one anti join keyed on ``key_col`` (broadcast when the key
-    list is small — Catalyst's choice) + the staged rewrite. For a
-    partitioned table, restrict the rewrite blast radius by filtering
-    ``keys`` per partition and using dynamic partition overwrite
-    instead (S11 machinery); this whole-table form is the general
-    fallback."""
-    cur = wh.read(schema, table)
-    k = keys.select(F.col(keys.columns[0]).alias(key_col)).distinct()
-    kept = cur.join(k, key_col, "left_anti")
-    before = cur.count()
-    wh.write_staged(kept, schema, table)
-    return before - wh.read(schema, table).count()

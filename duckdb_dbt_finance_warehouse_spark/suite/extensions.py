@@ -1651,8 +1651,8 @@ def x_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def x_event_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 1-hour event-time windows (batch twin of the streaming
-    window aggregate in streaming/)."""
+    """Tumbling 1-hour event-time windows
+    (operators/sessionize.tumbling_window)."""
     return sessionize.tumbling_window(_events(spark, sf_dir), unit="hour")
 
 
@@ -1684,8 +1684,7 @@ def x_event_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle aggregates (window_start, event_type). The oracle rebuilds
     the identical grid with integer epoch-microsecond floor division +
     generate_series — window starts are exact multiples of the slide in
-    both engines, so the replay is bit-identical. Batch twin of the
-    streaming sliding-window aggregate."""
+    both engines, so the replay is bit-identical."""
     return sessionize.hopping_window(
         _events(spark, sf_dir), size_minutes=60, slide_minutes=15
     )
@@ -2183,8 +2182,7 @@ def x_multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     nearest-neighbor downsampled 8x8 -> 4x4 in pixel space, re-encoded
     as a new PNG, and decoded AGAIN for true pixel statistics. Closes
     VERDICT r9's "stubbed resize behind a real codec": the re-encode is
-    genuine, and the judged stats prove the whole chain round-trips.
-    resize_stub remains only as the format-agnostic plumbing twin."""
+    genuine, and the judged stats prove the whole chain round-trips."""
     blobs = multimodal.synthesize_png_blobs(_docs(spark, sf_dir), "doc_id", "text")
     resized = multimodal.resize_image(blobs, "doc_id", target_width=4, target_height=4)
     return multimodal.extract_image_features(resized, "doc_id")
@@ -2371,7 +2369,7 @@ def x_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def x_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy hitters via an engine-portable count-min sketch
-    (operators/sketch.cms_sketch): the sketch is d x w cells regardless
+    (operators/sketch.cms_sketch_from_counts): the sketch is d x w cells regardless
     of term cardinality (map-side combine collapses each partition to
     <= 16k rows before the exchange), estimates are min-over-rows upper
     bounds. The exact top-20 terms are estimated through the sketch and
@@ -3304,8 +3302,7 @@ def x_maintenance_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compaction planning (operators/maintenance.compaction_plan):
     adjacent order months are binned into ~{target}-row compaction
     groups by one prefix sum over the per-month counts — the rewrite
-    schedule a maintenance job executes
-    (sources.maintenance.compact_table). The window runs over month
+    schedule a maintenance job executes. The window runs over month
     SUMMARIES (bounded cardinality at any corpus size), never over the
     fact rows."""
     orders = load_testdata(spark, sf_dir, "orders")["orders"]
@@ -4830,8 +4827,8 @@ def x_lpa_damped(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/graph.label_propagation_damped — r11 VERDICT #7): each
     node votes its own current label alongside its neighbors' before
     the frequency argmax, so the period-2 label swap plain synchronous
-    LPA falls into on (near-)bipartite graphs (measured by
-    lpa_convergence_audit on this very citation graph) cannot sustain —
+    LPA falls into on (near-)bipartite graphs (this very citation
+    graph is one) cannot sustain —
     a swap must OUTVOTE the incumbent, not tie it. Same cost shape as
     x_label_propagation plus one node-sized union per round; the oracle
     unrolls the damped rounds bit-for-bit."""

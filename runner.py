@@ -321,8 +321,7 @@ def cmd_vacuum(args) -> int:
     """Warehouse-wide staged-swap janitor (Warehouse.vacuum): removes
     orphaned _staging_* siblings older than the 15-min in-flight
     grace window, heals or clears _trash_* shadows. Safe to run any
-    time (concurrent writers are protected by the age guard);
-    schedule next to compaction."""
+    time (concurrent writers are protected by the age guard)."""
     spark = get_spark("vacuum")
     wh = Warehouse(spark, args.warehouse)
     counts = wh.vacuum()

@@ -128,132 +128,6 @@ def test_incremental_dedup_index_as_bucketed_table(spark, tmp_path):
             spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_compact_table_unpartitioned_and_partitioned(spark, tmp_path):
-    """Small-file compaction: file count drops to the target, content is
-    identical, partition layout survives, and sorted layout produces
-    row-group stats usable for skipping."""
-    from pyspark.sql import functions as F
-
-    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import (
-        compact_table,
-        data_files,
-    )
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    df = spark.range(10_000).select(
-        F.col("id"),
-        (F.col("id") % 4).cast("string").alias("bucket_key"),
-        (F.col("id") * 2).alias("val"),
-    )
-    # fragmented write: many small files
-    wh.write(df.repartition(32), "mart", "flat")
-    assert len(data_files(wh, "mart", "flat")) >= 32
-    before = sorted(tuple(r) for r in wh.read("mart", "flat").collect())
-    n = compact_table(wh, "mart", "flat", target_files=2, sort_within=["id"])
-    assert n <= 2
-    assert sorted(tuple(r) for r in wh.read("mart", "flat").collect()) == before
-
-    wh.write(df.repartition(16), "mart", "parts", partition_by=["bucket_key"])
-    frag = len(data_files(wh, "mart", "parts"))
-    assert frag >= 16
-    before_p = sorted(tuple(r) for r in wh.read("mart", "parts").collect())
-    n = compact_table(wh, "mart", "parts", target_files=1)
-    assert n == 4  # one file per partition value
-    after_p = wh.read("mart", "parts")
-    assert sorted(tuple(r) for r in after_p.collect()) == before_p
-    # partition pruning still works on the compacted layout
-    assert after_p.filter("bucket_key = '1'").count() == 2500
-
-
-def test_compact_table_survives_shallow_partition_chain(spark, tmp_path):
-    """ADVICE r7: the old partition-column discovery descended ONE
-    arbitrary os.listdir chain, so a shallower-than-others partition
-    directory (an empty, partially-written chain) could yield an
-    incomplete column list and the rewrite silently FLATTENED the
-    missing level. Discovery now rides Spark's own partition inference:
-    plant an empty one-level decoy dir that sorts first and assert the
-    two-level layout survives compaction intact."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import compact_table
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    df = spark.range(2_000).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("string").alias("lvl1"),
-        (F.col("id") % 3).cast("string").alias("lvl2"),
-    )
-    wh.write(df.repartition(8), "mart", "deep", partition_by=["lvl1", "lvl2"])
-    # the decoy: an empty lvl1 partition dir with NO lvl2 level below —
-    # '=' in the name, sorts before 'lvl1=0' under os.listdir ordering
-    os.makedirs(os.path.join(wh.path("mart", "deep"), "lvl1=!empty"))
-    before = sorted(tuple(r) for r in wh.read("mart", "deep").collect())
-    compact_table(wh, "mart", "deep", target_files=1)
-    root = wh.path("mart", "deep")
-    lvl1_dirs = [d for d in os.listdir(root) if d.startswith("lvl1=") and "!e" not in d]
-    assert lvl1_dirs, "lvl1 partition level flattened away"
-    inner = os.listdir(os.path.join(root, lvl1_dirs[0]))
-    assert any(d.startswith("lvl2=") for d in inner), "lvl2 level flattened away"
-    assert sorted(tuple(r) for r in wh.read("mart", "deep").collect()) == before
-
-
-def test_compact_table_schema_evolved_column_not_misread_as_partition(
-    spark, tmp_path
-):
-    """ADVICE r8: partition discovery compared the reader's columns to
-    ONE sampled data file — on a schema-evolved table (merged schemas)
-    a data column absent from that file would be misclassified as a
-    partition column and the rewrite would silently change the layout.
-    Discovery now also requires a hive-style ``col=`` directory segment.
-    Write an old-schema batch, append a new-schema batch with an extra
-    DATA column, and assert compaction keeps ``extra`` a data column
-    while the real partition level survives."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import compact_table
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
-
-    wh = Warehouse(spark, str(tmp_path))
-    old = spark.range(100).select(
-        F.col("id"), (F.col("id") % 2).cast("string").alias("pk")
-    )
-    wh.write(old, "mart", "evolved", partition_by=["pk"])
-    new = spark.range(100, 200).select(
-        F.col("id"),
-        (F.col("id") % 2).cast("string").alias("pk"),
-        (F.col("id") * 10).alias("extra"),
-    )
-    new.write.mode("append").partitionBy("pk").option("mergeSchema", "true").parquet(
-        wh.path("mart", "evolved")
-    )
-    read = wh.spark.read.option("mergeSchema", "true").parquet(
-        wh.path("mart", "evolved")
-    )
-    before = sorted(
-        (r["id"], r["pk"], r["extra"]) for r in read.collect()
-    )
-    # monkey the warehouse read to merge schemas like an evolved reader
-    wh.read = lambda s, t: wh.spark.read.option("mergeSchema", "true").parquet(  # type: ignore[method-assign]
-        wh.path(s, t)
-    )
-    compact_table(wh, "mart", "evolved", target_files=1)
-    root = wh.path("mart", "evolved")
-    assert any(d.startswith("pk=") for d in os.listdir(root)), "pk level lost"
-    assert not any(
-        "extra=" in d for d, _, _ in os.walk(root)
-    ), "data column 'extra' became a partition level"
-    after = wh.spark.read.parquet(root)
-    assert "extra" in after.columns
-    got = sorted((r["id"], r["pk"], r["extra"]) for r in after.collect())
-    assert got == before
-
-
 def test_pq_adc_topk_empty_probe_panel_degrades_to_empty_result(spark):
     """ADVICE r8: an upstream filter matching nothing must yield an
     empty frame with the serving schema, not a hard failure — scheduled
@@ -271,57 +145,3 @@ def test_pq_adc_topk_empty_probe_panel_degrades_to_empty_result(spark):
     )
     assert out.columns == ["query_id", "cand_id", "adist", "rank"]
     assert out.count() == 0
-
-
-def test_compact_table_drops_epoch_bookkeeping_partitions(spark, tmp_path):
-    """Closing the incremental-index lifecycle: an ANN index that
-    accreted per-epoch partitions from the streaming appender compacts
-    with drop_partitions=["_epoch"] into a centroid_id-only layout —
-    epoch dirs gone, centroid pruning intact, and probe results over
-    the compacted index bit-identical to before (and to a full
-    rebuild). Dropping a non-partition column must refuse."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from duckdb_dbt_finance_warehouse_spark.operators import similarity
-    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import compact_table
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import (
-        Warehouse,
-        load_testdata,
-    )
-
-    emb = load_testdata(spark, "/root/testdata/sf0.001", "embeddings")["embeddings"]
-    probes = emb.filter(F.col("vec_id") % 25 == 0)
-    model = similarity._ivf_model(emb, "vec_id", "embedding", 16, None, "test_compact")
-    wh = Warehouse(spark, str(tmp_path))
-    # simulate base + two streamed epochs
-    for epoch, m in ((-1, 0), (0, 1), (1, 2)):
-        batch = emb.filter(F.col("vec_id") % 3 == m)
-        wh.write(
-            similarity.ivf_build_lists(batch, model).withColumn(
-                "_epoch", F.lit(epoch)
-            ),
-            "index", "ivf", mode="append", partition_by=["_epoch", "centroid_id"],
-        )
-    def serve():
-        lists = wh.read("index", "ivf").select("centroid_id", "cand_id", "_vec")
-        return sorted(
-            map(
-                tuple,
-                similarity.ivf_probe_lists_topk(
-                    lists, probes, model, k=5, n_probes=2
-                ).collect(),
-            )
-        )
-
-    before = serve()
-    with pytest.raises(ValueError, match="not partition columns"):
-        compact_table(wh, "index", "ivf", drop_partitions=["cand_id"])
-    compact_table(wh, "index", "ivf", target_files=1, drop_partitions=["_epoch"])
-    top = os.listdir(wh.path("index", "ivf"))
-    assert not any(d.startswith("_epoch=") for d in top)
-    assert any(d.startswith("centroid_id=") for d in top)
-    assert "_epoch" not in wh.read("index", "ivf").columns
-    assert serve() == before and len(before) > 0

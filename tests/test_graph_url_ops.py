@@ -9,6 +9,8 @@ from pyspark.sql import functions as F
 
 from duckdb_dbt_finance_warehouse_spark.operators import graph, url
 
+from .png_oracle import decode_png, encode_png
+
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src long, dst long")
@@ -38,61 +40,6 @@ def test_label_propagation_two_cliques(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 3, 5: 3, 6: 3}
 
 
-def test_lpa_convergence_audit_regimes(spark):
-    """The audit's three-regime contract (r10 VERDICT task 7), each on
-    a graph where the regime is hand-derivable.
-
-    Triangle 1-2-3 — true fixpoint by round 2:
-      R1 {1:2, 2:1, 3:1}; R2 {1:1, 2:1, 3:1} (2's nbr labels {2,1}
-      tie -> 1); R3 == R2. Audit(rounds=3): prev delta 0.
-    4-cycle 1-2-3-4-1 — bipartite, period-2 orbit:
-      R1 {1:2, 2:1, 3:2, 4:1}; R2 {1:1, 2:2, 3:1, 4:2}; R3 == R1.
-      Every node flips every round; lag-2 delta is 0.
-    """
-    tri = _edges(spark, [(1, 2), (1, 3), (2, 3)])
-    row = graph.lpa_convergence_audit(tri, rounds=3).first()
-    assert row["n_nodes"] == 3
-    assert row["changed_vs_prev"] == 0  # true fixpoint
-
-    cyc = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1)])
-    row = graph.lpa_convergence_audit(cyc, rounds=3).first()
-    assert row["n_nodes"] == 4
-    assert row["changed_vs_prev"] == 4  # every node flips each round
-    assert row["changed_vs_prev2"] == 0  # ...between the SAME two states
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="rounds must be >= 3"):
-        graph.lpa_convergence_audit(tri, rounds=2)
-
-
-def test_lpa_citation_graph_is_a_settling_two_orbit(spark):
-    """The x_label_propagation citation graph at sf0.001: documents
-    point at dst ids 0..999, so the structure is near-bipartite and
-    synchronous LPA runs a period-2 orbit — EVERY node flips every
-    round (lag-1 delta == n_nodes) while the lag-2 delta shrinks
-    (measured R1vsR3 270 -> R5vsR7 61). The audit makes that
-    visible instead of letting fixed-round output pass for a fixpoint;
-    the registry entry's 3-round output stays the deterministic
-    oracle-paired contract."""
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id"
-    )
-    e1 = docs.select(
-        F.col("doc_id").alias("src"), ((F.col("doc_id") * 37 + 11) % 1000).alias("dst")
-    )
-    e2 = docs.select(
-        F.col("doc_id").alias("src"), ((F.col("doc_id") * 91 + 3) % 1000).alias("dst")
-    )
-    e = e1.unionByName(e2)
-    r3 = graph.lpa_convergence_audit(e, rounds=3).first()
-    assert r3["n_nodes"] == 859
-    assert r3["changed_vs_prev"] == 859  # full flip: period-2 regime
-    assert r3["changed_vs_prev2"] == 270  # still mixing at 3 rounds
-    r7 = graph.lpa_convergence_audit(e, rounds=7).first()
-    assert r7["changed_vs_prev2"] == 61  # orbit settling, not settled
-
-
 def test_lpa_damped_breaks_bipartite_orbit(spark):
     """Self-vote damping (r11 VERDICT #7) on the exact fixture where
     plain synchronous LPA runs a period-2 orbit forever — the 4-cycle:
@@ -101,9 +48,16 @@ def test_lpa_damped_breaks_bipartite_orbit(spark):
 
     Hand-derivation: R1 votes are neighbor ids + self id, all count 1,
     tie -> min: {1:1, 2:1, 3:2, 4:1}. R2: node 3 sees {1, 1} + self 2
-    -> 1; everyone else holds 1. R3 == R2 — converged, where the
-    undamped audit pins changed_vs_prev == 4 forever."""
+    -> 1; everyone else holds 1. R3 == R2 — converged, where plain
+    LPA flips every node every round: R2 {1:1, 2:2, 3:1, 4:2}, R3
+    {1:2, 2:1, 3:2, 4:1}."""
     cyc = _edges(spark, [(1, 2), (2, 3), (3, 4), (4, 1)])
+    plain = [
+        {r["node"]: r["label"]
+         for r in graph.label_propagation(cyc, rounds=n).collect()}
+        for n in (2, 3)
+    ]
+    assert plain == [{1: 1, 2: 2, 3: 1, 4: 2}, {1: 2, 2: 1, 3: 2, 4: 1}]
     r2 = {r["node"]: r["label"]
           for r in graph.label_propagation_damped(cyc, rounds=2).collect()}
     r3 = {r["node"]: r["label"]
@@ -271,10 +225,10 @@ def test_resize_image_accepts_custom_id_col(spark):
     """The resize kernels alias id_col -> doc_id in their select; the
     Arrow kernel must read the ALIASED name (a custom id_col used to
     KeyError at execution time)."""
-    from duckdb_dbt_finance_warehouse_spark.operators import multimodal, png
+    from duckdb_dbt_finance_warehouse_spark.operators import multimodal
 
     px = bytes(range(48))  # 4x4 RGB
-    blob = png.encode_png(px, 4, 4, 3)
+    blob = encode_png(px, 4, 4, 3)
     df = spark.createDataFrame(
         [(7, blob, {"mime": "image/png", "n_bytes": len(blob), "version": 1})],
         "image_id long, payload binary, media_meta struct<mime:string,n_bytes:int,version:int>",
@@ -283,5 +237,5 @@ def test_resize_image_accepts_custom_id_col(spark):
         df, id_col="image_id", target_width=2, target_height=2
     ).collect()
     assert len(out) == 1 and out[0]["doc_id"] == 7
-    w, h, c, _ = png.decode_png(bytes(out[0]["payload"]))
+    w, h, c, _ = decode_png(bytes(out[0]["payload"]))
     assert (w, h, c) == (2, 2, 3)

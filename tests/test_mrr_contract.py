@@ -29,7 +29,6 @@ SCANNED = sorted(
     ]
     + [
         os.path.join("sources", "csv.py"),
-        os.path.join("sources", "jsonl.py"),
         os.path.join("suite", "core_relational.py"),
     ]
 )

@@ -1,6 +1,9 @@
-"""Dead-code guard: every top-level function and class method in the
-package must be referenced somewhere — by the package itself, the
-bench and runner entry points, ``tools/``, ``perfbench/`` or the tests.
+"""Dead-code guard: every top-level function, top-level class and
+class method in the package must be referenced somewhere — by the
+package itself, the bench and runner entry points, ``tools/`` or
+``perfbench/``. A use in ``tests/`` does not count: code that only its
+own tests call is test-only surface, and a reference form the tests
+compare a kernel against belongs in the tests as an oracle.
 
 A reference is a ``Name`` or ``Attribute`` node or an import alias in
 the AST, so a mention in a docstring or comment does not count; nor
@@ -23,7 +26,6 @@ USERS = [
     os.path.join(ROOT, "runner.py"),
     os.path.join(ROOT, "tools"),
     os.path.join(ROOT, "perfbench"),
-    os.path.join(ROOT, "tests"),
 ]
 
 
@@ -53,12 +55,12 @@ def _registered(fn: ast.AST) -> bool:
 
 def _definitions() -> dict[str, list[str]]:
     """name -> ['module.py:line', ...] for every top-level function and
-    method of a top-level class in the package."""
+    class, and every method of a top-level class, in the package."""
     defs: dict[str, list[str]] = {}
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     for path in _py_files(PKG):
         tree = _parse(path)
-        found = [n for n in tree.body if isinstance(n, funcs)]
+        found = [n for n in tree.body if isinstance(n, (*funcs, ast.ClassDef))]
         for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
             found.extend(n for n in cls.body if isinstance(n, funcs))
         for fn in found:
@@ -93,4 +95,4 @@ def test_every_package_function_is_referenced():
         for name, where in _definitions().items()
         if name not in refs
     )
-    assert not dead, "functions no code references — delete them: " + "; ".join(dead)
+    assert not dead, "definitions no code references — delete them: " + "; ".join(dead)

@@ -18,6 +18,8 @@ from duckdb_dbt_finance_warehouse_spark.operators import (
 )
 from duckdb_dbt_finance_warehouse_spark.state import release_persisted
 
+from .png_oracle import decode_png, decode_png_batch, encode_png
+
 SF = "/root/testdata/sf0.001"
 
 DOCS = [
@@ -89,43 +91,45 @@ def test_incremental_minhash_matches_full_recompute(spark):
     release_persisted()
 
 
-def test_dedup_index_lifecycle_lossless(spark, tmp_path):
-    """Three batches appended through DedupIndex must together emit
-    EXACTLY the full-corpus pair set — the invariant that makes the
-    incremental mode a safe replacement for the nightly full pass
-    (band collisions are a pure function of the signatures, which
-    don't depend on batch boundaries). Also: the index tables exist in
-    the warehouse afterwards, and a re-run from a fresh index over the
-    same batches reproduces the same pairs (deterministic)."""
+def test_dedup_index_lifecycle_lossless(spark):
+    """Three batches, each deduped by ``minhash_lsh_dedup_incremental``
+    against the ``portable_index_frames`` index of the batches before
+    it, must together emit EXACTLY the full-corpus pair set — the
+    invariant that makes the incremental mode a safe replacement for
+    the nightly full pass (band collisions are a pure function of the
+    signatures, which don't depend on batch boundaries). A re-run from
+    empty stored state reproduces the same pairs (deterministic)."""
     from duckdb_dbt_finance_warehouse_spark.operators.dedup import (
-        DedupIndex,
+        minhash_lsh_dedup_incremental,
         minhash_lsh_dedup_portable,
+        portable_index_frames,
     )
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse, load_testdata
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
+    from duckdb_dbt_finance_warehouse_spark.state import reset_stored_state
 
     docs = load_testdata(spark, SF, "documents")["documents"]
     cfg = dict(k=4, n_hashes=32, bands=8, threshold=0.5)
-    wh = Warehouse(spark, str(tmp_path))
-    idx = DedupIndex(wh, **cfg)
+    index_cfg = {k: v for k, v in cfg.items() if k != "threshold"}
 
-    got: set[tuple] = set()
-    for m in (0, 1, 2):
-        batch = docs.filter(F.col("doc_id") % 3 == m)
-        pairs = idx.append(batch)
-        got |= {
-            tuple(sorted(t))
-            for t in ((r["id_a"], r["id_b"]) for r in pairs.collect())
-        }
-        release_persisted()
-    assert wh.exists("index", "minhash_sigs") and wh.exists("index", "minhash_bands")
-    assert wh.read("index", "minhash_sigs").count() == docs.count()
+    def incremental_pairs() -> set[tuple]:
+        got: set[tuple] = set()
+        for m in (0, 1, 2):
+            batch = docs.filter(F.col("doc_id") % 3 == m)
+            indexed = docs.filter(F.col("doc_id") % 3 < m)
+            sigs, bands = portable_index_frames(indexed, "doc_id", "text", **index_cfg)
+            pairs, _, _ = minhash_lsh_dedup_incremental(
+                batch, sigs, bands, "doc_id", "text", **cfg
+            )
+            got |= {tuple(sorted((r["id_a"], r["id_b"]))) for r in pairs.collect()}
+        reset_stored_state()
+        return got
 
+    got = incremental_pairs()
     full = minhash_lsh_dedup_portable(docs, "doc_id", "text", **cfg)
-    want = {
-        tuple(sorted(t)) for t in ((r["id_a"], r["id_b"]) for r in full.collect())
-    }
+    want = {tuple(sorted((r["id_a"], r["id_b"]))) for r in full.collect()}
     release_persisted()
     assert got and got == want
+    assert incremental_pairs() == got
 
 
 def test_dedup_clusters_transitive_closure(spark):
@@ -178,6 +182,22 @@ def test_ngram_jaccard_known_values(spark):
     assert out[(1, 4)] == 1.0  # identical after normalization
     assert 0.5 < out[(1, 2)] < 1.0
     assert out[(1, 3)] < 0.2
+
+
+def test_cosine_topk_blocked_panel_equals_unblocked(spark, monkeypatch):
+    """Scoring the probe panel in blocks of TOPK_QUERY_BLOCK queries is
+    exact: with blocks of 2 over a 7-query panel (three blocks, the
+    last one short) every (query, candidate, cosine) row is the same
+    as with the whole panel in one block."""
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
+
+    emb = load_testdata(spark, SF, "embeddings")["embeddings"]
+    queries = emb.filter(F.col("vec_id") < 7)
+    whole = sorted(map(tuple, similarity.cosine_topk(emb, queries, k=5).collect()))
+    monkeypatch.setattr(similarity, "TOPK_QUERY_BLOCK", 2)
+    blocked = sorted(map(tuple, similarity.cosine_topk(emb, queries, k=5).collect()))
+    assert len(whole) == 7 * 5
+    assert blocked == whole
 
 
 def test_lsh_ann_matches_exact_cosines_and_has_recall(spark):
@@ -557,6 +577,33 @@ def test_language_id_votes(spark):
     assert out[1] == "en" and out[5] == "es"
 
 
+def merge_asof_pandas(left, right, key, left_ts, right_ts, payload_cols):
+    """Test-local oracle for ``asof_nearest_prior``: per-key backward
+    ``pd.merge_asof`` through a cogrouped applyInPandas."""
+    import pandas as pd
+    from pyspark.sql.types import StructField, StructType
+
+    out_schema = StructType(
+        list(left.schema.fields)
+        + [StructField(f"asof_{c}", right.schema[c].dataType, True) for c in payload_cols]
+    )
+
+    def merge(l_pdf, r_pdf):
+        r_sorted = (
+            r_pdf.sort_values(right_ts)[[right_ts, *payload_cols]]
+            .rename(columns={c: f"asof_{c}" for c in payload_cols})
+            .rename(columns={right_ts: "_rts"})  # avoid colliding with left ts
+        )
+        out = pd.merge_asof(
+            l_pdf.sort_values(left_ts), r_sorted,
+            left_on=left_ts, right_on="_rts", direction="backward",
+        )
+        return out.drop(columns=["_rts"])
+
+    r_small = right.select(key, right_ts, *payload_cols)
+    return left.groupBy(key).cogroup(r_small.groupBy(key)).applyInPandas(merge, out_schema)
+
+
 def test_asof_window_equals_pandas_merge_asof(spark):
     from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
 
@@ -564,7 +611,7 @@ def test_asof_window_equals_pandas_merge_asof(spark):
     left = e.filter("event_type = 'purchase'").select("event_id", "user_id", "ts", "value")
     right = e.filter("event_type = 'signup'").select("event_id", "user_id", "ts")
     a = asof.asof_nearest_prior(left, right, "user_id", "ts", "ts", ["event_id"])
-    b = asof.merge_asof_pandas(left, right, "user_id", "ts", "ts", ["event_id"])
+    b = merge_asof_pandas(left, right, "user_id", "ts", "ts", ["event_id"])
     ka = sorted((r["event_id"], r["asof_event_id"]) for r in a.collect())
     kb = sorted((r["event_id"], r["asof_event_id"]) for r in b.collect())
     assert ka == kb
@@ -841,16 +888,6 @@ def test_hll_accuracy_and_mergeability(spark):
     assert got == want
 
 
-def test_multimodal_feature_plumbing(spark):
-    df = spark.createDataFrame([(1, "abc"), (2, "")], ["doc_id", "text"])
-    blobs = multimodal.synthesize_blobs(df, "doc_id", "text")
-    feats = {r["doc_id"]: r for r in multimodal.extract_features(blobs).collect()}
-    assert feats[1]["n_bytes"] == 3
-    assert feats[1]["byte_mean"] == (97 + 98 + 99) / 3
-    assert feats[1]["distinct_bytes"] == 3
-    assert feats[2]["n_bytes"] == 0 and feats[2]["byte_mean"] == 0.0
-
-
 def test_png_codec_hand_built_decodes_to_known_pixels():
     """The decoder is a real PNG decoder: a PNG assembled BY HAND here
     (explicit signature, chunk lengths, CRCs, one Up-filtered and one
@@ -881,28 +918,32 @@ def test_png_codec_hand_built_decodes_to_known_pixels():
         + chunk(b"IDAT", zlib.compress(scanlines))
         + chunk(b"IEND", b"")
     )
-    assert png.decode_png(data) == (2, 2, 1, bytes([10, 15, 30, 45]))
+    want = (2, 2, 1, bytes([10, 15, 30, 45]))
+    assert decode_png(data) == want
+    assert decode_png_batch([data]) == [want]
     corrupt = bytearray(data)
     corrupt[-18] ^= 0xFF  # flip a byte inside the IDAT body
     with pytest.raises(ValueError, match="CRC"):
-        png.decode_png(bytes(corrupt))
+        decode_png_batch([bytes(corrupt)])
 
 
 def test_png_codec_round_trips_every_filter_type():
-    """encode_png assigns filter y % 5, so a >=5-row image exercises
-    None/Sub/Up/Average/Paeth; decode must invert all of them exactly.
-    Gradient + pseudo-random pixels hit the Paeth/Average carry paths."""
+    """encode_png_batch assigns filter y % 5, so a >=5-row image
+    exercises None/Sub/Up/Average/Paeth; decode must invert all of them
+    exactly. Gradient + pseudo-random pixels hit the Paeth/Average
+    carry paths."""
     from duckdb_dbt_finance_warehouse_spark.operators import png
 
     w, h, c = 6, 7, 3
     px = bytes((x * 37 + 11 * (x % 13) * (x % 7)) % 256 for x in range(w * h * c))
-    data = png.encode_png(px, w, h, c)
+    (data,) = png.encode_png_batch([px], w, h, c)
     assert data[:8] == png.SIGNATURE
-    assert png.decode_png(data) == (w, h, c, px)
+    assert decode_png_batch([data]) == [(w, h, c, px)]
     # greyscale and RGBA too (different channel strides in the filters)
     for cc in (1, 4):
         pxc = bytes((x * 53 + 29 * (x % 11)) % 256 for x in range(w * h * cc))
-        assert png.decode_png(png.encode_png(pxc, w, h, cc)) == (w, h, cc, pxc)
+        blobs = png.encode_png_batch([pxc], w, h, cc)
+        assert decode_png_batch(blobs) == [(w, h, cc, pxc)]
 
 
 def test_png_batch_codec_bit_identical_to_scalar():
@@ -935,29 +976,29 @@ def test_png_batch_codec_bit_identical_to_scalar():
             bytes(rng.randrange(256) for _ in range(w * h * c)) for _ in range(n)
         ]
         blobs = png.encode_png_batch(rasters, w, h, c)
-        assert blobs == [png.encode_png(r, w, h, c) for r in rasters]
-        assert png.decode_png_batch(blobs) == [png.decode_png(b) for b in blobs]
+        assert blobs == [encode_png(r, w, h, c) for r in rasters]
+        assert decode_png_batch(blobs) == [decode_png(b) for b in blobs]
 
     roundtrip()
 
     # mixed shapes/channels in ONE batch: grouped decode restores order
     mixed = [
-        png.encode_png(bytes(range(48)), 4, 4, 3),
-        png.encode_png(bytes(16), 4, 4, 1),
-        png.encode_png(bytes(range(48)), 2, 6, 4),
-        png.encode_png(bytes([255] * 48), 4, 4, 3),
+        encode_png(bytes(range(48)), 4, 4, 3),
+        encode_png(bytes(16), 4, 4, 1),
+        encode_png(bytes(range(48)), 2, 6, 4),
+        encode_png(bytes([255] * 48), 4, 4, 3),
     ]
-    assert png.decode_png_batch(mixed) == [png.decode_png(b) for b in mixed]
+    assert decode_png_batch(mixed) == [decode_png(b) for b in mixed]
     assert png.encode_png_batch([], 4, 4, 3) == []
-    assert png.decode_png_batch([]) == []
+    assert decode_png_batch([]) == []
 
     # error paths match the scalar codec
     with _pytest.raises(ValueError, match="bad signature"):
-        png.decode_png_batch([b"nope" + bytes(20)])
+        decode_png_batch([b"nope" + bytes(20)])
     corrupt = bytearray(mixed[0])
     corrupt[-6] ^= 0xFF  # flip a bit inside IEND's CRC
     with _pytest.raises(ValueError, match="CRC mismatch"):
-        png.decode_png_batch([bytes(corrupt)])
+        decode_png_batch([bytes(corrupt)])
     with _pytest.raises(ValueError, match="channels must be"):
         png.encode_png_batch([bytes(4)], 2, 2, 2)
     # per-raster length validation: two wrong lengths summing to a
@@ -1132,18 +1173,45 @@ def test_multimodal_real_image_features(spark):
     assert f2["px_mean"] == 0.0 and f2["px_max"] == 0 and f2["distinct_px"] == 1
 
 
+def cms_sketch(df, col):
+    """Test-local oracle: the count-min cells sketched item by item —
+    each non-null item adds 1 to its bucket in each of the CMS_D rows."""
+    from duckdb_dbt_finance_warehouse_spark.operators import sketch
+
+    items = df.filter(F.col(col).isNotNull()).select(F.col(col).alias("_item"))
+    cells = items.select(
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(r).cast("int").alias("row"),
+                        sketch._cms_bucket(F.col("_item"), r).alias("bucket"),
+                    )
+                    for r in range(sketch.CMS_D)
+                ]
+            )
+        ).alias("c")
+    ).select("c.row", "c.bucket")
+    return cells.groupBy("row", "bucket").agg(F.count("*").alias("cnt"))
+
+
 def test_cms_sketch_bounds_and_estimates(spark):
-    """Count-min guarantees: est >= true count for every item, and the
+    """Sketching pre-aggregated counts gives the item-by-item cells;
+    count-min guarantees: est >= true count for every item, and the
     sketch never exceeds d*w cells no matter the cardinality."""
     from duckdb_dbt_finance_warehouse_spark.operators import sketch
 
-    rows = [(f"t{i % 7}",) for i in range(700)] + [("rare",)]
-    df = spark.createDataFrame(rows, ["item"])
-    cms = sketch.cms_sketch(df, "item")
+    rows = [(f"t{i % 7}",) for i in range(700)] + [("rare",), (None,)]
+    df = spark.createDataFrame(rows, "item STRING")
+    counts = df.groupBy("item").agg(F.count("*").alias("n"))
+    cms = sketch.cms_sketch_from_counts(counts, "item", "n")
+    assert sorted(map(tuple, cms.collect())) == sorted(
+        map(tuple, cms_sketch(df, "item").collect())
+    )
     assert cms.count() <= sketch.CMS_D * sketch.CMS_W
-    probes = df.distinct()
+    probes = df.dropna().distinct()
     est = {r["item"]: r["cms_est"] for r in sketch.cms_estimate(cms, probes, "item").collect()}
-    truth = {r["item"]: r["count"] for r in df.groupBy("item").count().collect()}
+    truth = {r["item"]: r["count"] for r in df.dropna().groupBy("item").count().collect()}
     assert set(est) == set(truth)
     assert all(est[t] >= truth[t] for t in truth)
     # with 8 distinct items in 4x4096 cells, collisions are ~impossible:
@@ -1166,18 +1234,32 @@ def test_repetition_stats_known_answers(spark):
     assert out[2]["dup_frac"] == 0.0 and abs(out[2]["top_gram_frac"] - 1 / 3) < 1e-6
 
 
-def test_bloom_semi_join_no_false_negatives(spark):
+def test_bloom_contains_no_false_negatives(spark):
     """Every true member must pass (Bloom has no false negatives); the
-    output is a deterministic superset of the exact semi-join."""
+    flags are a deterministic superset of the exact semi-join."""
     from duckdb_dbt_finance_warehouse_spark.operators import bloom
 
     keys = spark.createDataFrame([(i,) for i in range(0, 100, 3)], ["k"])
     probe = spark.createDataFrame([(i,) for i in range(100)], ["p"])
-    passed = {r["p"] for r in bloom.bloom_semi_join(probe, keys, "p", "k").collect()}
-    members = {i for i in range(0, 100, 3)}
-    assert members <= passed  # no false negatives
-    passed2 = {r["p"] for r in bloom.bloom_semi_join(probe, keys, "p", "k").collect()}
-    assert passed == passed2  # deterministic decisions
+
+    def passed():
+        flags = bloom.bloom_contains(probe, keys, "p", "k").collect()
+        return {r["p"] for r in flags if r["in_bloom"]}
+
+    first = passed()
+    assert set(range(0, 100, 3)) <= first  # no false negatives
+    assert passed() == first  # deterministic decisions
+
+
+def bloom_m_for(n_keys: int) -> int:
+    """Test-local oracle for the filter size: the smallest power of two
+    >= BLOOM_BITS_PER_KEY * n_keys, never below BLOOM_M."""
+    from duckdb_dbt_finance_warehouse_spark.operators import bloom
+
+    m = bloom.BLOOM_M
+    while m < bloom.BLOOM_BITS_PER_KEY * n_keys:
+        m <<= 1
+    return m
 
 
 def test_bloom_words_frame_sizes_like_bloom_m_for(spark):
@@ -1192,7 +1274,7 @@ def test_bloom_words_frame_sizes_like_bloom_m_for(spark):
         for n in (0, 1, 4096, 4097, 65536):
             keys = spark.range(n).withColumnRenamed("id", "k")
             got = bloom.bloom_words_frame(keys, "k").select("_bloom_m").first()[0]
-            assert got == bloom.bloom_m_for(n), n
+            assert got == bloom_m_for(n), n
         too_many = spark.range(65537).withColumnRenamed("id", "k")
         with pytest.raises(Exception, match="BLOOM_M_MAX"):
             bloom.bloom_words_frame(too_many, "k").collect()
@@ -1344,16 +1426,9 @@ def test_pack_sequences_invariants(spark):
     assert sum(r["n_sequences"] for r in eff) == len(seq_tot)
 
 
-def test_compaction_plan_and_compact_rewrite(spark, tmp_path):
-    """compaction_plan groups adjacent partitions by the prefix-sum rule;
-    compact_table rewrites to the expected file count, preserves every
-    row, and stays crash-safe (staged swap)."""
-    import glob
-    import os
-
+def test_compaction_plan_groups_adjacent_partitions(spark):
+    """compaction_plan groups adjacent partitions by the prefix-sum rule."""
     from duckdb_dbt_finance_warehouse_spark.operators import maintenance
-    from duckdb_dbt_finance_warehouse_spark.sources.maintenance import compact_table
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
     df = spark.range(1000).withColumn("part", F.col("id") % 10)
     plan = sorted(
@@ -1363,16 +1438,6 @@ def test_compaction_plan_and_compact_rewrite(spark, tmp_path):
     assert [r["n_rows"] for r in plan] == [100] * 10
     # cum starts 0..900 step 100 -> floor(start/250)
     assert [r["compaction_group"] for r in plan] == [0, 0, 0, 1, 1, 2, 2, 2, 3, 3]
-
-    wh = Warehouse(spark, str(tmp_path))
-    wh.write(df.repartition(20), "main", "t")
-    assert len(glob.glob(os.path.join(str(tmp_path), "main", "t", "*.parquet"))) == 20
-    n_files = compact_table(wh, "main", "t", target_files=2)
-    assert n_files == 2
-    assert len(glob.glob(os.path.join(str(tmp_path), "main", "t", "*.parquet"))) == 2
-    got = wh.read("main", "t")
-    assert got.count() == 1000
-    assert got.agg(F.sum("id")).first()[0] == 999 * 1000 // 2
 
 
 # ---------------------------------------------------------------------------
@@ -3526,36 +3591,6 @@ def test_ivf_pq_build_trained_append_equals_rebuild(spark):
     assert sorted(map(key, merged)) == sorted(map(key, rebuilt)) and merged
 
 
-def test_multimodal_resize_stub_plumbing(spark):
-    """Resize plumbing: every payload lands at exactly target_bytes
-    (empty stays empty), metadata n_bytes matches the new payload,
-    version bumps, and the resized frame round-trips through
-    extract_features (the downstream blob contract). Downscaling is a
-    strided byte selection — deterministic, so repeated runs agree."""
-    from duckdb_dbt_finance_warehouse_spark.operators import multimodal
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
-
-    docs = load_testdata(spark, SF, "documents")["documents"].limit(50)
-    import pytest
-
-    blobs = multimodal.synthesize_blobs(docs, "doc_id", "text")
-    resized = multimodal.resize_stub(blobs, target_bytes=16)
-    rows = resized.collect()
-    assert rows
-    for r in rows:
-        n = len(r["payload"]) if r["payload"] is not None else 0
-        assert n in (0, 16)
-        assert r["media_meta"]["n_bytes"] == n
-        assert r["media_meta"]["version"] == 2
-    feats = multimodal.extract_features(resized).collect()
-    assert {f["n_bytes"] for f in feats} <= {0, 16}
-    again = sorted(map(tuple, multimodal.resize_stub(blobs, target_bytes=16).collect()))
-    assert again == sorted(map(tuple, rows))
-
-    with pytest.raises(ValueError, match="target_bytes"):
-        multimodal.resize_stub(blobs, target_bytes=0)
-
-
 def test_multimodal_resize_image_hand_computed(spark):
     """REAL resize (r10): decode -> nearest-neighbor pixel resample ->
     re-encode, pinned against a hand-computed raster. Source is a 4x2
@@ -3566,10 +3601,10 @@ def test_multimodal_resize_image_hand_computed(spark):
     byte length and a bumped version."""
     import pytest
 
-    from duckdb_dbt_finance_warehouse_spark.operators import multimodal, png
+    from duckdb_dbt_finance_warehouse_spark.operators import multimodal
 
     src = bytes(range(24))  # 4x2 RGB, row 0 = 0..11, row 1 = 12..23
-    payload = png.encode_png(src, 4, 2, 3)
+    payload = encode_png(src, 4, 2, 3)
     blobs = spark.createDataFrame(
         [(1, bytearray(payload), ("image/png", len(payload), 1))],
         schema="doc_id LONG, payload BINARY, "
@@ -3578,7 +3613,7 @@ def test_multimodal_resize_image_hand_computed(spark):
     (down,) = multimodal.resize_image(
         blobs, "doc_id", target_width=2, target_height=1
     ).collect()
-    assert png.decode_png(bytes(down["payload"])) == (
+    assert decode_png(bytes(down["payload"])) == (
         2, 1, 3, bytes([0, 1, 2, 6, 7, 8]),
     )
     assert down["media_meta"]["mime"] == "image/png"
@@ -3588,7 +3623,7 @@ def test_multimodal_resize_image_hand_computed(spark):
     (up,) = multimodal.resize_image(
         blobs, "doc_id", target_width=8, target_height=4
     ).collect()
-    w, h, c, px = png.decode_png(bytes(up["payload"]))
+    w, h, c, px = decode_png(bytes(up["payload"]))
     assert (w, h, c) == (8, 4, 3)
     # each source pixel repeats 2x per axis: row y of the output reads
     # source row (y*2)//4 = y//2, column (x*4)//8 = x//2

@@ -324,58 +324,21 @@ def test_dag_listing_is_topological():
         seen.add(name)
 
 
-def test_catalog_registration(spark, wh):
-    """Catalog mode (sql.register_warehouse_catalog): one database per
-    warehouse schema, external tables over the parquet layout, partition
-    recovery for the month-partitioned facts — the analog of the
-    reference's named DuckDB schemas for BI consumers."""
-    import contextlib
-    import io
+def test_register_warehouse_views(spark, tmp_path_factory):
+    """``runner.py query``'s registration (sql.register_warehouse): a
+    ``<schema>_<table>`` temp view per table, and a bare-name alias only
+    for a table name no other schema shares."""
+    from duckdb_dbt_finance_warehouse_spark.sql import register_warehouse
 
-    names = wh.register_catalog()
-    try:
-        assert "mart.fct_account_month" in names
-        direct = wh.read("mart", "fct_account_month").count()
-        via_catalog = spark.sql("SELECT count(*) FROM mart.fct_account_month").first()[0]
-        assert via_catalog == direct
-        # named-table round trip on the flagship mart
-        mart = spark.table("mart.mart_mrr_waterfall_month")
-        assert mart.count() == wh.read("mart", "mart_mrr_waterfall_month").count()
-        assert set(mart.columns) == set(
-            wh.read("mart", "mart_mrr_waterfall_month").columns
-        )
-        # partition pruning must reach the scan through the catalog
-        p = spark.sql(
-            "SELECT subscription_id FROM mart.fct_subscription_month "
-            "WHERE month_start_date = DATE'2024-02-01'"
-        )
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            p.explain("formatted")
-        assert "PartitionFilters: [isnotnull(month_start_date" in buf.getvalue()
-        assert p.count() > 0
-    finally:
-        for db in {n.split(".")[0] for n in names}:
-            spark.sql(f"DROP DATABASE IF EXISTS `{db}` CASCADE")
-
-
-def test_purge_keys_right_to_be_forgotten(spark, tmp_path_factory):
-    from pyspark.sql import functions as F
-
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import purge_keys
-
-    root = str(tmp_path_factory.mktemp("purge_wh"))
-    w = Warehouse(spark, root)
-    df = spark.range(0, 100).selectExpr("id AS account_id", "id * 2 AS v")
-    w.write(df, "stg", "accounts_like")
-    keys = spark.createDataFrame([(3,), (7,), (999,)], ["account_id"])  # 999 absent
-    removed = purge_keys(w, "stg", "accounts_like", "account_id", keys)
-    assert removed == 2
-    left = w.read("stg", "accounts_like")
-    assert left.count() == 98
-    assert left.filter(F.col("account_id").isin(3, 7)).count() == 0
-    # idempotent: purging again removes nothing
-    assert purge_keys(w, "stg", "accounts_like", "account_id", keys) == 0
+    w = Warehouse(spark, str(tmp_path_factory.mktemp("views_wh")))
+    w.write(spark.range(3), "stg", "t")
+    w.write(spark.range(5), "mart", "t")
+    w.write(spark.range(7), "mart", "u")
+    names = register_warehouse(w)
+    assert sorted(names) == ["mart_t", "mart_u", "stg_t", "u"]
+    assert spark.sql("SELECT count(*) FROM stg_t").first()[0] == 3
+    assert spark.sql("SELECT count(*) FROM mart_t").first()[0] == 5
+    assert spark.sql("SELECT count(*) FROM u").first()[0] == 7
 
 
 def test_vacuum_cleans_staging_and_heals_trash(spark, tmp_path_factory):
@@ -468,30 +431,3 @@ def test_shard_export_manifest_merges_to_source_fingerprint(spark, tmp_path_fact
     moved = {k for k in before if before[k] != after[k]}
     assert moved and all(after[k] == 4 for k in moved)
     assert len(moved) < 500 * 0.4
-
-
-def test_analyze_populates_catalog_statistics(spark, tmp_path_factory):
-    root = str(tmp_path_factory.mktemp("analyze_wh"))
-    w = Warehouse(spark, root)
-    w.write(
-        spark.range(0, 1000).selectExpr("id", "id % 7 AS grp", "id * 1.5 AS v"),
-        "stg",
-        "t",
-    )
-    try:
-        names = w.analyze()
-        assert "stg.t" in names
-        desc = {
-            r["col_name"]: r["data_type"]
-            for r in spark.sql("DESCRIBE TABLE EXTENDED stg.t").collect()
-        }
-        assert "Statistics" in desc and "1000 rows" in desc["Statistics"]
-        cols = {
-            r["info_name"]: r["info_value"]
-            for r in spark.sql("DESCRIBE TABLE EXTENDED stg.t grp").collect()
-        }
-        assert cols.get("distinct_count") == "7"
-        assert cols.get("min") == "0" and cols.get("max") == "6"
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS stg CASCADE")
-        spark.sql("DROP DATABASE IF EXISTS shards CASCADE")

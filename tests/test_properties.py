@@ -224,42 +224,6 @@ def test_hopping_equals_tumbling_when_slide_is_size(spark, offsets):
 
 
 @given(
-    lines=st.lists(
-        st.one_of(
-            st.builds(
-                lambda i, t: f'{{"doc_id": {i}, "text": "{t}", "lang": "en", "source": "w", "n_chars": {len(t)}}}',
-                st.integers(min_value=0, max_value=99),
-                st.text(alphabet="abc xyz", max_size=10),
-            ),
-            st.sampled_from(
-                ['{"doc_id": "x"}', "not json at all", "{", "  ", "", "[1,2,3]"]
-            ),
-        ),
-        max_size=12,
-    )
-)
-@PROP
-def test_jsonl_parse_partitions_every_line(spark, tmp_path_factory, lines):
-    """good + quarantined must exactly partition the non-blank lines:
-    nothing dropped, nothing duplicated, regardless of how malformed
-    the batch is."""
-    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import (
-        DOCUMENT_SCHEMA,
-        parse_jsonl,
-    )
-
-    d = tmp_path_factory.mktemp("jsonl_prop")
-    p = d / "batch.jsonl"
-    p.write_text("\n".join(lines) + "\n")
-    good, quar = parse_jsonl(spark, str(p), DOCUMENT_SCHEMA)
-    n_nonblank = sum(1 for l in lines if l.strip())
-    assert good.count() + quar.count() == n_nonblank
-    # every good row is one of the well-formed inputs
-    for r in good.collect():
-        assert r["doc_id"] is not None and r["lang"] == "en"
-
-
-@given(
     docs=st.lists(
         st.lists(st.sampled_from("abcdefg"), min_size=1, max_size=12),
         min_size=2,

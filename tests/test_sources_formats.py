@@ -60,80 +60,33 @@ def test_json_reader_prunes_and_filters(spark, tmp_path):
     assert q.count() == docs.filter("doc_id < 100").count()
 
 
-def test_jsonl_ingest_quarantines_corrupt_lines(spark, tmp_path):
-    """ingest_jsonl splits a dirty JSONL batch: parseable, type-clean
-    lines land in raw.<table> with lineage; malformed JSON AND
-    type-drift lines land in raw.<table>__quarantine verbatim. Blank
-    lines are skipped entirely."""
-    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import (
-        DOCUMENT_SCHEMA,
-        ingest_jsonl,
-    )
-    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
-
-    good_lines = [
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "web", "n_chars": 11}',
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr", "source": "web", "n_chars": 7}',
-    ]
-    bad_lines = [
-        '{"doc_id": 3, "text": "truncated',  # malformed JSON
-        '{"doc_id": "not-a-number", "text": "drift", "lang": "en", "source": "web", "n_chars": 5}',
-        "<html>leaked markup</html>",
-    ]
-    p = tmp_path / "batch.jsonl"
-    p.write_text("\n".join(good_lines + ["", bad_lines[0], bad_lines[1], "  ", bad_lines[2]]) + "\n")
-
-    wh = Warehouse(spark, str(tmp_path / "wh"))
-    good, quar = ingest_jsonl(wh, str(p), "documents", DOCUMENT_SCHEMA)
-
-    assert sorted(r.doc_id for r in good.collect()) == [1, 2]
-    assert set(good.columns) == {
-        "doc_id", "text", "lang", "source", "n_chars", "ingested_at", "source_file",
-    }
-    assert {r.source_file for r in good.collect()} == {"batch.jsonl"}
-    qrows = quar.collect()
-    assert sorted(r.raw_line for r in qrows) == sorted(bad_lines)
-
-    # append mode accumulates both sides
-    ingest_jsonl(wh, str(p), "documents", DOCUMENT_SCHEMA, mode="append")
-    assert wh.read("raw", "documents").count() == 4
-    assert wh.read("raw", "documents__quarantine").count() == 6
-
-
 def _ingest_inputs(spark, tmp_path):
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
     csv = tmp_path / "accounts.csv"
     csv.write_text("account_id,account_name\nA1,Acme\n")
-    jsonl = tmp_path / "docs.jsonl"
-    doc = '{"doc_id": 1, "text": "hi", "lang": "en", "source": "web", "n_chars": 2}'
-    jsonl.write_text(doc + "\n{x\n")
-    return Warehouse(spark, str(tmp_path / "wh")), str(csv), str(jsonl)
+    return Warehouse(spark, str(tmp_path / "wh")), str(csv)
 
 
 def test_unknown_ingest_mode_raises_before_writing(spark, tmp_path):
     """An unknown mode raises even when the target does not exist yet,
     and nothing is written."""
     from duckdb_dbt_finance_warehouse_spark.sources.csv import ingest_csv
-    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import DOCUMENT_SCHEMA, ingest_jsonl
 
-    wh, csv, jsonl = _ingest_inputs(spark, tmp_path)
+    wh, csv = _ingest_inputs(spark, tmp_path)
     with pytest.raises(ValueError, match="unknown mode"):
         ingest_csv(wh, csv, "accounts", mode="upsert")
-    with pytest.raises(ValueError, match="unknown mode"):
-        ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="upsert")
     assert not wh.exists("raw", "accounts")
-    assert not wh.exists("raw", "docs") and not wh.exists("raw", "docs__quarantine")
 
 
 def test_append_to_a_missing_table_is_one_write_per_output(spark, tmp_path, monkeypatch):
     """``append`` to a missing table creates it with one overwrite of
     the batch (not an empty write followed by an append); later batches
     append."""
-    from duckdb_dbt_finance_warehouse_spark.sources.jsonl import DOCUMENT_SCHEMA, ingest_jsonl
+    from duckdb_dbt_finance_warehouse_spark.sources.csv import ingest_csv
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
-    wh, _, jsonl = _ingest_inputs(spark, tmp_path)
+    wh, csv = _ingest_inputs(spark, tmp_path)
     writes = []
     real = Warehouse.write
 
@@ -142,13 +95,12 @@ def test_append_to_a_missing_table_is_one_write_per_output(spark, tmp_path, monk
         return real(self, df, schema, table, mode=mode, **kw)
 
     monkeypatch.setattr(Warehouse, "write", recording)
-    ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="append")
-    assert writes == [("docs", "overwrite"), ("docs__quarantine", "overwrite")]
-    assert wh.read("raw", "docs").count() == 1
-    assert wh.read("raw", "docs__quarantine").count() == 1
-    ingest_jsonl(wh, jsonl, "docs", DOCUMENT_SCHEMA, mode="append")
-    assert writes[2:] == [("docs", "append"), ("docs__quarantine", "append")]
-    assert wh.read("raw", "docs").count() == 2
+    ingest_csv(wh, csv, "accounts", mode="append")
+    assert writes == [("accounts", "overwrite")]
+    assert wh.read("raw", "accounts").count() == 1
+    ingest_csv(wh, csv, "accounts", mode="append")
+    assert writes[1:] == [("accounts", "append")]
+    assert wh.read("raw", "accounts").count() == 2
 
 
 def test_load_testdata_reuses_schema_until_the_file_changes(spark, tmp_path):
