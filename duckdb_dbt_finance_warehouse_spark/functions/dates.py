@@ -50,6 +50,13 @@ def date_kit(d: Column, m: Column) -> dict[str, Column]:
     }
 
 
+def month_starts(dim_date: DataFrame) -> DataFrame:
+    """dim_date's month-start rows, as the one column ``month_start_date``.
+    No distinct: dim_date has one row per day, so exactly one row per
+    month has ``is_month_start``."""
+    return dim_date.filter(F.col("is_month_start")).select("month_start_date")
+
+
 def month_spine(first: Column | str, last: Column | str) -> Column:
     """J1: one row per month start in [first, last] (both month starts)
     — explode(sequence(..., interval 1 month)), linear in the output,

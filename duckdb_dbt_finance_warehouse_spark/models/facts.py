@@ -26,10 +26,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.dates import month_spine
-from ..functions.money import exact_sum
+from ..functions.dates import month_spine, month_starts
 from ..functions.mrr import (
-    ever_before, first_version_backdated, lag_or_zero, movement_amounts, movement_type, valid_at,
+    account_month_chain, first_version_backdated, movement_amounts, valid_at,
 )
 from ..plans.registry import Context
 
@@ -94,12 +93,7 @@ def _valid_in_month(f: str, d: str, key: str) -> Column:
 
 
 def fct_subscription_month(ctx: Context) -> DataFrame:
-    dd = ctx.ref("dim_date")
-    months = (
-        dd.filter(F.col("is_month_start"))
-        .select("month_start_date", "next_month_start_date")
-        .distinct()
-    )
+    months = month_starts(ctx.ref("dim_date"))
     cutoff = _month_cutoff(ctx, "fct_subscription_month")
     if cutoff is not None:
         months = months.filter(F.col("month_start_date") >= F.lit(cutoff))
@@ -195,43 +189,24 @@ def fct_subscription_month(ctx: Context) -> DataFrame:
 
 
 def fct_account_month(ctx: Context) -> DataFrame:
-    dd = ctx.ref("dim_date")
-    months = dd.filter(F.col("is_month_start")).select("month_start_date").distinct()
-    fsm = ctx.ref("fct_subscription_month")
-
-    # A2 fix: spine + windows over FULL history; restrict at the end
-    bounds = fsm.groupBy("account_id").agg(
-        F.min("month_start_date").alias("first_month"),
-        F.max("month_start_date").alias("last_month"),
-    )
-    spine = (
-        bounds.select(
-            "account_id",
-            month_spine("first_month", F.add_months("last_month", 1)).alias("month_start_date"),
-        )
-        # respect dim_date coverage, as the reference's JOIN months does
-        .join(F.broadcast(months), "month_start_date", "left_semi")
-    )
-
-    monthly = fsm.groupBy("account_id", "month_start_date").agg(
-        exact_sum(F.coalesce("mrr_amount", F.lit(0.0))).alias("mrr_end_mrr")
-    )
-    spined = spine.join(monthly, ["account_id", "month_start_date"], "left").select(
+    # A2 fix: spine + windows over FULL history; restrict at the end.
+    # The dim_date semi-join (the reference's JOIN months) runs after the
+    # windows: the only spine month it can drop is an account's trailing
+    # +1 month past dim_date's end, the last row of its window partition,
+    # so no other row's lag or prior-paid flag changes.
+    chain = account_month_chain(
+        ctx.ref("fct_subscription_month"), "account_id", F.col("month_start_date"),
+        F.coalesce("mrr_amount", F.lit(0.0)),
+    ).join(F.broadcast(month_starts(ctx.ref("dim_date"))), "month_start_date", "left_semi")
+    classified = chain.select(
         "account_id",
         "month_start_date",
-        F.coalesce("mrr_end_mrr", F.lit(0.0)).alias("mrr_end_mrr"),
+        F.col("begin").alias("mrr_begin_mrr"),
+        F.col("end").alias("mrr_end_mrr"),
+        F.col("delta").alias("mrr_delta"),
+        "movement_type",
     )
-
-    w_ord = Window.partitionBy("account_id").orderBy("month_start_date")
-    begin, end, delta = F.col("mrr_begin_mrr"), F.col("mrr_end_mrr"), F.col("mrr_delta")
-    classified = (
-        spined.withColumn("mrr_begin_mrr", lag_or_zero("mrr_end_mrr", w_ord))
-        .withColumn("mrr_delta", end - begin)
-        .withColumn("has_paid_before", ever_before(end > 0, w_ord) == 1)
-        .withColumn(
-            "movement_type", movement_type(begin, end, delta, F.col("has_paid_before"))
-        )
-    )
+    begin, end, delta = F.col("c.mrr_begin_mrr"), F.col("c.mrr_end_mrr"), F.col("c.mrr_delta")
 
     acct_dim = _scd2_month_dim(ctx.ref("dim_account"), "account_id", "account_key")
     c = classified.alias("c")

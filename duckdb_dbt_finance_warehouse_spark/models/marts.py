@@ -3,8 +3,10 @@ mart_mrr_waterfall_month.sql): month-grain begin/end/new/reactivation/
 expansion/contraction/churn sums + conditional distinct account counts,
 zero-filled over the complete month spine.
 
-One grouped pass over fct_account_month (the conditional distincts share
-the expand), then a broadcast left join onto the ~36-row month spine.
+One grouped pass over fct_account_month (``mrr.waterfall_measures``, the
+measures m2_waterfall_rollup selects too; its account counts are row
+counts over the unique (account, month) grain, so no expand), then a
+broadcast left join onto the ~36-row month spine.
 """
 
 from __future__ import annotations
@@ -12,57 +14,30 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.money import exact_sum
-from ..functions.mrr import CHURN, NEW, REACTIVATION
+from ..functions.dates import month_starts
+from ..functions.mrr import waterfall_measures
 from ..plans.registry import Context
 
 
 def mart_mrr_waterfall_month(ctx: Context) -> DataFrame:
-    months = (
-        ctx.ref("dim_date")
-        .filter(F.col("is_month_start"))
-        .select("month_start_date")
-        .distinct()
+    m = waterfall_measures(
+        F.col("account_id"), F.col("movement_type"),
+        F.col("mrr_begin_mrr"), F.col("mrr_end_mrr"), F.col("mrr_delta"),
     )
-    fam = ctx.ref("fct_account_month")
-
-    agg = fam.groupBy("month_start_date").agg(
-        exact_sum("mrr_begin_mrr").alias("begin_mrr"),
-        exact_sum("mrr_end_mrr").alias("end_mrr"),
-        (exact_sum("mrr_end_mrr") - exact_sum("mrr_begin_mrr")).alias("net_mrr_change"),
-        exact_sum("new_mrr").alias("new_mrr"),
-        exact_sum("reactivation_mrr").alias("reactivation_mrr"),
-        exact_sum("upgrade_mrr").alias("expansion_mrr"),
-        exact_sum("downgrade_mrr").alias("contraction_mrr"),
-        exact_sum("churn_mrr").alias("churn_mrr"),
-        F.countDistinct(
-            F.when(F.col("mrr_end_mrr") > 0, F.col("account_id"))
-        ).alias("active_accounts"),
-        F.countDistinct(
-            F.when(F.col("movement_type") == CHURN, F.col("account_id"))
-        ).alias("churned_accounts"),
-        F.countDistinct(
-            F.when(F.col("movement_type") == NEW, F.col("account_id"))
-        ).alias("new_accounts"),
-        F.countDistinct(
-            F.when(F.col("movement_type") == REACTIVATION, F.col("account_id"))
-        ).alias("reactivated_accounts"),
+    sums = {f"{k}_mrr": v for k, v in m.items() if not k.endswith("_accounts")}
+    counts = [k for k in m if k.endswith("_accounts")]
+    agg = ctx.ref("fct_account_month").groupBy("month_start_date").agg(
+        *[v.alias(k) for k, v in sums.items()],
+        (m["end"] - m["begin"]).alias("net_mrr_change"),
+        *[m[k].alias(k) for k in counts],
     )
 
+    money = list(sums)
+    money.insert(2, "net_mrr_change")  # after begin_mrr, end_mrr
     zero_d = F.lit(0.0)
     zero_l = F.lit(0).cast("bigint")
-    return months.join(agg, "month_start_date", "left").select(
+    return month_starts(ctx.ref("dim_date")).join(agg, "month_start_date", "left").select(
         "month_start_date",
-        F.coalesce("begin_mrr", zero_d).alias("begin_mrr"),
-        F.coalesce("end_mrr", zero_d).alias("end_mrr"),
-        F.coalesce("net_mrr_change", zero_d).alias("net_mrr_change"),
-        F.coalesce("new_mrr", zero_d).alias("new_mrr"),
-        F.coalesce("reactivation_mrr", zero_d).alias("reactivation_mrr"),
-        F.coalesce("expansion_mrr", zero_d).alias("expansion_mrr"),
-        F.coalesce("contraction_mrr", zero_d).alias("contraction_mrr"),
-        F.coalesce("churn_mrr", zero_d).alias("churn_mrr"),
-        F.coalesce("active_accounts", zero_l).alias("active_accounts"),
-        F.coalesce("churned_accounts", zero_l).alias("churned_accounts"),
-        F.coalesce("new_accounts", zero_l).alias("new_accounts"),
-        F.coalesce("reactivated_accounts", zero_l).alias("reactivated_accounts"),
+        *[F.coalesce(c, zero_d).alias(c) for c in money],
+        *[F.coalesce(c, zero_l).alias(c) for c in counts],
     )

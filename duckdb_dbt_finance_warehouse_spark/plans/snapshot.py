@@ -53,10 +53,25 @@ def scd2_merge(
     # VANISH from the merged state and an incoming one would be
     # silently discarded — data loss, not a test failure. The declared
     # not_null test only REPORTS; the merge must refuse. One eager agg
-    # (shared with the hard-delete close timestamp below).
-    stats = new.agg(
-        F.max(batch_ts_col).alias("_ts"),
-        F.count(F.when(F.col(unique_key).isNull(), 1)).alias("_nulls"),
+    # over the incoming rows and the stored open NULL-key rows checks
+    # both sides and yields the hard-delete close timestamp below.
+    key = F.col(unique_key)
+    guards = new.select(
+        F.col(batch_ts_col).alias("_ts"), key.isNull().alias("_new_null"),
+        F.lit(False).alias("_open_null"),
+    )
+    if old is not None:
+        guards = guards.unionByName(
+            old.filter(F.col("dbt_valid_to").isNull() & key.isNull()).select(
+                F.lit(None).cast(new.schema[batch_ts_col].dataType).alias("_ts"),
+                F.lit(False).alias("_new_null"),
+                F.lit(True).alias("_open_null"),
+            )
+        )
+    stats = guards.agg(
+        F.max("_ts").alias("_ts"),
+        F.count(F.when(F.col("_new_null"), 1)).alias("_nulls"),
+        F.count(F.when(F.col("_open_null"), 1)).alias("_open_nulls"),
     ).first()
     if stats["_nulls"]:
         raise ValueError(
@@ -65,14 +80,14 @@ def scd2_merge(
         )
     if old is None:
         return new
-
-    closed_history = old.filter(F.col("dbt_valid_to").isNotNull())
-    open_rows = old.filter(F.col("dbt_valid_to").isNull())
-    if open_rows.filter(F.col(unique_key).isNull()).limit(1).count():
+    if stats["_open_nulls"]:
         raise ValueError(
             f"scd2_merge: stored snapshot contains open row(s) with NULL "
             f"{unique_key} — a pre-guard state; repair before merging"
         )
+
+    closed_history = old.filter(F.col("dbt_valid_to").isNotNull())
+    open_rows = old.filter(F.col("dbt_valid_to").isNull())
 
     # hard-delete close timestamp: the incoming batch's max ingested_at
     batch_ts = stats["_ts"]

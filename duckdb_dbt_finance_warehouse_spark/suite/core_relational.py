@@ -31,8 +31,8 @@ from ..functions.dates import date_kit, date_spine, month_spine, month_start
 from ..functions.lineage import latest_per_key, lineage_columns
 from ..functions.money import exact_sum, exact_sum_scaled
 from ..functions.mrr import (
-    CHURN, ever_before, first_version_backdated, lag_or_zero, movement_amounts, movement_type,
-    valid_at,
+    account_month_chain, ever_before, first_version_backdated, lag_or_zero, valid_at,
+    waterfall_measures,
 )
 from ..state import persist
 from ..sources.tables import load_testdata
@@ -838,7 +838,9 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     source (reference: fct_account_month.sql:79-123). Composition:
     grouped exact sums -> per-entity month spine (explode, +1 trailing
     month so final churn is observable) -> zero-fill -> lag + prior-paid
-    window -> CASE classify. Two shuffles total (group, window).
+    window -> CASE classify: ``mrr.account_month_chain``, the chain
+    fct_account_month runs. Two shuffles total (the (account, month)
+    group and the per-account map group, which the windows reuse).
 
     The returned frame is ``persist()``-ed: in the reference pipeline
     this IS a materialized fact (fct_account_month — dbt
@@ -848,44 +850,14 @@ def m1_movement_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical logical plan) instead of recomputing the two-shuffle
     chain per consumer; ``release_persisted()`` drops it."""
     o = T(spark, sf_dir, "orders")["orders"]
-    monthly = o.groupBy(
+    chain = account_month_chain(o, "o_custkey", month_start("o_orderdate"), "o_totalprice")
+    return persist(chain.select(
         F.col("o_custkey").alias("account_id"),
-        F.trunc("o_orderdate", "month").alias("m"),
-    ).agg(exact_sum("o_totalprice").alias("rev"))
-    # single-shuffle zero-filled spine: fold each account's months into a
-    # map, explode the month sequence, look revenue up in the map. The
-    # groupBy leaves data hash-partitioned on account_id, which is
-    # exactly what the windows below need — no further exchange (the
-    # join formulation would cost two more shuffles). Map size is
-    # calendar-bounded (<=~120 entries/account), safe at any row scale.
-    per_acct = monthly.groupBy("account_id").agg(
-        F.map_from_entries(F.collect_list(F.struct("m", "rev"))).alias("rev_by_month"),
-        F.min("m").alias("first_m"),
-        F.max("m").alias("last_m"),
-    )
-    spined = per_acct.select(
-        "account_id",
-        month_spine("first_m", F.add_months("last_m", 1)).alias("month_start_date"),
-        "rev_by_month",
-    ).select(
-        "account_id",
         "month_start_date",
-        F.coalesce(
-            F.element_at("rev_by_month", F.col("month_start_date")), F.lit(0.0)
-        ).alias("end_rev"),
-    )
-    w = Window.partitionBy("account_id").orderBy("month_start_date")
-    begin, end = F.col("begin_rev"), F.col("end_rev")
-    flagged = spined.withColumn("begin_rev", lag_or_zero("end_rev", w)).withColumn(
-        "has_paid_before", ever_before(end > 0, w) == 1
-    )
-    return persist(flagged.select(
-        "account_id",
-        "month_start_date",
-        "begin_rev",
-        "end_rev",
-        (end - begin).alias("delta"),
-        movement_type(begin, end, end - begin, F.col("has_paid_before")).alias("movement_type"),
+        F.col("begin").alias("begin_rev"),
+        F.col("end").alias("end_rev"),
+        "delta",
+        "movement_type",
     ))
 
 
@@ -1188,26 +1160,20 @@ def sql4_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def m2_waterfall_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """M2: the waterfall mart on top of M1 — one grouped pass with
-    movement-conditional exact sums + conditional distinct counts
-    (reference: mart_mrr_waterfall_month.sql:29-52). With M1 this is the
-    reference's full flagship chain, oracle-verified end-to-end on the
-    driver corpus."""
+    movement-conditional exact sums + conditional account counts
+    (reference: mart_mrr_waterfall_month.sql:29-52), selected from
+    ``mrr.waterfall_measures`` as mart_mrr_waterfall_month selects them.
+    With M1 this is the reference's full flagship chain, oracle-verified
+    end-to-end on the test data."""
     base = m1_movement_classification(spark, sf_dir)
-    mt = F.col("movement_type")
-    amounts = movement_amounts(mt, F.col("begin_rev"), F.col("end_rev"), F.col("delta"))
-    names = ("new_rev", "reactivation_rev", "expansion_rev", "contraction_rev", "churn_rev")
+    m = waterfall_measures(
+        F.col("account_id"), F.col("movement_type"),
+        F.col("begin_rev"), F.col("end_rev"), F.col("delta"),
+    )
     return base.groupBy("month_start_date").agg(
-        exact_sum("begin_rev").alias("begin_rev"),
-        exact_sum("end_rev").alias("end_rev"),
-        *[exact_sum(amount).alias(n) for amount, n in zip(amounts.values(), names)],
-        # (account_id, month) is the input's unique grain, so distinct
-        # account counts degrade to conditional row counts — no expand
-        F.sum(F.when(F.col("end_rev") > 0, 1).otherwise(0)).cast("bigint").alias(
-            "active_accounts"
-        ),
-        F.sum(F.when(mt == CHURN, 1).otherwise(0)).cast("bigint").alias(
-            "churned_accounts"
-        ),
+        *[v.alias(f"{k}_rev") for k, v in m.items() if not k.endswith("_accounts")],
+        m["active_accounts"].alias("active_accounts"),
+        m["churned_accounts"].alias("churned_accounts"),
     )
 
 

@@ -36,6 +36,23 @@ def test_scd2_merge_raises_on_null_key(spark):
         scd2_merge(state, good.unionByName(bad), unique_key="k")
 
 
+def test_scd2_merge_raises_on_stored_open_null_key(spark):
+    """The guard aggregate also reads the stored side: an open row with
+    a NULL key in the stored state (written before the guard existed)
+    stops the merge, while a closed one is history and does not."""
+    t0, t1 = datetime.datetime(2024, 1, 1), datetime.datetime(2024, 2, 1)
+    stored = spark.createDataFrame(
+        [("a", "h1", t0, t0, None), (None, "h0", t0, t0, t1)],
+        "k string, record_hash string, ingested_at timestamp, "
+        "dbt_valid_from timestamp, dbt_valid_to timestamp",
+    )
+    good = _rows(spark, [("a", "h1", t1)])
+    assert scd2_merge(stored, good, unique_key="k").count() == 2
+    reopened = stored.withColumn("dbt_valid_to", F.lit(None).cast("timestamp"))
+    with pytest.raises(ValueError, match="stored snapshot contains open row"):
+        scd2_merge(reopened, good, unique_key="k")
+
+
 def test_snapshot_diff_classifies_nullable_hashes(spark):
     """Presence must come from side flags, not hash NULLness: a key in
     BOTH states with a NULL hash on one side is 'changed' (null-safe

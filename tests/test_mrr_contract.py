@@ -12,6 +12,13 @@ backdate (``mrr.first_version_backdated``), the movement types
 and the lineage stamp (``lineage.lineage_columns``). Oracle SQL is
 exempt: it sits in decorator arguments and module-level constants,
 outside the function bodies scanned here.
+
+The two frame-level compositions are held to the same rule: a per-key
+month map (``map_from_entries``) is the zero-filled spine of
+``mrr.account_month_chain``, a distinct count in a model is a second
+waterfall rollup beside ``mrr.waterfall_measures``, and a filter on
+``is_month_start`` is a second read of dim_date's month rows beside
+``dates.month_starts``.
 """
 
 from __future__ import annotations
@@ -46,8 +53,10 @@ def _is_minus_one(node: ast.AST) -> bool:
     return isinstance(node, ast.Constant) and node.value == -1
 
 
-def _finding(node: ast.AST) -> str | None:
+def _finding(node: ast.AST, rel: str) -> str | None:
     if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        if node.value == "is_month_start":
+            return "a month-row read (use dates.month_starts)"
         if "interval 1 month" in node.value.lower():
             return "a month spine (use dates.month_spine)"
         if "1900-01-01" in node.value:
@@ -58,8 +67,13 @@ def _finding(node: ast.AST) -> str | None:
     if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
         return None
     attr, recv = node.func.attr, node.func.value
-    if attr == "lag" and isinstance(recv, ast.Name) and recv.id == "F":
-        return "F.lag (use mrr.lag_or_zero)"
+    if isinstance(recv, ast.Name) and recv.id == "F":
+        if attr == "lag":
+            return "F.lag (use mrr.lag_or_zero)"
+        if attr == "map_from_entries":
+            return "a per-key month map (use mrr.account_month_chain)"
+        if attr in ("countDistinct", "count_distinct") and rel.startswith("models"):
+            return "a distinct count (use mrr.waterfall_measures)"
     if (
         attr == "rowsBetween"
         and len(node.args) == 2
@@ -100,7 +114,7 @@ def _stray_rules() -> list[str]:
                 continue
             for stmt in _body(top):
                 for node in ast.walk(stmt):
-                    what = _finding(node)
+                    what = _finding(node, rel)
                     if what:
                         stray.append(f"{rel}:{node.lineno} {top.name} writes {what}")
     return stray

@@ -11,6 +11,13 @@ does a package ``__init__.py`` re-exporting a name, which keeps a
 function importable without anything calling it. A function registered
 with the suite's ``@query`` decorator is used by the registry; dunder
 methods are called by Python itself.
+
+A method name such as ``read`` or ``append`` is also an attribute of
+many other objects, so a method counts as referenced only from its
+defining module or from a file that can hold an instance of its class:
+one that references the class, or a package function or module-level
+variable whose annotation names the class (``build_pipeline() ->
+Pipeline``, ``REGISTRY: dict[str, QuerySpec]``).
 """
 
 from __future__ import annotations
@@ -53,29 +60,49 @@ def _registered(fn: ast.AST) -> bool:
     return False
 
 
-def _definitions() -> dict[str, list[str]]:
-    """name -> ['module.py:line', ...] for every top-level function and
-    class, and every method of a top-level class, in the package."""
-    defs: dict[str, list[str]] = {}
+def _definitions() -> list[tuple[str, str | None, str]]:
+    """(name, defining class or None, 'module.py:line') for every
+    top-level function and class, and every method of a top-level
+    class, in the package."""
+    defs = []
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     for path in _py_files(PKG):
         tree = _parse(path)
-        found = [n for n in tree.body if isinstance(n, (*funcs, ast.ClassDef))]
+        found = [(n, None) for n in tree.body if isinstance(n, (*funcs, ast.ClassDef))]
         for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
-            found.extend(n for n in cls.body if isinstance(n, funcs))
-        for fn in found:
+            found.extend((n, cls.name) for n in cls.body if isinstance(n, funcs))
+        for fn, cls_name in found:
             if _registered(fn) or (fn.name.startswith("__") and fn.name.endswith("__")):
                 continue
-            where = f"{os.path.relpath(path, ROOT)}:{fn.lineno}"
-            defs.setdefault(fn.name, []).append(where)
+            defs.append((fn.name, cls_name, f"{os.path.relpath(path, ROOT)}:{fn.lineno}"))
     return defs
 
 
-def _references() -> set[str]:
-    names: set[str] = set()
+def _holders() -> dict[str, set[str]]:
+    """class name -> package names whose annotation names the class:
+    functions returning it, module-level variables holding it."""
+    holders: dict[str, set[str]] = {}
+    for path in _py_files(PKG):
+        for top in _parse(path).body:
+            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef)) and top.returns:
+                name, ann = top.name, top.returns
+            elif isinstance(top, ast.AnnAssign) and isinstance(top.target, ast.Name):
+                name, ann = top.target.id, top.annotation
+            else:
+                continue
+            for node in ast.walk(ann):
+                if isinstance(node, ast.Name):
+                    holders.setdefault(node.id, set()).add(name)
+    return holders
+
+
+def _references() -> dict[str, set[str]]:
+    """path -> names referenced in that file."""
+    refs: dict[str, set[str]] = {}
     for user in USERS:
         for path in _py_files(user):
             reexport = path.startswith(PKG) and os.path.basename(path) == "__init__.py"
+            names = refs.setdefault(os.path.relpath(path, ROOT), set())
             for node in ast.walk(_parse(path)):
                 if isinstance(node, ast.Name):
                     names.add(node.id)
@@ -85,14 +112,25 @@ def _references() -> set[str]:
                     names.add(node.name.rsplit(".", 1)[-1])
                     if node.asname:
                         names.add(node.asname)
-    return names
+    return refs
 
 
 def test_every_package_function_is_referenced():
-    refs = _references()
+    refs, holders = _references(), _holders()
+
+    def used(name: str, cls: str | None, where: str) -> bool:
+        if cls is None:
+            return any(name in names for names in refs.values())
+        module = where.rsplit(":", 1)[0]
+        obtains = {cls} | holders.get(cls, set())
+        return any(
+            name in names and (path == module or obtains & names)
+            for path, names in refs.items()
+        )
+
     dead = sorted(
-        f"{name} ({', '.join(where)})"
-        for name, where in _definitions().items()
-        if name not in refs
+        f"{f'{cls}.' if cls else ''}{name} ({where})"
+        for name, cls, where in _definitions()
+        if not used(name, cls, where)
     )
     assert not dead, "definitions no code references — delete them: " + "; ".join(dead)

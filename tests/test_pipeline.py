@@ -13,6 +13,7 @@ from datetime import date, datetime
 
 import pytest
 
+from duckdb_dbt_finance_warehouse_spark.functions.dates import month_starts
 from duckdb_dbt_finance_warehouse_spark.models import build_pipeline
 from duckdb_dbt_finance_warehouse_spark.plans import testing as tst
 from duckdb_dbt_finance_warehouse_spark.session import engine_counters
@@ -104,6 +105,15 @@ def test_b1_full_build(spark, wh, tmp_path_factory):
     assert mar["churn_mrr"] == 50.0 and mar["churned_accounts"] == 1
 
     run_invariants(wh)
+
+
+def test_dim_date_has_one_month_start_row_per_month(wh):
+    """dates.month_starts reads the month rows without a distinct, which
+    holds because a built dim_date has exactly one is_month_start day
+    per month it covers."""
+    dd = wh.read("mart", "dim_date")
+    months = [r["month_start_date"] for r in month_starts(dd).collect()]
+    assert len(months) == len(set(months)) == dd.select("month_start_date").distinct().count()
 
 
 def test_b2_incremental_scd2(spark, wh, tmp_path_factory):

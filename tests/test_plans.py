@@ -10,13 +10,21 @@ import re
 
 import pytest
 
+from duckdb_dbt_finance_warehouse_spark.models import build_pipeline
+from duckdb_dbt_finance_warehouse_spark.plans.registry import Context
+from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
+
+from .test_pipeline import VARS, ingest_batch
 
 SF = "/root/testdata/sf0.001"
 
 
 def plan_of(spark, name: str) -> str:
-    df = REGISTRY[name].fn(spark, SF)
+    return explained(REGISTRY[name].fn(spark, SF))
+
+
+def explained(df) -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
@@ -555,3 +563,28 @@ def test_a8_percentiles_single_exchange_no_object_agg(spark):
     assert "ObjectHashAggregate" not in p
     assert "percentile" not in p
     assert len(re.findall(r"\(\d+\) Exchange", p)) == 1, p
+
+
+@pytest.fixture(scope="module")
+def built(spark, tmp_path_factory):
+    """A Context over a warehouse fully built from the b1 fixture batch."""
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh")))
+    ingest_batch(wh, str(tmp_path_factory.mktemp("csv")), "b1")
+    pipe = build_pipeline()
+    pipe.run(spark, wh, variables=VARS, full_refresh=True)
+    return Context(spark, wh, pipe, VARS)
+
+
+def test_account_month_chain_single_scan_and_rollup_without_expand(built):
+    """fct_account_month runs mrr.account_month_chain: its spine bounds,
+    monthly sums and zero-fill come out of one read of
+    fct_subscription_month (a bounds groupBy plus a join back would read
+    it twice). The mart's account counts are row counts over the unique
+    (account, month) grain, so its rollup has no Expand and only the one
+    grouping exchange."""
+    fam = explained(built.pipeline.models["fct_account_month"].fn(built))
+    # one Location line per Scan parquet node in the formatted plan
+    assert len(re.findall(r"Location: .*/fct_subscription_month\]", fam)) == 1, fam
+    mart = explained(built.pipeline.models["mart_mrr_waterfall_month"].fn(built))
+    assert "Expand" not in mart, mart
+    assert len(re.findall(r"\(\d+\) Exchange", mart)) == 1, mart
