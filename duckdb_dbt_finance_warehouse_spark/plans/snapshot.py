@@ -19,16 +19,31 @@ so this is observationally equivalent for all marts while making reruns
 reproducible.
 
 Scale: one full-outer shuffle join on the natural key between the OPEN
-slice of the snapshot and the deduped current view — closed history is
-never rejoined, only unioned back (append-only cold data).
+slice of the snapshot and the deduped current view, evaluated once: each
+key's versions come out of one explode — closed history is never
+rejoined, only unioned back (append-only cold data).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .registry import Context, Model
+
+
+def change_type(in_old: Column, in_new: Column, old_hash: Column, new_hash: Column) -> Column:
+    """The check-strategy change rule, shared by the merge and the audit
+    diff: ``added`` / ``removed`` by presence on one side only,
+    ``changed`` when the hashes differ, NULL when the key is unchanged.
+    Presence is an explicit flag, never hash-NULLness, and the compare
+    is null-safe: a NULL hash on either side counts as a change (plain
+    != yields NULL, which would read as "unchanged")."""
+    return (
+        F.when(~in_old, "added")
+        .when(~in_new, "removed")
+        .when(~old_hash.eqNullSafe(new_hash), "changed")
+    )
 
 
 def scd2_merge(
@@ -99,49 +114,33 @@ def scd2_merge(
             return old
         batch_ts = run_ts
 
-    o = open_rows.alias("o")
-    n = new.alias("n")
-    # five branches filter this ONE join — without a checkpoint the
-    # sort-merge join executes five times (ReuseExchange only dedupes
-    # the shuffle reads). localCheckpoint, not persist: per-run
-    # recomputed state, never a stored table (CLAUDE.md cache rule).
-    j = o.join(
-        n, F.col(f"o.{unique_key}") == F.col(f"n.{unique_key}"), "full_outer"
-    ).localCheckpoint(eager=False)
-
+    # one join, classified per key; each key emits its stored version
+    # (kept open, or closed) and its incoming version (new or changed)
+    # through one explode, so the join is evaluated once
+    j = open_rows.alias("o").join(
+        new.alias("n"), F.col(f"o.{unique_key}") == F.col(f"n.{unique_key}"), "full_outer"
+    )
     in_old = F.col(f"o.{unique_key}").isNotNull()
-    in_new = F.col(f"n.{unique_key}").isNotNull()
-    # null-safe: a NULL record_hash on either side must count as a change
-    # (plain != yields NULL -> silently "unchanged")
-    changed = (
-        in_old
-        & in_new
-        & ~F.col(f"o.{check_col}").eqNullSafe(F.col(f"n.{check_col}"))
+    kind = change_type(
+        in_old, F.col(f"n.{unique_key}").isNotNull(), F.col(f"o.{check_col}"), F.col(f"n.{check_col}")
+    )
+    closed_at = F.when(kind == "changed", F.col(f"n.{batch_ts_col}")).when(
+        kind == "removed", F.lit(batch_ts).cast("timestamp")
     )
 
-    old_cols = [F.col(f"o.{c}").alias(c) for c in open_rows.columns if c != "dbt_valid_to"]
-    new_cols = [F.col(f"n.{c}").alias(c) for c in new.columns]
+    # both versions in one explicit column order: the array needs one
+    # struct type, and the by-name union holds whatever the stored order
+    def version(side: str, valid_to: Column) -> Column:
+        return F.struct(
+            *[(valid_to if c == "dbt_valid_to" else F.col(f"{side}.{c}")).alias(c) for c in old.columns]
+        )
 
-    # unchanged open rows pass through; changed/deleted get closed
-    kept_open = j.filter(in_old & in_new & ~changed).select(
-        *old_cols, F.lit(None).cast("timestamp").alias("dbt_valid_to")
+    versions = F.array(
+        F.when(in_old, version("o", closed_at)),
+        F.when(kind.isin("added", "changed"), version("n", F.col("n.dbt_valid_to"))),
     )
-    closed_changed = j.filter(changed).select(
-        *old_cols, F.col(f"n.{batch_ts_col}").alias("dbt_valid_to")
-    )
-    closed_deleted = j.filter(in_old & ~in_new).select(
-        *old_cols, F.lit(batch_ts).cast("timestamp").alias("dbt_valid_to")
-    )
-    inserts_new = j.filter(~in_old & in_new).select(*new_cols)
-    inserts_changed = j.filter(changed).select(*new_cols)
-
-    return (
-        closed_history.unionByName(kept_open)
-        .unionByName(closed_changed)
-        .unionByName(closed_deleted)
-        .unionByName(inserts_new)
-        .unionByName(inserts_changed)
-    )
+    emitted = j.select(F.explode(versions).alias("v")).filter(F.col("v").isNotNull())
+    return closed_history.unionByName(emitted.select("v.*"))
 
 
 def run_snapshot(ctx: Context, m: Model) -> None:
@@ -161,17 +160,15 @@ def snapshot_diff(
 ) -> DataFrame:
     """Audit diff of two table states — the inspection half of the SCD2
     merge above: which keys were added / removed / changed between two
-    snapshots (per-row content identity via ``hash_col``, the same
-    record-hash contract as the check-strategy merge, P6).
+    snapshots (per-row content identity via ``hash_col``, P6). It
+    classifies with the merge's own ``change_type``, so the
+    ``x_snapshot_diff`` oracle also pins the rule the warehouse merge
+    runs.
 
     One co-partitioned full-outer shuffle join on the key; only keys +
     hashes travel, never the payload columns. Rows whose content is
     unchanged are dropped (the interesting output is the delta, and at
     100 TB the unchanged set is the overwhelming majority)."""
-    # presence is tracked with explicit flags, NOT hash-NULLness, and
-    # the change test is null-safe: with a nullable hash_col the old
-    # form misfiled present-rows-with-NULL-hash as added/removed and
-    # dropped a NULL-vs-NULL change as "unchanged" (plain != -> NULL)
     o = old.select(
         *key_cols, F.col(hash_col).alias("_old_h"), F.lit(True).alias("_in_old")
     )
@@ -179,10 +176,8 @@ def snapshot_diff(
         *key_cols, F.col(hash_col).alias("_new_h"), F.lit(True).alias("_in_new")
     )
     j = o.join(n, key_cols, "full_outer")
-    change = (
-        F.when(F.col("_in_old").isNull(), "added")
-        .when(F.col("_in_new").isNull(), "removed")
-        .when(~F.col("_old_h").eqNullSafe(F.col("_new_h")), "changed")
+    change = change_type(
+        F.col("_in_old").isNotNull(), F.col("_in_new").isNotNull(), F.col("_old_h"), F.col("_new_h")
     )
     return (
         j.withColumn("change_type", change)

@@ -18,8 +18,10 @@ def not_null(df: DataFrame, col: str) -> DataFrame:
     return df.filter(F.col(col).isNull())
 
 
-def unique(df: DataFrame, col: str) -> DataFrame:
-    return df.groupBy(col).count().filter(F.col("count") > 1)
+def unique(df: DataFrame, cols: list[str]) -> DataFrame:
+    """dbt ``unique`` on one column, or dbt_utils
+    ``unique_combination_of_columns`` on a composite grain."""
+    return df.groupBy(*cols).count().filter(F.col("count") > 1)
 
 
 def accepted_values(df: DataFrame, col: str, values: list) -> DataFrame:
@@ -34,11 +36,6 @@ def relationships(child: DataFrame, child_col: str, parent: DataFrame, parent_co
         .select(child_col)
         .join(parent.select(F.col(parent_col).alias(child_col)), child_col, "left_anti")
     )
-
-
-def unique_combination(df: DataFrame, cols: list[str]) -> DataFrame:
-    """dbt_utils.unique_combination_of_columns: composite grain must be unique."""
-    return df.groupBy(*cols).count().filter(F.col("count") > 1)
 
 
 # --- singular invariants (reference tests/, pass == empty) -----------------
@@ -92,10 +89,93 @@ def eom_boundary(fct_subscription_month: DataFrame) -> DataFrame:
     )
 
 
+# The declared test matrix, one row per test in reference schema.yml
+# order: (kind, table, columns, argument). Columns are comma-separated;
+# a unique test on more than one is a grain test.
+# The argument is the accepted values, an FK's "parent.column", CURRENT
+# for a unique test over the current-truth view, or a singular test's
+# second table.
+CURRENT = "current view"
+MART_MEASURES = (
+    "begin_mrr", "end_mrr", "net_mrr_change", "new_mrr", "reactivation_mrr", "expansion_mrr",
+    "contraction_mrr", "churn_mrr", "active_accounts", "churned_accounts", "new_accounts",
+    "reactivated_accounts",
+)
+DECLARED: tuple[tuple[str, str, str, object], ...] = (
+    # --- models/staging/schema.yml ---
+    ("not_null", "stg_accounts", "account_id", None),
+    ("unique", "stg_accounts", "account_id", CURRENT),
+    ("not_null", "stg_accounts", "signup_date", None),
+    ("not_null", "stg_subscriptions", "subscription_id", None),
+    ("unique", "stg_subscriptions", "subscription_id", CURRENT),
+    ("not_null", "stg_subscriptions", "account_id", None),
+    ("relationships", "stg_subscriptions", "account_id", "stg_accounts.account_id"),
+    ("accepted_values", "stg_subscriptions", "billing_frequency", ("monthly", "annual")),
+    # --- models/reporting/dimensions/schema.yml ---
+    ("not_null", "dim_account", "account_key", None),
+    ("unique", "dim_account", "account_key", None),
+    ("not_null", "dim_account", "account_id", None),
+    ("not_null", "dim_account", "valid_from", None),
+    ("not_null", "dim_subscription", "subscription_key", None),
+    ("unique", "dim_subscription", "subscription_key", None),
+    ("not_null", "dim_subscription", "subscription_id", None),
+    ("not_null", "dim_subscription", "account_key", None),
+    ("relationships", "dim_subscription", "account_key", "dim_account.account_key"),
+    ("not_null", "dim_subscription", "valid_from", None),
+    # --- models/reporting/facts/schema.yml ---
+    ("unique", "fct_subscription_month", "subscription_id,month_start_date", None),
+    ("not_null", "fct_subscription_month", "subscription_key", None),
+    ("relationships", "fct_subscription_month", "subscription_key", "dim_subscription.subscription_key"),
+    ("not_null", "fct_subscription_month", "account_key", None),
+    ("relationships", "fct_subscription_month", "account_key", "dim_account.account_key"),
+    ("not_null", "fct_subscription_month", "month_start_date", None),
+    ("relationships", "fct_subscription_month", "month_start_date", "dim_date.date_day"),
+    ("unique", "fct_account_month", "account_id,month_start_date", None),
+    ("not_null", "fct_account_month", "account_key", None),
+    ("relationships", "fct_account_month", "account_key", "dim_account.account_key"),
+    ("not_null", "fct_account_month", "month_start_date", None),
+    ("relationships", "fct_account_month", "month_start_date", "dim_date.date_day"),
+    # --- models/reporting/schema.yml (mart_mrr_waterfall_month) ---
+    ("not_null", "mart_mrr_waterfall_month", "month_start_date", None),
+    ("unique", "mart_mrr_waterfall_month", "month_start_date", None),
+    ("relationships", "mart_mrr_waterfall_month", "month_start_date", "dim_date.date_day"),
+    *(("not_null", "mart_mrr_waterfall_month", c, None) for c in MART_MEASURES),
+    # --- tests/*.sql (singular) ---
+    ("waterfall ties out", "mart_mrr_waterfall_month", "", None),
+    ("account ties subscription", "fct_account_month", "", "fct_subscription_month"),
+    ("EOM boundary", "fct_subscription_month", "", None),
+)
+SINGULAR = {
+    "waterfall ties out": waterfall_ties_out,
+    "account ties subscription": account_ties_subscription,
+    "EOM boundary": eom_boundary,
+}
+
+
+def _declared(read, kind: str, table: str, cols: str, arg) -> tuple[str, DataFrame]:
+    """One spec row's test name (one rule per kind) and violating rows."""
+    df = read(table)
+    if kind == "not_null":
+        return f"{table}.{cols} not_null", not_null(df, cols)
+    if kind == "accepted_values":
+        return f"{table}.{cols} accepted_values", accepted_values(df, cols, list(arg))
+    if kind == "relationships":
+        parent, parent_col = arg.split(".")
+        return f"{table}.{cols} -> {parent} FK", relationships(df, cols, read(parent), parent_col)
+    if kind == "unique" and "," in cols:
+        return f"{table} grain unique", unique(df, cols.split(","))
+    if kind == "unique" and arg == CURRENT:
+        current = latest_per_key(df, cols, ARRIVAL_ORDER)
+        return f"{table}.{cols} unique ({CURRENT} — A1 deviation)", unique(current, [cols])
+    if kind == "unique":
+        return f"{table}.{cols} unique", unique(df, [cols])
+    return kind, SINGULAR[kind](df, *([read(arg)] if arg else []))
+
+
 def declared_reference_tests(wh) -> dict[str, DataFrame]:
-    """The COMPLETE test matrix the reference declares — every generic
-    test in models/staging/schema.yml, models/reporting/dimensions/
-    schema.yml, models/reporting/facts/schema.yml and
+    """The COMPLETE test matrix the reference declares (``DECLARED``) —
+    every generic test in models/staging/schema.yml, models/reporting/
+    dimensions/schema.yml, models/reporting/facts/schema.yml and
     models/reporting/schema.yml (the mart_mrr_waterfall_month block:
     month_start_date not_null/unique/FK->dim_date + not_null on all 12
     measures, reference reporting/schema.yml:4-41) plus the three
@@ -111,116 +191,11 @@ def declared_reference_tests(wh) -> dict[str, DataFrame]:
     (latest arrival per key), the invariant the declaration means.
     dim_feature / mart_subscription_month_enriched tests target models
     that do not exist in the reference (anomaly A3) and are skipped."""
-    stg_a = wh.read("stg", "stg_accounts")
-    stg_s = wh.read("stg", "stg_subscriptions")
-    cur_a = latest_per_key(stg_a, "account_id", ARRIVAL_ORDER)
-    cur_s = latest_per_key(stg_s, "subscription_id", ARRIVAL_ORDER)
-    dim_a = wh.read("mart", "dim_account")
-    dim_s = wh.read("mart", "dim_subscription")
-    dim_d = wh.read("mart", "dim_date")
-    fsm = wh.read("mart", "fct_subscription_month")
-    fam = wh.read("mart", "fct_account_month")
-    mart = wh.read("mart", "mart_mrr_waterfall_month")
+    frames: dict[str, DataFrame] = {}
 
-    return {
-        # --- models/staging/schema.yml ---
-        "stg_accounts.account_id not_null": not_null(stg_a, "account_id"),
-        "stg_accounts.account_id unique (current view — A1 deviation)": unique(
-            cur_a, "account_id"
-        ),
-        "stg_accounts.signup_date not_null": not_null(stg_a, "signup_date"),
-        "stg_subscriptions.subscription_id not_null": not_null(
-            stg_s, "subscription_id"
-        ),
-        "stg_subscriptions.subscription_id unique (current view — A1 deviation)": unique(
-            cur_s, "subscription_id"
-        ),
-        "stg_subscriptions.account_id not_null": not_null(stg_s, "account_id"),
-        "stg_subscriptions.account_id -> stg_accounts FK": relationships(
-            stg_s, "account_id", stg_a, "account_id"
-        ),
-        "stg_subscriptions.billing_frequency accepted_values": accepted_values(
-            stg_s, "billing_frequency", ["monthly", "annual"]
-        ),
-        # --- models/reporting/dimensions/schema.yml ---
-        "dim_account.account_key not_null": not_null(dim_a, "account_key"),
-        "dim_account.account_key unique": unique(dim_a, "account_key"),
-        "dim_account.account_id not_null": not_null(dim_a, "account_id"),
-        "dim_account.valid_from not_null": not_null(dim_a, "valid_from"),
-        "dim_subscription.subscription_key not_null": not_null(
-            dim_s, "subscription_key"
-        ),
-        "dim_subscription.subscription_key unique": unique(dim_s, "subscription_key"),
-        "dim_subscription.subscription_id not_null": not_null(
-            dim_s, "subscription_id"
-        ),
-        "dim_subscription.account_key not_null": not_null(dim_s, "account_key"),
-        "dim_subscription.account_key -> dim_account FK": relationships(
-            dim_s, "account_key", dim_a, "account_key"
-        ),
-        "dim_subscription.valid_from not_null": not_null(dim_s, "valid_from"),
-        # --- models/reporting/facts/schema.yml ---
-        "fct_subscription_month grain unique": unique_combination(
-            fsm, ["subscription_id", "month_start_date"]
-        ),
-        "fct_subscription_month.subscription_key not_null": not_null(
-            fsm, "subscription_key"
-        ),
-        "fct_subscription_month.subscription_key -> dim_subscription FK": relationships(
-            fsm, "subscription_key", dim_s, "subscription_key"
-        ),
-        "fct_subscription_month.account_key not_null": not_null(fsm, "account_key"),
-        "fct_subscription_month.account_key -> dim_account FK": relationships(
-            fsm, "account_key", dim_a, "account_key"
-        ),
-        "fct_subscription_month.month_start_date not_null": not_null(
-            fsm, "month_start_date"
-        ),
-        "fct_subscription_month.month_start_date -> dim_date FK": relationships(
-            fsm, "month_start_date", dim_d, "date_day"
-        ),
-        "fct_account_month grain unique": unique_combination(
-            fam, ["account_id", "month_start_date"]
-        ),
-        "fct_account_month.account_key not_null": not_null(fam, "account_key"),
-        "fct_account_month.account_key -> dim_account FK": relationships(
-            fam, "account_key", dim_a, "account_key"
-        ),
-        "fct_account_month.month_start_date not_null": not_null(
-            fam, "month_start_date"
-        ),
-        "fct_account_month.month_start_date -> dim_date FK": relationships(
-            fam, "month_start_date", dim_d, "date_day"
-        ),
-        # --- models/reporting/schema.yml (mart_mrr_waterfall_month) ---
-        "mart_mrr_waterfall_month.month_start_date not_null": not_null(
-            mart, "month_start_date"
-        ),
-        "mart_mrr_waterfall_month.month_start_date unique": unique(
-            mart, "month_start_date"
-        ),
-        "mart_mrr_waterfall_month.month_start_date -> dim_date FK": relationships(
-            mart, "month_start_date", dim_d, "date_day"
-        ),
-        **{
-            f"mart_mrr_waterfall_month.{c} not_null": not_null(mart, c)
-            for c in (
-                "begin_mrr",
-                "end_mrr",
-                "net_mrr_change",
-                "new_mrr",
-                "reactivation_mrr",
-                "expansion_mrr",
-                "contraction_mrr",
-                "churn_mrr",
-                "active_accounts",
-                "churned_accounts",
-                "new_accounts",
-                "reactivated_accounts",
-            )
-        },
-        # --- tests/*.sql (singular) ---
-        "waterfall ties out": waterfall_ties_out(mart),
-        "account ties subscription": account_ties_subscription(fam, fsm),
-        "EOM boundary": eom_boundary(fsm),
-    }
+    def read(table: str) -> DataFrame:
+        if table not in frames:
+            frames[table] = wh.read("stg" if table.startswith("stg_") else "mart", table)
+        return frames[table]
+
+    return dict(_declared(read, *row) for row in DECLARED)

@@ -43,8 +43,8 @@ def run_invariants(wh: Warehouse) -> None:
     fsm = wh.read("mart", "fct_subscription_month")
     fam = wh.read("mart", "fct_account_month")
     mart = wh.read("mart", "mart_mrr_waterfall_month")
-    assert tst.unique_combination(fsm, ["subscription_id", "month_start_date"]).count() == 0
-    assert tst.unique_combination(fam, ["account_id", "month_start_date"]).count() == 0
+    assert tst.unique(fsm, ["subscription_id", "month_start_date"]).count() == 0
+    assert tst.unique(fam, ["account_id", "month_start_date"]).count() == 0
     assert tst.waterfall_ties_out(mart).count() == 0
     assert tst.account_ties_subscription(fam, fsm).count() == 0
     assert tst.eom_boundary(fsm).count() == 0
@@ -230,6 +230,58 @@ def test_full_declared_matrix_after_three_batches(spark, wh):
         name: viol.count() for name, viol in checks.items() if viol.count() > 0
     }
     assert failures == {}
+
+
+def test_each_declared_kind_fails_by_name(spark, wh):
+    """One injected violation per kind of declared test — not_null,
+    single-column unique, grain unique, accepted_values, relationships
+    and the three singular tests — reports exactly that test's name.
+    Each fault lives in its own table (two in fct_account_month, on
+    different rows) and is applied as the tests read the table."""
+    from pyspark.sql import functions as F
+
+    def changed(pick=F.lit(True), **cols):
+        def fault(df):
+            row = df.filter(pick).orderBy(*df.columns).limit(1)
+            return df.exceptAll(row).unionByName(row.withColumns(cols))
+
+        return fault
+
+    def duplicated(df):
+        return df.unionByName(df.orderBy(*df.columns, ascending=False).limit(1))
+
+    faults = {
+        "stg_accounts": changed(signup_date=F.lit(None).cast("date")),
+        "stg_subscriptions": changed(billing_frequency=F.lit("weekly")),
+        "dim_account": duplicated,
+        "dim_subscription": changed(account_key=F.lit("no-such-account")),
+        "fct_account_month": lambda df: duplicated(
+            changed(mrr_end_mrr=F.col("mrr_end_mrr") + 1.0)(df)
+        ),
+        "mart_mrr_waterfall_month": changed(end_mrr=F.col("end_mrr") + 1.0),
+        "fct_subscription_month": changed(
+            F.col("mrr_amount") > 0, subscription_end_date=F.col("month_start_date")
+        ),
+    }
+
+    class Faulty:
+        def read(self, schema, table):
+            df = wh.read(schema, table)
+            return faults[table](df) if table in faults else df
+
+    failing = {
+        name for name, viol in tst.declared_reference_tests(Faulty()).items() if viol.count()
+    }
+    assert failing == {
+        "stg_accounts.signup_date not_null",
+        "stg_subscriptions.billing_frequency accepted_values",
+        "dim_account.account_key unique",
+        "dim_subscription.account_key -> dim_account FK",
+        "fct_account_month grain unique",
+        "account ties subscription",
+        "waterfall ties out",
+        "EOM boundary",
+    }
 
 
 def _tables(wh: Warehouse) -> list[tuple[str, str]]:

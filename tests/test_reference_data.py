@@ -53,8 +53,8 @@ def test_invariants_at_reference_scale(spark, wh):
     fam = wh.read("mart", "fct_account_month")
     mart = wh.read("mart", "mart_mrr_waterfall_month")
     assert fsm.count() > 10_000  # ~5k subs x active months
-    assert tst.unique_combination(fsm, ["subscription_id", "month_start_date"]).count() == 0
-    assert tst.unique_combination(fam, ["account_id", "month_start_date"]).count() == 0
+    assert tst.unique(fsm, ["subscription_id", "month_start_date"]).count() == 0
+    assert tst.unique(fam, ["account_id", "month_start_date"]).count() == 0
     assert tst.waterfall_ties_out(mart).count() == 0
     assert tst.account_ties_subscription(fam, fsm).count() == 0
     assert tst.eom_boundary(fsm).count() == 0

@@ -120,8 +120,8 @@ def test_invariants_hold_at_20x(spark, wh):
     fsm = wh.read("mart", "fct_subscription_month")
     fam = wh.read("mart", "fct_account_month")
     mart = wh.read("mart", "mart_mrr_waterfall_month")
-    assert tst.unique_combination(fsm, ["subscription_id", "month_start_date"]).count() == 0
-    assert tst.unique_combination(fam, ["account_id", "month_start_date"]).count() == 0
+    assert tst.unique(fsm, ["subscription_id", "month_start_date"]).count() == 0
+    assert tst.unique(fam, ["account_id", "month_start_date"]).count() == 0
     assert tst.waterfall_ties_out(mart).count() == 0
     assert tst.account_ties_subscription(fam, fsm).count() == 0
     assert tst.eom_boundary(fsm).count() == 0

@@ -74,6 +74,31 @@ def test_null_record_hash_counts_as_change(spark):
     assert rows["a2"]["dbt_valid_to"] is None
 
 
+def test_merge_plan_is_one_full_outer_join_without_checkpoint(spark, tmp_path):
+    """Every branch of the merge comes out of one classified full-outer
+    join: no second join, and no checkpointed RDD (which a plan shows as
+    ``Scan ExistingRDD``) between the join and its consumers. Both
+    inputs are parquet, so any ExistingRDD would be the merge's own."""
+    import contextlib
+    import io
+
+    scd2_merge(None, df_of(spark, [("K1", "a", "h1", T1), ("K2", "b", "h2", T1)]), "key").write.parquet(
+        str(tmp_path / "old")
+    )
+    df_of(spark, [("K1", "a2", "h1x", T2), ("K3", "c", "h3", T2)]).write.parquet(str(tmp_path / "new"))
+    merged = scd2_merge(
+        spark.read.parquet(str(tmp_path / "old")), spark.read.parquet(str(tmp_path / "new")), "key"
+    )
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        merged.explain("formatted")
+    plan = buf.getvalue()
+    assert plan.count("Join type: FullOuter") == 1, plan
+    assert plan.count("Join type:") == 1, plan
+    assert "ExistingRDD" not in plan, plan
+    assert merged.count() == 4
+
+
 def test_scd2_invariants_under_random_batch_sequences(spark):
     """Property test: any sequence of batches must leave (1) at most one
     open row per key, (2) non-overlapping ordered validity intervals,

@@ -3,6 +3,7 @@
 Usage:
     python tools/dump_plans.py --out DIR [--suffix _after] [--sf-dir DIR] name [name ...]
     python tools/dump_plans.py --out DIR [--suffix _after] --warehouse WH [model ...]
+    python tools/dump_plans.py --out DIR [--suffix _after] --warehouse WH --tests
 
 Writes <out>/<name><suffix>.txt per query — the evidence for plan-shape
 claims. With ``--warehouse`` each name is a pipeline model (default: all
@@ -10,7 +11,9 @@ of them, in build order) and the plan dumped is ``m.fn(ctx)`` over that
 warehouse's current state, exactly what the next ``runner.py build``
 would materialize: incremental models see their existing targets. Run
 the same command from a checkout of the old commit with
-``--suffix _before`` to capture the pre-change plans.
+``--suffix _before`` to capture the pre-change plans. ``--tests`` dumps
+the 48 declared-test frames over that warehouse instead, one file per
+test name (non-alphanumerics folded to ``_``).
 """
 
 from __future__ import annotations
@@ -19,6 +22,7 @@ import argparse
 import contextlib
 import io
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -41,8 +45,15 @@ def _plans(spark, args):
     from duckdb_dbt_finance_warehouse_spark.plans.registry import Context
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
+    wh = Warehouse(spark, args.warehouse)
+    if args.tests:
+        from duckdb_dbt_finance_warehouse_spark.plans.testing import declared_reference_tests
+
+        for name, df in declared_reference_tests(wh).items():
+            yield re.sub(r"[^A-Za-z0-9_.]+", "_", name).strip("_"), df
+        return
     pipe = build_pipeline()
-    ctx = Context(spark, Warehouse(spark, args.warehouse), pipe)
+    ctx = Context(spark, wh, pipe)
     for name in args.names or pipe.topo_order():
         if name not in pipe.models:
             print(f"SKIP {name}: not a pipeline model", flush=True)
@@ -59,9 +70,12 @@ def main() -> None:
         "--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     )
     ap.add_argument("--warehouse", default=None, help="dump pipeline models over this root")
+    ap.add_argument("--tests", action="store_true", help="with --warehouse: the declared tests")
     args = ap.parse_args()
     if args.warehouse is None and not args.names:
         ap.error("name the suite entries to dump, or pass --warehouse")
+    if args.tests and (args.warehouse is None or args.names):
+        ap.error("--tests takes --warehouse and no names")
 
     os.makedirs(args.out, exist_ok=True)
     spark = get_spark("dump_plans")
