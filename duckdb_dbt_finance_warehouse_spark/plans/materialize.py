@@ -1,22 +1,32 @@
 """Materialization policies (SURVEY §7.3).
 
-Scale design notes:
+Each model lands through one ``Warehouse.write`` call; how a table lands
+on disk is decided only by ``sources.tables``:
 
-- ``incremental_delete_insert`` with a partition key is DYNAMIC PARTITION
-  OVERWRITE: the recomputed months replace exactly their partitions; the
-  rest of a 100 TB fact table is untouched. Requires
-  ``spark.sql.sources.partitionOverwriteMode=dynamic`` (set in both the
-  session factory and defensively here).
-  A delete+insert model without a partition key is rejected: keyed
-  replacement over arbitrary unique keys is ``sources.tables.merge_upsert``.
-- ``incremental_append`` writes only the new batch's rows; the
-  high-watermark filter itself lives in the model function (it is model
-  logic, as in the reference: stg_accounts.sql:9-11).
+- A FULL build (the ``table`` policy, a first build, ``--full-refresh``)
+  is ``overwrite``: the staged swap replaces the whole table, so
+  partitions absent from the recomputed frame (e.g. forward-dated months
+  removed by a fix) do not survive.
+- ``incremental_delete_insert`` is ``overwrite_partitions``: the
+  recomputed months replace exactly their partitions; the rest of a
+  100 TB fact table is untouched. A delete+insert model without a
+  partition key is rejected: keyed replacement over arbitrary unique
+  keys is ``sources.tables.merge_upsert``.
+- ``incremental_append`` is ``append``: only the new batch's rows are
+  written; the high-watermark filter itself lives in the model function
+  (it is model logic, as in the reference: stg_accounts.sql:9-11).
+
+No session setting is read or changed here.
 """
 
 from __future__ import annotations
 
 from .registry import Context, Model
+
+_INCREMENTAL_MODES = {
+    "incremental_append": "append",
+    "incremental_delete_insert": "overwrite_partitions",
+}
 
 
 def materialize(ctx: Context, m: Model) -> None:
@@ -29,35 +39,12 @@ def materialize(ctx: Context, m: Model) -> None:
         run_snapshot(ctx, m)
         return
 
+    if m.materialization not in ("table", *_INCREMENTAL_MODES):
+        raise ValueError(f"unknown materialization {m.materialization}")
     if m.materialization == "incremental_delete_insert" and not m.partition_by:
         raise ValueError(f"{m.name}: incremental_delete_insert needs partition_by")
 
     df = m.fn(ctx)
-
-    if m.materialization == "table" or not ctx.is_incremental(m.name):
-        # a FULL build (table policy, first build, or --full-refresh)
-        # must replace the whole table: the session runs with DYNAMIC
-        # partitionOverwriteMode (for S11), under which a partitioned
-        # overwrite only replaces the partitions present in df — stale
-        # partitions (e.g. forward-dated months removed by a fix) would
-        # silently survive a full refresh. Pin static mode per-write.
-        ctx.wh.write(
-            df, m.schema, m.name, mode="overwrite",
-            partition_by=list(m.partition_by),
-            options={"partitionOverwriteMode": "static"},
-        )
-        return
-
-    if m.materialization == "incremental_append":
-        ctx.wh.write(df, m.schema, m.name, mode="append", partition_by=list(m.partition_by))
-        return
-
-    if m.materialization == "incremental_delete_insert":
-        # dynamic partition overwrite: replaces only partitions present in df
-        ctx.spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        ctx.wh.write(
-            df, m.schema, m.name, mode="overwrite", partition_by=list(m.partition_by)
-        )
-        return
-
-    raise ValueError(f"unknown materialization {m.materialization}")
+    full = m.materialization == "table" or not ctx.is_incremental(m.name)
+    mode = "overwrite" if full else _INCREMENTAL_MODES[m.materialization]
+    ctx.wh.write(df, m.schema, m.name, mode=mode, partition_by=list(m.partition_by))

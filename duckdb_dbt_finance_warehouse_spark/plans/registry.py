@@ -8,15 +8,21 @@ per its policy. No Jinja, no manifest — the DAG is plain data.
 Materializations (SURVEY §2.1 S8-S12):
 - ``view``                      : never written; refs get the lazy DataFrame
   (Catalyst inlines it — same behavior as a SQL view).
-- ``table``                     : full overwrite parquet.
+- ``table``                     : full replace (``overwrite``, the staged
+  swap).
 - ``incremental_append``        : first run full; later runs the model fn
-  filters by high-watermark (ctx.is_incremental) and the policy appends.
+  filters by high-watermark (ctx.is_incremental) and the policy writes
+  with ``append``.
 - ``incremental_delete_insert`` : the model recomputes a rolling month
-  window; the policy writes it with DYNAMIC PARTITION OVERWRITE on the
+  window; the policy writes it with ``overwrite_partitions`` on the
   partition key (month_start_date), replacing exactly the restated
   months — the scale-correct translation of dbt's delete+insert.
   ``partition_by`` is required (materialize raises without it).
-- ``snapshot``                  : SCD2 check-strategy merge (plans/snapshot.py).
+- ``snapshot``                  : SCD2 check-strategy merge (plans/snapshot.py),
+  landed with ``overwrite``.
+
+The three write modes are ``sources.tables.Warehouse.write``'s; a first
+build or ``--full-refresh`` of an incremental model is an ``overwrite``.
 """
 
 from __future__ import annotations

@@ -150,9 +150,9 @@ def run_snapshot(ctx: Context, m: Model) -> None:
     old = ctx.wh.read(m.schema, m.name) if ctx.wh.exists(m.schema, m.name) else None
     key = m.unique_key[0]
     merged = scd2_merge(old, new, unique_key=key)
-    # the merge reads the files it is about to replace -> staged write +
-    # directory swap: old state stays durable until the new one is
-    ctx.wh.write_staged(merged, m.schema, m.name)
+    # the merge reads the files it is about to replace; an overwrite is
+    # the staged swap, so the old state stays durable until the new one is
+    ctx.wh.write(merged, m.schema, m.name)
 
 
 def snapshot_diff(

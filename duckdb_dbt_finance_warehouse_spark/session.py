@@ -7,9 +7,10 @@ and on a large cluster for the 100 TB target:
   dynamic broadcast) so plans self-correct as data scales.
 - ``spark.sql.shuffle.partitions`` sized to cores locally; on a real
   cluster AQE's coalescing makes the initial number mostly irrelevant.
-- Dynamic partition overwrite, which is how the delete+insert
-  incremental materialization restates month partitions without
-  rewriting the whole fact table (SURVEY §7.3).
+- No partition overwrite mode: how a write lands (staged replace,
+  append, or dynamic partition overwrite set on that one write) is
+  decided by ``sources.tables.Warehouse.write``, so a vanilla session
+  and this one write the same tables.
 - UTC session timezone: the reference's batch timestamps are UTC
   wall-clock strings, and the DuckDB oracle compares timestamps
   TZ-naively.
@@ -65,7 +66,6 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))

@@ -6,14 +6,21 @@ mart — dbt_project.yml:14-31 + macros/generate_schema_name.sql). Here a
 — the layout a Spark catalog/metastore would manage on a cluster; keeping
 it plain parquet keeps everything driver-checkable and portable.
 
-Facts are partitioned by ``month_start_date`` so the delete+insert
-incremental materialization becomes dynamic partition overwrite
-(SURVEY §7.3) and month-predicate queries prune partitions at scan time.
+How a table lands on disk is decided here and nowhere else: ``Warehouse.
+write`` has three modes. ``overwrite`` replaces the whole table through
+the staged swap (``write_staged``), ``append`` adds files, and
+``overwrite_partitions`` replaces exactly the partitions the frame holds
+(dynamic partition overwrite, set on that one write). No session setting
+changes what a write does. Facts are partitioned by ``month_start_date``,
+so the delete+insert incremental materialization is a partition
+overwrite (SURVEY §7.3) and month-predicate queries prune partitions at
+scan time.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import weakref
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -169,16 +176,41 @@ class Warehouse:
     def path(self, schema: str, table: str) -> str:
         return os.path.join(self.root, schema, table)
 
-    def _recover(self, schema: str, table: str) -> None:
-        """Heal the one crash window ``write_staged`` has: if a run died
-        between ``rename(target, trash)`` and ``rename(staging, target)``,
-        the only durable copy of the table is the trash sibling. Restore
-        it whenever the canonical path is missing; the trash dir is only
-        deleted after a completed swap, never on entry."""
+    def _recover(self, schema: str, table: str) -> str | None:
+        """The trash rule. ``_trash_<table>`` holds the old state of a
+        ``write_staged`` swap: between its two renames it is the only
+        durable copy, after a swap whose cleanup died it is a stale
+        shadow. Restore it when the table is missing, delete it
+        otherwise; returns "restored", "removed" or None (no trash)."""
         target = self.path(schema, table)
         trash = self.path(schema, f"_trash_{table}")
-        if not os.path.isdir(target) and os.path.isdir(trash):
-            os.rename(trash, target)
+        if not os.path.isdir(trash):
+            return None
+        if os.path.isdir(target):
+            shutil.rmtree(trash, ignore_errors=True)
+            return "removed"
+        os.rename(trash, target)
+        return "restored"
+
+    def tables(self) -> list[tuple[str, str]]:
+        """The warehouse's tables as sorted ``(schema, table)`` pairs. A
+        ``_staging_`` sibling is an unfinished write, never a table; a
+        ``_trash_<table>`` sibling names ``<table>``, which ``exists``
+        heals."""
+        if not os.path.isdir(self.root):
+            return []
+        pairs = []
+        for schema in sorted(os.listdir(self.root)):
+            sdir = os.path.join(self.root, schema)
+            if not os.path.isdir(sdir):
+                continue
+            names = {
+                d.removeprefix("_trash_")
+                for d in os.listdir(sdir)
+                if not d.startswith("_staging_")
+            }
+            pairs += [(schema, t) for t in sorted(names) if self.exists(schema, t)]
+        return pairs
 
     def exists(self, schema: str, table: str) -> bool:
         self._recover(schema, table)
@@ -213,12 +245,12 @@ class Warehouse:
         df: DataFrame,
         partition_by: list[str] | None,
         before: tuple[int, int] | None,
-        replaced: bool,
     ) -> None:
-        """Remember the read-side schema of what was just written. A
-        write that kept earlier files (append, dynamic partition
-        overwrite) is recorded only when the files it kept are known to
-        have the same schema; otherwise the next read infers."""
+        """Remember the read-side schema of what was just written.
+        ``before`` is the table's version before a write that kept its
+        files (append, partition overwrite), None when no files were
+        kept. A write that kept files is recorded only when they are
+        known to have the same schema; otherwise the next read infers."""
         key = (schema, table)
         known = self._reads.pop(key, None)
         parts = set(partition_by or ())
@@ -227,7 +259,7 @@ class Warehouse:
             return _nullable(StructType([f for f in full if f.name not in parts]))
 
         written = data_columns(df.schema)
-        if before is not None and not replaced:
+        if before is not None:
             if known is None or known.version != before:
                 return
             kept = known.data_schema
@@ -246,35 +278,27 @@ class Warehouse:
         table: str,
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
-        options: dict[str, str] | None = None,
     ) -> None:
-        # heal a mid-swap crash from a previous write_staged run: without
-        # this, a plain overwrite recreates the target while the stale
-        # _trash_<table> sibling lingers on disk indefinitely.
+        """Land ``df`` as ``<schema>.<table>``: ``overwrite`` replaces
+        the table through ``write_staged``; ``append`` adds files;
+        ``overwrite_partitions`` replaces the partitions present in
+        ``df`` and keeps the rest (needs ``partition_by``)."""
+        if mode == "overwrite":
+            self.write_staged(df, schema, table, partition_by)
+            return
+        if mode == "append":
+            w = df.write.mode("append")
+        elif mode == "overwrite_partitions":
+            w = df.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        else:
+            raise ValueError(f"unknown write mode {mode!r}")
+        # the files this write keeps must be the table's last durable copy
         self._recover(schema, table)
         before = _version(self.path(schema, table))
-        w = df.write.mode(mode)
-        for k, v in (options or {}).items():
-            w = w.option(k, v)
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(schema, table))
-        # a dynamic partition overwrite keeps the partitions df lacks
-        replaced = mode == "overwrite" and (
-            not partition_by
-            or (
-                (options or {}).get("partitionOverwriteMode")
-                or self.spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            ).lower()
-            == "static"
-        )
-        self._record(schema, table, df, partition_by, before, replaced)
-        # a crash after write_staged's swap but before its cleanup leaves
-        # a stale trash sibling; the write above is now the durable copy,
-        # so the shadow can go.
-        import shutil
-
-        shutil.rmtree(self.path(schema, f"_trash_{table}"), ignore_errors=True)
+        self._record(schema, table, df, partition_by, before)
 
     def write_staged(
         self,
@@ -293,25 +317,22 @@ class Warehouse:
         pattern is a FileSystem.rename of cloud-store prefixes.
 
         Crash recovery: a previous run may have died mid-swap, leaving the
-        old state only under ``_trash_<table>`` — restore it first (see
-        ``_recover``) so a rerun never deletes the sole surviving copy."""
-        import shutil
-
+        old state only under ``_trash_<table>`` — ``_recover`` restores
+        it first so a rerun never deletes the sole surviving copy."""
         self._recover(schema, table)
         target = self.path(schema, table)
         staging = self.path(schema, f"_staging_{table}")
-        trash = self.path(schema, f"_trash_{table}")
         shutil.rmtree(staging, ignore_errors=True)
-        shutil.rmtree(trash, ignore_errors=True)
         w = df.write.mode("overwrite")
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(staging)
         if os.path.isdir(target):
-            os.rename(target, trash)  # old state kept until swap completes
+            # old state kept until the swap completes
+            os.rename(target, self.path(schema, f"_trash_{table}"))
         os.rename(staging, target)
-        shutil.rmtree(trash, ignore_errors=True)
-        self._record(schema, table, df, partition_by, None, True)
+        self._recover(schema, table)  # the old state is now a stale shadow
+        self._record(schema, table, df, partition_by, None)
 
     def vacuum(self, staging_min_age_s: float = 900.0) -> dict[str, int]:
         """Warehouse-wide janitor for the staged-swap lifecycle: a crash
@@ -325,13 +346,11 @@ class Warehouse:
         removed; a live writer refreshes its dir's mtime with every
         file it lands, so anything older is a crash orphan. Pass 0 only
         when you know no writer is running. ``_trash_*`` siblings go
-        through the same recovery rule as ``_recover`` — restored when
-        the canonical dir is missing (they ARE the table), deleted
-        otherwise (stale shadow). Returns counts: staging_removed /
-        trash_restored / trash_removed. On a cluster this is a
-        cloud-store prefix listing + renames — run it from the
-        maintenance schedule."""
-        import shutil
+        through ``_recover`` — restored when the canonical dir is
+        missing (they ARE the table), deleted otherwise (stale shadow).
+        Returns counts: staging_removed / trash_restored / trash_removed.
+        On a cluster this is a cloud-store prefix listing + renames —
+        run it from the maintenance schedule."""
         import time
 
         counts = {"staging_removed": 0, "trash_restored": 0, "trash_removed": 0}
@@ -353,13 +372,9 @@ class Warehouse:
                     shutil.rmtree(full, ignore_errors=True)
                     counts["staging_removed"] += 1
                 elif d.startswith("_trash_"):
-                    table = d[len("_trash_"):]
-                    if os.path.isdir(self.path(schema, table)):
-                        shutil.rmtree(os.path.join(sdir, d), ignore_errors=True)
-                        counts["trash_removed"] += 1
-                    else:
-                        os.rename(os.path.join(sdir, d), self.path(schema, table))
-                        counts["trash_restored"] += 1
+                    done = self._recover(schema, d.removeprefix("_trash_"))
+                    if done:  # None: a concurrent reader healed it first
+                        counts[f"trash_{done}"] += 1
         return counts
 
 

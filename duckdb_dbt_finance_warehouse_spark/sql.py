@@ -9,8 +9,6 @@ user ``spark.sql``. Views use the ``<schema>_<table>`` convention
 
 from __future__ import annotations
 
-import os
-
 from .sources.tables import Warehouse
 
 
@@ -21,15 +19,7 @@ def register_warehouse(wh: Warehouse) -> list[str]:
     shared by two schemas gets no bare alias (first-schema-wins binding
     would silently pick the alphabetically-first one)."""
     names: list[str] = []
-    if not os.path.isdir(wh.root):
-        return names
-    pairs = [
-        (schema, table)
-        for schema in sorted(os.listdir(wh.root))
-        if os.path.isdir(os.path.join(wh.root, schema))
-        for table in sorted(os.listdir(os.path.join(wh.root, schema)))
-        if wh.exists(schema, table)
-    ]
+    pairs = wh.tables()
     table_counts: dict[str, int] = {}
     for _, table in pairs:
         table_counts[table] = table_counts.get(table, 0) + 1

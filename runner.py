@@ -197,20 +197,7 @@ def cmd_fingerprint(args) -> int:
             schema, name = t.split(".", 1)
             targets.append((schema, name))
     else:
-        root = args.warehouse
-        for schema in sorted(os.listdir(root)):
-            sdir = os.path.join(root, schema)
-            if not os.path.isdir(sdir):
-                continue
-            # a _trash_<t> sibling left by a mid-swap crash still names a
-            # real table — probe the REAL name so wh.exists() can heal it
-            # (the anti-entropy scenario this command exists for)
-            names = {
-                n.removeprefix("_trash_") for n in os.listdir(sdir)
-            }
-            for name in sorted(names):
-                if wh.exists(schema, name):
-                    targets.append((schema, name))
+        targets = wh.tables()
     for schema, name in targets:
         r = table_fingerprint(wh.read(schema, name)).first()
         print(f"{schema}.{name}  n_rows={r['n_rows']}  h1={r['h1_sum']}  h2={r['h2_sum']}")
@@ -319,9 +306,10 @@ def cmd_shard(args) -> int:
 
 def cmd_vacuum(args) -> int:
     """Warehouse-wide staged-swap janitor (Warehouse.vacuum): removes
-    orphaned _staging_* siblings older than the 15-min in-flight
-    grace window, heals or clears _trash_* shadows. Safe to run any
-    time (concurrent writers are protected by the age guard)."""
+    orphaned staging siblings older than the 15-min in-flight grace
+    window, heals or clears the old-state shadows of interrupted swaps.
+    Safe to run any time (concurrent writers are protected by the age
+    guard)."""
     spark = get_spark("vacuum")
     wh = Warehouse(spark, args.warehouse)
     counts = wh.vacuum()

@@ -1,7 +1,8 @@
 """Regression pins for the r10 model/plan-layer review findings: edge
 semantics the scenario fixtures never exercised — NULL natural keys,
-full-refresh under dynamic partition-overwrite, multi-version first
-months, nullable diff hashes, and the reference-exact EOM invariant."""
+full-refresh on a session set to dynamic partition-overwrite,
+multi-version first months, nullable diff hashes, and the
+reference-exact EOM invariant."""
 
 from __future__ import annotations
 
@@ -73,28 +74,40 @@ def test_snapshot_diff_classifies_nullable_hashes(spark):
 
 
 def test_full_refresh_replaces_stale_partitions(spark, tmp_path_factory):
-    """The session runs with DYNAMIC partitionOverwriteMode (for the
-    incremental restatement policy), under which a partitioned full
-    rebuild used to leave partitions absent from the recomputed frame
-    alive on disk. The table/full-refresh path must pin static mode."""
+    """A partitioned full rebuild must not leave partitions absent from
+    the recomputed frame alive on disk, whatever the session's
+    partitionOverwriteMode: ``overwrite`` is the staged swap, which
+    replaces the whole table even on a session set to DYNAMIC."""
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
 
+    key = "spark.sql.sources.partitionOverwriteMode"
     wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh")))
     df2 = spark.createDataFrame([("2024-01-01", 1), ("2024-02-01", 2)], "m string, v int")
     wh.write(df2, "marts", "t", mode="overwrite", partition_by=["m"])
     df1 = spark.createDataFrame([("2024-01-01", 9)], "m string, v int")
-    wh.write(
-        df1, "marts", "t", mode="overwrite", partition_by=["m"],
-        options={"partitionOverwriteMode": "static"},
-    )
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "dynamic")
+    try:
+        wh.write(df1, "marts", "t", mode="overwrite", partition_by=["m"])
+    finally:
+        spark.conf.set(key, prev)
     got = wh.read("marts", "t").collect()
     assert len(got) == 1 and got[0]["v"] == 9  # the Feb partition is GONE
 
 
+def test_unknown_write_mode_raises(spark, tmp_path_factory):
+    from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
+
+    wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh")))
+    with pytest.raises(ValueError, match="unknown write mode 'upsert'"):
+        wh.write(spark.range(1), "marts", "t", mode="upsert")
+    assert not wh.exists("marts", "t")
+
+
 def test_delete_insert_without_partition_key_raises(spark, tmp_path_factory):
-    """incremental_delete_insert is dynamic partition overwrite; a model
+    """incremental_delete_insert is a partition overwrite; a model
     declaring it without ``partition_by`` is rejected before its
-    function runs."""
+    function runs, and so is a materialization no policy knows."""
     from duckdb_dbt_finance_warehouse_spark.plans.materialize import materialize
     from duckdb_dbt_finance_warehouse_spark.plans.registry import Context, Model, Pipeline
     from duckdb_dbt_finance_warehouse_spark.sources.tables import Warehouse
@@ -102,12 +115,17 @@ def test_delete_insert_without_partition_key_raises(spark, tmp_path_factory):
     def never(ctx):
         raise AssertionError("model function ran")
 
-    m = Model("keyed", "mart", never, (), "incremental_delete_insert", unique_key=("id",))
+    keyed = Model("keyed", "mart", never, (), "incremental_delete_insert", unique_key=("id",))
+    odd = Model("odd", "mart", never, (), "incremental_merge")
     wh = Warehouse(spark, str(tmp_path_factory.mktemp("wh")))
     pipeline = Pipeline()
-    pipeline.register(m)
+    pipeline.register(keyed)
+    pipeline.register(odd)
     with pytest.raises(ValueError, match="keyed: incremental_delete_insert needs partition_by"):
-        materialize(Context(spark, wh, pipeline), m)
+        materialize(Context(spark, wh, pipeline), keyed)
+    with pytest.raises(ValueError, match="unknown materialization incremental_merge"):
+        materialize(Context(spark, wh, pipeline), odd)
+    assert wh.tables() == []
 
 
 def test_scd2_month_dim_backdates_only_earliest_version(spark):

@@ -116,10 +116,34 @@ def test_dim_date_has_one_month_start_row_per_month(wh):
     assert len(months) == len(set(months)) == dd.select("month_start_date").distinct().count()
 
 
+def _month_files(wh: Warehouse, table: str, before: date) -> set[str]:
+    """The parquet files of ``mart.<table>``'s partitions before ``before``."""
+    root = wh.path("mart", table)
+    return {
+        os.path.join(d, f)
+        for d in os.listdir(root)
+        if d.startswith("month_start_date=") and date.fromisoformat(d.split("=")[1]) < before
+        for f in os.listdir(os.path.join(root, d))
+        if f.endswith(".parquet")
+    }
+
+
 def test_b2_incremental_scd2(spark, wh, tmp_path_factory):
     tmpdir = str(tmp_path_factory.mktemp("csv"))
     ingest_batch(wh, tmpdir, "b2")
-    build_pipeline().run(spark, wh, variables=VARS, full_refresh=False)
+    # the build runs on a session with the vanilla driver's STATIC
+    # partition overwrite mode, and leaves that mode alone
+    key = "spark.sql.sources.partitionOverwriteMode"
+    kept = _month_files(wh, "fct_subscription_month", date(2024, 4, 1))
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        build_pipeline().run(spark, wh, variables=VARS, full_refresh=False)
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, prev)
+    # the restatement rewrote Apr-Jun only: Jan-Mar keep their files
+    assert kept and _month_files(wh, "fct_subscription_month", date(2024, 4, 1)) == kept
 
     # staging is an append-only arrival log with HWM filtering
     assert wh.read("stg", "stg_accounts").count() == 5  # 3 + 2
@@ -386,21 +410,46 @@ def test_dag_listing_is_topological():
         seen.add(name)
 
 
-def test_register_warehouse_views(spark, tmp_path_factory):
+def test_register_warehouse_views(spark, tmp_path_factory, capsys):
     """``runner.py query``'s registration (sql.register_warehouse): a
     ``<schema>_<table>`` temp view per table, and a bare-name alias only
-    for a table name no other schema shares."""
+    for a table name no other schema shares. Crash leftovers of a staged
+    swap are not tables: an orphaned staging sibling is skipped, and a
+    trash sibling that is a table's only copy is restored under the
+    table's name — by registration and by ``runner.py fingerprint``."""
+    import argparse
+    import shutil
+
+    import runner
+
     from duckdb_dbt_finance_warehouse_spark.sql import register_warehouse
 
     w = Warehouse(spark, str(tmp_path_factory.mktemp("views_wh")))
     w.write(spark.range(3), "stg", "t")
     w.write(spark.range(5), "mart", "t")
     w.write(spark.range(7), "mart", "u")
+    w.write(spark.range(2), "mart", "a")
+    w.write(spark.range(4), "mart", "b")
+    shutil.copytree(w.path("mart", "a"), w.path("mart", "_staging_a"))
+
+    def crash_b():
+        os.rename(w.path("mart", "b"), w.path("mart", "_trash_b"))
+
+    crash_b()
     names = register_warehouse(w)
-    assert sorted(names) == ["mart_t", "mart_u", "stg_t", "u"]
+    assert sorted(names) == ["a", "b", "mart_a", "mart_b", "mart_t", "mart_u", "stg_t", "u"]
+    assert not os.path.isdir(w.path("mart", "_trash_b"))
+    assert spark.sql("SELECT count(*) FROM b").first()[0] == 4
     assert spark.sql("SELECT count(*) FROM stg_t").first()[0] == 3
     assert spark.sql("SELECT count(*) FROM mart_t").first()[0] == 5
     assert spark.sql("SELECT count(*) FROM u").first()[0] == 7
+
+    crash_b()
+    capsys.readouterr()
+    assert runner.cmd_fingerprint(argparse.Namespace(warehouse=w.root, table=None)) == 0
+    listed = [line.split()[0] for line in capsys.readouterr().out.splitlines()]
+    assert listed == ["mart.a", "mart.b", "mart.t", "mart.u", "stg.t"]
+    assert [f"{s}.{t}" for s, t in w.tables()] == listed
 
 
 def test_vacuum_cleans_staging_and_heals_trash(spark, tmp_path_factory):
@@ -463,9 +512,12 @@ def test_shard_export_manifest_merges_to_source_fingerprint(spark, tmp_path_fact
     w.write(src, "stg", "t")
     df = w.read("stg", "t")
     cols = df.columns
-    sharded = df.withColumn("shard", rendezvous_shard("id", 4))
-    w.write(sharded, "shards", "t", partition_by=["shard"])
+    # a re-export to fewer shards replaces the old export's shards
+    for n in (8, 4):
+        sharded = df.withColumn("shard", rendezvous_shard("id", n))
+        w.write(sharded, "shards", "t", partition_by=["shard"])
     back = w.read("shards", "t")
+    assert back.count() == 500
 
     manifest = {
         r["shard"]: r for r in table_fingerprint_by(back, "shard", cols).collect()

@@ -1,7 +1,8 @@
 """Contract of the stored-state lifecycle (``state.stored`` /
 ``persist`` / ``release_persisted`` / ``reset_stored_state``), plus the
-one-mechanism rule: no package module but ``state.py`` persists or
-unpersists a frame itself."""
+one-owner rules: no package module but ``state.py`` persists or
+unpersists a frame itself, and none but ``sources/tables.py`` decides
+how a table lands on disk."""
 
 from __future__ import annotations
 
@@ -120,22 +121,44 @@ def test_release_skips_frames_of_stopped_sessions(spark):
     assert not after.storageLevel.useMemory
 
 
+def _offenders(
+    banned: re.Pattern, owners: tuple[str, ...], extra: tuple[str, ...] = ()
+) -> list[str]:
+    """``file:line`` of every line matching ``banned`` in the package's
+    modules (and ``extra`` files), except the ``owners`` modules."""
+    paths = [os.path.join(root, f) for root, _, files in os.walk(PKG) for f in files]
+    out = []
+    for path in sorted(paths) + [os.path.join(os.path.dirname(PKG), e) for e in extra]:
+        if not path.endswith(".py") or os.path.relpath(path, PKG) in owners:
+            continue
+        with open(path) as fh:
+            for n, line in enumerate(fh, 1):
+                if banned.search(line):
+                    out.append(f"{os.path.relpath(path, os.path.dirname(PKG))}:{n}")
+    return out
+
+
 def test_only_state_module_persists():
     """One mechanism: every persist goes through ``state.persist`` or
     ``state.stored``, so ``release_persisted`` / ``reset_stored_state``
     see every stored frame."""
     banned = re.compile(r"\.persist\(|\.unpersist\(|\.cache\(\)|PlanMemo|ModelMemo")
-    offenders = []
-    for root, _, files in os.walk(PKG):
-        for f in files:
-            path = os.path.join(root, f)
-            if not f.endswith(".py") or path == os.path.join(PKG, "state.py"):
-                continue
-            with open(path) as fh:
-                for n, line in enumerate(fh, 1):
-                    if banned.search(line):
-                        offenders.append(f"{os.path.relpath(path, PKG)}:{n}")
+    offenders = _offenders(banned, ("state.py",))
     assert not offenders, (
         f"persist/unpersist/cache or an old memo class outside state.py: "
         f"{offenders} — use state.persist / state.stored"
+    )
+
+
+def test_only_tables_module_lands_tables():
+    """One storage lifecycle: how a table lands on disk (the write
+    modes, the staged swap's sibling directories, a DataFrame writer,
+    which every ``.parquet(`` write starts from) is known only by
+    ``sources/tables.py``. The package and ``runner.py`` write through
+    ``Warehouse.write``."""
+    banned = re.compile(r"partitionOverwriteMode|_staging_|_trash_|\.write\.\w+\(|\.writeTo\(")
+    offenders = _offenders(banned, (os.path.join("sources", "tables.py"),), ("runner.py",))
+    assert not offenders, (
+        f"storage decided outside sources/tables.py: {offenders} — "
+        f"use Warehouse.write / tables / vacuum"
     )
