@@ -231,6 +231,52 @@ def cooccurrence_pairs_frame(
     )
 
 
+def _bucket_ranks(
+    b: DataFrame, order: list[str], caller: str, overflow_hint: str
+) -> DataFrame:
+    """(v, r) dense int32 ranks 1..|V| of a vertex frame whose rows
+    already carry ``_bucket``: a per-bucket ``row_number`` in ``order``
+    plus each bucket's exclusive offset — the ``stats.ordered_prefix_sums``
+    fold over per-bucket counts, so ranks follow (bucket, order). The
+    bucketed frame feeds the window, the counts and the join, so it is
+    persisted. A graph with more than 2^31-1 vertices raises
+    (raise_error) rather than silently wrapping — at that size the
+    caller's sampled/sharded route is the default anyway."""
+    from pyspark.sql import Window as W
+
+    b = persist(b)
+    w = W.partitionBy("_bucket").orderBy(*order)
+    local = b.withColumn("_lr", F.row_number().over(w))
+    offsets = (
+        b.groupBy("_bucket")
+        .agg(F.count("*").alias("_n"))
+        .agg(F.sort_array(F.collect_list(F.struct("_bucket", "_n"))).alias("_ts"))
+        .select(
+            F.explode(
+                F.expr(
+                    "transform(_ts, (t, i) -> struct(t._bucket AS _bucket, "
+                    "aggregate(slice(_ts, 1, i), 0L, (acc, x) -> acc + x._n)"
+                    " AS _off))"
+                )
+            ).alias("_o")
+        )
+        .select("_o.*")
+    )
+    r = F.col("_lr") + F.col("_off")
+    return local.join(F.broadcast(offsets), "_bucket").select(
+        "v",
+        F.when(r <= F.lit(2**31 - 1), r.cast("int"))
+        .otherwise(
+            F.expr(
+                f"CAST(raise_error('{caller}: >=2^31 vertices "
+                "overflow the int32 rank dictionary — "
+                f"{overflow_hint}') AS INT)"
+            )
+        )
+        .alias("r"),
+    )
+
+
 def _vertex_ranks(
     deg: DataFrame,
     buckets: int = 32,
@@ -246,50 +292,19 @@ def _vertex_ranks(
     back. Callers that don't care about the order pass a constant
     ``d`` and get an id-ordered dictionary.
 
-    Computed with the house two-pass global-rank form (the
-    ``stats.ordered_prefix_sums`` shape — no partitionless
-    ``Window.orderBy`` anywhere): range-partition by (d, v), local
-    row_number per bucket, per-bucket counts folded to exclusive
-    offsets driver-free, broadcast the offsets back. Ranks are
-    1..|V| ≤ 2^31-1; a graph with more vertices than int32 raises
-    (raise_error) rather than silently wrapping — at that size the
-    caller's sampled/sharded route is the default anyway."""
-    from pyspark.sql import Window as W
-
-    b = persist(
+    The buckets are a range partition on (d, v) tagged with
+    ``spark_partition_id``, so bucket order is ≺ order and
+    ``_bucket_ranks`` (the house two-pass form — no partitionless
+    ``Window.orderBy`` anywhere) ranks in ≺. The tag is
+    nondeterministic: a rebuilt plan never cache-matches this
+    dictionary (see ``_dense_ids``)."""
+    return _bucket_ranks(
         deg.repartitionByRange(buckets, F.col("d"), F.col("v")).withColumn(
             "_bucket", F.spark_partition_id()
-        )
-    )
-    w = W.partitionBy("_bucket").orderBy("d", "v")
-    local = b.withColumn("_lr", F.row_number().over(w))
-    offsets = (
-        b.groupBy("_bucket")
-        .agg(F.count("*").alias("_n"))
-        .agg(F.sort_array(F.collect_list(F.struct("_bucket", "_n"))).alias("_ts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(_ts, (t, i) -> struct(t._bucket AS _bucket, "
-                    "aggregate(slice(_ts, 1, i), 0L, (acc, x) -> acc + x._n)"
-                    " AS _off))"
-                )
-            ).alias("_o")
-        )
-        .select("_o.*")
-    )
-    r = F.col("_lr") + F.col("_off")
-    return local.join(F.broadcast(offsets), "_bucket").select(
-        "v",
-        F.when(r <= F.lit(2**31 - 1), r.cast("int"))
-        .otherwise(
-            F.expr(
-                f"CAST(raise_error('{caller}: >=2^31 vertices "
-                "overflow the int32 rank dictionary — "
-                f"{overflow_hint}') AS INT)"
-            )
-        )
-        .alias("r"),
+        ),
+        ["d", "v"],
+        caller,
+        overflow_hint,
     )
 
 
@@ -302,7 +317,7 @@ def _dense_ids(
     """Dense int32 ids (v, r) over a distinct vertex frame, in NO
     particular order — the dictionary for iterative loops (pagerank)
     where only density matters, not the census's (degree, id) total
-    order. Same two-pass bucket-rank form as ``_vertex_ranks`` but the
+    order. Same ``_bucket_ranks`` fold as ``_vertex_ranks`` but the
     bucket is a DETERMINISTIC hash of the id instead of
     ``spark_partition_id`` over a range exchange: a plan containing a
     nondeterministic expression never cache-matches a rebuilt copy of
@@ -313,42 +328,11 @@ def _dense_ids(
     build chain back into the timed run). Everything here is a pure
     function of the data, so CacheManager dedupes rebuilt plans and the
     persisted dictionary is read, not rebuilt."""
-    from pyspark.sql import Window as W
-
-    b = persist(
-        ids.withColumn(
-            "_bucket", F.pmod(F.xxhash64("v"), F.lit(buckets)).cast("int")
-        )
-    )
-    w = W.partitionBy("_bucket").orderBy("v")
-    local = b.withColumn("_lr", F.row_number().over(w))
-    offsets = (
-        b.groupBy("_bucket")
-        .agg(F.count("*").alias("_n"))
-        .agg(F.sort_array(F.collect_list(F.struct("_bucket", "_n"))).alias("_ts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(_ts, (t, i) -> struct(t._bucket AS _bucket, "
-                    "aggregate(slice(_ts, 1, i), 0L, (acc, x) -> acc + x._n)"
-                    " AS _off))"
-                )
-            ).alias("_o")
-        )
-        .select("_o.*")
-    )
-    r = F.col("_lr") + F.col("_off")
-    return local.join(F.broadcast(offsets), "_bucket").select(
-        "v",
-        F.when(r <= F.lit(2**31 - 1), r.cast("int"))
-        .otherwise(
-            F.expr(
-                f"CAST(raise_error('{caller}: >=2^31 vertices "
-                "overflow the int32 rank dictionary — "
-                f"{overflow_hint}') AS INT)"
-            )
-        )
-        .alias("r"),
+    return _bucket_ranks(
+        ids.withColumn("_bucket", F.pmod(F.xxhash64("v"), F.lit(buckets)).cast("int")),
+        ["v"],
+        caller,
+        overflow_hint,
     )
 
 

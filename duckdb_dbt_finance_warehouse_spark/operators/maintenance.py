@@ -16,10 +16,11 @@ own OPTIMIZE or a staged rewrite per group.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..state import persist
+from .stats import ordered_prefix_sums
 
 
 def compaction_plan(
@@ -36,22 +37,11 @@ def compaction_plan(
     target keeps a group to itself. Deterministic, exact integer
     arithmetic throughout.
 
-    The prefix sum is the TWO-PASS distributed form, never a global
-    window (a table at 100 TB can carry 10^5-10^6 partitions; a
+    The prefix sum is ``stats.ordered_prefix_sums`` over the
+    per-partition counts — the two-pass distributed form, never a
+    global window (a table at 100 TB can carry 10^5-10^6 partitions; a
     ``Window.orderBy`` with no partition key moves every summary row
-    through one task and Spark warns about it):
-
-    1. range-partition the summaries into ``buckets`` ordered buckets
-       (``repartitionByRange`` keeps bucket i's keys <= bucket i+1's),
-    2. a bucket-partitioned window computes the LOCAL cumulative sum,
-    3. the per-bucket totals collapse to ONE row (``collect_list``)
-       and an O(buckets^2) higher-order expression turns them into
-       exclusive bucket offsets — no window, no nested-loop join,
-    4. a broadcast join adds each bucket's offset back.
-
-    AQE may coalesce the range exchange; coalescing merges only
-    ADJACENT range partitions, so buckets stay range-contiguous and
-    the local-cumsum + offset decomposition stays exact.
+    through one task and Spark warns about it).
 
     ``part_col`` may be a column name or an expression; pass
     ``part_name`` to label an expression."""
@@ -62,45 +52,10 @@ def compaction_plan(
             f"compaction_plan: target_rows must be positive, got {target_rows}"
         )
     per = df.groupBy(c.alias(name)).agg(F.count("*").alias("n_rows"))
-    bucketed = per.repartitionByRange(buckets, F.col(name)).withColumn(
-        "_bucket", F.spark_partition_id()
-    )
-    # consumed by the local-cumsum window AND the totals aggregate AND
-    # the final join: persist the (tiny, bounded-cardinality) summaries
-    # so the grouped count over the table + range exchange run once;
-    # registered for release_persisted() like the minhash caches
-    bucketed = persist(bucketed)
-    w = (
-        Window.partitionBy("_bucket")
-        .orderBy(name)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    local = bucketed.withColumn("_local_cum", F.sum("n_rows").over(w))
-    offsets = (
-        bucketed.groupBy("_bucket")
-        .agg(F.sum("n_rows").alias("_total"))
-        .agg(F.sort_array(F.collect_list(F.struct("_bucket", "_total"))).alias("_ts"))
-        .select(
-            F.explode(
-                F.expr(
-                    "transform(_ts, (t, i) -> struct("
-                    "t._bucket AS _bucket, "
-                    "aggregate(slice(_ts, 1, i), 0L, (acc, x) -> acc + x._total)"
-                    " AS _offset))"
-                )
-            ).alias("_o")
-        )
-        .select("_o._bucket", "_o._offset")
-    )
-    return (
-        local.join(F.broadcast(offsets), "_bucket")
-        .select(
-            name,
-            "n_rows",
-            F.expr(f"(_local_cum + _offset - n_rows) div {target_rows}").alias(
-                "compaction_group"
-            ),
-        )
+    return ordered_prefix_sums(per, name, ["n_rows"], buckets).select(
+        name,
+        "n_rows",
+        F.expr(f"(cum_n_rows - n_rows) div {target_rows}").alias("compaction_group"),
     )
 
 
@@ -249,6 +204,22 @@ def incremental_rollup(
     return merge_agg_states(stored.unionByName(fresh), key_cols, scale)
 
 
+def _fingerprint(df: DataFrame, keys: list[str], cols: list) -> DataFrame:
+    """(*keys, n_rows, h1_sum, h2_sum): the row count and the sums of
+    the first and second 32-bit words of each row's md5 record hash
+    over ``cols`` — the one rule behind both public fingerprints."""
+    from ..functions.cleaning import record_hash
+
+    h = record_hash(cols)
+    w1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
+    w2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
+    return df.groupBy(*keys).agg(
+        F.count("*").alias("n_rows"),
+        F.sum(w1).alias("h1_sum"),
+        F.sum(w2).alias("h2_sum"),
+    )
+
+
 def table_fingerprint(df: DataFrame, cols: list | None = None) -> DataFrame:
     """Order-independent table checksum: one row
     (n_rows, h1_sum, h2_sum) where h1/h2 are the sums of the first and
@@ -266,16 +237,7 @@ def table_fingerprint(df: DataFrame, cols: list | None = None) -> DataFrame:
     shuffle beyond the 1-row fold. 32-bit words summed as longs
     overflow bigint only past ~2^31 rows PER AGGREGATED GROUP; shard by
     partition and merge (the mergeable property above) before that."""
-    from ..functions.cleaning import record_hash
-
-    h = record_hash(cols if cols is not None else df.columns)
-    w1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    w2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return df.agg(
-        F.count("*").alias("n_rows"),
-        F.sum(w1).alias("h1_sum"),
-        F.sum(w2).alias("h2_sum"),
-    )
+    return _fingerprint(df, [], cols if cols is not None else df.columns)
 
 
 def rendezvous_shard(key_col, n_shards: int, salt: str = "rv0") -> F.Column:
@@ -343,15 +305,6 @@ def table_fingerprint_by(
     this can be verified piecewise AND in aggregate against the source
     table (see ``runner.py shard``). ``cols`` defaults to every column
     except ``group_col``."""
-    from ..functions.cleaning import record_hash
-
     if cols is None:
         cols = [c for c in df.columns if c != group_col]
-    h = record_hash(cols)
-    w1 = F.conv(F.substring(h, 1, 8), 16, 10).cast("long")
-    w2 = F.conv(F.substring(h, 9, 8), 16, 10).cast("long")
-    return df.groupBy(group_col).agg(
-        F.count("*").alias("n_rows"),
-        F.sum(w1).alias("h1_sum"),
-        F.sum(w2).alias("h2_sum"),
-    )
+    return _fingerprint(df, [group_col], cols)

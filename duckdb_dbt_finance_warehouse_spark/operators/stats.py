@@ -176,14 +176,22 @@ def ordered_prefix_sums(
 ) -> DataFrame:
     """Inclusive prefix sums of ``sum_cols`` in ``order_col`` order,
     WITHOUT a global window (the house rule: ``Window.orderBy`` with no
-    partition key funnels every row through one task). Two-pass form,
-    generalized from ``maintenance.compaction_plan``:
+    partition key funnels every row through one task). The house
+    two-pass form, written once here (``maintenance.compaction_plan``
+    and the stats/interval/text callers use it; ``graph._bucket_ranks``
+    is its row-number twin):
 
-    1. range-partition into ``buckets`` ordered buckets,
+    1. range-partition into ``buckets`` ordered buckets
+       (``repartitionByRange`` keeps bucket i's keys <= bucket i+1's),
     2. bucket-partitioned windows compute LOCAL cumulative sums,
     3. per-bucket totals collapse to one row and an O(buckets²)
-       higher-order fold produces exclusive bucket offsets,
+       higher-order fold produces exclusive bucket offsets — no
+       window, no nested-loop join,
     4. a broadcast join adds the offsets back.
+
+    AQE may coalesce the range exchange; coalescing merges only
+    ADJACENT range partitions, so buckets stay range-contiguous and
+    the local-cumsum + offset decomposition stays exact.
 
     ``order_col`` values must be UNIQUE (aggregate first — callers here
     all feed a per-distinct-value grouped table); with ties a ROWS

@@ -1427,8 +1427,8 @@ def a8_exact_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     (percentile ignores nulls; count(*) must not — hence _n vs _n_nn).
     100 TB note: the per-flag sort is one task per flag over the
     flag's distinct values; past a single task's sort budget the
-    two-pass range-bucket house form (compaction_plan's shape) is the
-    next step — not needed at any bench scale."""
+    two-pass range-bucket house form (``stats.ordered_prefix_sums``) is
+    the next step — not needed at any bench scale."""
     li = T(spark, sf_dir, "lineitem")["lineitem"]
     price = F.col("l_extendedprice")
     cnts = (

@@ -2725,30 +2725,9 @@ def x_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_group_quantiles",
-    oracle="""
-    WITH h AS (
-      SELECT event_type,
-             CAST(floor(CAST(value AS DOUBLE) / 5.0) AS BIGINT) AS bin,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
-    c AS (SELECT event_type, bin, cnt,
-                 SUM(cnt) OVER (PARTITION BY event_type ORDER BY bin
-                                ROWS UNBOUNDED PRECEDING) AS cum
-          FROM h),
-    t AS (SELECT event_type, CAST(SUM(cnt) AS BIGINT) AS n
-          FROM h GROUP BY 1),
-    qs AS (SELECT CAST(q AS DOUBLE) AS q
-           FROM (VALUES (0.5), (0.95)) v(q)),
-    sel AS (
-      SELECT c.event_type, qs.q, t.n,
-             min(CASE WHEN c.cum >= qs.q * t.n THEN c.bin END) AS bin
-      FROM qs, c JOIN t USING (event_type) GROUP BY 1, 2, 3)
-    SELECT s.event_type, s.q,
-           round(s.bin * 5.0
-                 + 5.0 * (s.q * s.n - (c.cum - c.cnt)) / c.cnt, 6) AS est_value,
-           s.n
-    FROM sel s JOIN c ON c.event_type = s.event_type AND c.bin = s.bin
-    """,
+    oracle=sketch.quantile_oracle_sql(
+        "events", "value", 5.0, [0.5, 0.95], key="event_type"
+    ),
 )
 def x_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group quantiles from the mergeable fixed-grid histogram
@@ -2763,27 +2742,9 @@ def x_group_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_quantile_sketch",
-    oracle="""
-    WITH h AS (
-      SELECT CAST(floor(CAST(o_totalprice AS DOUBLE) / 1000.0) AS BIGINT) AS bin,
-             CAST(count(*) AS BIGINT) AS cnt
-      FROM orders WHERE o_totalprice IS NOT NULL GROUP BY 1),
-    c AS (SELECT bin, cnt,
-                 SUM(cnt) OVER (ORDER BY bin ROWS UNBOUNDED PRECEDING) AS cum
-          FROM h),
-    t AS (SELECT CAST(SUM(cnt) AS BIGINT) AS n FROM h),
-    qs AS (SELECT CAST(q AS DOUBLE) AS q
-           FROM (VALUES (0.25), (0.5), (0.75), (0.9), (0.99)) v(q)),
-    sel AS (
-      SELECT qs.q, t.n,
-             min(CASE WHEN c.cum >= qs.q * t.n THEN c.bin END) AS bin
-      FROM qs, c, t GROUP BY 1, 2)
-    SELECT s.q,
-           round(s.bin * 1000.0
-                 + 1000.0 * (s.q * s.n - (c.cum - c.cnt)) / c.cnt, 6) AS est_value,
-           s.n
-    FROM sel s JOIN c USING (bin)
-    """,
+    oracle=sketch.quantile_oracle_sql(
+        "orders", "o_totalprice", 1000.0, [0.25, 0.5, 0.75, 0.9, 0.99]
+    ),
 )
 def x_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mergeable fixed-grid quantile sketch
