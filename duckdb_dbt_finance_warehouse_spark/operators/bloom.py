@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..state import stored
+from .sampling import md5_bits, md5_bits_sql
 
 BLOOM_K = 4  # hash functions
 BLOOM_M = 1 << 16  # minimum filter size in bits (m never sizes below this)
@@ -42,10 +43,7 @@ def _bit(key: F.Column, j: int, m: F.Column) -> F.Column:
     (h1 + j*h2) mod m. K positions share a single digest (the
     j-salted-md5-per-hash form paid K digests per row for the same
     asymptotic FP rate). h1 + 3*h2 < 2^62, no overflow."""
-    d = F.md5(key.cast("string"))
-    h1 = F.conv(F.substring(d, 1, 15), 16, 10).cast("long")
-    h2 = F.conv(F.substring(d, 17, 15), 16, 10).cast("long")
-    return F.pmod(h1 + F.lit(j) * h2, m)
+    return F.pmod(md5_bits(key, 1, 15) + F.lit(j) * md5_bits(key, 17, 15), m)
 
 
 def bloom_words_frame(keys: DataFrame, key_col: str) -> DataFrame:
@@ -188,14 +186,13 @@ def bloom_contains(
     at FIRST MATERIALIZATION, not at construction. Callers that need
     fail-fast should count the distinct build keys first."""
     wf = bloom_words_frame(keys, key_col)
-    d = F.md5(F.col(probe_col).cast("string"))
     flagged = (
         probe.crossJoin(F.broadcast(wf))
         # digest halves in their OWN projection so the md5 runs once per
         # probe row; conv() is not a collapse-cheap expression, so
         # CollapseProject keeps this below the K-test projection.
-        .withColumn("_bh1", F.conv(F.substring(d, 1, 15), 16, 10).cast("long"))
-        .withColumn("_bh2", F.conv(F.substring(d, 17, 15), 16, 10).cast("long"))
+        .withColumn("_bh1", md5_bits(probe_col, 1, 15))
+        .withColumn("_bh2", md5_bits(probe_col, 17, 15))
         .withColumn(
             flag,
             _member_pred(
@@ -237,8 +234,7 @@ def bloom_oracle_bits_sql(
     key-count-sized filter."""
     return f"""
       SELECT DISTINCT
-             (('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 1, 15))::BIGINT
-              + j * ('0x' || substr(md5(CAST({key_col} AS VARCHAR)), 17, 15))::BIGINT)
+             ({md5_bits_sql(key_col, 1, 15)} + j * {md5_bits_sql(key_col, 17, 15)})
                % ({m_sql}) AS bit
       FROM ({keys_sql}) k
       CROSS JOIN (SELECT unnest(range({BLOOM_K})) AS j) hashes
@@ -252,8 +248,7 @@ def bloom_oracle_member_pred(
     """DuckDB predicate: all K bit positions of ``probe_col`` are set
     (membership test replaying the Spark semi-joins verbatim)."""
     tests = [
-        f"((('0x' || substr(md5(CAST({probe_col} AS VARCHAR)), 1, 15))::BIGINT"
-        f" + {j} * ('0x' || substr(md5(CAST({probe_col} AS VARCHAR)), 17, 15))::BIGINT)"
+        f"(({md5_bits_sql(probe_col, 1, 15)} + {j} * {md5_bits_sql(probe_col, 17, 15)})"
         f" % ({m_sql})) IN (SELECT bit FROM {bits_cte})"
         for j in range(BLOOM_K)
     ]

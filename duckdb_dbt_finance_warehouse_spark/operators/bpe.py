@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..state import stored
-from .dedup import normalize_text, spread_input
+from .dedup import spread_input, words, words_sql
 
 END_MARKER = "</w>"
 
@@ -63,7 +63,7 @@ def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
     """(word, wc) corpus word frequencies — the one corpus-volume step."""
     return (
         spread_input(df)
-        .select(F.explode(F.split(normalize_text(text_col), " ")).alias("word"))
+        .select(F.explode(words(text_col)).alias("word"))
         .groupBy("word")
         .agg(F.count("*").alias("wc"))
     )
@@ -294,9 +294,9 @@ def bpe_segment(
     import pandas as pd
     from pyspark.sql import types as T
 
-    words = spread_input(df).select(
+    corpus = spread_input(df).select(
         F.col(id_col),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("word"),
+        F.explode(words(text_col)).alias("word"),
     )
     # the merge table is the frozen tokenizer model: bounded by
     # n_merges (a production table is ~32k rows), never
@@ -345,8 +345,8 @@ def bpe_segment(
     # the (word -> tokens) join — localCheckpoint so it runs once
     # (CLAUDE.md intra-query-sharing rule; recomputed per run, not a
     # stored table)
-    words = words.localCheckpoint(eager=False)
-    seg = words.select("word").distinct().mapInPandas(segment, out_schema)
+    corpus = corpus.localCheckpoint(eager=False)
+    seg = corpus.select("word").distinct().mapInPandas(segment, out_schema)
     # seg is VOCAB-volume by construction (distinct words x their
     # tokens) — pin it as the broadcast build side. Left to size
     # estimates Catalyst has no stats below the fold-explode and at
@@ -355,18 +355,18 @@ def bpe_segment(
     # real scale. The hint is unconditional (never size-demoted);
     # that is correct here because a tokenizer vocab is bounded
     # (~100k entries), unlike the corpus side it replaces.
-    pairs = words.join(F.broadcast(seg), "word").select(id_col, "token")
+    pairs = corpus.join(F.broadcast(seg), "word").select(id_col, "token")
     return pairs.groupBy(id_col, "token").agg(F.count("*").alias("n"))
 
 
-def _bpe_ctes(table: str, norm_expr: str, n_merges: int) -> str:
-    """The training run as a reusable CTE chain body (v0, s0, p/b/s per
-    round); compose with a final SELECT over b1..bN (merges) or sN
-    (final per-word segmentation)."""
+def _bpe_ctes(table: str, n_merges: int) -> str:
+    """The training run over ``table``'s ``text`` column as a reusable
+    CTE chain body (v0, s0, p/b/s per round); compose with a final
+    SELECT over b1..bN (merges) or sN (final per-word segmentation)."""
     parts = [
         f"""v0 AS (
       SELECT word, CAST(count(*) AS BIGINT) AS wc
-      FROM (SELECT unnest(string_split({norm_expr}, ' ')) AS word FROM {table})
+      FROM (SELECT unnest({words_sql("text")}) AS word FROM {table})
       GROUP BY 1),
     s0 AS (SELECT word, wc, string_split(word, '') || ['{END_MARKER}'] AS syms
            FROM v0)"""
@@ -393,15 +393,15 @@ def _bpe_ctes(table: str, norm_expr: str, n_merges: int) -> str:
     return "WITH " + ",\n    ".join(parts)
 
 
-def bpe_oracle_sql(table: str, norm_expr: str, n_merges: int = 5) -> str:
-    """The identical training run as one DuckDB query (unrolled CTE
-    chain; list_reduce replays the fold, lambdas capture the winning
-    pair from a cross-joined 1-row CTE)."""
+def bpe_oracle_sql(table: str, n_merges: int = 5) -> str:
+    """The identical training run over ``table``'s ``text`` column as one
+    DuckDB query (unrolled CTE chain; list_reduce replays the fold,
+    lambdas capture the winning pair from a cross-joined 1-row CTE)."""
     union = "\n      UNION ALL ".join(
         f"SELECT * FROM b{r}" for r in range(1, n_merges + 1)
     )
     return (
-        _bpe_ctes(table, norm_expr, n_merges)
+        _bpe_ctes(table, n_merges)
         + f"""
     SELECT merge_round, lhs, rhs, lhs || rhs AS merged, pair_count
     FROM ({union})"""
@@ -410,12 +410,12 @@ def bpe_oracle_sql(table: str, norm_expr: str, n_merges: int = 5) -> str:
 
 def bpe_batched_oracle_sql(
     table: str,
-    norm_expr: str,
     n_rounds: int = 2,
     batch: int = 4,
     overfetch: int = 4,
 ) -> str:
-    """DuckDB replay of ``bpe_train_batched``. The greedy
+    """DuckDB replay of ``bpe_train_batched`` over ``table``'s ``text``
+    column. The greedy
     non-interacting selection unrolls as ``batch`` pick CTEs per round
     — pick_i = the lowest-ranked candidate whose {lhs, rhs, lhs||rhs}
     avoids every symbol of picks 1..i-1 (provably the same set the
@@ -428,7 +428,7 @@ def bpe_batched_oracle_sql(
     parts = [
         f"""v0 AS MATERIALIZED (
       SELECT word, CAST(count(*) AS BIGINT) AS wc
-      FROM (SELECT unnest(string_split({norm_expr}, ' ')) AS word FROM {table})
+      FROM (SELECT unnest({words_sql("text")}) AS word FROM {table})
       GROUP BY 1),
     s1_0 AS MATERIALIZED (SELECT word, wc, string_split(word, '') || ['{END_MARKER}'] AS syms
              FROM v0)"""
@@ -489,16 +489,14 @@ def bpe_batched_oracle_sql(
     )
 
 
-def bpe_segment_oracle_sql(
-    table: str, norm_expr: str, id_col: str, n_merges: int = 5
-) -> str:
+def bpe_segment_oracle_sql(table: str, id_col: str, n_merges: int = 5) -> str:
     """Segmentation replay: after n_merges rounds, s{n}'s syms ARE each
     distinct word's token sequence — join the corpus words back and
     count per doc."""
     return (
-        _bpe_ctes(table, norm_expr, n_merges)
+        _bpe_ctes(table, n_merges)
         + f""",
-    words AS (SELECT {id_col}, unnest(string_split({norm_expr}, ' ')) AS word
+    words AS (SELECT {id_col}, unnest({words_sql("text")}) AS word
               FROM {table}),
     seg AS (SELECT word, unnest(syms) AS token FROM s{n_merges})
     SELECT w.{id_col}, seg.token, CAST(count(*) AS BIGINT) AS n

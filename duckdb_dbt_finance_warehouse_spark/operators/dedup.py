@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 
 # release_persisted stays importable from this module for existing callers
 from ..state import persist, release_persisted, stored  # noqa: F401
+from .sampling import md5_bits
 
 
 def spread_input(df: DataFrame) -> DataFrame:
@@ -47,10 +48,103 @@ def spread_input(df: DataFrame) -> DataFrame:
     return df
 
 
+# ---------------------------------------------------------------------------
+# The text contract: normalization, tokens and the word / character
+# window rules, each written once per engine — a Spark Column helper
+# and its DuckDB SQL twin side by side (the md5-prefix key is
+# ``sampling.md5_bits``). Every text operator and oracle calls these;
+# tests/test_text_contract.py fails on a second copy and checks that
+# both forms agree on whitespace, empty and NULL edge cases.
+# ---------------------------------------------------------------------------
+
+# the whitespace a normalizer collapses, spelled out: ``\s`` includes
+# \x0B in Java regex but not in RE2, so "a\x0Bb" normalized to "a b"
+# in Spark and stayed "a\x0Bb" in DuckDB
+_WHITESPACE = r"[\t\n\x0B\f\r ]+"
+
+
+def _col(c) -> F.Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
 def normalize_text(c) -> F.Column:
     """Canonical text form: lowercase, collapse whitespace, trim."""
-    col = F.col(c) if isinstance(c, str) else c
-    return F.trim(F.regexp_replace(F.lower(col), r"\s+", " "))
+    return F.trim(F.regexp_replace(F.lower(_col(c)), _WHITESPACE, " "))
+
+
+def normalize_sql(expr: str) -> str:
+    """DuckDB form of ``normalize_text``. Its trim names the space: a bare
+    DuckDB trim also strips a no-break space, which Spark's keeps."""
+    return f"trim(regexp_replace(lower({expr}), '{_WHITESPACE}', ' ', 'g'), ' ')"
+
+
+def words(c) -> F.Column:
+    """Tokens: the normalized text split on its single spaces (an empty
+    text is one empty token, a NULL text a NULL array)."""
+    return F.split(normalize_text(c), " ")
+
+
+def words_sql(expr: str) -> str:
+    """DuckDB form of ``words``."""
+    return f"string_split({normalize_sql(expr)}, ' ')"
+
+
+def _starts(n_items: F.Column, back: int, stride: int) -> F.Column:
+    step = [F.lit(stride)] if stride != 1 else []
+    return F.sequence(F.lit(1), F.greatest(n_items - F.lit(back), F.lit(1)), *step)
+
+
+def _starts_sql(n_items: str, back: int, stride: int) -> str:
+    step = f", {stride}" if stride != 1 else ""
+    return f"generate_series(1, greatest({n_items} - {back}, 1){step})"
+
+
+def word_starts(toks, n: int, stride: int = 1) -> F.Column:
+    """1-based starts of the ``n``-token windows over the token array
+    ``toks``: 1, 1 + stride, ... up to greatest(size - n + stride, 1).
+    Stride 1 gives every n-gram; a wider stride gives chunks whose last
+    one reaches the array's end. An array shorter than ``n`` (or NULL)
+    has one window."""
+    return _starts(F.size(_col(toks)), n - stride, stride)
+
+
+def word_starts_sql(toks: str, n: int, stride: int = 1) -> str:
+    """DuckDB form of ``word_starts``."""
+    return _starts_sql(f"len({toks})", n - stride, stride)
+
+
+def word_grams(toks, n: int, key=None) -> F.Column:
+    """The word ``n``-grams of the token array ``toks`` as one array:
+    each window's tokens joined by single spaces, or ``key`` of that
+    string when given (a NULL array gives one empty gram)."""
+    t = _col(toks)
+    key = key or (lambda g: g)
+    return F.transform(word_starts(t, n), lambda i: key(F.concat_ws(" ", F.slice(t, i, n))))
+
+
+def word_grams_sql(toks: str, n: int, key=None) -> str:
+    """DuckDB form of ``word_grams``; ``key`` maps the gram's SQL."""
+    # coalesce: Spark's concat_ws of a NULL slice is the empty string
+    gram = f"coalesce(array_to_string(list_slice({toks}, i, i + {n - 1}), ' '), '')"
+    return f"list_transform({word_starts_sql(toks, n)}, i -> {key(gram) if key else gram})"
+
+
+def char_grams(t, n: int, stride: int = 1) -> F.Column:
+    """The ``n``-character windows of the text ``t`` starting at 1,
+    1 + stride, ... up to greatest(length - n + 1, 1), as one array:
+    every whole window (sampled every ``stride`` characters), or the
+    whole text when it is shorter than ``n``. Code-point positions in
+    both engines; a NULL text gives one NULL window."""
+    c = _col(t)
+    return F.transform(
+        _starts(F.length(c), n - 1, stride), lambda i: F.substring(c, i, n)
+    )
+
+
+def char_grams_sql(t: str, n: int, stride: int = 1) -> str:
+    """DuckDB form of ``char_grams``."""
+    starts = _starts_sql(f"length({t})", n - 1, stride)
+    return f"list_transform({starts}, i -> substr({t}, i, {n}))"
 
 
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -74,8 +168,8 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 def shingles(
     df: DataFrame, id_col: str, text_col: str, k: int = 5, distinct: bool = True
 ) -> DataFrame:
-    """Character k-shingles per document, engine-side:
-    transform(sequence(1, len-k+1), i -> substring(text, i, k)).
+    """Character k-shingles per document, engine-side (``char_grams``
+    of the normalized text).
 
     ``distinct=True`` (the set semantics SimHash bit-counting and
     n-gram Jaccard need) costs a full (id, shingle) shuffle — the
@@ -88,9 +182,7 @@ def shingles(
     norm = normalize_text(text_col)
     out = spread_input(df).select(F.col(id_col), norm.alias("_t")).select(
         id_col,
-        F.explode(
-            F.expr(f"transform(sequence(1, greatest(length(_t) - {k - 1}, 1)), i -> substring(_t, i, {k}))")
-        ).alias("shingle"),
+        F.explode(char_grams("_t", k)).alias("shingle"),
     )
     return out.distinct() if distinct else out
 
@@ -228,7 +320,7 @@ def portable_signatures(
     if not distinct:
         return _portable_signatures_in_row(df, id_col, text_col, k, n_hashes)
     sh = shingles(df, id_col, text_col, k, distinct=True).withColumn(
-        "x", F.conv(F.substring(F.md5("shingle"), 1, 7), 16, 10).cast("long")
+        "x", md5_bits("shingle", 1, 7)
     )
     return _portable_sig_group_minima(sh, id_col, n_hashes)
 
@@ -620,12 +712,7 @@ def ngram_jaccard(
         .select(F.col(id_col), norm.alias("_t"))
         .select(
             id_col,
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(length(_t) - {n - 1}, 1)),"
-                    f" i -> substring(_t, i, {n}))"
-                )
-            ).alias("_grams"),
+            F.array_distinct(char_grams("_t", n)).alias("_grams"),
         )
         .localCheckpoint(eager=False)
     )
@@ -832,7 +919,7 @@ def passage_dedup(
     exchange is the corpus-wide hash groupBy, same scale class as
     exact_dedup's content-hash shuffle."""
     passages = (
-        df.select(F.col(id_col), F.split(normalize_text(text_col), " ").alias("_w"))
+        df.select(F.col(id_col), words(text_col).alias("_w"))
         .select(
             id_col,
             F.posexplode(
@@ -1043,12 +1130,7 @@ def fuzzy_string_join(
     for this, this form pays 5. Ids are assumed unique keys per string
     (both suite panels and the oracle treat them as such; a duplicated
     id would score per-row here vs per-merged-id before)."""
-    gram_set = F.array_distinct(
-        F.expr(
-            f"transform(sequence(1, greatest(length(_t) - {n - 1}, 1)),"
-            f" i -> substring(_t, i, {n}))"
-        )
-    )
+    gram_set = F.array_distinct(char_grams("_t", n))
     # both array frames feed two consumers (their gram explode and the
     # verification join) — localCheckpoint so the parquet text column is
     # scanned once per side, and the checkpointed frame is the COMPACT

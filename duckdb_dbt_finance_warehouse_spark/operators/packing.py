@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import word_starts, words
+
 
 def pack_sequences(
     df: DataFrame,
@@ -122,11 +124,11 @@ def chunk_overlap(
     """Sliding-window chunking with overlap — the RAG/long-context prep
     step that splits documents into fixed-size token windows where
     consecutive chunks share ``overlap`` tokens (so no span is ever cut
-    without context). Chunk starts are 1, 1+stride, ... up to
-    greatest(n_tokens - overlap, 1) with stride = chunk - overlap: the
-    final chunk always reaches the document end, a document shorter
-    than one chunk yields exactly one chunk, and no start begins in the
-    pure-overlap tail.
+    without context). Chunk starts (``dedup.word_starts``) are 1,
+    1+stride, ... up to greatest(n_tokens - overlap, 1) with stride =
+    chunk - overlap: the final chunk always reaches the document end, a
+    document shorter than one chunk yields exactly one chunk, and no
+    start begins in the pure-overlap tail.
 
     Per-row compute only (split + sequence + slice, all codegen'd):
     zero shuffles at any corpus size — chunk rows inherit the scan's
@@ -136,18 +138,14 @@ def chunk_overlap(
             f"chunk_overlap: overlap ({overlap}) must be < chunk_tokens"
             f" ({chunk_tokens})"
         )
-    stride = chunk_tokens - overlap
-    toks = "split(trim(regexp_replace(lower({c}), '\\\\s+', ' ')), ' ')".format(
-        c=text_col
-    )
-    starts = f"sequence(1, greatest(size(_t) - {overlap}, 1), {stride})"
+    starts = word_starts("_t", chunk_tokens, chunk_tokens - overlap)
     return (
-        df.select(F.col(id_col), F.expr(toks).alias("_t"))
+        df.select(F.col(id_col), words(text_col).alias("_t"))
         .select(
             id_col,
             "_t",
             F.size("_t").alias("n_tokens"),
-            F.posexplode(F.expr(starts)).alias("chunk_idx", "start_tok"),
+            F.posexplode(starts).alias("chunk_idx", "start_tok"),
         )
         .select(
             id_col,

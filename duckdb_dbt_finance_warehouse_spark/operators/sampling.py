@@ -26,21 +26,37 @@ from pyspark.sql import functions as F
 TWO_32 = float(1 << 32)
 
 
+def md5_bits(c, start: int = 1, width: int = 15, salt: str | None = None) -> F.Column:
+    """The md5-prefix integer key: hex digits ``start`` to
+    ``start + width - 1`` of md5 over the value's string form, read as a
+    bigint (``width`` <= 15 keeps it non-negative). With ``salt`` the
+    digest covers ``salt:value``, and a NULL value hashes the bare salt
+    (``concat_ws`` skips NULLs in both engines). ``c`` is a column name
+    or a Column; ``md5_bits_sql`` is the DuckDB form."""
+    x = (F.col(c) if isinstance(c, str) else c).cast("string")
+    if salt is not None:
+        x = F.concat_ws(":", F.lit(salt), x)
+    return F.conv(F.substring(F.md5(x), start, width), 16, 10).cast("long")
+
+
+def md5_bits_sql(expr: str, start: int = 1, width: int = 15, salt: str | None = None) -> str:
+    """DuckDB form of ``md5_bits`` over the SQL expression ``expr``."""
+    x = f"CAST({expr} AS VARCHAR)"
+    if salt is not None:
+        x = f"concat_ws(':', '{salt}', {x})"
+    return f"('0x' || substr(md5({x}), {start}, {width}))::BIGINT"
+
+
 def hash_uniform(id_col, salt: str = "s0") -> F.Column:
-    """Deterministic uniform in [0, 1): md5-derived 32-bit value / 2^32.
-    Exact integer -> double division, identical in any engine.
+    """Deterministic uniform in [0, 1): the salted 32-bit ``md5_bits``
+    / 2^32. Exact integer -> double division, identical in any engine.
     ``id_col`` is a column name or a Column expression."""
-    c = F.col(id_col) if isinstance(id_col, str) else id_col
-    h = F.md5(F.concat_ws(":", F.lit(salt), c.cast("string")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") / F.lit(TWO_32)
+    return md5_bits(id_col, 1, 8, salt) / F.lit(TWO_32)
 
 
 def hash_uniform_oracle_sql(id_col: str, salt: str = "s0") -> str:
     """DuckDB SQL for the identical uniform."""
-    return (
-        f"(('0x' || substr(md5('{salt}' || ':' || CAST({id_col} AS VARCHAR)), 1, 8))::BIGINT"
-        f" / {TWO_32})"
-    )
+    return f"({md5_bits_sql(id_col, 1, 8, salt)} / {TWO_32})"
 
 
 def hash_sample(
@@ -278,30 +294,8 @@ def negative_pairs(
     replays it exactly."""
     from pyspark.sql import Window
 
-    cand_bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(salt + "c"), F.col(id_col).cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % buckets
-    )
-    anch_bucket = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(salt + "a"), F.col("anchor_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        % buckets
-    )
+    cand_bucket = md5_bits(id_col, 1, 8, salt + "c") % buckets
+    anch_bucket = md5_bits("anchor_id", 1, 8, salt + "a") % buckets
     cands = df.select(
         F.col(id_col).alias("cand_id"),
         F.col(label_col).alias("cand_label"),
@@ -385,14 +379,7 @@ def importance_resample(
         "_k",
         text_col,
     ).filter(F.col("tok") != "")
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col("tok"))), 1, 8),
-            16,
-            10,
-        ).cast("long")
-        % b
-    )
+    bucket = md5_bits("tok", 1, 8, salt) % b
     # consumed TWICE (the weights aggregate and the scoring join) and
     # genuinely recomputed per run — localCheckpoint, not persist
     # (CLAUDE.md intra-query-sharing rule): without it the tokenize +
@@ -424,13 +411,7 @@ def importance_resample(
             F.expr("_ws div n_tokens").alias("imp_q"),
         )
     )
-    u32 = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.lit(salt), F.col(id_col).cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    u32 = md5_bits(id_col, 1, 8, salt)
     thresh = (1 << 32) // cap
     return scored.select(
         id_col,

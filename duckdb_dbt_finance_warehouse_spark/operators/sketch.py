@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .sampling import md5_bits, md5_bits_sql
+
 B_BITS = 8
 M = 1 << B_BITS  # 256 buckets
 REST_BITS = 52  # 60-bit hash minus the bucket byte
@@ -48,16 +50,10 @@ ALPHA = 0.7213 / (1.0 + 1.079 / M)
 EST_NUM = repr(ALPHA * M * M * float(1 << MAX_RANK))
 
 
-def _hash60(col: str) -> F.Column:
-    return F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10).cast(
-        "long"
-    )
-
-
 def _registers(df: DataFrame, col: str, keys: list[str]) -> DataFrame:
     """(*keys, bucket, max_rank) registers of the non-null ``col``
     values — at most 256 rows per key leave the map-side combine."""
-    h = _hash60(col)
+    h = md5_bits(col)
     base = df.filter(F.col(col).isNotNull()).select(
         *keys,
         F.pmod(h, F.lit(M)).alias("bucket"),
@@ -108,43 +104,46 @@ def _hll_sql(
 ) -> str:
     """DuckDB SQL replaying ``_registers`` + ``_estimate`` bit-for-bit:
     keyed on ``key`` (computed as ``key_expr`` when given), or one
-    ``column_name`` row with no key. ``merged`` adds a ``'merged'``
-    key whose registers are the bucket-wise max over every key."""
+    ``column_name`` row with no key. ``merged`` adds one ``'merged'``
+    row: the no-key estimate of the bucket-wise max over every key."""
     k = f"{key}, " if key else ""
     kdef = f"{key_expr} AS {key}, " if key_expr else k
-    regs, merge = "regs", ""
+
+    def estimate(regs: str, key: str | None, head: str) -> str:
+        kc = f"{key}, " if key else ""
+        return f"""
+    SELECT {head}
+           round(CASE WHEN raw <= {2.5 * M} AND zeros > 0
+                      THEN {float(M)} * ln({float(M)} / zeros)
+                      ELSE raw END, 4) AS hll_estimate,
+           n_present AS buckets_used
+    FROM (
+      SELECT {kc}n_present,
+             {EST_NUM} / (s_present + ({M} - n_present)
+               * (CAST(1 AS BIGINT) << {MAX_RANK})) AS raw,
+             CAST({M} - n_present AS BIGINT) AS zeros
+      FROM (
+        SELECT {kc}CAST(coalesce(SUM(CAST(1 AS BIGINT) << ({MAX_RANK} - max_rank)), 0)
+                    AS BIGINT) AS s_present,
+               CAST(count(*) AS BIGINT) AS n_present
+        FROM {regs} {f"GROUP BY {key}" if key else ""}) agg) est"""
+
+    out = estimate("regs", key, k or f"'{col}' AS column_name, ")
+    mregs = ""
     if merged:
-        regs, merge = "allregs", f"""
-    mregs AS (SELECT 'merged' AS {key}, bucket, max(max_rank) AS max_rank
-              FROM regs GROUP BY 2),
-    allregs AS (SELECT * FROM regs UNION ALL SELECT * FROM mregs),"""
+        mregs = """,
+    mregs AS (SELECT bucket, max(max_rank) AS max_rank FROM regs GROUP BY 1)"""
+        out += "\n    UNION ALL" + estimate("mregs", None, f"'merged' AS {key}, ")
     return f"""
     WITH h AS (
-      SELECT {kdef}('0x' || substr(md5(CAST({col} AS VARCHAR)), 1, 15))::BIGINT AS h
+      SELECT {kdef}{md5_bits_sql(col)} AS h
       FROM {src} WHERE {col} IS NOT NULL),
     r AS (
       SELECT {k}h % {M} AS bucket,
              CASE WHEN (h >> {B_BITS}) = 0 THEN {MAX_RANK}
                   ELSE {MAX_RANK} - length(bin(h >> {B_BITS})) END AS rank
       FROM h),
-    regs AS (SELECT {k}bucket, max(rank) AS max_rank FROM r GROUP BY {k}bucket),{merge}
-    agg AS (
-      SELECT {k}CAST(coalesce(SUM(CAST(1 AS BIGINT) << ({MAX_RANK} - max_rank)), 0)
-                  AS BIGINT) AS s_present,
-             CAST(count(*) AS BIGINT) AS n_present
-      FROM {regs} {f"GROUP BY {key}" if key else ""}),
-    est AS (
-      SELECT {k}n_present,
-             {EST_NUM} / (s_present + ({M} - n_present)
-               * (CAST(1 AS BIGINT) << {MAX_RANK})) AS raw,
-             CAST({M} - n_present AS BIGINT) AS zeros
-      FROM agg)
-    SELECT {k or f"'{col}' AS column_name, "}
-           round(CASE WHEN raw <= {2.5 * M} AND zeros > 0
-                      THEN {float(M)} * ln({float(M)} / zeros)
-                      ELSE raw END, 4) AS hll_estimate,
-           n_present AS buckets_used
-    FROM est
+    regs AS (SELECT {k}bucket, max(rank) AS max_rank FROM r GROUP BY {k}bucket){mregs}{out}
     """
 
 
@@ -195,18 +194,18 @@ def hll_incremental_estimate(
     re-shuffle of all history).
 
     Output: one (part, hll_estimate, buckets_used) row per batch value
-    (cast to string) + one 'merged' row. The register frame feeds both
-    the per-batch estimates and the merge, so it is localCheckpointed
+    (cast to string) + one 'merged' row, the no-key estimate of the
+    merged registers — so an empty frame still gives ('merged', 0.0, 0),
+    as ``hll_distinct`` gives 0.0. The register frame feeds both the
+    per-batch estimates and the merge, so it is localCheckpointed
     (CLAUDE.md subtree rule; in production it IS a stored table)."""
     regs = _registers(
         df.withColumn("part", F.col(batch_col).cast("string")), col, ["part"]
     ).localCheckpoint(eager=False)
-    merged = (
-        regs.groupBy("bucket")
-        .agg(F.max("max_rank").alias("max_rank"))
-        .select(F.lit("merged").alias("part"), "bucket", "max_rank")
+    merged = regs.groupBy("bucket").agg(F.max("max_rank").alias("max_rank"))
+    return _estimate(regs, ["part"]).unionByName(
+        _estimate(merged, []).select(F.lit("merged").alias("part"), "hll_estimate", "buckets_used")
     )
-    return _estimate(regs, ["part"]).unionByName(_estimate(merged, ["part"]))
 
 
 def hll_incremental_oracle_sql(src: str, col: str, batch_expr: str) -> str:
@@ -260,14 +259,16 @@ CMS_W = 4096  # buckets per row
 
 
 def _cms_bucket(item: F.Column, row: int) -> F.Column:
-    """Row-salted portable bucket: md5("<row>:<item>") -> 60-bit int
-    -> mod W. Same string math replays verbatim in any engine."""
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(f"{row}:"), item.cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("long")
-    return F.pmod(h, F.lit(CMS_W))
+    """Row-salted portable bucket: the 60-bit ``md5_bits`` of
+    "<row>:<item>" mod W (``cms_bucket_sql`` in DuckDB)."""
+    return F.pmod(md5_bits(F.concat(F.lit(f"{row}:"), item.cast("string"))), F.lit(CMS_W))
+
+
+def cms_bucket_sql(row: str, item: str) -> str:
+    """DuckDB form of ``_cms_bucket`` for the SQL expressions ``row``
+    and ``item``."""
+    key = f"CAST({row} AS VARCHAR) || ':' || CAST({item} AS VARCHAR)"
+    return f"{md5_bits_sql(key)} % {CMS_W}"
 
 
 def _cms_cells(item: F.Column) -> F.Column:
@@ -299,9 +300,7 @@ def cms_oracle_cells_sql(items_cte: str) -> str:
     """DuckDB CTE body producing the identical (row, bucket, cnt) cells
     from ``items_cte`` (a CTE/subquery exposing column ``item``)."""
     return f"""
-      SELECT r.row,
-             ('0x' || substr(md5(CAST(r.row AS VARCHAR) || ':' || CAST(item AS VARCHAR)), 1, 15))::BIGINT
-               % {CMS_W} AS bucket,
+      SELECT r.row, {cms_bucket_sql("r.row", "item")} AS bucket,
              CAST(count(*) AS BIGINT) AS cnt
       FROM ({items_cte}) items
       CROSS JOIN (SELECT unnest(range({CMS_D})) AS row) r

@@ -7,11 +7,14 @@ join + grouped argmax.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..state import stored
-from .dedup import normalize_text, spread_input
+from .dedup import char_grams, normalize_text, spread_input, word_grams, words
+from .sampling import md5_bits
 
 # tiny per-language stopword inventories for the n-gram/stopword heuristic
 STOPWORDS: dict[str, list[str]] = {
@@ -25,7 +28,7 @@ STOPWORDS: dict[str, list[str]] = {
 def tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return spread_input(df).select(
         F.col(id_col),
-        F.explode(F.split(normalize_text(text_col), " ")).alias("tok"),
+        F.explode(words(text_col)).alias("tok"),
     )
 
 
@@ -72,11 +75,11 @@ def quality_score(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     Mirrors the shape of C4/Gopher-style quality filters."""
     t = normalize_text(text_col)
     n_chars = F.length(t)
-    n_tokens = F.size(F.split(t, " "))
+    n_tokens = F.size(words(text_col))
     n_punct = F.length(F.regexp_replace(t, r"[^\.,;:!\?]", ""))
     all_sw = [w for ws in STOPWORDS.values() for w in ws]
     sw_arr = F.array(*[F.lit(w) for w in all_sw])
-    n_stop = F.size(F.array_intersect(F.split(t, " "), sw_arr))
+    n_stop = F.size(F.array_intersect(words(text_col), sw_arr))
     mean_wlen = (n_chars - (n_tokens - 1)) / n_tokens
     score = (
         F.when((n_chars >= 50) & (n_chars <= 10000), 0.4).otherwise(0.0)
@@ -98,20 +101,18 @@ def token_counts(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """Whitespace token count + a BPE-ish subword proxy: word chunks of
     <=4 chars (ceil(len/4) per word) the way byte-pair vocabularies
     fragment long words, + punctuation as single tokens."""
-    t = normalize_text(text_col)
-    words = F.split(t, " ")
-    ws_count = F.size(words)
-    bpe_ish = F.expr(
-        "aggregate(transform(split(trim(regexp_replace(lower({c}), '\\\\s+', ' ')), ' '),"
-        " w -> CAST(ceil(length(w) / 4.0) AS BIGINT)), CAST(0 AS BIGINT), (a, x) -> a + x)".format(
-            c=text_col
-        )
+    ws = words(text_col)
+    # ceil over a decimal quotient: exact, and the SQL oracle's 4.0 literal
+    bpe_ish = F.aggregate(
+        F.transform(ws, lambda w: F.ceil(F.length(w) / F.lit(Decimal("4.0"))).cast("bigint")),
+        F.lit(0).cast("bigint"),
+        lambda a, x: a + x,
     )
     return df.select(
         F.col(id_col),
-        ws_count.alias("n_ws_tokens"),
+        F.size(ws).alias("n_ws_tokens"),
         bpe_ish.alias("n_bpe_ish_tokens"),
-        F.length(t).alias("n_chars_norm"),
+        F.length(normalize_text(text_col)).alias("n_chars_norm"),
     )
 
 
@@ -224,7 +225,7 @@ def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     return df.select(
         F.col(id_col),
         F.md5(t).alias("content_fp"),
-        F.md5(F.concat_ws(" ", F.array_sort(F.split(t, " ")))).alias("bag_fp"),
+        F.md5(F.concat_ws(" ", F.array_sort(words(text_col)))).alias("bag_fp"),
     )
 
 
@@ -233,16 +234,8 @@ def word_ngrams_all(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFr
     duplicates kept) — just the explode (plus the spread_input guard
     when the scan is under-split)."""
     return spread_input(df).select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_t")
-    ).select(
-        id_col,
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(_t) - {n - 1}, 1)),"
-                f" i -> concat_ws(' ', slice(_t, i, {n})))"
-            )
-        ).alias("gram"),
-    )
+        F.col(id_col), words(text_col).alias("_t")
+    ).select(id_col, F.explode(word_grams("_t", n)).alias("gram"))
 
 
 def word_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
@@ -257,18 +250,8 @@ def word_ngrams(df: DataFrame, id_col: str, text_col: str, n: int) -> DataFrame:
     again on its own key (boilerplate's (source, gram) count,
     containment's gram-keyed pair emitter, decontaminate's gram join)."""
     return spread_input(df).select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_t")
-    ).select(
-        id_col,
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(_t) - {n - 1}, 1)),"
-                    f" i -> concat_ws(' ', slice(_t, i, {n})))"
-                )
-            )
-        ).alias("gram"),
-    )
+        F.col(id_col), words(text_col).alias("_t")
+    ).select(id_col, F.explode(F.array_distinct(word_grams("_t", n))).alias("gram"))
 
 
 def word_ngram_hashes(
@@ -285,18 +268,9 @@ def word_ngram_hashes(
     and the DuckDB oracle replays the identical md5 half, so both
     engines see the same counts bit-for-bit)."""
     return spread_input(df).select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_t")
+        F.col(id_col), words(text_col).alias("_t")
     ).select(
-        id_col,
-        F.explode(
-            F.array_distinct(
-                F.expr(
-                    f"transform(sequence(1, greatest(size(_t) - {n - 1}, 1)),"
-                    f" i -> conv(substring(md5(concat_ws(' ', slice(_t, i, {n}))),"
-                    f" 1, 15), 16, 10))"
-                ).cast("array<long>")
-            )
-        ).alias("_gh"),
+        id_col, F.explode(F.array_distinct(word_grams("_t", n, key=md5_bits))).alias("_gh")
     )
 
 
@@ -327,7 +301,7 @@ def bm25_search(
     global top-k is TakeOrdered — no global sort."""
     lens = df.select(
         F.col(id_col),
-        F.size(F.split(normalize_text(text_col), " ")).alias("dl"),
+        F.size(words(text_col)).alias("dl"),
     )
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
@@ -569,16 +543,8 @@ def repetition_stats(df: DataFrame, id_col: str, text_col: str, n: int = 2) -> D
     doc; a single pathological multi-GB document would skew its
     partition — cap document size upstream."""
     grams = df.repartition(id_col).select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_t")
-    ).select(
-        id_col,
-        F.explode(
-            F.expr(
-                f"transform(sequence(1, greatest(size(_t) - {n - 1}, 1)),"
-                f" i -> concat_ws(' ', slice(_t, i, {n})))"
-            )
-        ).alias("gram"),
-    )
+        F.col(id_col), words(text_col).alias("_t")
+    ).select(id_col, F.explode(word_grams("_t", n)).alias("gram"))
     per_gram = grams.groupBy(id_col, "gram").agg(F.count("*").alias("c"))
     return per_gram.groupBy(id_col).agg(
         F.sum("c").alias("n_grams"),
@@ -614,9 +580,7 @@ def collocations(
     top-k is a distributed TakeOrdered with (ratio desc, w1, w2)
     deterministic tiebreaks. ``min_count`` prunes the long tail before
     the joins."""
-    base = df.select(
-        F.col(id_col), F.split(normalize_text(text_col), " ").alias("_w")
-    )
+    base = df.select(F.col(id_col), words(text_col).alias("_w"))
     uni = (
         base.select(F.explode("_w").alias("tok"))
         .filter(F.col("tok") != "")
@@ -682,12 +646,7 @@ def quality_classifier(
     projection. No joins, no windows, no model I/O."""
     span = 2 * weight_range + 1
     toks = tokens(df, id_col, text_col).filter(F.col("tok") != "")
-    wq = (
-        F.conv(F.substring(F.md5(F.concat_ws(":", F.lit(salt), F.col("tok"))), 1, 8), 16, 10)
-        .cast("long")
-        % span
-        - weight_range
-    )
+    wq = md5_bits("tok", 1, 8, salt) % span - weight_range
     scored = toks.withColumn("wq", wq).groupBy(id_col).agg(
         F.count("*").alias("n_tokens"), F.sum("wq").alias("w_sum")
     )
@@ -734,12 +693,7 @@ def substring_dup_spans(
         spread_input(df).select(F.col(id_col), norm.alias("_t"))
         .select(
             id_col,
-            F.explode(
-                F.expr(
-                    f"transform(sequence(1, greatest(length(_t) - {window - 1}, 1),"
-                    f" {stride}), i -> substring(_t, i, {window}))"
-                )
-            ).alias("win"),
+            F.explode(char_grams("_t", window, stride)).alias("win"),
         )
         .select(id_col, F.md5("win").alias("wh"))
         .distinct()
@@ -904,7 +858,7 @@ def inverted_index(
         spread_input(df)
         .select(
             F.col(id_col),
-            F.array_distinct(F.split(normalize_text(text_col), " ")).alias("_t"),
+            F.array_distinct(words(text_col)).alias("_t"),
         )
         .select(id_col, F.explode("_t").alias("tok"))
         .filter(F.col("tok") != "")

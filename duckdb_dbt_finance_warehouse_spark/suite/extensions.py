@@ -39,7 +39,8 @@ from ..operators import (
 from ..sources.tables import load_testdata
 from .registry import query
 
-_NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
+_NORM = dedup.normalize_sql("text")
+_WORDS = dedup.words_sql("text")
 
 _STOPWORD_VALUES = ", ".join(
     f"('{lang}', '{w}')" for lang, ws in text.STOPWORDS.items() for w in ws
@@ -81,8 +82,8 @@ def x_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_dedup_simhash",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
-    hx AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS th FROM toks),
+      SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
+    hx AS (SELECT doc_id, {sampling.md5_bits_sql("tok")} AS th FROM toks),
     bits AS (
       SELECT doc_id, CAST(i AS INT) AS i,
              SUM(CASE WHEN (th >> CAST(i AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS s
@@ -106,8 +107,7 @@ def x_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents),
     grams AS (
-      SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 3) AS gram
-      FROM t, unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)),
+      SELECT DISTINCT doc_id, unnest({dedup.char_grams_sql("t", 3)}) AS gram FROM t),
     sizes AS (SELECT doc_id, count(*) AS n FROM grams GROUP BY 1),
     pairs AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b
               FROM t a JOIN t b ON b.doc_id = a.doc_id + 1
@@ -189,10 +189,8 @@ def _minhash_portable_oracle(
     return f"""
     WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents),
     sh AS (
-      SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), {k}) AS shingle
-      FROM t, unnest(generate_series(1, greatest(length(t) - {k - 1}, 1))) AS u(i)),
-    hx AS (SELECT doc_id, shingle,
-                  ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS x FROM sh),
+      SELECT DISTINCT doc_id, unnest({dedup.char_grams_sql("t", k)}) AS shingle FROM t),
+    hx AS (SELECT doc_id, shingle, {sampling.md5_bits_sql("shingle", 1, 7)} AS x FROM sh),
     sigl AS (SELECT doc_id, [{mins}] AS mhs FROM hx GROUP BY 1),
     sigs AS (
       SELECT doc_id, CAST(u.i AS INT) AS i, mhs[CAST(u.i AS INT) + 1] AS mh
@@ -225,8 +223,7 @@ from .registry import REGISTRY as _REGISTRY  # noqa: E402
 _REGISTRY["x_dedup_precision_audit"].oracle = f"""
     WITH lsh AS (SELECT * FROM ({_minhash_portable_oracle(threshold=0.5)}) q),
     t AS (SELECT doc_id, {_NORM} AS t FROM documents),
-    g AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS INT), 5) AS gram
-          FROM t, unnest(generate_series(1, greatest(length(t) - 4, 1))) AS u(i)),
+    g AS (SELECT DISTINCT doc_id, unnest({dedup.char_grams_sql("t", 5)}) AS gram FROM t),
     sz AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n FROM g GROUP BY 1),
     inter AS (SELECT l.id_a, l.id_b, CAST(count(*) AS BIGINT) AS ni
               FROM lsh l JOIN g ga ON ga.doc_id = l.id_a
@@ -502,16 +499,14 @@ def x_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_negative_sampling",
-    oracle="""
+    oracle=f"""
     WITH cands AS (
       SELECT vec_id AS cand_id, label AS cand_label,
-             ('0x' || substr(md5('neg0c' || ':' || CAST(vec_id AS VARCHAR)),
-              1, 8))::BIGINT % 8 AS _b
+             {sampling.md5_bits_sql("vec_id", 1, 8, "neg0c")} % 8 AS _b
       FROM embeddings),
     a AS (
       SELECT vec_id AS anchor_id, label AS anchor_label,
-             ('0x' || substr(md5('neg0a' || ':' || CAST(vec_id AS VARCHAR)),
-              1, 8))::BIGINT % 8 AS _b
+             {sampling.md5_bits_sql("vec_id", 1, 8, "neg0a")} % 8 AS _b
       FROM embeddings WHERE vec_id < 20),
     j AS (
       SELECT anchor_id, anchor_label, cand_id, cand_label,
@@ -1195,7 +1190,7 @@ def x_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_text_langid",
     oracle=f"""
     WITH sw(pred_lang, tok) AS (VALUES {_STOPWORD_VALUES}),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     votes AS (SELECT doc_id, pred_lang, CAST(count(*) AS BIGINT) AS votes
               FROM toks JOIN sw USING (tok) GROUP BY 1, 2),
     best AS (SELECT doc_id, pred_lang, votes,
@@ -1216,21 +1211,21 @@ def x_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_text_quality",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents)
+    WITH t AS (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents)
     SELECT doc_id,
            CAST(length(t) AS INT) AS n_chars_norm,
-           CAST(len(string_split(t, ' ')) AS INT) AS n_tokens,
+           CAST(len(ws) AS INT) AS n_tokens,
            CAST(length(regexp_replace(t, '[^\\.,;:!\\?]', '', 'g')) AS INT) AS n_punct,
-           CAST(len(list_intersect(string_split(t, ' '),
+           CAST(len(list_intersect(ws,
                 [{", ".join("'" + w + "'" for ws in text.STOPWORDS.values() for w in ws)}]))
              AS INT) AS n_stopword_kinds,
-           round((length(t) - (len(string_split(t, ' ')) - 1))
-                 / len(string_split(t, ' ')), 6) AS mean_word_len,
+           round((length(t) - (len(ws) - 1))
+                 / len(ws), 6) AS mean_word_len,
            CAST(round(
              (CASE WHEN length(t) BETWEEN 50 AND 10000 THEN 0.4 ELSE 0.0 END)
              + (CASE WHEN length(regexp_replace(t, '[^\\.,;:!\\?]', '', 'g'))
                       / greatest(length(t), 1) < 0.1 THEN 0.3 ELSE 0.0 END)
-             + (CASE WHEN len(list_intersect(string_split(t, ' '),
+             + (CASE WHEN len(list_intersect(ws,
                   [{", ".join("'" + w + "'" for ws in text.STOPWORDS.values() for w in ws)}])) > 0
                 THEN 0.3 ELSE 0.0 END), 2) AS DOUBLE) AS quality_score
     FROM t
@@ -1245,10 +1240,10 @@ def x_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_token_count",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents)
+    WITH t AS (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents)
     SELECT doc_id,
-           CAST(len(string_split(t, ' ')) AS INT) AS n_ws_tokens,
-           CAST(list_sum(list_transform(string_split(t, ' '),
+           CAST(len(ws) AS INT) AS n_ws_tokens,
+           CAST(list_sum(list_transform(ws,
                 w -> CAST(ceil(length(w) / 4.0) AS BIGINT))) AS BIGINT) AS n_bpe_ish_tokens,
            CAST(length(t) AS INT) AS n_chars_norm
     FROM t
@@ -1263,8 +1258,7 @@ def x_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_vocab_coverage",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents),
-    toks AS (SELECT unnest(string_split(t, ' ')) AS tok FROM t),
+    WITH toks AS (SELECT unnest({_WORDS}) AS tok FROM documents),
     counts AS (SELECT tok, CAST(count(*) AS BIGINT) AS n_occurrences
                FROM toks WHERE tok <> '' GROUP BY 1),
     top AS (
@@ -1293,9 +1287,9 @@ def x_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_fingerprint",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents)
+    WITH t AS (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents)
     SELECT doc_id, md5(t) AS content_fp,
-           md5(array_to_string(list_sort(string_split(t, ' ')), ' ')) AS bag_fp
+           md5(array_to_string(list_sort(ws), ' ')) AS bag_fp
     FROM t
     """,
 )
@@ -1309,7 +1303,7 @@ def x_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_tfidf_top_terms",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+      SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf FROM toks GROUP BY 1, 2),
     dft AS (SELECT tok, CAST(count(*) AS BIGINT) AS doc_freq
             FROM (SELECT DISTINCT doc_id, tok FROM toks) GROUP BY 1),
@@ -1438,18 +1432,11 @@ def x_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_decontaminate",
     oracle=f"""
     WITH cg AS (
-      SELECT DISTINCT doc_id,
-             array_to_string(g, ' ') AS gram
-      FROM (SELECT doc_id, string_split({_NORM}, ' ') AS t FROM documents),
-           LATERAL (SELECT list_slice(t, CAST(i AS INT), CAST(i AS INT) + 7) AS g
-                    FROM unnest(generate_series(1, greatest(len(t) - 7, 1))) AS u(i))),
+      SELECT DISTINCT doc_id, unnest({dedup.word_grams_sql('t', 8)}) AS gram
+      FROM (SELECT doc_id, {_WORDS} AS t FROM documents)),
     eg AS (
-      SELECT DISTINCT doc_id AS eval_id,
-             array_to_string(g, ' ') AS gram
-      FROM (SELECT doc_id, string_split({_NORM}, ' ') AS t
-            FROM documents WHERE doc_id < 20),
-           LATERAL (SELECT list_slice(t, CAST(i AS INT), CAST(i AS INT) + 7) AS g
-                    FROM unnest(generate_series(1, greatest(len(t) - 7, 1))) AS u(i)))
+      SELECT DISTINCT doc_id AS eval_id, unnest({dedup.word_grams_sql('t', 8)}) AS gram
+      FROM (SELECT doc_id, {_WORDS} AS t FROM documents WHERE doc_id < 20))
     SELECT cg.doc_id, CAST(count(*) AS BIGINT) AS n_gram_hits,
            min(eg.eval_id) AS first_eval_id
     FROM cg JOIN eg USING (gram)
@@ -2351,16 +2338,14 @@ def x_multimodal_video(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_heavy_hitters",
     oracle=f"""
     WITH toks AS (
-      SELECT unnest(string_split({_NORM}, ' ')) AS item FROM documents),
+      SELECT unnest({_WORDS}) AS item FROM documents),
     cells AS ({sketch.cms_oracle_cells_sql("SELECT item FROM toks")}),
     exact AS (
       SELECT item AS tok, CAST(count(*) AS BIGINT) AS exact_n
       FROM toks GROUP BY 1
       ORDER BY exact_n DESC, tok ASC LIMIT 20),
     probes AS (
-      SELECT tok, exact_n, r.row,
-             ('0x' || substr(md5(CAST(r.row AS VARCHAR) || ':' || tok), 1, 15))::BIGINT
-               % {sketch.CMS_W} AS bucket
+      SELECT tok, exact_n, r.row, {sketch.cms_bucket_sql("r.row", "tok")} AS bucket
       FROM exact CROSS JOIN (SELECT unnest(range({sketch.CMS_D})) AS row) r)
     SELECT p.tok, p.exact_n, CAST(min(c.cnt) AS BIGINT) AS cms_est
     FROM probes p JOIN cells c ON c.row = p.row AND c.bucket = p.bucket
@@ -2398,7 +2383,7 @@ def x_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_bpe_train",
-    oracle=bpe.bpe_oracle_sql("documents", _NORM, n_merges=5),
+    oracle=bpe.bpe_oracle_sql("documents", n_merges=5),
 )
 def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE merge training, 5 rounds (operators/bpe): one
@@ -2412,7 +2397,7 @@ def x_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_bpe_train_batched",
-    oracle=bpe.bpe_batched_oracle_sql("documents", _NORM, n_rounds=2, batch=4),
+    oracle=bpe.bpe_batched_oracle_sql("documents", n_rounds=2, batch=4),
 )
 def x_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched BPE training (operators/bpe.bpe_train_batched — r11
@@ -2431,7 +2416,7 @@ def x_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "x_bpe_segment",
-    oracle=bpe.bpe_segment_oracle_sql("documents", _NORM, "doc_id", n_merges=5),
+    oracle=bpe.bpe_segment_oracle_sql("documents", "doc_id", n_merges=5),
 )
 def x_bpe_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE encode over the corpus with the just-trained merges
@@ -2452,11 +2437,11 @@ _BM25_TERMS = ("spark", "window", "hash")
 @query(
     "x_bm25_search",
     oracle=f"""
-    WITH lens AS (SELECT doc_id, len(string_split({_NORM}, ' ')) AS dl
+    WITH lens AS (SELECT doc_id, len({_WORDS}) AS dl
                   FROM documents),
     stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
                      CAST(sum(dl) AS BIGINT) AS sum_dl FROM lens),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok
              FROM documents),
     tf AS (SELECT doc_id, tok, CAST(count(*) AS BIGINT) AS tf
            FROM toks WHERE tok IN {repr(_BM25_TERMS)} GROUP BY 1, 2),
@@ -2490,14 +2475,11 @@ def x_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_lm_bigram_score",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
-    grams AS (
-      SELECT doc_id,
-             array_to_string(w[CAST(i AS INT) : CAST(i AS INT) + 1], ' ') AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 1, 1))) AS u(i)),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
+    grams AS (SELECT doc_id, unnest({dedup.word_grams_sql('w', 2)}) AS gram FROM t),
     g2 AS (SELECT doc_id, gram, string_split(gram, ' ')[1] AS w1 FROM grams),
     c2 AS (SELECT gram, CAST(count(*) AS BIGINT) AS c2 FROM grams GROUP BY 1),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok
              FROM documents),
     c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY 1),
     v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
@@ -2529,13 +2511,10 @@ def x_lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_lm_bigram_table",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
-    grams AS (
-      SELECT doc_id,
-             array_to_string(w[CAST(i AS INT) : CAST(i AS INT) + 1], ' ') AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 1, 1))) AS u(i)),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
+    grams AS (SELECT doc_id, unnest({dedup.word_grams_sql('w', 2)}) AS gram FROM t),
     c2 AS (SELECT gram, CAST(count(*) AS BIGINT) AS c2 FROM grams GROUP BY 1),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok
              FROM documents),
     c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY 1),
     v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1)
@@ -2562,14 +2541,11 @@ def x_lm_bigram_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_perplexity_buckets",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
-    grams AS (
-      SELECT doc_id,
-             array_to_string(w[CAST(i AS INT) : CAST(i AS INT) + 1], ' ') AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 1, 1))) AS u(i)),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
+    grams AS (SELECT doc_id, unnest({dedup.word_grams_sql('w', 2)}) AS gram FROM t),
     g2 AS (SELECT doc_id, gram, string_split(gram, ' ')[1] AS w1 FROM grams),
     c2 AS (SELECT gram, CAST(count(*) AS BIGINT) AS c2 FROM grams GROUP BY 1),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok
              FROM documents),
     c1 AS (SELECT tok, CAST(count(*) AS BIGINT) AS c1 FROM toks GROUP BY 1),
     v AS (SELECT CAST(count(*) AS BIGINT) AS v FROM c1),
@@ -2610,12 +2586,10 @@ def x_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_boilerplate_grams",
     oracle=f"""
-    WITH t AS (SELECT doc_id, source, string_split({_NORM}, ' ') AS w
+    WITH t AS (SELECT doc_id, source, {_WORDS} AS w
                FROM documents),
     grams AS (
-      SELECT DISTINCT doc_id, source,
-             array_to_string(w[CAST(i AS INT):CAST(i AS INT)+2], ' ') AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 2, 1))) AS u(i)),
+      SELECT DISTINCT doc_id, source, unnest({dedup.word_grams_sql('w', 3)}) AS gram FROM t),
     per AS (SELECT source, gram, CAST(count(*) AS BIGINT) AS n_docs
             FROM grams GROUP BY 1, 2),
     tot AS (SELECT source, CAST(count(*) AS BIGINT) AS source_docs
@@ -2648,11 +2622,8 @@ def x_boilerplate_grams(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_text_repetition",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
-    grams AS (
-      SELECT doc_id,
-             array_to_string(w[CAST(i AS INT) : CAST(i AS INT) + 1], ' ') AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 1, 1))) AS u(i)),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
+    grams AS (SELECT doc_id, unnest({dedup.word_grams_sql('w', 2)}) AS gram FROM t),
     per_gram AS (
       SELECT doc_id, gram, CAST(count(*) AS BIGINT) AS c
       FROM grams GROUP BY 1, 2)
@@ -2878,9 +2849,9 @@ _SW_LIST = ", ".join("'" + w + "'" for ws in text.STOPWORDS.values() for w in ws
                (CASE WHEN length(t) BETWEEN 50 AND 10000 THEN 0.4 ELSE 0.0 END)
                + (CASE WHEN length(regexp_replace(t, '[^\\.,;:!\\?]', '', 'g'))
                         / greatest(length(t), 1) < 0.1 THEN 0.3 ELSE 0.0 END)
-               + (CASE WHEN len(list_intersect(string_split(t, ' '), [{_SW_LIST}])) > 0
+               + (CASE WHEN len(list_intersect(ws, [{_SW_LIST}])) > 0
                   THEN 0.3 ELSE 0.0 END), 2) AS DOUBLE) AS quality_score
-      FROM (SELECT doc_id, {_NORM} AS t FROM documents)),
+      FROM (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents)),
     ranked AS (
       SELECT m.cluster_id, m.member_id, q.quality_score, q.n_chars_norm,
              row_number() OVER (PARTITION BY m.cluster_id
@@ -2941,7 +2912,7 @@ def x_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_curation_pipeline",
     oracle=f"""
     WITH sw(pred_lang, tok) AS (VALUES {_STOPWORD_VALUES}),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     votes AS (SELECT doc_id, pred_lang, CAST(count(*) AS BIGINT) AS votes
               FROM toks JOIN sw USING (tok) GROUP BY 1, 2),
     best AS (SELECT doc_id, pred_lang, votes,
@@ -2957,18 +2928,16 @@ def x_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
                (CASE WHEN length(t) BETWEEN 50 AND 10000 THEN 0.4 ELSE 0.0 END)
                + (CASE WHEN length(regexp_replace(t, '[^\\.,;:!\\?]', '', 'g'))
                         / greatest(length(t), 1) < 0.1 THEN 0.3 ELSE 0.0 END)
-               + (CASE WHEN len(list_intersect(string_split(t, ' '), [{_SW_LIST}])) > 0
+               + (CASE WHEN len(list_intersect(ws, [{_SW_LIST}])) > 0
                   THEN 0.3 ELSE 0.0 END), 2) AS DOUBLE) AS quality_score
-      FROM (SELECT doc_id, {_NORM} AS t FROM documents)),
+      FROM (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents)),
     h AS (SELECT doc_id, md5({_NORM}) AS content_hash FROM documents),
     w AS (SELECT content_hash, min(doc_id) AS keep_id FROM h GROUP BY 1),
     dup AS (SELECT h.doc_id, (h.doc_id != w.keep_id) AS is_duplicate
             FROM h JOIN w USING (content_hash)),
     cg AS (
-      SELECT DISTINCT doc_id, array_to_string(g, ' ') AS gram
-      FROM (SELECT doc_id, string_split({_NORM}, ' ') AS t FROM documents),
-           LATERAL (SELECT list_slice(t, CAST(i AS INT), CAST(i AS INT) + 7) AS g
-                    FROM unnest(generate_series(1, greatest(len(t) - 7, 1))) AS u(i))),
+      SELECT DISTINCT doc_id, unnest({dedup.word_grams_sql('t', 8)}) AS gram
+      FROM (SELECT doc_id, {_WORDS} AS t FROM documents)),
     contaminated AS (
       SELECT DISTINCT c.doc_id
       FROM cg c JOIN (SELECT gram FROM cg WHERE doc_id < 20) e USING (gram)),
@@ -3056,7 +3025,7 @@ _PACK_BUDGET = 512
 _PACK_STREAMS = 16
 
 _PACK_PIECES_CTES = f"""
-    t AS (SELECT doc_id, CAST(len(string_split({_NORM}, ' ')) AS BIGINT) AS toks
+    t AS (SELECT doc_id, CAST(len({_WORDS}) AS BIGINT) AS toks
           FROM documents),
     s AS (SELECT doc_id, doc_id % {_PACK_STREAMS} AS stream, toks
           FROM t WHERE toks > 0),
@@ -3215,9 +3184,9 @@ def x_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_chunk_overlap",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
     s AS (SELECT doc_id, w, CAST(len(w) AS INT) AS n_tokens,
-                 generate_series(1, greatest(len(w) - 16, 1), 48) AS starts
+                 {dedup.word_starts_sql("w", 64, 48)} AS starts
           FROM t)
     SELECT doc_id, n_tokens,
            CAST(i - 1 AS INT) AS chunk_idx,
@@ -3378,7 +3347,7 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_paragraph_dedup",
     oracle=f"""
-    WITH wds AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
+    WITH wds AS (SELECT doc_id, {_WORDS} AS w FROM documents),
     p AS (SELECT doc_id, i AS pos,
                  array_to_string(w[(i - 1) * 8 + 1 : i * 8], ' ') AS passage
           FROM wds, LATERAL (SELECT unnest(generate_series(1,
@@ -3410,8 +3379,8 @@ def x_paragraph_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_simhash_near_dup",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
-    hx AS (SELECT doc_id, ('0x' || substr(md5(tok), 1, 15))::BIGINT AS th FROM toks),
+      SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
+    hx AS (SELECT doc_id, {sampling.md5_bits_sql("tok")} AS th FROM toks),
     bits AS (
       SELECT doc_id, CAST(i AS INT) AS i,
              SUM(CASE WHEN (th >> CAST(i AS INT)) & 1 = 1 THEN 1 ELSE -1 END) AS s
@@ -3506,7 +3475,7 @@ def x_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_collocations",
     oracle=f"""
-    WITH wds AS (SELECT string_split({_NORM}, ' ') AS w FROM documents),
+    WITH wds AS (SELECT {_WORDS} AS w FROM documents),
     uni AS (SELECT tok, count(*) AS c
             FROM (SELECT unnest(w) AS tok FROM wds) WHERE tok <> '' GROUP BY 1),
     tot AS (SELECT sum(c) AS n_toks FROM uni),
@@ -3537,10 +3506,9 @@ def x_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_quality_classifier",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+      SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     w AS (SELECT doc_id,
-                 ('0x' || substr(md5('qw0' || ':' || tok), 1, 8))::BIGINT % 2001
-                   - 1000 AS wq
+                 {sampling.md5_bits_sql("tok", 1, 8, "qw0")} % 2001 - 1000 AS wq
           FROM toks WHERE tok <> ''),
     s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
                  CAST(sum(wq) AS BIGINT) AS w_sum
@@ -3570,10 +3538,8 @@ def x_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_substring_dedup",
     oracle=f"""
     WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents),
-    w AS (SELECT DISTINCT doc_id,
-                 md5(substr(t, CAST(i AS INT), 40)) AS wh
-          FROM t, unnest(generate_series(1, greatest(length(t) - 39, 1), 10))
-               AS u(i)),
+    w AS (SELECT DISTINCT doc_id, md5(win) AS wh
+          FROM (SELECT doc_id, unnest({dedup.char_grams_sql('t', 40, 10)}) AS win FROM t)),
     c AS (SELECT wh, CAST(count(*) AS BIGINT) AS n_docs FROM w GROUP BY 1)
     SELECT w.doc_id,
            CAST(count(*) AS BIGINT) AS n_windows,
@@ -3603,9 +3569,8 @@ def _dataset_overlap_oracle(k: int = 5, n_hashes: int = 64) -> str:
     return f"""
     WITH t AS (SELECT source, {_NORM} AS t FROM documents),
     sh AS (
-      SELECT DISTINCT source, substr(t, CAST(i AS INT), {k}) AS shingle
-      FROM t, unnest(generate_series(1, greatest(length(t) - {k - 1}, 1))) AS u(i)),
-    hx AS (SELECT source, ('0x' || substr(md5(shingle), 1, 7))::BIGINT AS x FROM sh),
+      SELECT DISTINCT source, unnest({dedup.char_grams_sql("t", k)}) AS shingle FROM t),
+    hx AS (SELECT source, {sampling.md5_bits_sql("shingle", 1, 7)} AS x FROM sh),
     seeds(i, a, b) AS (VALUES {seeds}),
     sigs AS (
       SELECT source, i, min((a * x + b) % {PORTABLE_PRIME}) AS mh
@@ -3632,7 +3597,7 @@ def x_dataset_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_zipf_fit",
     oracle=f"""
     WITH toks AS (
-      SELECT source, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+      SELECT source, unnest({_WORDS}) AS tok FROM documents),
     f AS (SELECT source, tok, CAST(count(*) AS BIGINT) AS freq
           FROM toks WHERE tok != '' GROUP BY 1, 2),
     r AS (SELECT source, tok, freq,
@@ -3667,8 +3632,7 @@ def x_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_length_buckets",
     oracle=f"""
-    WITH t AS (SELECT doc_id, {_NORM} AS t FROM documents),
-    n AS (SELECT doc_id, CAST(len(string_split(t, ' ')) AS BIGINT) AS n_tok FROM t),
+    WITH n AS (SELECT doc_id, CAST(len({_WORDS}) AS BIGINT) AS n_tok FROM documents),
     b AS (SELECT n_tok,
                  CASE {" ".join(f"WHEN n_tok <= {c} THEN {c}" for c in packing.LENGTH_BUCKET_CAPS)}
                       ELSE {packing.LENGTH_BUCKET_CAPS[-1]} END AS bucket_cap,
@@ -3765,7 +3729,7 @@ def x_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_tokenizer_fertility",
     oracle=f"""
     WITH sw(pred_lang, tok) AS (VALUES {_STOPWORD_VALUES}),
-    toks AS (SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+    toks AS (SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     votes AS (SELECT doc_id, pred_lang, CAST(count(*) AS BIGINT) AS votes
               FROM toks JOIN sw USING (tok) GROUP BY 1, 2),
     best AS (SELECT doc_id, pred_lang,
@@ -3775,10 +3739,10 @@ def x_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     lang AS (SELECT d.doc_id, coalesce(b.pred_lang, 'und') AS pred_lang
              FROM documents d
              LEFT JOIN (SELECT * FROM best WHERE rn = 1) b USING (doc_id)),
-    t AS (SELECT doc_id, {_NORM} AS t FROM documents),
+    t AS (SELECT doc_id, {_NORM} AS t, {_WORDS} AS ws FROM documents),
     tc AS (SELECT doc_id,
-                  CAST(len(string_split(t, ' ')) AS BIGINT) AS n_ws,
-                  CAST(list_sum(list_transform(string_split(t, ' '),
+                  CAST(len(ws) AS BIGINT) AS n_ws,
+                  CAST(list_sum(list_transform(ws,
                        w -> CAST(ceil(length(w) / 4.0) AS BIGINT))) AS BIGINT) AS n_bpe,
                   CAST(length(t) AS BIGINT) AS n_chars
            FROM t)
@@ -3975,7 +3939,7 @@ def x_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_inverted_index",
     oracle=f"""
     WITH toks AS (
-      SELECT DISTINCT doc_id, unnest(string_split({_NORM}, ' ')) AS tok
+      SELECT DISTINCT doc_id, unnest({_WORDS}) AS tok
       FROM documents),
     b AS (SELECT tok, doc_id, doc_id // 1024 AS block
           FROM toks WHERE tok != '')
@@ -4018,9 +3982,6 @@ def x_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sketch.hll_incremental_estimate(e, "user_id", "batch")
 
 
-_FUZZY_NORM_P = "trim(regexp_replace(lower(s), '\\s+', ' ', 'g'))"
-
-
 @query(
     "x_fuzzy_join",
     oracle=f"""
@@ -4030,12 +3991,10 @@ _FUZZY_NORM_P = "trim(regexp_replace(lower(s), '\\s+', ' ', 'g'))"
       FROM documents WHERE doc_id % 50 = 0),
     corpus AS (SELECT doc_id AS corpus_id, substr(text, 1, 36) AS s
                FROM documents),
-    pg AS (SELECT DISTINCT probe_id, substr(t, CAST(i AS INT), 3) AS gram
-           FROM (SELECT probe_id, {_FUZZY_NORM_P} AS t FROM probes),
-                unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)),
-    cg AS (SELECT DISTINCT corpus_id, substr(t, CAST(i AS INT), 3) AS gram
-           FROM (SELECT corpus_id, {_FUZZY_NORM_P} AS t FROM corpus),
-                unnest(generate_series(1, greatest(length(t) - 2, 1))) AS u(i)),
+    pg AS (SELECT DISTINCT probe_id, unnest({dedup.char_grams_sql('t', 3)}) AS gram
+           FROM (SELECT probe_id, {dedup.normalize_sql('s')} AS t FROM probes)),
+    cg AS (SELECT DISTINCT corpus_id, unnest({dedup.char_grams_sql('t', 3)}) AS gram
+           FROM (SELECT corpus_id, {dedup.normalize_sql('s')} AS t FROM corpus)),
     gdf AS (SELECT gram, count(*) AS _df FROM cg GROUP BY 1),
     cand AS (SELECT DISTINCT pg.probe_id, c.corpus_id
              FROM pg JOIN (SELECT cg.* FROM cg JOIN gdf USING (gram)
@@ -4082,13 +4041,11 @@ def x_fuzzy_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "x_containment_pairs",
     oracle=f"""
-    WITH t AS (SELECT doc_id, string_split({_NORM}, ' ') AS w FROM documents),
+    WITH t AS (SELECT doc_id, {_WORDS} AS w FROM documents),
     grams AS (
       SELECT DISTINCT doc_id,
-             ('0x' || substr(md5(
-               array_to_string(w[CAST(i AS INT):CAST(i AS INT)+4], ' ')
-             ), 1, 15))::BIGINT AS gram
-      FROM t, unnest(generate_series(1, greatest(len(w) - 4, 1))) AS u(i)),
+             unnest({dedup.word_grams_sql('w', 5, key=sampling.md5_bits_sql)}) AS gram
+      FROM t),
     rare AS (SELECT gram FROM grams GROUP BY gram HAVING count(*) <= 100),
     cands AS (
       SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
@@ -4515,10 +4472,9 @@ def x_edit_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_auc_quality",
     oracle=f"""
     WITH toks AS (
-      SELECT doc_id, unnest(string_split({_NORM}, ' ')) AS tok FROM documents),
+      SELECT doc_id, unnest({_WORDS}) AS tok FROM documents),
     w AS (SELECT doc_id,
-                 ('0x' || substr(md5('qw0' || ':' || tok), 1, 8))::BIGINT % 2001
-                   - 1000 AS wq
+                 {sampling.md5_bits_sql("tok", 1, 8, "qw0")} % 2001 - 1000 AS wq
           FROM toks WHERE tok <> ''),
     s AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
                  CAST(sum(wq) AS BIGINT) AS w_sum
@@ -4677,7 +4633,7 @@ def x_embed_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH toks AS (
       SELECT (length(source) >= 5) AS sb,
-             unnest(string_split({_NORM}, ' ')) AS tok
+             unnest({_WORDS}) AS tok
       FROM documents),
     tk AS (SELECT * FROM toks WHERE tok <> ''),
     per AS (SELECT tok,
@@ -4716,11 +4672,10 @@ def x_lexical_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_importance_resample",
     oracle=f"""
     WITH toks AS (SELECT doc_id, (lang = 'en') AS tgt,
-                         unnest(string_split({_NORM}, ' ')) AS tok
+                         unnest({_WORDS}) AS tok
                   FROM documents),
     tk AS (SELECT doc_id, tgt,
-                  ('0x' || substr(md5('ir0' || ':' || tok), 1, 8))::BIGINT
-                    % 16384 AS bkt
+                  {sampling.md5_bits_sql("tok", 1, 8, "ir0")} % 16384 AS bkt
            FROM toks WHERE tok <> ''),
     counts AS (SELECT bkt, CAST(count(*) AS BIGINT) AS cs,
                       CAST(count(*) FILTER (WHERE tgt) AS BIGINT) AS ct
@@ -4735,8 +4690,7 @@ def x_lexical_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                  CAST(sum(w.wq) AS BIGINT) AS ws
           FROM tk JOIN w USING (bkt) GROUP BY 1)
     SELECT doc_id, n_tokens, CAST(ws // n_tokens AS BIGINT) AS imp_q,
-           (('0x' || substr(md5('ir0' || ':' || CAST(doc_id AS VARCHAR)),
-                            1, 8))::BIGINT * 4096
+           ({sampling.md5_bits_sql("doc_id", 1, 8, "ir0")} * 4096
             < (ws // n_tokens) * 1073741824) AS keep
     FROM s
     """,

@@ -37,8 +37,10 @@ OWNERS = {
     # histogram cumulative fold and its oracle's first-bin pick
     "aggregate(cells,": [("sketch.py", "_quantiles")],
     "WHEN c.cum >= qs.q *": [("sketch.py", "quantile_oracle_sql")],
-    # count-min (row, bucket) cell struct
+    # count-min (row, bucket) cell struct, and the oracle's bucket
+    # (mod CMS_W) of its cells and probes
     "range(CMS_D)": [("sketch.py", "_cms_cells")],
+    "CMS_W}": [("sketch.py", "cms_bucket_sql")],
     # fingerprint md5 words
     "F.substring(h, 9, 8)": [("maintenance.py", "_fingerprint")],
     # exclusive bucket offsets of the two-pass prefix form
@@ -110,6 +112,17 @@ def test_hll_estimate_of_an_empty_column_is_zero(spark, con):
         assert (r["hll_estimate"], r["buckets_used"]) == (0.0, 0)
         oracle = con.execute(sketch.hll_oracle_sql(f"(SELECT * FROM {table})", "x")).fetchall()
         assert oracle == [("x", 0.0, 0)]
+
+
+def test_hll_merged_estimate_of_an_empty_frame_is_zero(spark, con):
+    """The 'merged' row is the no-key estimate of the merged registers,
+    so an empty frame still has it — as hll_distinct still gives 0.0 —
+    in both engines."""
+    empty, _ = _frames(spark)
+    rows = [tuple(r) for r in sketch.hll_incremental_estimate(empty, "x", "g").collect()]
+    assert rows == [("merged", 0.0, 0)]
+    oracle = con.execute(sketch.hll_incremental_oracle_sql("empty_t", "x", "g")).fetchall()
+    assert oracle == [("merged", 0.0, 0)]
 
 
 def test_quantiles_of_an_empty_column_are_no_rows(spark, con):

@@ -41,7 +41,7 @@ def simhash_aggregate(df, id_col, text_col, bits=60):
     set each fingerprint bit from the sign of its sum."""
     toks = df.select(
         F.col(id_col),
-        F.explode(F.split(dedup.normalize_text(text_col), " ")).alias("tok"),
+        F.explode(dedup.words(text_col)).alias("tok"),
     ).withColumn("th", F.conv(F.substring(F.md5("tok"), 1, 15), 16, 10).cast("long"))
     bit_sums = [
         F.sum(F.when(F.expr(f"(th >> {i}) & 1") == 1, 1).otherwise(-1)).alias(f"b{i}")

@@ -1906,7 +1906,7 @@ def bpe_segment_hof(df, id_col, text_col, merges):
 
     words = df.select(
         F.col(id_col),
-        F.explode(F.split(dedup.normalize_text(text_col), " ")).alias("word"),
+        F.explode(dedup.words(text_col)).alias("word"),
     )
     mt = merges.orderBy("merge_round").agg(
         F.collect_list(F.struct("lhs", "rhs")).alias("_merges")

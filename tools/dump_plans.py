@@ -14,6 +14,11 @@ the same command from a checkout of the old commit with
 ``--suffix _before`` to capture the pre-change plans. ``--tests`` dumps
 the 48 declared-test frames over that warehouse instead, one file per
 test name (non-alphanumerics folded to ``_``).
+
+Plans are written with their run-specific numbers folded — expression
+ids (``#123`` -> ``#N``), ``[plan_id=N]``, RDD ids and the numeric
+suffix of a lambda variable (``lambda x_12`` -> ``lambda x``) — so a
+``_before``/``_after`` pair compares with plain ``diff``.
 """
 
 from __future__ import annotations
@@ -61,6 +66,21 @@ def _plans(spark, args):
         yield name, pipe.models[name].fn(ctx)
 
 
+_FOLDS = [
+    (re.compile(r"(lambda \w+?)_\d+#"), r"\1#"),
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+]
+
+
+def fold(plan: str) -> str:
+    """``plan`` with the numbers that differ between runs folded."""
+    for pattern, repl in _FOLDS:
+        plan = pattern.sub(repl, plan)
+    return plan
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
@@ -85,7 +105,7 @@ def main() -> None:
         buf = io.StringIO()
         with contextlib.redirect_stdout(buf):
             df.explain("formatted")
-        plan = buf.getvalue()
+        plan = fold(buf.getvalue())
         path = os.path.join(args.out, f"{name}{args.suffix}.txt")
         with open(path, "w") as f:
             f.write(plan)
