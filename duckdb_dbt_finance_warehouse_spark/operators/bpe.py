@@ -33,7 +33,7 @@ from functools import reduce
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..state import stored
+from ..state import shared, stored
 from .dedup import spread_input, words, words_sql
 
 END_MARKER = "</w>"
@@ -82,7 +82,7 @@ def word_vocab(df: DataFrame, text_col: str) -> DataFrame:
 def bpe_merge_frame(df: DataFrame, text_col: str, n_merges: int = 5) -> DataFrame:
     """The learned merge table as STORED state: persisted and memoized
     by corpus-plan semantics (``state.stored``).  First construction
-    runs the training rounds (each round's localCheckpoint executes its
+    runs the training rounds (each round's shared frame executes its
     stages at call time); repeat constructions over the same corpus
     plan return the already-trained frame — the honest model for a
     frozen tokenizer artifact, identical to ``lsh_index_frame`` /
@@ -112,17 +112,15 @@ def _bpe_train_rounds(df: DataFrame, text_col: str, n_merges: int) -> DataFrame:
     )
     merges: list[DataFrame] = []
     for r in range(1, n_merges + 1):
-        # two consumers per round (pair counts + fold) and every later
-        # round re-reads it -> localCheckpoint the vocab-sized frame
-        vocab = vocab.localCheckpoint(eager=False)
-        best = (
+        # the pair counts and the fold both read it, and so does every later round
+        vocab = shared(vocab)
+        best = shared(
             vocab.select("wc", F.explode(F.expr(_PAIRS)).alias("p"))
             .groupBy("p.lhs", "p.rhs")
             .agg(F.sum("wc").alias("pair_count"))
             .orderBy(F.desc("pair_count"), "lhs", "rhs")
             .limit(1)
             .select(F.lit(r).alias("merge_round"), "lhs", "rhs", "pair_count")
-            .localCheckpoint(eager=False)
         )
         merges.append(best)
         vocab = vocab.crossJoin(
@@ -218,8 +216,8 @@ def _bpe_train_batched_rounds(
     merges: list[DataFrame] = []
     offset = 0
     for _ in range(n_rounds):
-        vocab = vocab.localCheckpoint(eager=False)
-        kept_arr = (
+        vocab = shared(vocab)
+        kept_arr = shared(
             vocab.select("wc", F.explode(F.expr(_PAIRS)).alias("p"))
             .groupBy("p.lhs", "p.rhs")
             .agg(F.sum("wc").alias("pair_count"))
@@ -238,7 +236,6 @@ def _bpe_train_batched_rounds(
                 ).alias("_cands")
             )
             .select(F.expr(greedy).alias("_batch"))
-            .localCheckpoint(eager=False)
         )
         kept = kept_arr.select(
             F.posexplode("_batch").alias("_pos", "m")
@@ -341,11 +338,8 @@ def bpe_segment(
                 out_t.extend(toks)
             yield pd.DataFrame({"word": out_w, "token": out_t})
 
-    # the corpus word explode feeds BOTH the distinct-vocab step and
-    # the (word -> tokens) join — localCheckpoint so it runs once
-    # (CLAUDE.md intra-query-sharing rule; recomputed per run, not a
-    # stored table)
-    corpus = corpus.localCheckpoint(eager=False)
+    # the distinct-vocab step and the (word -> tokens) join both read the explode
+    corpus = shared(corpus)
     seg = corpus.select("word").distinct().mapInPandas(segment, out_schema)
     # seg is VOCAB-volume by construction (distinct words x their
     # tokens) — pin it as the broadcast build side. Left to size

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # release_persisted stays importable from this module for existing callers
-from ..state import persist, release_persisted, stored  # noqa: F401
+from ..state import persist, release_persisted, shared, stored  # noqa: F401
 from .sampling import md5_bits
 
 
@@ -113,20 +113,24 @@ def word_starts_sql(toks: str, n: int, stride: int = 1) -> str:
     return _starts_sql(f"len({toks})", n - stride, stride)
 
 
-def word_grams(toks, n: int, key=None) -> F.Column:
-    """The word ``n``-grams of the token array ``toks`` as one array:
-    each window's tokens joined by single spaces, or ``key`` of that
-    string when given (a NULL array gives one empty gram)."""
+def word_grams(toks, n: int, key=None, stride: int = 1) -> F.Column:
+    """The word ``n``-grams of the token array ``toks`` as one array,
+    one per ``word_starts(toks, n, stride)``: each window's tokens
+    joined by single spaces, or ``key`` of that string when given (a
+    NULL array gives one empty gram)."""
     t = _col(toks)
     key = key or (lambda g: g)
-    return F.transform(word_starts(t, n), lambda i: key(F.concat_ws(" ", F.slice(t, i, n))))
+    return F.transform(
+        word_starts(t, n, stride), lambda i: key(F.concat_ws(" ", F.slice(t, i, n)))
+    )
 
 
-def word_grams_sql(toks: str, n: int, key=None) -> str:
+def word_grams_sql(toks: str, n: int, key=None, stride: int = 1) -> str:
     """DuckDB form of ``word_grams``; ``key`` maps the gram's SQL."""
     # coalesce: Spark's concat_ws of a NULL slice is the empty string
     gram = f"coalesce(array_to_string(list_slice({toks}, i, i + {n - 1}), ' '), '')"
-    return f"list_transform({word_starts_sql(toks, n)}, i -> {key(gram) if key else gram})"
+    starts = word_starts_sql(toks, n, stride)
+    return f"list_transform({starts}, i -> {key(gram) if key else gram})"
 
 
 def char_grams(t, n: int, stride: int = 1) -> F.Column:
@@ -690,31 +694,29 @@ def ngram_jaccard(
     join) and the member gram table three times (two join sides +
     sizes) — unshared, the physical plan rebuilt the full
     pairs→members→semi-join→explode→DISTINCT chain per reference (205
-    operators, 8 duplicated aggregates). Both subtrees now sit behind
-    one ``localCheckpoint(eager=False)`` each (genuinely per-run state —
-    construction stays in the timed region), the per-doc distinct gram
-    set is built IN-ROW (``array_distinct`` over the shingle transform —
+    operators, 8 duplicated aggregates). Both subtrees are now
+    ``shared`` (construction stays in the timed region), the per-doc
+    distinct gram set is built IN-ROW (``array_distinct`` over the shingle transform —
     the CLAUDE.md house rule; the old form paid a shuffle-DISTINCT of
     the exploded gram stream), and set sizes ride along as ``size()``
     instead of a grouped count. Plan: 205 operators / 88 exchange
     mentions → 39 / 7. Requires ``id_col`` unique per row (a document
     table): the in-row distinct is per ROW, where the old
     shuffle-DISTINCT would have merged duplicate ids."""
-    pairs = pairs.select("id_a", "id_b").localCheckpoint(eager=False)
+    pairs = shared(pairs.select("id_a", "id_b"))
     members = (
         pairs.select(F.col("id_a").alias(id_col))
         .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
     norm = normalize_text(text_col)
-    arrs = (
+    arrs = shared(
         spread_input(df.join(members, id_col, "left_semi"))
         .select(F.col(id_col), norm.alias("_t"))
         .select(
             id_col,
             F.array_distinct(char_grams("_t", n)).alias("_grams"),
         )
-        .localCheckpoint(eager=False)
     )
     sizes = arrs.select(id_col, F.size("_grams").alias("n_grams"))
     ga = arrs.select(F.col(id_col).alias("id_a"), F.explode("_grams").alias("gram"))
@@ -831,7 +833,7 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
     O(diameter) rounds and silently splits any chain longer than the
     iteration cap. Convergence is detected by an (edge-count,
     hash-sum) signature going stable — one action per round on the
-    localCheckpointed edge set — and exhausting ``max_iterations``
+    shared edge set — and exhausting ``max_iterations``
     without converging RAISES rather than returning split clusters
     (2^20-diameter graphs converge within the default 20)."""
 
@@ -843,9 +845,8 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
             .distinct()
         )
 
-    edges = canon(
-        pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
-    ).localCheckpoint()
+    # lazy: the first round's signature action materializes it
+    edges = shared(canon(pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))))
     sig = None
     for _ in range(max_iterations):
         # large-star: every node u connects its LARGER neighbors v to the
@@ -873,7 +874,7 @@ def dedup_clusters(pairs: DataFrame, max_iterations: int = 20) -> DataFrame:
             .filter(F.col("a") != F.col("b"))
             .unionByName(smins.select(F.col("m").alias("a"), F.col("u").alias("b")))
         )
-        edges = small.distinct().localCheckpoint(eager=False)
+        edges = shared(small.distinct())
         # one action per round: materializes the checkpoint AND computes
         # the convergence signature of the canonical edge set
         row = edges.agg(
@@ -920,15 +921,7 @@ def passage_dedup(
     exact_dedup's content-hash shuffle."""
     passages = (
         df.select(F.col(id_col), words(text_col).alias("_w"))
-        .select(
-            id_col,
-            F.posexplode(
-                F.expr(
-                    f"transform(sequence(1, CAST(ceil(size(_w) / {w}.0) AS INT)),"
-                    f" i -> array_join(slice(_w, (i - 1) * {w} + 1, {w}), ' '))"
-                )
-            ).alias("pos", "passage"),
-        )
+        .select(id_col, F.posexplode(word_grams("_w", w, stride=w)).alias("pos", "passage"))
         .withColumn("phash", F.md5("passage"))
     )
     dup = (
@@ -1071,9 +1064,7 @@ def dataset_overlap(
     14.7M occurrences), so deduping BEFORE the md5 removes ~97% of the
     hash + 64-mulmod work, for bit-identical minima (min over a
     multiset == min over its set)."""
-    sigs = portable_signatures(
-        df, group_col, text_col, k, n_hashes, distinct=True
-    ).localCheckpoint(eager=False)
+    sigs = shared(portable_signatures(df, group_col, text_col, k, n_hashes, distinct=True))
     ex = sigs.select(
         F.col(group_col), F.posexplode("sig").alias("i", "mh")
     )
@@ -1131,23 +1122,17 @@ def fuzzy_string_join(
     (both suite panels and the oracle treat them as such; a duplicated
     id would score per-row here vs per-merged-id before)."""
     gram_set = F.array_distinct(char_grams("_t", n))
-    # both array frames feed two consumers (their gram explode and the
-    # verification join) — localCheckpoint so the parquet text column is
-    # scanned once per side, and the checkpointed frame is the COMPACT
-    # per-string array, not the 10-50x exploded stream the r8 form
-    # checkpointed
-    p = (
+    # its gram explode and the verification join read this compact array
+    p = shared(
         spread_input(probes)
         .select(F.col(probe_id), normalize_text(probe_str).alias("_t"))
         .select(probe_id, gram_set.alias("_pg"))
-        .localCheckpoint(eager=False)
     )
     pg = p.select(probe_id, F.explode("_pg").alias("gram"))
-    c = (
+    c = shared(
         spread_input(corpus)
         .select(F.col(corpus_id), normalize_text(corpus_str).alias("_t"))
         .select(corpus_id, gram_set.alias("_cg"))
-        .localCheckpoint(eager=False)
     )
     cg = c.select(corpus_id, F.explode("_cg").alias("gram"))
     cand_cg = cg
@@ -1253,7 +1238,7 @@ def containment_pairs(
     but ubiquitous grams can be missed (the documented recall trade).
 
     Shape: one gram explode (spread_input-guarded, distinct),
-    localCheckpointed — it feeds the candidate aggregation and ONE
+    shared — it feeds the candidate aggregation and ONE
     candidate-id semi filter. Candidates come from ONE gram-keyed
     groupBy whose per-gram state is capped at max_gram_df ids
     (<= max_gram_df² pairs emitted per gram). Verification no longer
@@ -1269,18 +1254,18 @@ def containment_pairs(
     — pairs grow quadratically in cluster size while the id set stays
     small): past ``_MAX_CAND_ID_BROADCAST`` ids it degrades to a
     shuffle_hash semi join. The count is near-free, not displaced
-    work: under AQE the ``localCheckpoint`` call has already executed
+    work: under AQE the ``shared`` call has already executed
     the candidate pipeline's stages by the time the count runs, and
     bench.py's clock includes plan construction (both halves of the
     r11 benchmark-honesty finding — an earlier cut routed on the input
     doc count to keep construction light, but with construction timed
     the exact bound costs nothing extra). Nothing
     is corpus-quadratic, nothing collects, and no corpus-sized frame
-    is ever broadcast (see the in-body notes on the localCheckpoint
+    is ever broadcast (see the in-body notes on the shared frame's
     size-estimate trap).
 
     CALLER-FACING EAGERNESS: constructing this query EXECUTES the
-    candidate pipeline's stages immediately (localCheckpoint under AQE
+    candidate pipeline's stages immediately (a shared frame under AQE
     runs its subtree at call time, and the broadcast-vs-shuffle routing
     counts the checkpointed id set) — building the DataFrame without
     ever executing it still pays the candidate generation cost."""
@@ -1294,20 +1279,19 @@ def containment_pairs(
     # the oracle replays the identical md5 half, so distinct/intersect
     # counts stay bit-for-bit even in the collision case).
     # The distinct gram-hash table is a derived corpus projection —
-    # memoized STORED state (state.stored), with the localCheckpoint on top
-    # keeping the plan its three consumers embed truncated and the
-    # candidate-routing count's stages executed at construction; on a
-    # warm cache the checkpoint is a block read, not a re-explode.
-    grams = stored(
-        "dedup.gram_hashes",
-        df,
-        (id_col, text_col, n, "word_gram_hashes"),
-        lambda: word_ngram_hashes(df, id_col, text_col, n),
-    ).localCheckpoint(eager=False)
+    # memoized STORED state, shared by its three consumers.
+    grams = shared(
+        stored(
+            "dedup.gram_hashes",
+            df,
+            (id_col, text_col, n, "word_gram_hashes"),
+            lambda: word_ngram_hashes(df, id_col, text_col, n),
+        )
+    )
     # Candidate pairs come from ONE gram-keyed aggregation emitting the
     # in-gram id combinations (state bounded by max_gram_df ids per
     # gram, never a skew risk) — NOT a gram self-join: the gram frame is
-    # a 10-50x explode hiding behind a localCheckpoint, Catalyst's size
+    # a 10-50x explode hiding behind a shared frame, Catalyst's size
     # estimate (pre-explode scan bytes) undershoots it by the same
     # factor, and the self-join form was observed BROADCASTING the
     # corpus gram table at sf1 — the mid-scale driver-OOM shape
@@ -1319,36 +1303,31 @@ def containment_pairs(
         " transform(slice(_ids, i + 2, size(_ids)), y ->"
         " struct(x AS id_a, y AS id_b))))"
     )
-    cands = (
+    cands = shared(
         grams.groupBy("_gh")
         .agg(ids_sorted.alias("_ids"))
         .filter(F.size("_ids") <= max_gram_df)
         .select(F.explode(pair_structs).alias("_p"))
         .select("_p.id_a", "_p.id_b")
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    # candidate-doc slice of the gram table: the checkpoint call above
-    # has already run the candidate pipeline's stages (AQE executes
-    # them at localCheckpoint time), so counting the DISTINCT id set
-    # here costs one pair-volume micro-job and gives the EXACT
+    # candidate-doc slice of the gram table: the shared call above
+    # has already run the candidate pipeline's stages, so counting the
+    # DISTINCT id set here costs one pair-volume micro-job and gives the EXACT
     # broadcast bound — routing on 2x the pair count would degrade to
     # the shuffle_hash path prematurely on dense clusters, where pairs
     # grow quadratically in cluster size while the id set stays tiny
     # (r11 review). Past the budget the semi join degrades to a
     # shuffle_hash exchange instead of an oversized broadcast — same
     # routing rule as the triangle closing join.
-    cid = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b")))
-        .distinct()
-        .localCheckpoint(eager=False)
+    cid = shared(
+        cands.select(F.col("id_a").alias(id_col)).union(cands.select(F.col("id_b"))).distinct()
     )
     if cid.count() <= _MAX_CAND_ID_BROADCAST:
         gsub = grams.join(F.broadcast(cid), id_col, "left_semi")
     else:
         gsub = grams.join(cid.hint("shuffle_hash"), id_col, "left_semi")
-    gsub = gsub.localCheckpoint(eager=False)
+    gsub = shared(gsub)
     ga = gsub.select(F.col(id_col).alias("id_a"), "_gh")
     gb = gsub.select(F.col(id_col).alias("id_b"), "_gh")
     sizes = gsub.groupBy(id_col).agg(F.count("*").alias("_n"))
@@ -1428,24 +1407,8 @@ def dedup_precision_audit(
     Shape: the standard portable LSH pass, then the exact-Jaccard gram
     join at REPORTED-pair volume only (never all-pairs), then a 1-row
     aggregate. Cost ~ the dedup pass it audits."""
-    # the reported-pair frame feeds FOUR consumers (member-id semi
-    # join, gram join, union-size join, and the audit join below) —
-    # it is the memoized STORED pair table (the audit audits the same
-    # materialized decision table the dedup pass ships).  The
-    # localCheckpoint ON TOP of the persisted frame does two jobs:
-    # it materializes the cache once at construction (the concurrent
-    # consumer stages would otherwise race to populate it, computing
-    # the chain once PER STAGE — and on a warm cache the checkpoint is
-    # a fast cache read), and it TRUNCATES the plan each consumer
-    # embeds — without it the four consumers each inline the full
-    # ~100-node LSH chain under an InMemoryRelation and Catalyst
-    # replans a 455-node tree per construction (measured r13: the
-    # naked persisted frame regressed this entry 3.6 -> 12.5 s at
-    # sf0.1; checkpoint-over-cache restores plan-sized construction
-    # while keeping the stored table's warmup credit).
-    pairs = minhash_pairs_frame(
-        df, id_col, text_col, k, n_hashes, bands, est_threshold
-    ).localCheckpoint(eager=False)
+    # the stored decision table the dedup pass ships; four joins below read it
+    pairs = shared(minhash_pairs_frame(df, id_col, text_col, k, n_hashes, bands, est_threshold))
     exact = ngram_jaccard(df, id_col, text_col, pairs.select("id_a", "id_b"), n=k)
     j = pairs.join(exact, ["id_a", "id_b"])
     err_q = F.floor(

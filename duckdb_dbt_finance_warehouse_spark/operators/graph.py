@@ -15,7 +15,7 @@ do.
 Scale: each round is one edges⋈ranks equi-join (both sides partitioned
 on the src key) + one dst-keyed aggregation — the textbook distributed
 PageRank round. The static edge+degree frame feeds every round, so it
-is localCheckpointed; ranks chain from round to round. Unrolled fixed
+is shared; ranks chain from round to round. Unrolled fixed
 rounds (like kmeans) keep the whole run one deterministic plan.
 """
 
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..state import persist, stored
+from ..state import persist, shared, stored
 
 PR_SCALE = 10**12
 
@@ -376,7 +376,7 @@ def _degree_oriented(e: DataFrame, deg: DataFrame) -> DataFrame:
 # census, router, and audit pass reads them); rebuilding both per
 # invocation repeats two vertex-keyed joins plus the two-pass rank
 # build over identical edges — and under bench.py's timed-construction
-# clock the old per-invocation localCheckpoint paid that prep in EVERY
+# clock the old per-invocation checkpoint paid that prep in EVERY
 # timed run instead of once in the stored build.  Keyed on the PREPARED
 # edge frame's plan; ``cooccurrence_pairs_frame`` hands every triangle
 # entry the same persisted object, so hits are guaranteed there.
@@ -436,9 +436,7 @@ def _doulion_oriented(e0: DataFrame, k: int, salt: str) -> DataFrame:
     edge_key = F.concat_ws(
         ":", F.col("a").cast("string"), F.col("b").cast("string")
     )
-    es0 = e0.filter(hash_uniform(edge_key, salt) < 1.0 / k).localCheckpoint(
-        eager=False
-    )
+    es0 = shared(e0.filter(hash_uniform(edge_key, salt) < 1.0 / k))
     # degrees of the SAMPLED graph — that's the graph being counted: a
     # hub that survives sampling must not regrow the wedge hot spot
     return _degree_oriented(es0, _degrees(es0))
@@ -552,7 +550,7 @@ def triangle_stats(
     ``_closed_wedge_count``). ``None`` (default) decides by COUNTING
     the oriented edge frame against ``MAX_CENSUS_EDGES`` — the
     measured, exact bound, and free under the checkpoint model (the
-    frame's stages already ran at the ``localCheckpoint`` call), so a
+    frame's stages already ran at the ``shared`` call), so a
     direct call on a past-budget graph degrades to the shuffle_hash
     closing join instead of attempting a multi-GB broadcast (r11
     VERDICT: the old ``True`` default trusted docstring discipline).
@@ -562,17 +560,12 @@ def triangle_stats(
     if _edges_prepared:
         # the stored-graph path: degree summary and oriented adjacency
         # are memoized stored state next to the edge table — prep runs
-        # once per stored graph, not once per census invocation.  The
-        # localCheckpoint over the cached frame truncates the plan the
-        # wedge stage embeds (the self-join + closing + count reference
-        # e FOUR times; naked InMemoryRelation inlining blew the census
-        # explain to ~1900 nodes and Catalyst replanned it per
-        # construction) and materializes from the cache, which is a
-        # fast block read on the stored frame's warmup credit.
+        # once per stored graph, not once per census invocation.
         e0 = edges
         if _census_memoize:
             deg = _deg if _deg is not None else census_degree_frame(e0)
-            e = census_oriented_frame(e0, deg=deg).localCheckpoint(eager=False)
+            # the wedge self-join, closing join and count read e four times
+            e = shared(census_oriented_frame(e0, deg=deg))
         else:
             # per-invocation prepared frame (a fresh checkpoint plan from
             # triangle_stats_auto's ad-hoc route): its plan can never
@@ -581,14 +574,14 @@ def triangle_stats(
             # build the oriented projection directly
             deg = _deg
             if deg is None:
-                deg = _degrees(e0).localCheckpoint(eager=False)
-            e = _degree_oriented(e0, deg).localCheckpoint(eager=False)
+                deg = shared(_degrees(e0))
+            e = shared(_degree_oriented(e0, deg))
     else:
-        e0 = edges.select("a", "b").distinct().localCheckpoint(eager=False)
+        e0 = shared(edges.select("a", "b").distinct())
         deg = _deg
         if deg is None:
-            deg = _degrees(e0).localCheckpoint(eager=False)
-        e = _degree_oriented(e0, deg).localCheckpoint(eager=False)
+            deg = shared(_degrees(e0))
+        e = shared(_degree_oriented(e0, deg))
     wedges = deg.agg(
         F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges")
     )
@@ -643,7 +636,7 @@ def triangle_sample_stats(
     taken while the surviving edge set fits the ``MAX_CENSUS_EDGES``
     broadcast budget. ``None`` (default) decides by COUNTING the
     survivors — the exact bound, and free: under AQE the survivor
-    frame's ``localCheckpoint`` call has already executed the
+    frame's ``shared`` call has already executed the
     sample+orientation stages, and bench.py times plan construction
     (the r11 clock fix), so nothing is displaced out of any timed
     region and the census reuses the materialized checkpoint (an
@@ -657,10 +650,7 @@ def triangle_sample_stats(
         raise ValueError(f"k must be a power of two, got {k}")
     if _edges_prepared and _census_memoize:
         # stored-graph path: the deterministic sampled sketch's oriented
-        # projection is memoized stored state (see doulion_oriented_frame);
-        # the checkpoint over the cache truncates the plan its four
-        # consumer references would otherwise inline (census plan-size
-        # lesson) and reads the stored frame's warmed blocks
+        # projection is memoized stored state (see doulion_oriented_frame)
         es = doulion_oriented_frame(edges, k, salt)
     else:
         # per-invocation prepared frame (triangle_stats_auto's ad-hoc
@@ -669,7 +659,7 @@ def triangle_sample_stats(
         # instead of polluting the census LRU
         e = edges if _edges_prepared else edges.select("a", "b").distinct()
         es = _doulion_oriented(e, k, salt)
-    es = es.localCheckpoint(eager=False)
+    es = shared(es)  # the census reads es four times
     if broadcast_closing is None:
         broadcast_closing = es.count() <= MAX_CENSUS_EDGES
     tri = _closed_wedge_count(
@@ -752,8 +742,8 @@ def triangle_stats_auto(
         # summary — one memoized build serves routing AND the census
         deg = census_degree_frame(e)
     else:
-        e = edges.select("a", "b").distinct().localCheckpoint(eager=False)
-        deg = _degrees(e).localCheckpoint(eager=False)
+        e = shared(edges.select("a", "b").distinct())
+        deg = shared(_degrees(e))
     n_edges = e.count()
     n_wedges = (
         deg.agg(F.sum(F.expr("d * (d - 1) div 2")).alias("w")).first()["w"]
@@ -964,10 +954,8 @@ def label_propagation_damped(
         .agg(arg.getField("lbl").alias("lbl"))
     )
     for _ in range(rounds - 1):
-        # each round consumes the previous state TWICE (neighbor join +
-        # self-vote union): checkpoint so the chain stays linear
-        # (per-run recomputed state, never a stored table)
-        labels = labels.localCheckpoint(eager=False)
+        # the neighbor join and the self-vote union both read it
+        labels = shared(labels)
         nbr = u.join(
             labels.withColumnsRenamed({"node": "a"}).hint("shuffle_hash"), "a"
         ).select(F.col("b").alias("node"), "lbl")
@@ -1112,7 +1100,7 @@ def khop_reach(
     if hops < 0:
         raise ValueError(f"khop_reach: hops must be >= 0, got {hops}")
 
-    s = seeds.select(F.col("node")).distinct().localCheckpoint(eager=False)
+    s = shared(seeds.select(F.col("node")).distinct())
     out = s.select("node", F.lit(0).alias("dist"))
     if hops == 0:
         return out
@@ -1134,10 +1122,8 @@ def khop_reach(
         nxt = probe.join(
             F.broadcast(anti) if small else anti, "node", "left_anti"
         )
-        # the frontier is consumed by round k+1's join AND unioned
-        # into the output: localCheckpoint, not persist — per-run
-        # recomputed state, never a stored table (CLAUDE.md rule)
-        nxt = nxt.localCheckpoint(eager=False)
+        # round k+1's join and the output union both read the frontier
+        nxt = shared(nxt)
         frontier = nxt
         frontier_rows = nxt.count()  # free post-checkpoint
         reach_rows += frontier_rows

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..state import shared
+
 TWO_32 = float(1 << 32)
 
 
@@ -380,13 +382,12 @@ def importance_resample(
         text_col,
     ).filter(F.col("tok") != "")
     bucket = md5_bits("tok", 1, 8, salt) % b
-    # consumed TWICE (the weights aggregate and the scoring join) and
-    # genuinely recomputed per run — localCheckpoint, not persist
-    # (CLAUDE.md intra-query-sharing rule): without it the tokenize +
-    # md5-bucket explode runs once per consumer
-    tb = toks.select(
-        F.col("_k._id").alias("_id"), F.col("_k._tgt").alias("_tgt"), bucket.alias("_bkt")
-    ).localCheckpoint(eager=False)
+    # the weights aggregate and the scoring join both read the explode
+    tb = shared(
+        toks.select(
+            F.col("_k._id").alias("_id"), F.col("_k._tgt").alias("_tgt"), bucket.alias("_bkt")
+        )
+    )
     counts = tb.groupBy("_bkt").agg(
         F.count("*").alias("_cs"),
         F.count_if(F.col("_tgt")).alias("_ct"),

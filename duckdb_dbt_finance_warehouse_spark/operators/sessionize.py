@@ -9,6 +9,8 @@ import functools
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..state import shared
+
 
 def sessionize(
     df: DataFrame,
@@ -259,7 +261,8 @@ def cohort_retention(
         F.col(user_col),
         day0.alias("_d"),
     ).withColumn("cohort_start", F.min(F.col("_d")).over(w))
-    cells = (
+    # the matrix rows and the cohort-size lookup both read the cells
+    cells = shared(
         withc.select(
             user_col,
             "cohort_start",
@@ -270,10 +273,6 @@ def cohort_retention(
         .distinct()
         .groupBy("cohort_start", "period_offset")
         .agg(F.countDistinct(user_col).alias("n_active"))
-        # feeds both the matrix rows and the cohort-size lookup below;
-        # genuinely recomputed per run -> localCheckpoint, not persist
-        # (CLAUDE.md subtree rule)
-        .localCheckpoint(eager=False)
     )
     sizes = cells.filter(F.col("period_offset") == 0).select(
         "cohort_start", F.col("n_active").alias("cohort_size")
@@ -486,7 +485,8 @@ def rfm_segments(
     r_val = F.expr(
         f"(max(cast(ts as long)) - pmod(max(cast(ts as long)), {g_s})) div {g_s}"
     )
-    per_user = (
+    # the grid and the scoring join both read it, through stacked
+    per_user = shared(
         df.groupBy("user_id")
         .agg(
             r_val.alias("r_val"),
@@ -496,7 +496,6 @@ def rfm_segments(
                 F.lit(0),
             ).cast("long").alias("m_val"),
         )
-        .localCheckpoint(eager=False)
     )
     stacked = per_user.select(
         "user_id",
@@ -511,7 +510,8 @@ def rfm_segments(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     w_tot = Window.partitionBy("metric")
-    grid = (
+    # keeps the stacked aggregate from re-running if the broadcast build splits
+    grid = shared(
         stacked.groupBy("metric", "val")
         .agg(F.count("*").alias("_c"))
         .select(
@@ -526,9 +526,6 @@ def rfm_segments(
             "val",
             (F.expr("least(2L, (3 * (_cum - _c)) div _n)") + 1).alias("score"),
         )
-        # grid-bounded; shared by nothing else but avoids re-running the
-        # stacked aggregate if the optimizer splits the broadcast build
-        .localCheckpoint(eager=False)
     )
     scored = (
         stacked.join(F.broadcast(grid), ["metric", "val"])

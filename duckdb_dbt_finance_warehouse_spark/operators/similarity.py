@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..state import persist, stored
+from ..state import persist, shared, stored
 
 DOT = (
     "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
@@ -1083,11 +1083,8 @@ def _lsh_score_buckets(
         queries, id_col, vec_col, n_tables, n_planes, dim, out_id="query_id"
     )
     if prune_to_probed:
-        # the flag's contract is a BOUNDED probe side, and its probed
-        # (tbl, bucket) keys are consumed by the semi join AND the
-        # cogroup — checkpoint the (panel x n_tables)-row frame so the
-        # probe Arrow stage runs once, not twice
-        probes = probes.localCheckpoint(eager=False)
+        # the semi join and the cogroup both read the bounded probe keys
+        probes = shared(probes)
     return _lsh_score_prehashed(
         buckets,
         probes,
@@ -1867,14 +1864,8 @@ def ann_recall_audit(
         )
     if probe_pred is not None:
         probes = corpus.filter(probe_pred)
-    # exact feeds BOTH the hit semi join and the per-query n_exact
-    # denominator — checkpoint so the brute-force scan runs once
-    # (CLAUDE.md intra-query-sharing rule)
-    exact = (
-        cosine_topk(corpus, probes, id_col, vec_col, k)
-        .select("query_id", "cand_id")
-        .localCheckpoint(eager=False)
-    )
+    # the hit semi join and the n_exact denominator both read the brute-force scan
+    exact = shared(cosine_topk(corpus, probes, id_col, vec_col, k).select("query_id", "cand_id"))
     if probe_pred is not None:
         buckets = lsh_index_frame(
             corpus, id_col, vec_col, n_tables, n_planes, dim

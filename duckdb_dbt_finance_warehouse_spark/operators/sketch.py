@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..state import shared
 from .sampling import md5_bits, md5_bits_sql
 
 B_BITS = 8
@@ -197,11 +198,10 @@ def hll_incremental_estimate(
     (cast to string) + one 'merged' row, the no-key estimate of the
     merged registers — so an empty frame still gives ('merged', 0.0, 0),
     as ``hll_distinct`` gives 0.0. The register frame feeds both the
-    per-batch estimates and the merge, so it is localCheckpointed
-    (CLAUDE.md subtree rule; in production it IS a stored table)."""
-    regs = _registers(
-        df.withColumn("part", F.col(batch_col).cast("string")), col, ["part"]
-    ).localCheckpoint(eager=False)
+    per-batch estimates and the merge, so it is shared."""
+    regs = shared(
+        _registers(df.withColumn("part", F.col(batch_col).cast("string")), col, ["part"])
+    )
     merged = regs.groupBy("bucket").agg(F.max("max_rank").alias("max_rank"))
     return _estimate(regs, ["part"]).unionByName(
         _estimate(merged, []).select(F.lit("merged").alias("part"), "hll_estimate", "buckets_used")

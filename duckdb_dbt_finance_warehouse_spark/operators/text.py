@@ -12,7 +12,7 @@ from decimal import Decimal
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..state import stored
+from ..state import shared, stored
 from .dedup import char_grams, normalize_text, spread_input, word_grams, words
 from .sampling import md5_bits
 
@@ -123,18 +123,14 @@ def tf_idf_top_terms(
 
     tf = term count in doc; idf = ln(N / df_t) (natural log, no
     smoothing — identical IEEE ops in any engine). The corpus is
-    tokenized ONCE: the (doc, term) frequency table is localCheckpointed
+    tokenized ONCE: the (doc, term) frequency table is shared
     and doc-frequency derives from it by a second, far smaller
     aggregation (tf rows ARE the distinct (doc, term) pairs — no second
     explode, no distinct). At 100 TB the term-keyed shuffles are the
     only large exchanges and they key on the term, which is
     high-cardinality and evenly distributed."""
     toks = tokens(df, id_col, text_col)
-    tf = (
-        toks.groupBy(id_col, "tok")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
+    tf = shared(toks.groupBy(id_col, "tok").agg(F.count("*").alias("tf")))
     n_docs = df.select(F.count("*").alias("n_docs"))
     df_t = tf.groupBy("tok").agg(F.count("*").alias("df_t"))
     scored = (
@@ -306,16 +302,12 @@ def bm25_search(
     stats = lens.agg(
         F.count("*").alias("n_docs"), F.sum("dl").alias("sum_dl")
     )
-    # tf is consumed twice (the df_t rollup and the scoring join) and
-    # its subtree is the corpus token explode — checkpoint the tiny
-    # (docs x |query|) result so the explode runs once per query, not
-    # twice (CLAUDE.md intra-query-sharing rule; recomputed per run)
-    tf = (
+    # the df_t rollup and the scoring join both read the token explode
+    tf = shared(
         tokens(df, id_col, text_col)
         .filter(F.col("tok").isin(list(query_terms)))
         .groupBy(id_col, "tok")
         .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
     )
     dfreq = tf.groupBy("tok").agg(F.count("*").alias("df_t"))
     avgdl = F.col("sum_dl") / F.col("n_docs")
@@ -745,14 +737,11 @@ def zipf_rank_stats(
     toks = tokens(df, group_col, text_col).filter(F.col("tok") != "")
     freqs = toks.groupBy(group_col, "tok").agg(F.count("*").alias("freq"))
     w = Window.partitionBy(group_col).orderBy(F.desc("freq"), F.asc("tok"))
-    # top-R rows feed BOTH the totals agg and the deviation pass (the
-    # deviation needs Σfr before it can score each row) -> checkpoint
-    # the slim ranked frame, not the explode behind it
-    ranked = (
+    # the totals agg and the deviation pass both read the slim ranked frame
+    ranked = shared(
         freqs.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= top_ranks)
         .withColumn("fr", F.col("freq") * F.col("rank"))
-        .localCheckpoint(eager=False)
     )
     agg = ranked.groupBy(group_col).agg(
         F.count("*").alias("n_ranks"),
@@ -970,8 +959,7 @@ def perplexity_buckets(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
 
     # bigram_lm_scores returns the memoized persisted score table —
     # both consumers below (the grid groupBy and the final join) read
-    # the cache, so the old localCheckpoint here would only copy
-    # already-materialized blocks
+    # the cache, so sharing it would only copy already-materialized blocks
     scored = bigram_lm_scores(df, id_col, text_col).select(
         id_col,
         "n_bigrams",

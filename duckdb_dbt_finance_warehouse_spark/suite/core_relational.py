@@ -2,7 +2,7 @@
 
 Each query is written DataFrame-first (declarative, Catalyst-optimizable,
 no Python UDFs) and paired with a byte-parity DuckDB oracle. Determinism
-rules applied throughout (validated empirically in tools/parity_scratch.py):
+rules applied throughout (every oracle pair is checked by tools/check_correctness.py):
 
 - money/double SUMs use scaled-integer accumulation (functions/money
   ``exact_sum``: floor(x*10^s + 0.5) summed as longs) — exact,

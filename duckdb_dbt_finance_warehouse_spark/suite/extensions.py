@@ -37,6 +37,7 @@ from ..operators import (
     text,
 )
 from ..sources.tables import load_testdata
+from ..state import shared
 from .registry import query
 
 _NORM = dedup.normalize_sql("text")
@@ -2365,10 +2366,8 @@ def x_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # one token pass: the frequency table feeds BOTH the sketch (cells
     # weighted by count — identical to sketching the raw stream) and the
-    # exact top-20; localCheckpoint shares it across the two branches
-    per_term = (
-        toks.groupBy("item").agg(F.count("*").alias("exact_n")).localCheckpoint(eager=False)
-    )
+    # exact top-20
+    per_term = shared(toks.groupBy("item").agg(F.count("*").alias("exact_n")))
     cms = sketch.cms_sketch_from_counts(per_term, "item", "exact_n")
     top = (
         per_term.select(F.col("item").alias("tok"), "exact_n")
@@ -3348,10 +3347,9 @@ def x_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "x_paragraph_dedup",
     oracle=f"""
     WITH wds AS (SELECT doc_id, {_WORDS} AS w FROM documents),
-    p AS (SELECT doc_id, i AS pos,
-                 array_to_string(w[(i - 1) * 8 + 1 : i * 8], ' ') AS passage
-          FROM wds, LATERAL (SELECT unnest(generate_series(1,
-                 CAST(ceil(len(w) / 8.0) AS INT))) AS i) g),
+    g AS (SELECT doc_id, {dedup.word_grams_sql("w", 8, stride=8)} AS g FROM wds),
+    p AS (SELECT doc_id, pos, g[CAST(pos AS INT)] AS passage
+          FROM g, unnest(generate_series(1, len(g))) AS u(pos)),
     ph AS (SELECT doc_id, pos, passage, md5(passage) AS phash FROM p),
     dup AS (SELECT phash FROM ph GROUP BY 1 HAVING count(DISTINCT doc_id) > 1),
     fl AS (SELECT ph.doc_id, ph.pos, ph.passage,

@@ -1,7 +1,7 @@
 """Contract of the stored-state lifecycle (``state.stored`` /
 ``persist`` / ``release_persisted`` / ``reset_stored_state``), plus the
-one-owner rules: no package module but ``state.py`` persists or
-unpersists a frame itself, and none but ``sources/tables.py`` decides
+one-owner rules: no package module but ``state.py`` persists,
+unpersists or checkpoints a frame itself, and none but ``sources/tables.py`` decides
 how a table lands on disk."""
 
 from __future__ import annotations
@@ -121,6 +121,15 @@ def test_release_skips_frames_of_stopped_sessions(spark):
     assert not after.storageLevel.useMemory
 
 
+def test_shared_truncates_the_plan_and_keeps_the_rows(spark):
+    df = spark.range(6).selectExpr("id % 3 AS k").groupBy("k").count()
+    s = state.shared(df)
+    plan = s._jdf.queryExecution().analyzed().toString()
+    assert "Aggregate" not in plan and "LogicalRDD" in plan
+    assert sorted(s.collect()) == sorted(df.collect())
+    assert s.storageLevel == df.storageLevel  # not a persist
+
+
 def _offenders(
     banned: re.Pattern, owners: tuple[str, ...], extra: tuple[str, ...] = ()
 ) -> list[str]:
@@ -141,12 +150,18 @@ def _offenders(
 def test_only_state_module_persists():
     """One mechanism: every persist goes through ``state.persist`` or
     ``state.stored``, so ``release_persisted`` / ``reset_stored_state``
-    see every stored frame."""
-    banned = re.compile(r"\.persist\(|\.unpersist\(|\.cache\(\)|PlanMemo|ModelMemo")
+    see every stored frame, and every checkpoint goes through
+    ``state.shared``, so one module decides the checkpoint policy. A
+    comment naming the Spark call counts too: the rule lives in
+    ``state.py``'s docstring only."""
+    banned = re.compile(
+        r"\.persist\(|\.unpersist\(|\.cache\(\)|PlanMemo|ModelMemo"
+        r"|localCheckpoint|\.checkpoint\("
+    )
     offenders = _offenders(banned, ("state.py",))
     assert not offenders, (
-        f"persist/unpersist/cache or an old memo class outside state.py: "
-        f"{offenders} — use state.persist / state.stored"
+        f"persist/unpersist/cache/checkpoint or an old memo class outside state.py: "
+        f"{offenders} — use state.persist / state.stored / state.shared"
     )
 
 

@@ -42,18 +42,26 @@ RULES = {
         [("dedup.py", "words"), ("dedup.py", "words_sql")],
     ),
     "window starts": (
-        r"sequence\(\s*(F\.lit\()?1\)?\s*,\s*(F\.)?greatest\("
-        r"|generate_series\(\s*1\s*,\s*greatest\(",
+        # a window count spelled as ceil(size / w) is the same rule
+        r"sequence\(\s*(F\.lit\()?1\)?\s*,\s*((F\.)?greatest|CAST\(\s*ceil)\("
+        r"|generate_series\(\s*1\s*,\s*(greatest|CAST\(\s*ceil)\(",
         [("dedup.py", "_starts"), ("dedup.py", "_starts_sql")],
     ),
     "word window": (
-        r"concat_ws\(\s*['\"] ['\"]\s*,\s*(F\.)?slice\(|list_slice\(|\w\[CAST\(i AS INT\)\s*:",
+        r"concat_ws\(\s*['\"] ['\"]\s*,\s*(F\.)?slice\(|list_slice\(|\w\[CAST\(i AS INT\)\s*:"
+        r"|slice\(\s*\w+\s*,\s*\(i - 1\) \*|\w\[\(i - 1\) \*",
         [
             ("dedup.py", "word_grams"),
             ("dedup.py", "word_grams_sql"),
             # a chunk's text is the word window at its start
             ("packing.py", "chunk_overlap"),
         ],
+    ),
+    # a different rule: 0-based frame indexes, capped at max_frames, and
+    # a last frame that may start past length - n + 1
+    "frame window": (
+        r"(sequence|generate_series)\(\s*CAST\(0 AS BIGINT\)\s*,\s*least\(",
+        [("multimodal.py", "frame_sample"), ("extensions.py", "x_multimodal_frames")],
     ),
     "character window": (
         r"substr(ing)?\(\s*\{?_?\w+\}?\s*,\s*(i|CAST\(i AS INT\))\s*,",

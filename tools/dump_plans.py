@@ -1,13 +1,14 @@
-"""Dump `.explain("formatted")` for named suite entries or pipeline models.
+"""Dump `.explain("formatted")` for suite entries or pipeline models.
 
 Usage:
-    python tools/dump_plans.py --out DIR [--suffix _after] [--sf-dir DIR] name [name ...]
+    python tools/dump_plans.py --out DIR [--suffix _after] [--sf-dir DIR] [name ...]
     python tools/dump_plans.py --out DIR [--suffix _after] --warehouse WH [model ...]
     python tools/dump_plans.py --out DIR [--suffix _after] --warehouse WH --tests
 
 Writes <out>/<name><suffix>.txt per query — the evidence for plan-shape
-claims. With ``--warehouse`` each name is a pipeline model (default: all
-of them, in build order) and the plan dumped is ``m.fn(ctx)`` over that
+claims. With no names, every registry entry is dumped, in registry order.
+With ``--warehouse`` each name is a pipeline model (default: all of them,
+in build order) and the plan dumped is ``m.fn(ctx)`` over that
 warehouse's current state, exactly what the next ``runner.py build``
 would materialize: incremental models see their existing targets. Run
 the same command from a checkout of the old commit with
@@ -39,7 +40,7 @@ from duckdb_dbt_finance_warehouse_spark.suite import REGISTRY
 def _plans(spark, args):
     """Yield (name, DataFrame) for every requested suite entry or model."""
     if args.warehouse is None:
-        for name in args.names:
+        for name in args.names or REGISTRY:
             spec = REGISTRY.get(name)
             if spec is None:
                 print(f"SKIP {name}: not in registry", flush=True)
@@ -92,8 +93,6 @@ def main() -> None:
     ap.add_argument("--warehouse", default=None, help="dump pipeline models over this root")
     ap.add_argument("--tests", action="store_true", help="with --warehouse: the declared tests")
     args = ap.parse_args()
-    if args.warehouse is None and not args.names:
-        ap.error("name the suite entries to dump, or pass --warehouse")
     if args.tests and (args.warehouse is None or args.names):
         ap.error("--tests takes --warehouse and no names")
 
