@@ -79,7 +79,7 @@ HEADLINE = [
     "x_curation_pipeline",        # five-operator curation pass, one plan
     "x_ann_ivf_probe_table",      # IVF serving: cogrouped table probes
     "x_ann_ivf_incremental",      # frozen-model batch append + merged probe
-    "x_ann_lsh_probe_table",      # LSH serving: cogrouped table probes
+    "x_ann_lsh_probe_table",      # LSH serving: indexed-subset probe panel
     "x_ann_lsh_incremental",      # frozen-plane batch append + merged probe
     "x_ann_pq_topk",              # product-quantized ADC serving
     "x_ann_pq_trained",           # per-subspace Lloyd-trained codebooks

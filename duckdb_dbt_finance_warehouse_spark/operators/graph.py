@@ -219,10 +219,8 @@ def cooccurrence_pairs_frame(
     df: DataFrame, group_col: str, item_col: str
 ) -> DataFrame:
     """``cooccurrence_pairs`` as STORED state: persisted and memoized by
-    input-plan semantics.  Consumers that accept a prepared edge frame
-    (``triangle_stats(..., _edges_prepared=True)`` and friends) skip
-    their internal re-distinct — the frame is already distinct (a < b)
-    and materialized."""
+    input-plan semantics — the distinct (a < b), materialized edge
+    frame the triangle functions take as input."""
     return stored(
         "graph.pairs",
         df,
@@ -277,12 +275,7 @@ def _bucket_ranks(
     )
 
 
-def _vertex_ranks(
-    deg: DataFrame,
-    buckets: int = 32,
-    caller: str = "triangle census",
-    overflow_hint: str = "use triangle_sample_stats",
-) -> DataFrame:
+def _vertex_ranks(deg: DataFrame) -> DataFrame:
     """Dense int32 vertex ranks under the total order ≺ = (degree, id)
     — the per-stage dictionary that lets a wide vertex-keyed exchange
     carry 4-byte ranks instead of 8-byte ids (+ any carried degree
@@ -299,21 +292,16 @@ def _vertex_ranks(
     nondeterministic: a rebuilt plan never cache-matches this
     dictionary (see ``_dense_ids``)."""
     return _bucket_ranks(
-        deg.repartitionByRange(buckets, F.col("d"), F.col("v")).withColumn(
+        deg.repartitionByRange(32, F.col("d"), F.col("v")).withColumn(
             "_bucket", F.spark_partition_id()
         ),
         ["d", "v"],
-        caller,
-        overflow_hint,
+        "triangle census",
+        "use triangle_sample_stats",
     )
 
 
-def _dense_ids(
-    ids: DataFrame,
-    buckets: int = 32,
-    caller: str = "pagerank",
-    overflow_hint: str = "shard the graph",
-) -> DataFrame:
+def _dense_ids(ids: DataFrame) -> DataFrame:
     """Dense int32 ids (v, r) over a distinct vertex frame, in NO
     particular order — the dictionary for iterative loops (pagerank)
     where only density matters, not the census's (degree, id) total
@@ -329,10 +317,10 @@ def _dense_ids(
     function of the data, so CacheManager dedupes rebuilt plans and the
     persisted dictionary is read, not rebuilt."""
     return _bucket_ranks(
-        ids.withColumn("_bucket", F.pmod(F.xxhash64("v"), F.lit(buckets)).cast("int")),
+        ids.withColumn("_bucket", F.pmod(F.xxhash64("v"), F.lit(32)).cast("int")),
         ["v"],
-        caller,
-        overflow_hint,
+        "pagerank",
+        "shard the graph",
     )
 
 
@@ -398,20 +386,17 @@ def census_degree_frame(e0: DataFrame) -> DataFrame:
     return stored("graph.census", e0, ("census_deg",), lambda: _degrees(e0))
 
 
-def census_oriented_frame(e0: DataFrame, deg: DataFrame | None = None) -> DataFrame:
+def census_oriented_frame(e0: DataFrame, deg: DataFrame) -> DataFrame:
     """Rank-encoded degree-oriented edge list (``_degree_oriented``) of a
     prepared edge frame as memoized STORED state — the census's
-    adjacency projection.  ``deg``: a caller that already holds the
-    degree table (router, census) passes it through so a memo MISS
-    doesn't build a second, semantically identical degree aggregate
-    (r13 ADVICE)."""
+    adjacency projection.  ``deg`` is the caller's degree table
+    (``census_degree_frame``), so a memo MISS doesn't build a second,
+    semantically identical degree aggregate (r13 ADVICE)."""
     return stored(
         "graph.census",
         e0,
         ("census_oriented",),
-        lambda: _degree_oriented(
-            e0, census_degree_frame(e0) if deg is None else deg
-        ),
+        lambda: _degree_oriented(e0, deg),
     )
 
 
@@ -443,10 +428,11 @@ def _doulion_oriented(e0: DataFrame, k: int, salt: str) -> DataFrame:
 
 
 def _closed_wedge_count(
-    e: DataFrame, out_col: str = "n_triangles", broadcast_closing: bool = True
+    e: DataFrame, n_edges: int, out_col: str = "n_triangles"
 ) -> DataFrame:
     """Count closed wedges (= triangles, each exactly once) over a
-    rank-oriented edge list from ``_degree_oriented``.
+    rank-oriented edge list from ``_degree_oriented`` holding
+    ``n_edges`` edges.
 
     OUT-PAIR form: a wedge is a pair of out-neighbors (u, w) of the
     same low vertex, ordered u < w in rank space (rank order is the
@@ -457,22 +443,19 @@ def _closed_wedge_count(
     to the in-degree of hubs (a hub's out-degree is 0 → zero wedges).
     Every row here is two int32s.
 
-    When ``broadcast_closing`` the closing join BROADCASTS the edge
-    set as single packed-long keys (ranks are 1..|V| < 2^31, so
-    ``u << 32 | w`` is collision free and hits the LongHashedRelation
-    fast path) instead of shuffling the wedge stream: wedges outnumber
-    edges by the average out-degree (sf1: 1.48 B wedges vs 12 M edges
-    — a ~12 GB exchange), so the wedge stream stays fused in its
-    generating map stage and probes a broadcast hash map, never
-    hitting an exchange. The CALLER must guarantee the build side fits
-    a broadcast budget — ``triangle_stats_auto`` routes exact censuses
-    past ``MAX_CENSUS_EDGES`` to the DOULION sample and checks the
-    SURVIVING edge count on that path too (1/k of an unbounded graph
-    is still unbounded — r10 ADVICE): past the budget this degrades to
-    ``broadcast_closing=False``, the old shuffle_hash closing join,
-    which pays the wedge exchange but never driver-OOMs. The wedge
-    self-join keeps ``shuffle_hash`` either way — sorting even the
-    edge stream twice to build wedges is waste."""
+    While ``n_edges`` fits ``MAX_CENSUS_EDGES`` (read at call time) the
+    closing join BROADCASTS the edge set as single packed-long keys
+    (ranks are 1..|V| < 2^31, so ``u << 32 | w`` is collision free and
+    hits the LongHashedRelation fast path) instead of shuffling the
+    wedge stream: wedges outnumber edges by the average out-degree
+    (sf1: 1.48 B wedges vs 12 M edges — a ~12 GB exchange), so the
+    wedge stream stays fused in its generating map stage and probes a
+    broadcast hash map, never hitting an exchange. Past the budget —
+    1/k of an unbounded graph is still unbounded (r10 ADVICE), so the
+    sampled path checks its SURVIVING edge count too — it is the
+    shuffle_hash closing join, which pays the wedge exchange but never
+    driver-OOMs. The wedge self-join keeps ``shuffle_hash`` either way
+    — sorting even the edge stream twice to build wedges is waste."""
     p = (
         e.alias("x")
         .join(e.alias("y").hint("shuffle_hash"), F.col("x.ra") == F.col("y.ra"))
@@ -489,23 +472,17 @@ def _closed_wedge_count(
             F.shiftleft(F.col("ra").cast("bigint"), 32) + F.col("rb").cast("bigint")
         ).alias("_uw")
     )
-    if broadcast_closing:
+    if n_edges <= MAX_CENSUS_EDGES:
         closed = p.join(F.broadcast(closing), "_uw")
     else:
         closed = p.join(closing.hint("shuffle_hash"), "_uw")
     return closed.agg(F.count("*").alias(out_col))
 
 
-def triangle_stats(
-    edges: DataFrame,
-    *,
-    _edges_prepared: bool = False,
-    broadcast_closing: bool | None = None,
-    _deg: DataFrame | None = None,
-    _census_memoize: bool = True,
-) -> DataFrame:
-    """Global triangle census over an undirected edge list (a < b):
-    one row (n_edges, n_wedges, n_triangles, clustering_coeff).
+def triangle_stats(edges: DataFrame) -> DataFrame:
+    """Global triangle census over a distinct (a < b) edge frame — the
+    stored ``cooccurrence_pairs_frame`` or any frame prepared the same
+    way: one row (n_edges, n_wedges, n_triangles, clustering_coeff).
 
     The compact-forward shape with DEGREE ORDERING: every edge is
     re-oriented to point from its lower-(degree, id) endpoint to the
@@ -518,6 +495,16 @@ def triangle_stats(
     (one extra small aggregate), so the global clustering coefficient
     3·triangles/wedges is an exact-integer ratio rendered as a double
     identically in any engine.
+
+    The degree summary and the oriented adjacency are memoized stored
+    state next to the edge table (``census_degree_frame`` /
+    ``census_oriented_frame``) — prep runs once per stored graph, not
+    once per census invocation. The closing-join strategy is decided by
+    COUNTING the oriented edge frame against ``MAX_CENSUS_EDGES`` — the
+    measured, exact bound, and free under the checkpoint model (the
+    count materializes the ``shared`` frame the census reads next), so
+    a past-budget graph degrades to the shuffle_hash closing join
+    instead of attempting a multi-GB broadcast (r11 VERDICT).
 
     Scale: candidate-wedge volume concentrates on high-degree
     vertices; degree ordering caps per-vertex wedge work at
@@ -536,58 +523,21 @@ def triangle_stats(
     probe it against the edge list — hashing the edge side instead is
     3.3× faster measured (6.9 s → 2.1 s, sf0.1). The build is one
     shuffle partition of 2-long edge rows; if a partition ever
-    outgrew executor memory, dropping the hint falls back to SMJ.
+    outgrew executor memory, dropping the hint falls back to SMJ."""
+    deg = census_degree_frame(edges)
+    # the wedge self-join, closing join and count read e four times
+    e = shared(census_oriented_frame(edges, deg))
+    return _census(e, deg, e.count())
 
-    ``_edges_prepared``: internal — ``triangle_stats_auto`` passes an
-    already-distinct, already-checkpointed edge frame so the dedup
-    shuffle it paid for the edge count isn't paid twice.
 
-    ``_deg``: internal — a precomputed (already-checkpointed)
-    undirected degree frame (v, d), so the router's wedge-count
-    aggregate and the census share ONE degree computation.
-
-    ``broadcast_closing``: strategy for the closing join (see
-    ``_closed_wedge_count``). ``None`` (default) decides by COUNTING
-    the oriented edge frame against ``MAX_CENSUS_EDGES`` — the
-    measured, exact bound, and free under the checkpoint model (the
-    frame's stages already ran at the ``shared`` call), so a
-    direct call on a past-budget graph degrades to the shuffle_hash
-    closing join instead of attempting a multi-GB broadcast (r11
-    VERDICT: the old ``True`` default trusted docstring discipline).
-    ``triangle_stats_auto`` passes the decision in precomputed from
-    the deduped count it already pays for routing; ``False`` forces
-    the shuffle_hash closing join."""
-    if _edges_prepared:
-        # the stored-graph path: degree summary and oriented adjacency
-        # are memoized stored state next to the edge table — prep runs
-        # once per stored graph, not once per census invocation.
-        e0 = edges
-        if _census_memoize:
-            deg = _deg if _deg is not None else census_degree_frame(e0)
-            # the wedge self-join, closing join and count read e four times
-            e = shared(census_oriented_frame(e0, deg=deg))
-        else:
-            # per-invocation prepared frame (a fresh checkpoint plan from
-            # triangle_stats_auto's ad-hoc route): its plan can never
-            # sameSemantics-match again, so memo insertion would only
-            # evict genuinely reusable stored-graph frames (r13 ADVICE) —
-            # build the oriented projection directly
-            deg = _deg
-            if deg is None:
-                deg = shared(_degrees(e0))
-            e = shared(_degree_oriented(e0, deg))
-    else:
-        e0 = shared(edges.select("a", "b").distinct())
-        deg = _deg
-        if deg is None:
-            deg = shared(_degrees(e0))
-        e = shared(_degree_oriented(e0, deg))
+def _census(e: DataFrame, deg: DataFrame, n_edges: int) -> DataFrame:
+    """The census output over the shared oriented edge frame ``e`` and
+    its degree table: ``n_edges`` is the caller's measured edge count,
+    which picks the closing join (``_closed_wedge_count``)."""
     wedges = deg.agg(
         F.sum(F.expr("d * (d - 1) div 2")).alias("n_wedges")
     )
-    if broadcast_closing is None:
-        broadcast_closing = e.count() <= MAX_CENSUS_EDGES
-    tri = _closed_wedge_count(e, broadcast_closing=broadcast_closing)
+    tri = _closed_wedge_count(e, n_edges)
     n_e = e.agg(F.count("*").alias("n_edges"))
     return (
         n_e.crossJoin(F.broadcast(wedges))
@@ -608,18 +558,11 @@ def triangle_stats(
     )
 
 
-def triangle_sample_stats(
-    edges: DataFrame,
-    k: int = 4,
-    salt: str = "tri",
-    *,
-    _edges_prepared: bool = False,
-    broadcast_closing: bool | None = None,
-    _census_memoize: bool = True,
-) -> DataFrame:
-    """DOULION-style sampled triangle estimate — the 100 TB path where
-    the exact census (``triangle_stats``) is too expensive: keep each
-    edge with probability 1/k via the deterministic md5 uniform
+def triangle_sample_stats(edges: DataFrame, k: int = 4, salt: str = "tri") -> DataFrame:
+    """DOULION-style sampled triangle estimate over a distinct (a < b)
+    edge frame — the 100 TB path where the exact census
+    (``triangle_stats``) is too expensive: keep each edge with
+    probability 1/k via the deterministic md5 uniform
     (operators/sampling.hash_uniform on the "a:b" edge key — same
     sample on any engine/cluster/rerun), count triangles on the
     sampled graph, scale by k³ (a surviving triangle needs all three
@@ -630,41 +573,19 @@ def triangle_sample_stats(
     ``k`` must be a power of two so 1/k is exact in float64 and the
     keep-filter compares identically in every engine.
 
-    ``broadcast_closing``: closing-join strategy for the SAMPLED
-    graph's census. 1/k of an unbounded graph is still unbounded
-    (r10 ADVICE), so the packed-long broadcast closing join is only
-    taken while the surviving edge set fits the ``MAX_CENSUS_EDGES``
-    broadcast budget. ``None`` (default) decides by COUNTING the
-    survivors — the exact bound, and free: under AQE the survivor
-    frame's ``shared`` call has already executed the
-    sample+orientation stages, and bench.py times plan construction
+    The sampled sketch graph's oriented projection is memoized stored
+    state (``doulion_oriented_frame``). 1/k of an unbounded graph is
+    still unbounded (r10 ADVICE), so the closing join is picked by
+    COUNTING the survivors against ``MAX_CENSUS_EDGES`` — the exact
+    bound, and free: the count materializes the ``shared`` survivor
+    frame the census then reads, and bench.py times plan construction
     (the r11 clock fix), so nothing is displaced out of any timed
-    region and the census reuses the materialized checkpoint (an
-    earlier cut routed on the raw input count to keep construction
-    light, which re-ran the edge-prep pipeline twice).
-    ``triangle_stats_auto`` passes the decision in precomputed from
-    the deduped count it already pays for routing. ``False`` forces
-    the shuffle_hash closing join (pays the wedge exchange, never
-    driver-OOMs)."""
+    region (an earlier cut routed on the raw input count to keep
+    construction light, which re-ran the edge-prep pipeline twice)."""
     if k & (k - 1):
         raise ValueError(f"k must be a power of two, got {k}")
-    if _edges_prepared and _census_memoize:
-        # stored-graph path: the deterministic sampled sketch's oriented
-        # projection is memoized stored state (see doulion_oriented_frame)
-        es = doulion_oriented_frame(edges, k, salt)
-    else:
-        # per-invocation prepared frame (triangle_stats_auto's ad-hoc
-        # route) never memo-matches again, and a raw edge list needs its
-        # dedup first — build the sampled oriented projection directly
-        # instead of polluting the census LRU
-        e = edges if _edges_prepared else edges.select("a", "b").distinct()
-        es = _doulion_oriented(e, k, salt)
-    es = shared(es)  # the census reads es four times
-    if broadcast_closing is None:
-        broadcast_closing = es.count() <= MAX_CENSUS_EDGES
-    tri = _closed_wedge_count(
-        es, out_col="n_triangles_sampled", broadcast_closing=broadcast_closing
-    )
+    es = shared(doulion_oriented_frame(edges, k, salt))  # the census reads es four times
+    tri = _closed_wedge_count(es, es.count(), out_col="n_triangles_sampled")
     n_e = es.agg(F.count("*").alias("n_edges_sampled"))
     return n_e.crossJoin(F.broadcast(tri)).select(
         "n_edges_sampled",
@@ -693,98 +614,47 @@ MAX_CENSUS_EDGES = 20_000_000
 MAX_CENSUS_WEDGES = 400_000_000
 
 
-def triangle_stats_auto(
-    edges: DataFrame,
-    max_census_wedges: int = MAX_CENSUS_WEDGES,
-    k: int = 4,
-    salt: str = "tri",
-    force_census: bool = False,
-    max_census_edges: int = MAX_CENSUS_EDGES,
-    _edges_prepared: bool = False,
-) -> DataFrame:
-    """ONE entry point for triangle counting (VERDICT r6 task 7): runs
-    the exact census (``triangle_stats``) while the graph's exact
-    open-wedge count Σ_v C(deg(v), 2) — the census's cost driver — is
-    within ``max_census_wedges``, and auto-routes to the DOULION
-    sampled estimate (``triangle_sample_stats`` — unbiased k³ scale-up,
-    wedge volume cut k²) beyond it (r13: routing moved from edge count
-    to wedge count; a near-clique of 1M edges has ~1000× the wedge work
-    of a sparse 1M-edge graph, so edges alone mispredict the cost by
-    the density). The census stays available unconditionally via
-    ``force_census=True`` (opt-in, never silent: the ``method`` column
-    says which path produced the number).
+def triangle_stats_auto(edges: DataFrame, k: int = 4, salt: str = "tri") -> DataFrame:
+    """ONE entry point for triangle counting (VERDICT r6 task 7) over a
+    distinct (a < b) edge frame: runs the exact census
+    (``triangle_stats``) while the graph's exact open-wedge count
+    Σ_v C(deg(v), 2) — the census's cost driver — is within
+    ``MAX_CENSUS_WEDGES`` (read at call time), and auto-routes to the
+    DOULION sampled estimate (``triangle_sample_stats`` — unbiased k³
+    scale-up, wedge volume cut k²) beyond it (r13: routing moved from
+    edge count to wedge count; a near-clique of 1M edges has ~1000×
+    the wedge work of a sparse 1M-edge graph, so edges alone mispredict
+    the cost by the density). The ``method`` column says which path
+    produced the number — the switch is never silent.
 
-    Routing cost: the deduped edge frame is checkpointed ONCE and
-    handed to whichever path runs (``_edges_prepared``), and the
-    undirected degree table that yields the wedge count is the SAME
-    frame the census needs for its n_wedges output and its degree
-    orientation (``_deg``) — on the census path the router's aggregate
-    is work the census was about to do anyway; on the sampled path it
-    is one edge-volume aggregate. At 100 TB both counts would come
-    from the edge table's catalog stats instead.
-
-    ``max_census_edges`` is the separate BROADCAST budget for the
-    closing join (memory, not routing): a census forced past it still
-    runs, with the shuffle_hash closing join.
+    Routing cost: the router's degree table is the census's stored
+    degree summary (``census_degree_frame``) — on the census path the
+    router's aggregate is work the census was about to do anyway, and
+    the router's edge count picks the census's closing join, so the
+    census pays no count job of its own; on the sampled path it is one
+    edge-volume aggregate. At 100 TB both counts would come from the
+    edge table's catalog stats instead.
 
     Output (both paths): (method, n_edges, n_triangles_est,
     clustering_coeff) — clustering_coeff is NULL on the sampled path
     (the sampled wedge count is biased by k², so the exact-integer
     coefficient contract can't be kept; take the census if you need
     it)."""
-    # _edges_prepared: the caller hands an already-distinct,
-    # already-materialized (persisted or checkpointed) edge frame —
-    # the stored-graph-projection path (cooccurrence_pairs_frame);
-    # re-running the dedup exchange over it would be pure waste.
-    if _edges_prepared:
-        e = edges
-        # the router's degree table is the census's stored degree
-        # summary — one memoized build serves routing AND the census
-        deg = census_degree_frame(e)
-    else:
-        e = shared(edges.select("a", "b").distinct())
-        deg = shared(_degrees(e))
-    n_edges = e.count()
+    deg = census_degree_frame(edges)
+    n_edges = edges.count()
     n_wedges = (
         deg.agg(F.sum(F.expr("d * (d - 1) div 2")).alias("w")).first()["w"]
         or 0
     )
-    if force_census or n_wedges <= max_census_wedges:
-        # e is prepared either way by this point (deduped above when the
-        # caller didn't hand a prepared frame)
-        return triangle_stats(
-            e,
-            _edges_prepared=True,
-            _deg=deg,
-            # force_census can opt a past-budget graph in — the census
-            # still runs, but its closing join must not broadcast an
-            # over-budget edge set
-            broadcast_closing=n_edges <= max_census_edges,
-            # an ad-hoc edge list was checkpointed per-invocation above:
-            # that plan never sameSemantics-matches again, so the census
-            # prep must not enter the stored-frame LRU (r13 ADVICE)
-            _census_memoize=_edges_prepared,
-        ).select(
+    if n_wedges <= MAX_CENSUS_WEDGES:
+        e = shared(census_oriented_frame(edges, deg))
+        return _census(e, deg, n_edges).select(
             F.lit("census").alias("method"),
             "n_edges",
             F.col("n_triangles").cast("long").alias("n_triangles_est"),
             "clustering_coeff",
         )
-    # the sampled path's closing join may only broadcast while the
-    # ACTUAL survivor count fits the census broadcast budget — 1/k of
-    # an unbounded graph is still unbounded (r10 ADVICE), and the
-    # expected n/k can exceed the budget by sampling noise at the
-    # boundary with large custom k (r11 ADVICE). None routes on the
-    # measured survivor count, which is free under the checkpoint
-    # model (the sampled frame's stages already ran).
-    return triangle_sample_stats(
-        e,
-        k=k,
-        salt=salt,
-        _edges_prepared=True,
-        broadcast_closing=None,
-        _census_memoize=_edges_prepared,
-    ).select(
+    return triangle_sample_stats(edges, k=k, salt=salt).select(
         F.lit(f"doulion_k{k}").alias("method"),
         # cast: lit(int) infers IntegerType under 2^31, but the census
         # route's count() is LongType — one schema across both routes

@@ -458,7 +458,7 @@ def ivf_pq_topk(
     )
     return ivf_pq_probe_lists_topk(
         lists, queries, ivf3, pq_model, id_col, vec_col, k, n_probes,
-        n_subspaces, _corpus_id_type=corpus.schema[id_col].dataType,
+        n_subspaces,
     )
 
 
@@ -472,7 +472,6 @@ def ivf_pq_probe_lists_topk(
     k: int = 5,
     n_probes: int = 2,
     n_subspaces: int = 4,
-    _corpus_id_type=None,
 ) -> DataFrame:
     """IVF-PQ SERVING over a pre-built (possibly STORED) codes index —
     the production read path for an index maintained by batch append
@@ -486,7 +485,7 @@ def ivf_pq_probe_lists_topk(
     dim = PQC.shape[1]
     out_schema = _pair_schema(
         queries.schema[id_col].dataType,
-        _corpus_id_type or lists.schema["cand_id"].dataType,
+        lists.schema["cand_id"].dataType,
         "adist",
     )
 

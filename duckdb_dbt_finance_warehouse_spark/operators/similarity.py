@@ -283,7 +283,7 @@ def _query_panel(queries, id_col, vec_col, caller: str, table_variant: str, dim:
     objects otherwise; an empty panel gives (0, ``dim``) arrays.
     Capped (via limit(cap+1) — the probe job never pulls the runaway
     set): a query side big enough to trip this is a TABLE, and the
-    cogrouped table-probe path handles it without any driver collect."""
+    ``*_probe_table`` operators serve it without any driver collect."""
     rows = (
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
         .limit(MAX_QUERY_COLLECT + 1)
@@ -292,8 +292,8 @@ def _query_panel(queries, id_col, vec_col, caller: str, table_variant: str, dim:
     if len(rows) > MAX_QUERY_COLLECT:
         raise ValueError(
             f"{caller}: >{MAX_QUERY_COLLECT} query vectors is a probe TABLE, "
-            f"not a driver-side probe set — use {table_variant} (cogrouped "
-            "bucket/centroid join, no driver collect)"
+            f"not a driver-side probe set — use {table_variant} (bucket- or "
+            "centroid-keyed serving, no driver collect)"
         )
     integral = queries.schema[id_col].dataType.typeName() in _INTEGRAL
     qids = np.array(
@@ -355,8 +355,8 @@ def cosine_topk(
 
     The probe panel is collected driver-side (model-sized state, capped
     by ``_query_panel`` — a panel past the cap is a probe TABLE and
-    takes the cogrouped path) and broadcast into ONE numpy map stage
-    over the corpus: dense vector math through the interpreted
+    takes a ``*_probe_table`` operator) and broadcast into ONE numpy
+    map stage over the corpus: dense vector math through the interpreted
     higher-order-function route paid ~5x (CodegenFallback per element;
     the CLAUDE.md slow path — measured 1.6 s vs 0.3 s for 20k x 16 x 64
     at sf1). Components are quantized (``QUANT_SCALE``) so every dot
@@ -371,7 +371,7 @@ def cosine_topk(
 
     qids, Qq, qn = _query_panel(
         queries, id_col, vec_col, "cosine_topk",
-        "lsh_probe_buckets_topk / ivf_probe_table_topk",
+        "ivf_ann_topk_probe_table / lsh_ann_topk_probe_table",
     )
     bc = corpus.sparkSession.sparkContext.broadcast((qids, Qq, qn))
     id_type = corpus.schema[id_col].dataType
@@ -593,10 +593,10 @@ def ivf_ann_topk(
 
 
 def _pair_score_cogroup(cands, probes):
-    """Cogroup scoring kernel shared by the probe-table ANN paths: for
-    one co-located group (an IVF inverted list or an LSH bucket),
-    block-matmul the quantized cosine of every (probe, candidate) pair,
-    drop self-matches, and emit rounded scores. All arithmetic is
+    """Cogroup scoring kernel of the IVF probe-table paths: for one
+    co-located group (an inverted list), block-matmul the quantized
+    cosine of every (probe, candidate) pair, drop self-matches, and
+    emit rounded scores. All arithmetic is
     quantized-exact (``QUANT_SCALE``), so the DuckDB oracle replays it
     bit-for-bit."""
     return _np_cos_pairs(
@@ -846,27 +846,28 @@ def lsh_planes_for(corpus_rows: int, target_bucket_rows: int = 4096) -> int:
 
 def lsh_ann_topk_probe_table(
     corpus: DataFrame,
-    queries: DataFrame | None = None,
+    probe_pred,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     n_tables: int = 8,
     n_planes: int = 4,
     dim: int = 64,
-    prune_to_probed: bool = False,
-    probe_pred=None,
 ) -> DataFrame:
-    """LSH ANN top-k with a DataFrame probe side of arbitrary size — the
-    serving path when queries arrive as a table, not a handful of
-    driver-origin vectors. Nothing data-sized is collected: the only
-    broadcast is the ±1 sign matrix (n_tables x n_planes x dim literals).
+    """LSH ANN top-k for a probe panel of any size drawn from the corpus
+    — the serving path when queries arrive as a table, not a handful of
+    driver-origin vectors. ``probe_pred`` is a boolean Column over the
+    index frame's ``cand_id`` that marks the panel. Nothing data-sized
+    is collected: the only broadcast is the ±1 sign matrix (n_tables x
+    n_planes x dim literals).
 
-    Shape: both sides run the same one-pass Arrow bucket assignment
-    (vectors ride along), co-shuffle ONCE on (tbl, bucket), and a
-    cogroup kernel scores each bucket's probes against its candidates.
-    A pair colliding in several tables is emitted per collision with an
-    identical quantized-exact score, so a global DISTINCT dedupes it
-    safely before the top-k window — the same invariant
+    Shape: the probes' bucket rows are read straight out of the
+    memoized stored index (``lsh_index_frame``) — their hashes already
+    exist there — and ONE (tbl, bucket) groupBy splits probes from
+    candidates inside the flagged kernel (``_lsh_flagged_scores``). A
+    pair colliding in several tables is emitted per collision with an
+    identical quantized-exact score, so the dense rank window dedupes
+    it after the rank filter — the same invariant
     ``embedding_near_dup_pairs_lsh`` relies on.
 
     SCALE LEVER — ``n_planes`` must grow with the corpus: a table has
@@ -878,49 +879,9 @@ def lsh_ann_topk_probe_table(
     with ``n_tables``. The suite entry sizes n_planes from the corpus
     row count (``lsh_planes_for``, parquet-footer stat) and pins the
     resulting plane LITERALS per sf, so the oracle replays exactly at
-    every scale.
-
-    ``prune_to_probed``: when the probe side is BOUNDED by construction
-    (a recall-audit panel, a held-out eval set), set True — the corpus
-    bucket stream is pre-filtered map-side by a broadcast semi join on
-    the probed (tbl, bucket) keys, so corpus rows in never-probed
-    buckets don't ride the cogroup shuffle at all. At a fixed probe
-    panel that turns the scan's shuffle volume from corpus-sized into
-    probed-neighborhood-sized. Leave False when probes cover the key
-    space (a table-sized probe side) — the semi join would only add
-    work.
-
-    ``probe_pred``: when the probe table is an INDEXED SUBSET of the
-    corpus (a standing serving panel drawn from the same embeddings
-    table), pass a boolean Column over the index frame's ``cand_id``
-    instead of a ``queries`` frame — the probes' bucket rows are read
-    straight out of the memoized stored index (``lsh_index_frame``) and
-    a single (tbl, bucket) groupBy splits probes from candidates inside
-    the flagged kernel: ONE exchange instead of the cogroup's two, and
-    the probe side's whole Arrow re-hash stage disappears (its hashes
-    already exist in the index). Bit-identical results by construction
-    — hashing is per-vector under frozen planes and the kernel math is
-    the same. A truly held-out probe table still takes the ``queries``
-    frame and the cogroup. Exactly one of ``queries`` / ``probe_pred``
-    must be given."""
-    if (queries is None) == (probe_pred is None):
-        raise ValueError(
-            "lsh_ann_topk_probe_table: pass exactly one of queries / probe_pred"
-        )
-    if probe_pred is not None and prune_to_probed:
-        raise ValueError(
-            "lsh_ann_topk_probe_table: prune_to_probed applies only to the "
-            "queries cogroup path — the probe_pred path already reads probes "
-            "out of the stored index (there is no probe-side scan to prune)"
-        )
-    if probe_pred is not None:
-        buckets = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
-        return _query_topk(_lsh_flagged_scores(buckets, probe_pred), k, dense=True)
-    scored = _lsh_scored_pairs(
-        corpus, queries, id_col, vec_col, n_tables, n_planes, dim,
-        prune_to_probed=prune_to_probed, dedup=False,
-    )
-    return _query_topk(scored, k, dense=True)
+    every scale."""
+    buckets = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
+    return _query_topk(_lsh_flagged_scores(buckets, probe_pred), k, dense=True)
 
 
 def lsh_build_buckets(
@@ -930,14 +891,13 @@ def lsh_build_buckets(
     n_tables: int = 8,
     n_planes: int = 4,
     dim: int = 64,
-    out_id: str = "cand_id",
 ) -> DataFrame:
     """LSH INDEX BUILD: one narrow Arrow pass hashes every vector into
     its bucket in each of the ``n_tables`` hash tables under the
     deterministic ±1 plane matrix (``_sign_matrix`` — a pure function of
     (n_tables, n_planes, dim), i.e. the planes are FROZEN by
     construction, the LSH analogue of the frozen IVF centroid model)
-    and emits the index rows (tbl, bucket, ``out_id``, _vec).
+    and emits the index rows (tbl, bucket, cand_id, _vec).
 
     This frame IS the serving index: store it partitioned by ``tbl``
     (or (tbl, bucket-range) at scale) via Warehouse.write and probe
@@ -953,7 +913,7 @@ def lsh_build_buckets(
         [
             T.StructField("tbl", T.IntegerType()),
             T.StructField("bucket", T.LongType()),
-            T.StructField(out_id, df.schema[id_col].dataType),
+            T.StructField("cand_id", df.schema[id_col].dataType),
             T.StructField("_vec", df.schema[vec_col].dataType),
         ]
     )
@@ -971,13 +931,13 @@ def lsh_build_buckets(
                 {
                     "tbl": np.tile(tbls, n),
                     "bucket": B.ravel(),
-                    out_id: pdf[out_id].to_numpy()[idx],
+                    "cand_id": pdf["cand_id"].to_numpy()[idx],
                     "_vec": pdf["_vec"].to_numpy()[idx],
                 }
             )
 
     return df.select(
-        F.col(id_col).alias(out_id), F.col(vec_col).alias("_vec")
+        F.col(id_col).alias("cand_id"), F.col(vec_col).alias("_vec")
     ).mapInPandas(assign, schema)
 
 
@@ -1050,97 +1010,19 @@ def ivf_lists_frame(
     )
 
 
-def _lsh_score_buckets(
-    buckets: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_tables: int,
-    n_planes: int,
-    dim: int,
-    prune_to_probed: bool = False,
-    dedup: bool = True,
-) -> DataFrame:
-    """Probe stage over pre-built index ``buckets`` (tbl, bucket,
-    cand_id, _vec — from ``lsh_build_buckets`` or a stored index
-    table): bucket-assign the probes in one Arrow pass under the same
-    frozen planes, co-shuffle once on (tbl, bucket), score each
-    bucket's probes against its candidates via the cogroup kernel, and
-    DISTINCT the multi-table collisions (quantized scores are identical
-    across collisions, so the dedup is safe). Returns (query_id,
-    cand_id, cosine) — consumers add top-k or threshold semantics.
-
-    ``prune_to_probed``: broadcast-semi-join the index stream on the
-    DISTINCT probed (tbl, bucket) keys before the cogroup exchange —
-    rows in never-probed buckets are dropped MAP-SIDE and never
-    shuffle. Only valid when the probe side is bounded by construction
-    (the broadcast is |probes| x n_tables keys at most); it cannot
-    change the result, because a bucket with no probe produces no
-    pairs. The probe assignment runs twice under the flag (once for
-    keys, once for the cogroup) — O(probes) Arrow work, the price of
-    keeping corpus-sized data off the wire."""
-    probes = lsh_build_buckets(
-        queries, id_col, vec_col, n_tables, n_planes, dim, out_id="query_id"
-    )
-    if prune_to_probed:
-        # the semi join and the cogroup both read the bounded probe keys
-        probes = shared(probes)
-    return _lsh_score_prehashed(
-        buckets,
-        probes,
-        queries.schema[id_col].dataType,
-        prune_to_probed=prune_to_probed,
-        dedup=dedup,
-    )
-
-
-def _lsh_score_prehashed(
-    buckets: DataFrame,
-    probes: DataFrame,
-    qid_type,
-    prune_to_probed: bool = False,
-    dedup: bool = True,
-) -> DataFrame:
-    """Score PRE-HASHED probe bucket rows (tbl, bucket, query_id, _vec)
-    against the index — the serving tail of ``_lsh_score_buckets`` for
-    callers whose probe bucket assignments already exist (e.g. the
-    probe panel is an indexed subset, so its rows come straight out of
-    the stored/persisted index instead of re-hashing through an extra
-    Arrow stage)."""
-    if prune_to_probed:
-        probed_keys = probes.select("tbl", "bucket").distinct()
-        buckets = buckets.join(
-            F.broadcast(probed_keys), ["tbl", "bucket"], "left_semi"
-        )
-    scored = (
-        buckets.groupBy("tbl", "bucket")
-        .cogroup(probes.groupBy("tbl", "bucket"))
-        .applyInPandas(
-            _pair_score_cogroup,
-            _pair_schema(qid_type, buckets.schema["cand_id"].dataType),
-        )
-    )
-    # dedup=False: a top-k consumer folds the multi-table dedup into its
-    # dense rank window (_query_topk) instead of paying a pair-sized
-    # exchange
-    return scored.distinct() if dedup else scored
-
-
 def _pair_score_flagged_fn(probes_are_candidates: bool = True):
-    """Single-frame variant of ``_pair_score_cogroup`` for probe
-    panels that are INDEXED SUBSETS: one group's rows carry an
-    ``_is_probe`` flag, the kernel splits probes out and scores them
-    against the group. Lets the serving plan pay ONE (tbl, bucket)
-    exchange instead of the cogroup's two — the probe rows already ride
-    the index stream. Same quantized-exact math and self-match drop as
-    the cogroup kernel, bit-identical output.
+    """LSH bucket kernel for probe panels that are INDEXED SUBSETS: one
+    group's rows carry an ``_is_probe`` flag, the kernel splits probes
+    out and scores them against the group (``_np_cos_pairs`` — the same
+    quantized-exact math and self-match drop as the IVF cogroup
+    kernel). The serving plan pays ONE (tbl, bucket) exchange — the
+    probe rows already ride the index stream.
 
     ``probes_are_candidates``: True (ANN serving — a probe is also a
     corpus member other probes may retrieve) scores probes against the
     WHOLE group; False (decontamination — eval examples must never be
     reported as contaminated corpus docs) scores probes against the
-    non-probe rows only, matching the cogroup form whose corpus side
-    excluded the eval set."""
+    non-probe rows only."""
 
     def score(pdf):
         pr = pdf[pdf["_is_probe"]]
@@ -1166,8 +1048,8 @@ def _lsh_flagged_scores(
     the panel's rows with ``probe_pred`` (a boolean Column over
     ``pred_col``, which the index carries as ``cand_id``), pay ONE
     (tbl, bucket) exchange, and let the flagged kernel split probes
-    from candidates inside the group — no cogroup second exchange, no
-    probe re-hash Arrow stage. Returns the raw per-collision
+    from candidates inside the group — no second exchange, no probe
+    re-hash Arrow stage. Returns the raw per-collision
     (query_id, cand_id, cosine) stream; callers add top-k or threshold
     semantics (and the output-sized dedup — never a pair-sized one)."""
     flagged = (
@@ -1188,62 +1070,16 @@ def _lsh_flagged_scores(
     )
 
 
-def _lsh_scored_pairs(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_tables: int,
-    n_planes: int,
-    dim: int,
-    prune_to_probed: bool = False,
-    dedup: bool = True,
-) -> DataFrame:
-    """Shared probe-table pair stage: read the corpus bucket index from
-    the memoized STORED index (``lsh_index_frame`` — the serving-index
-    lifecycle: every probe batch over the same corpus/params reads one
-    persisted build instead of re-hashing the corpus per invocation)
-    and score the probe table against it (``_lsh_score_buckets``)."""
-    cands = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
-    return _lsh_score_buckets(
-        cands, queries, id_col, vec_col, n_tables, n_planes, dim,
-        prune_to_probed=prune_to_probed,
-        dedup=dedup,
-    )
-
-
-def lsh_probe_buckets_topk(
-    buckets: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-    n_tables: int = 8,
-    n_planes: int = 4,
-    dim: int = 64,
-) -> DataFrame:
-    """LSH SERVING over a pre-built (possibly stored) bucket index:
-    ``_lsh_score_buckets`` + the per-query top-k window. The
-    (n_tables, n_planes, dim) parameters MUST match the build — they
-    define the frozen plane matrix the probes are hashed under."""
-    scored = _lsh_score_buckets(
-        buckets, queries, id_col, vec_col, n_tables, n_planes, dim,
-        dedup=False,
-    )
-    return _query_topk(scored, k, dense=True)
-
-
 def lsh_incremental_topk(
     base: DataFrame,
     batch: DataFrame,
-    queries: DataFrame | None = None,
+    probe_pred,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     n_tables: int = 8,
     n_planes: int = 4,
     dim: int = 64,
-    probe_pred=None,
 ) -> DataFrame:
     """INCREMENTAL LSH index maintenance — the ``ivf_incremental_topk``
     lifecycle applied to the hash-bucket index: the stored bucket rows
@@ -1265,18 +1101,10 @@ def lsh_incremental_topk(
     end-to-end). Without it the whole index hashing would recompute per
     probe batch.
 
-    ``probe_pred``: when the probe panel is an INDEXED SUBSET (a
-    standing eval panel drawn from the corpus), pass a boolean Column
-    over ``cand_id`` instead of a ``queries`` frame — the probe bucket
-    rows are then read straight out of the persisted index (their
-    hashes already exist; re-hashing the panel through a second Arrow
-    stage is pure waste). Identical results by construction: hashing is
-    per-vector under frozen planes. Exactly one of ``queries`` /
-    ``probe_pred`` must be given."""
-    if (queries is None) == (probe_pred is None):
-        raise ValueError(
-            "lsh_incremental_topk: pass exactly one of queries / probe_pred"
-        )
+    ``probe_pred`` (a boolean Column over ``cand_id``) marks the probe
+    panel among the merged index rows; its bucket rows are served
+    straight out of the persisted index, as in
+    ``lsh_ann_topk_probe_table``."""
     # the BASE index is the stored table (lsh_index_frame — memoized by
     # corpus plan + params, so repeat appends over the same stored index
     # read one persisted build); only the NEW batch is hashed fresh,
@@ -1287,96 +1115,55 @@ def lsh_incremental_topk(
             lsh_build_buckets(batch, id_col, vec_col, n_tables, n_planes, dim)
         )
     )
-    if probe_pred is not None:
-        # probes are index rows, so the probe side needn't ride its own
-        # exchange at all: flag them and let a SINGLE (tbl, bucket)
-        # groupBy split probes from candidates inside the kernel — one
-        # exchange instead of the cogroup's two, bit-identical scores
-        return _query_topk(
-            _lsh_flagged_scores(merged, probe_pred), k, dense=True
-        )
-    return lsh_probe_buckets_topk(
-        merged, queries, id_col, vec_col, k, n_tables, n_planes, dim
-    )
+    return _query_topk(_lsh_flagged_scores(merged, probe_pred), k, dense=True)
 
 
 def semantic_decontaminate(
     corpus: DataFrame,
-    eval_set: DataFrame | None = None,
+    eval_pred,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.4,
     n_tables: int = 8,
     n_planes: int = 4,
     dim: int = 64,
-    eval_pred=None,
 ) -> DataFrame:
     """SEMANTIC decontamination — the embedding-space companion to
     ``text.decontaminate``'s n-gram scan: flag corpus documents whose
-    embedding sits within ``threshold`` cosine of ANY held-out eval
-    example. Paraphrased or translated eval leakage shares no 8-gram
-    with the eval set (the n-gram scan misses it) but lands next to it
-    in embedding space — every serious eval-hygiene pass runs both.
+    embedding sits within ``threshold`` cosine of ANY eval example.
+    Paraphrased or translated eval leakage shares no 8-gram with the
+    eval set (the n-gram scan misses it) but lands next to it in
+    embedding space — every serious eval-hygiene pass runs both.
+
+    ``corpus`` is the whole embeddings table, eval examples included;
+    ``eval_pred`` (a boolean Column over the index frame's ``cand_id``)
+    marks the eval set. A held-out eval set is unioned into the corpus
+    frame first.
 
     Output: one row per FLAGGED corpus doc — (id, n_eval_hits,
     max_cosine). Drop or quarantine the flagged ids; unflagged docs
     don't appear (the common case — keep the output contamination-
-    sized, not corpus-sized).
+    sized, not corpus-sized). Eval examples are never reported as
+    contaminated docs.
 
-    Shape: the shared LSH probe-table stage (one Arrow bucket pass per
-    side, one (tbl, bucket) co-shuffle, cogroup scoring, quantized-
-    exact scores) followed by a threshold filter and a cand-keyed
-    aggregate. Nothing collects; the eval set rides as a DataFrame.
-    Recall is the LSH recall — raise ``n_tables`` for a tighter sweep
-    or run the exact ``cosine_topk`` on the (tiny) flagged closure.
-    Same ``n_planes`` scale lever as ``lsh_ann_topk_probe_table``.
-
-    The eval set is BOUNDED by construction (a held-out benchmark), so
-    the index stream is pruned to the probed buckets map-side
-    (``prune_to_probed``) — corpus rows nowhere near an eval example
-    never ride the cogroup shuffle.
-
-    ``eval_pred``: when the eval panel is an INDEXED SUBSET — a
-    standing benchmark whose examples live in the same embeddings table
-    as the corpus — pass ``corpus`` as the FULL table and a boolean
-    Column over the index frame's ``cand_id`` instead of ``eval_set``:
-    the panel's bucket rows are read straight out of the one bucket
-    pass and a single (tbl, bucket) groupBy splits eval from corpus
-    inside the kernel (``probes_are_candidates=False`` — eval examples
-    are never reported as contaminated docs, matching the two-frame
-    form whose corpus excluded them). One exchange instead of the
-    cogroup's two and no second Arrow hash stage; scores bit-identical
-    by construction. The index rows come from ``lsh_index_frame`` — the
-    memoized persisted STORED index (the repo's index-lifecycle rule:
-    decontamination probes the same serving index the recall audit
-    audits; rebuilding the bucket pass per decontamination run
-    mis-models the lifecycle and pays a corpus Arrow hash every
-    invocation). A truly HELD-OUT eval set (not in the table) still
-    takes the two-frame cogroup path. Exactly one of ``eval_set`` /
-    ``eval_pred`` must be given."""
-    if (eval_set is None) == (eval_pred is None):
-        raise ValueError(
-            "semantic_decontaminate: pass exactly one of eval_set / eval_pred"
-        )
-    if eval_pred is not None:
-        buckets = lsh_index_frame(
-            corpus, id_col, vec_col, n_tables, n_planes, dim
-        )
-        scored = (
-            _lsh_flagged_scores(
-                buckets, eval_pred, probes_are_candidates=False
-            )
-            # a pair colliding in several tables has identical quantized
-            # scores everywhere — dedup the contamination-sized remainder
-            # AFTER the threshold filter, never the full pair stream
-            .filter(F.col("cosine") >= threshold)
-            .distinct()
-        )
-    else:
-        scored = _lsh_scored_pairs(
-            corpus, eval_set, id_col, vec_col, n_tables, n_planes, dim,
-            prune_to_probed=True,
-        ).filter(F.col("cosine") >= threshold)
+    Shape: the bucket rows come from ``lsh_index_frame`` — the memoized
+    persisted STORED index, the same serving index the recall audit
+    audits — and ONE (tbl, bucket) groupBy splits eval from corpus
+    inside the flagged kernel (``probes_are_candidates=False``),
+    followed by a threshold filter and a cand-keyed aggregate. Nothing
+    collects. Recall is the LSH recall — raise ``n_tables`` for a
+    tighter sweep or run the exact ``cosine_topk`` on the (tiny)
+    flagged closure. Same ``n_planes`` scale lever as
+    ``lsh_ann_topk_probe_table``."""
+    buckets = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
+    scored = (
+        _lsh_flagged_scores(buckets, eval_pred, probes_are_candidates=False)
+        # a pair colliding in several tables has identical quantized
+        # scores everywhere — dedup the contamination-sized remainder
+        # AFTER the threshold filter, never the full pair stream
+        .filter(F.col("cosine") >= threshold)
+        .distinct()
+    )
     return (
         scored
         .groupBy("cand_id")
@@ -1815,14 +1602,13 @@ def centroid_drift(
 
 def ann_recall_audit(
     corpus: DataFrame,
-    probes: DataFrame | None = None,
+    probe_pred,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
     n_tables: int = 8,
     n_planes: int = 4,
     dim: int = 64,
-    probe_pred=None,
 ) -> DataFrame:
     """ANN quality measurement — recall@k of the LSH probe-table path
     against the exact brute-force ground truth, per probe. This is the
@@ -1830,6 +1616,8 @@ def ann_recall_audit(
     approximate index at 100 TB: tuning blind is how silent recall
     collapse ships. Run it on a small fixed probe panel per ingest
     batch and alert on drops (the same discipline as the drift gates).
+    ``probe_pred`` (a boolean Column over ``id_col``) marks the panel
+    among the corpus rows.
 
     Output: (query_id, n_exact, n_hits, recall_ppm) where recall_ppm =
     (hits·10⁶) div |exact top-k| — exact integers, engine-identical;
@@ -1837,62 +1625,34 @@ def ann_recall_audit(
     id sets — and therefore the audit — replay bit-for-bit.
 
     Shape: the exact side broadcasts the (constant-size) probe panel
-    over one corpus stream + a WindowGroupLimit top-k; the approximate
-    side is the shared LSH probe-table stage with the index stream
-    pruned to the panel's probed buckets (``prune_to_probed`` — the
-    panel is constant-size, so the probed-keys broadcast is bounded);
-    the comparison is a semi join at top-k volume. Keep the panel
-    fixed-size (it rides a broadcast nested-loop by design); the
-    corpus side scales freely.
-
-    ``probe_pred``: when the panel is an INDEXED SUBSET of the corpus
-    (the standing-panel production mode), pass a boolean Column over
-    ``id_col`` instead of a ``probes`` frame — the audited bucket index
-    is then built ONCE and ``persist``-ed (it IS the stored index
-    being audited; rebuilding it per audit run mis-models the
-    lifecycle), the probe bucket rows are read straight out of it
-    (flagged, no second Arrow hash stage), and the scoring pays ONE
-    (tbl, bucket) exchange via the flagged kernel instead of the
-    cogroup's two — the CLAUDE.md indexed-subset probe rule. Results
-    are bit-identical to the cogroup path by construction (hashing is
-    per-vector under frozen planes; same quantized kernel). Exactly
-    one of ``probes`` / ``probe_pred`` must be given; a truly HELD-OUT
-    panel still takes the ``probes`` frame and the cogroup."""
-    if (probes is None) == (probe_pred is None):
-        raise ValueError(
-            "ann_recall_audit: pass exactly one of probes / probe_pred"
-        )
-    if probe_pred is not None:
-        probes = corpus.filter(probe_pred)
+    over one corpus stream + a WindowGroupLimit top-k. The approximate
+    side reads the audited bucket index from ``lsh_index_frame`` (it IS
+    the stored index being audited; rebuilding it per audit run
+    mis-models the lifecycle), drops never-probed buckets map-side by a
+    broadcast semi join on the panel's own (tbl, bucket) keys, and
+    scores through the flagged one-exchange kernel. The comparison is a
+    semi join at top-k volume. Keep the panel fixed-size (it rides a
+    broadcast nested-loop by design); the corpus side scales freely."""
+    probes = corpus.filter(probe_pred)
     # the hit semi join and the n_exact denominator both read the brute-force scan
     exact = shared(cosine_topk(corpus, probes, id_col, vec_col, k).select("query_id", "cand_id"))
-    if probe_pred is not None:
-        buckets = lsh_index_frame(
-            corpus, id_col, vec_col, n_tables, n_planes, dim
-        )
-        # probed (tbl, bucket) keys from the panel's own index rows —
-        # one tiny Arrow stage over the filtered panel scan, the price
-        # of dropping never-probed buckets map-side before the exchange
-        probe_keys = (
-            lsh_build_buckets(
-                probes, id_col, vec_col, n_tables, n_planes, dim
-            )
-            .select("tbl", "bucket")
-            .distinct()
-        )
-        # probe_pred is written over ``id_col`` (it also filters the
-        # corpus for the exact side)
-        scored = _lsh_flagged_scores(
-            buckets.join(F.broadcast(probe_keys), ["tbl", "bucket"], "left_semi"),
-            probe_pred,
-            pred_col=id_col,
-        )
-        approx = _query_topk(scored, k, dense=True).select("query_id", "cand_id")
-    else:
-        approx = lsh_ann_topk_probe_table(
-            corpus, probes, id_col, vec_col, k, n_tables, n_planes, dim,
-            prune_to_probed=True,
-        ).select("query_id", "cand_id")
+    buckets = lsh_index_frame(corpus, id_col, vec_col, n_tables, n_planes, dim)
+    # probed (tbl, bucket) keys from the panel's own index rows — one
+    # tiny Arrow stage over the filtered panel scan, the price of
+    # dropping never-probed buckets map-side before the exchange
+    probe_keys = (
+        lsh_build_buckets(probes, id_col, vec_col, n_tables, n_planes, dim)
+        .select("tbl", "bucket")
+        .distinct()
+    )
+    # probe_pred is written over ``id_col`` (it also filters the corpus
+    # for the exact side)
+    scored = _lsh_flagged_scores(
+        buckets.join(F.broadcast(probe_keys), ["tbl", "bucket"], "left_semi"),
+        probe_pred,
+        pred_col=id_col,
+    )
+    approx = _query_topk(scored, k, dense=True).select("query_id", "cand_id")
     hits = exact.join(approx, ["query_id", "cand_id"], "left_semi")
     n_exact = exact.groupBy("query_id").agg(F.count("*").alias("n_exact"))
     n_hits = hits.groupBy("query_id").agg(F.count("*").alias("n_hits"))

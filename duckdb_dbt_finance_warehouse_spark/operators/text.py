@@ -814,7 +814,6 @@ def inverted_index(
     id_col: str,
     text_col: str,
     block_size: int = 1024,
-    postings_as_string: bool = False,
 ) -> DataFrame:
     """Materialize a BLOCK-PARTITIONED inverted index: for every term,
     the sorted posting list of documents containing it, split into
@@ -832,11 +831,6 @@ def inverted_index(
     worst aggregation group is block_size rows — skew-capped by
     construction.
 
-    ``postings_as_string=True`` emits the posting list as a
-    comma-joined string instead of ``array<long>`` — a hashable scalar
-    for harnesses whose canonicalizers can't digest array columns
-    (identical information; real index consumers keep the array).
-
     The (doc, term) dedup is per-ROW (``array_distinct`` before the
     explode — a doc's term set is a pure function of its text, same
     r9 move as fuzzy_string_join's gram arrays), so the index build
@@ -852,7 +846,7 @@ def inverted_index(
         .select(id_col, F.explode("_t").alias("tok"))
         .filter(F.col("tok") != "")
     )
-    out = (
+    return (
         toks.withColumn("block", F.expr(f"{id_col} div {block_size}"))
         .groupBy("tok", "block")
         .agg(
@@ -861,9 +855,6 @@ def inverted_index(
         )
         .select("tok", "block", "n_docs", "postings")
     )
-    if postings_as_string:
-        out = out.withColumn("postings", F.array_join("postings", ","))
-    return out
 
 
 def lexical_drift(

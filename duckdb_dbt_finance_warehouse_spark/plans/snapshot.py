@@ -50,8 +50,6 @@ def scd2_merge(
     old: DataFrame | None,
     new: DataFrame,
     unique_key: str,
-    check_col: str = "record_hash",
-    batch_ts_col: str = "ingested_at",
     run_ts=None,
 ) -> DataFrame:
     """Pure-DataFrame SCD2 merge; returns the full new snapshot state.
@@ -60,7 +58,7 @@ def scd2_merge(
     the incoming batch is EMPTY (no rows -> no batch max to close at).
     Without it an empty batch returns the state unchanged rather than
     silently closing rows at NULL (which would leave them open forever)."""
-    new = new.withColumn("dbt_valid_from", F.col(batch_ts_col)).withColumn(
+    new = new.withColumn("dbt_valid_from", F.col("ingested_at")).withColumn(
         "dbt_valid_to", F.lit(None).cast("timestamp")
     )
     # A NULL natural key matches NOTHING in the full-outer merge (NULL
@@ -72,13 +70,13 @@ def scd2_merge(
     # both sides and yields the hard-delete close timestamp below.
     key = F.col(unique_key)
     guards = new.select(
-        F.col(batch_ts_col).alias("_ts"), key.isNull().alias("_new_null"),
+        F.col("ingested_at").alias("_ts"), key.isNull().alias("_new_null"),
         F.lit(False).alias("_open_null"),
     )
     if old is not None:
         guards = guards.unionByName(
             old.filter(F.col("dbt_valid_to").isNull() & key.isNull()).select(
-                F.lit(None).cast(new.schema[batch_ts_col].dataType).alias("_ts"),
+                F.lit(None).cast(new.schema["ingested_at"].dataType).alias("_ts"),
                 F.lit(False).alias("_new_null"),
                 F.lit(True).alias("_open_null"),
             )
@@ -122,9 +120,9 @@ def scd2_merge(
     )
     in_old = F.col(f"o.{unique_key}").isNotNull()
     kind = change_type(
-        in_old, F.col(f"n.{unique_key}").isNotNull(), F.col(f"o.{check_col}"), F.col(f"n.{check_col}")
+        in_old, F.col(f"n.{unique_key}").isNotNull(), F.col("o.record_hash"), F.col("n.record_hash")
     )
-    closed_at = F.when(kind == "changed", F.col(f"n.{batch_ts_col}")).when(
+    closed_at = F.when(kind == "changed", F.col("n.ingested_at")).when(
         kind == "removed", F.lit(batch_ts).cast("timestamp")
     )
 
@@ -155,12 +153,10 @@ def run_snapshot(ctx: Context, m: Model) -> None:
     ctx.wh.write(merged, m.schema, m.name)
 
 
-def snapshot_diff(
-    old: DataFrame, new: DataFrame, key_cols: list[str], hash_col: str = "record_hash"
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key_cols: list[str]) -> DataFrame:
     """Audit diff of two table states — the inspection half of the SCD2
     merge above: which keys were added / removed / changed between two
-    snapshots (per-row content identity via ``hash_col``, P6). It
+    snapshots (per-row content identity via ``record_hash``, P6). It
     classifies with the merge's own ``change_type``, so the
     ``x_snapshot_diff`` oracle also pins the rule the warehouse merge
     runs.
@@ -170,10 +166,10 @@ def snapshot_diff(
     unchanged are dropped (the interesting output is the delta, and at
     100 TB the unchanged set is the overwhelming majority)."""
     o = old.select(
-        *key_cols, F.col(hash_col).alias("_old_h"), F.lit(True).alias("_in_old")
+        *key_cols, F.col("record_hash").alias("_old_h"), F.lit(True).alias("_in_old")
     )
     n = new.select(
-        *key_cols, F.col(hash_col).alias("_new_h"), F.lit(True).alias("_in_new")
+        *key_cols, F.col("record_hash").alias("_new_h"), F.lit(True).alias("_in_new")
     )
     j = o.join(n, key_cols, "full_outer")
     change = change_type(

@@ -9,10 +9,11 @@ Replicates the reference loader's observable behavior
   into the existing table, or create it from this batch when missing
   (S3+S4).
 
-Deviation from the reference (deliberate): schemas are EXPLICIT
-(StructType), not inferred — inference differences across engines are a
-correctness hazard (SURVEY §1.3). Pass ``schema=None`` to opt into
-header+inferSchema for ad-hoc use.
+Deviation from the reference (deliberate): the five reference feeds
+load under EXPLICIT schemas (``RAW_SCHEMAS``), not inferred ones —
+inference differences across engines are a correctness hazard (SURVEY
+§1.3). Any other CSV (``runner.py ingest`` loads every ``*.csv`` in a
+directory) falls back to header+inferSchema.
 """
 
 from __future__ import annotations
@@ -112,10 +113,8 @@ def ingest_csv(
     wh: Warehouse,
     csv_path: str,
     table: str,
-    schema: T.StructType | None = None,
     mode: str = "replace",
     batch_ts: datetime | None = None,
-    raw_schema: str = "raw",
 ) -> DataFrame:
     """Read one CSV into ``raw.<table>`` with lineage columns.
     ``replace`` overwrites; ``append`` inserts, and a table that does
@@ -130,11 +129,10 @@ def ingest_csv(
     if mode not in ("replace", "append"):
         raise ValueError(f"unknown mode {mode!r}")
     spark: SparkSession = wh.spark
-    if schema is None:
-        schema = RAW_SCHEMAS.get(table)
+    schema = RAW_SCHEMAS.get(table)
     reader = spark.read.option("header", True)
     reader = reader.schema(schema) if schema is not None else reader.option("inferSchema", True)
     df = reader.csv(csv_path).withColumns(lineage_columns(csv_path, batch_ts))
-    append = mode == "append" and wh.exists(raw_schema, table)
-    wh.write(df, raw_schema, table, mode="append" if append else "overwrite")
-    return wh.read(raw_schema, table)
+    append = mode == "append" and wh.exists("raw", table)
+    wh.write(df, "raw", table, mode="append" if append else "overwrite")
+    return wh.read("raw", table)

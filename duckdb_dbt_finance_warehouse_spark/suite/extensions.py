@@ -825,16 +825,15 @@ def x_ann_lsh_probe_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves straight from the memoized stored bucket index
     (similarity.lsh_index_frame + the flagged single-frame kernel,
     probe_pred): ONE (tbl, bucket) exchange, probes split from
-    candidates inside the kernel — the cogroup's second exchange and
-    the probe side's own Arrow hash stage are both gone (its hashes
-    already live in the index). No probe collect, no cross product;
+    candidates inside the kernel — no second exchange and no Arrow
+    hash stage of its own on the probe side (its hashes already live
+    in the index). No probe collect, no cross product;
     multi-table collisions dedup by exact DISTINCT after the rank
     filter (quantized scores are identical across collisions).
     n_planes is SIZED TO THE CORPUS via similarity.lsh_planes_for
     (expected bucket ~128 vectors — parquet-footer row count, no data
     read), so serving cost per probe stays flat as the corpus grows;
-    the oracle pins the same per-sf plane literals. A truly held-out
-    probe table still takes the two-frame cogroup path."""
+    the oracle pins the same per-sf plane literals."""
     emb = load_testdata(spark, sf_dir, "embeddings")["embeddings"]
     return similarity.lsh_ann_topk_probe_table(
         emb, probe_pred=F.col("cand_id") % 2 == 0, k=5,
@@ -1173,8 +1172,7 @@ def x_semantic_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus inside the kernel, contamination-sized output; planes sized
     to the corpus (similarity.lsh_planes_for) so bucket volume — and
     per-eval-example cost — stays flat as the corpus grows, with the
-    per-sf oracle pinning the same plane literals. A truly held-out
-    eval frame takes the two-frame cogroup path instead."""
+    per-sf oracle pinning the same plane literals."""
     emb = load_testdata(spark, sf_dir, "embeddings")["embeddings"]
     return similarity.semantic_decontaminate(
         emb, eval_pred=F.col("cand_id") % 25 == 0,
@@ -3952,16 +3950,11 @@ def x_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/text.inverted_index): sorted posting lists per (term,
     1024-doc block) — state capped at block_size entries per array, so
     stopword-grade terms never concentrate in one task.  The judged
-    entry emits postings comma-joined (the driver canonicalizer can't
-    hash array columns — r7 red); the array form stays the operator
-    default."""
+    entry comma-joins the operator's ``array<long>`` postings (the
+    driver canonicalizer can't hash array columns — r7 red)."""
     return text.inverted_index(
-        _docs(spark, sf_dir),
-        "doc_id",
-        "text",
-        block_size=1024,
-        postings_as_string=True,
-    )
+        _docs(spark, sf_dir), "doc_id", "text", block_size=1024
+    ).withColumn("postings", F.array_join("postings", ","))
 
 
 @query(
@@ -4229,8 +4222,7 @@ def x_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-integer ratio both engines render identically."""
     li = load_testdata(spark, sf_dir, "lineitem")["lineitem"]
     return graph.triangle_stats(
-        graph.cooccurrence_pairs_frame(li, "l_orderkey", "l_partkey"),
-        _edges_prepared=True,
+        graph.cooccurrence_pairs_frame(li, "l_orderkey", "l_partkey")
     )
 
 
@@ -4266,7 +4258,6 @@ def x_triangle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         graph.cooccurrence_pairs_frame(li, "l_orderkey", "l_partkey"),
         k=4,
         salt="tri",
-        _edges_prepared=True,
     )
 
 
@@ -4379,7 +4370,6 @@ def x_triangle_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
         graph.cooccurrence_pairs_frame(li, "l_orderkey", "l_partkey"),
         k=4,
         salt="tri",
-        _edges_prepared=True,
     )
 
 

@@ -81,11 +81,14 @@ def test_touched_entries_are_windowed_or_deferred():
 def test_rotation_lists_are_well_formed():
     from duckdb_dbt_finance_warehouse_spark.suite import (
         DEFERRED_NEXT_ROUND,
+        DRAINED_THIS_ROUND,
         DRIVER_PRIORITY,
         REGISTRY,
     )
 
     assert len(DRIVER_PRIORITY) == 50
+    # the drain leads the window
+    assert DRIVER_PRIORITY[: len(DRAINED_THIS_ROUND)] == DRAINED_THIS_ROUND
     assert len(set(DRIVER_PRIORITY)) == 50, "duplicate window slots"
     unknown = [n for n in DRIVER_PRIORITY + DEFERRED_NEXT_ROUND if n not in REGISTRY]
     assert not unknown, f"rotation names not in REGISTRY: {unknown}"

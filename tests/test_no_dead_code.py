@@ -12,6 +12,11 @@ function importable without anything calling it. A function registered
 with the suite's ``@query`` decorator is used by the registry; dunder
 methods are called by Python itself.
 
+A second rule walks the same definitions: no package function or method
+takes a parameter whose name starts with ``_``. Such a parameter is a
+private switch on a callable that has callers — a second path each of
+them must know about; an internal path belongs in a private helper.
+
 A method name such as ``read`` or ``append`` is also an attribute of
 many other objects, so a method counts as referenced only from its
 defining module or from a file that can hold an instance of its class:
@@ -60,22 +65,31 @@ def _registered(fn: ast.AST) -> bool:
     return False
 
 
-def _definitions() -> list[tuple[str, str | None, str]]:
-    """(name, defining class or None, 'module.py:line') for every
+def _walk() -> list[tuple[ast.AST, str | None, str]]:
+    """(node, defining class or None, 'module.py:line') for every
     top-level function and class, and every method of a top-level
     class, in the package."""
-    defs = []
+    nodes = []
     funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     for path in _py_files(PKG):
         tree = _parse(path)
         found = [(n, None) for n in tree.body if isinstance(n, (*funcs, ast.ClassDef))]
         for cls in (n for n in tree.body if isinstance(n, ast.ClassDef)):
             found.extend((n, cls.name) for n in cls.body if isinstance(n, funcs))
-        for fn, cls_name in found:
-            if _registered(fn) or (fn.name.startswith("__") and fn.name.endswith("__")):
-                continue
-            defs.append((fn.name, cls_name, f"{os.path.relpath(path, ROOT)}:{fn.lineno}"))
-    return defs
+        for node, cls_name in found:
+            nodes.append((node, cls_name, f"{os.path.relpath(path, ROOT)}:{node.lineno}"))
+    return nodes
+
+
+def _definitions() -> list[tuple[str, str | None, str]]:
+    """(name, defining class or None, 'module.py:line') for every
+    definition ``_walk`` finds that something must reference: not a
+    registered suite entry, not a dunder method."""
+    return [
+        (fn.name, cls_name, where)
+        for fn, cls_name, where in _walk()
+        if not (_registered(fn) or (fn.name.startswith("__") and fn.name.endswith("__")))
+    ]
 
 
 def _holders() -> dict[str, set[str]]:
@@ -134,3 +148,22 @@ def test_every_package_function_is_referenced():
         if not used(name, cls, where)
     )
     assert not dead, "definitions no code references — delete them: " + "; ".join(dead)
+
+
+def test_no_package_function_takes_a_private_parameter():
+    private = sorted(
+        f"{f'{cls}.' if cls else ''}{fn.name}({a.arg}) ({where})"
+        for fn, cls, where in _walk()
+        if not isinstance(fn, ast.ClassDef)
+        for a in (
+            *fn.args.posonlyargs,
+            *fn.args.args,
+            *fn.args.kwonlyargs,
+            *filter(None, (fn.args.vararg, fn.args.kwarg)),
+        )
+        if a.arg.startswith("_")
+    )
+    assert not private, (
+        "private switches on package functions — move the internal path "
+        "into a private helper: " + "; ".join(private)
+    )

@@ -229,10 +229,10 @@ def test_lsh_ann_matches_exact_cosines_and_has_recall(spark):
 
 
 def test_probe_table_ann_matches_driver_probe_paths(spark):
-    """The serving variants (probe side = DataFrame, cogroup pairing,
-    no driver collect of probes) must return exactly the rows of the
-    driver-probe paths on the same probe set — same candidates, same
-    quantized scores, same ranks."""
+    """The serving variants (no driver collect of probes: IVF's
+    cogrouped probe frame, LSH's indexed-subset panel) must return
+    exactly the rows of the driver-probe paths on the same probe set —
+    same candidates, same quantized scores, same ranks."""
     from duckdb_dbt_finance_warehouse_spark.sources.tables import load_testdata
 
     emb = load_testdata(spark, SF, "embeddings")["embeddings"]
@@ -246,7 +246,12 @@ def test_probe_table_ann_matches_driver_probe_paths(spark):
 
     lsh_old = sorted(map(tuple, similarity.lsh_ann_topk(emb, probes, k=5).collect()))
     lsh_new = sorted(
-        map(tuple, similarity.lsh_ann_topk_probe_table(emb, probes, k=5).collect())
+        map(
+            tuple,
+            similarity.lsh_ann_topk_probe_table(
+                emb, F.col("cand_id") % 7 == 0, k=5
+            ).collect(),
+        )
     )
     assert lsh_old == lsh_new and lsh_new
 
@@ -400,7 +405,7 @@ def test_lsh_incremental_merged_equals_rebuild(spark):
     emb = load_testdata(spark, SF, "embeddings")["embeddings"]
     base = emb.filter(F.col("vec_id") % 4 != 1)
     batch = emb.filter(F.col("vec_id") % 4 == 1)
-    probes = emb.filter(F.col("vec_id") % 25 == 0)
+    probes = F.col("cand_id") % 25 == 0
     inc = similarity.lsh_incremental_topk(
         base, batch, probes, k=5, n_tables=4, n_planes=4, dim=64
     )
@@ -429,7 +434,7 @@ def test_lsh_incremental_warehouse_append_lifecycle(spark, tmp_path):
     emb = load_testdata(spark, SF, "embeddings")["embeddings"]
     base = emb.filter(F.col("vec_id") % 4 != 1)
     batch = emb.filter(F.col("vec_id") % 4 == 1)
-    probes = emb.filter(F.col("vec_id") % 25 == 0)
+    probes = F.col("cand_id") % 25 == 0
     wh = Warehouse(spark, str(tmp_path))
     wh.write(
         similarity.lsh_build_buckets(base, n_tables=4, n_planes=4, dim=64),
@@ -454,8 +459,10 @@ def test_lsh_incremental_warehouse_append_lifecycle(spark, tmp_path):
     buckets = wh.read("index", "lsh_buckets").select(
         "tbl", "bucket", "cand_id", "_vec"
     )
-    served = similarity.lsh_probe_buckets_topk(
-        buckets, probes, k=5, n_tables=4, n_planes=4, dim=64
+    # serve the read-back index exactly as the operators serve theirs:
+    # the flagged kernel, then the dense top-k window
+    served = similarity._query_topk(
+        similarity._lsh_flagged_scores(buckets, probes), 5, dense=True
     )
     got = sorted(map(tuple, served.collect()))
     rebuilt = similarity.lsh_ann_topk_probe_table(
@@ -467,8 +474,8 @@ def test_lsh_incremental_warehouse_append_lifecycle(spark, tmp_path):
 
 def test_driver_probe_collects_are_capped(spark, monkeypatch):
     """The small-probe serving paths collect query vectors to the
-    driver; past MAX_QUERY_COLLECT they must refuse and point at the
-    cogrouped table-probe variants (and the probe job itself is
+    driver; past MAX_QUERY_COLLECT they must refuse and point at
+    table-probe operators that exist (and the probe job itself is
     limit(cap+1), never the runaway collect)."""
     import pytest
 
@@ -480,6 +487,10 @@ def test_driver_probe_collects_are_capped(spark, monkeypatch):
         similarity.ivf_ann_topk(emb, emb.limit(10))
     with pytest.raises(ValueError, match="lsh_ann_topk_probe_table"):
         similarity.lsh_ann_topk(emb, emb.limit(10))
+    table_ops = ("ivf_ann_topk_probe_table", "lsh_ann_topk_probe_table")
+    assert all(callable(getattr(similarity, op, None)) for op in table_ops)
+    with pytest.raises(ValueError, match=" / ".join(table_ops)):
+        similarity.cosine_topk(emb, emb.limit(10))
 
 
 def test_kmeans_seed_collect_capped(spark, monkeypatch):
@@ -2184,9 +2195,10 @@ def test_inverted_index_blocks_cap_posting_arrays(spark):
     assert common[2]["postings"] == [8, 9]
     rare = [r for r in out if r["tok"] == "rare"]
     assert len(rare) == 1 and rare[0]["postings"] == [7]
-    # the driver-facing scalar form: same information, comma-joined
-    s = inverted_index(
-        df, "doc_id", "text", block_size=4, postings_as_string=True
+    # the driver-facing scalar form x_inverted_index emits: same
+    # information, comma-joined
+    s = inverted_index(df, "doc_id", "text", block_size=4).withColumn(
+        "postings", F.array_join("postings", ",")
     )
     assert dict(s.dtypes)["postings"] == "string"
     s0 = {(r["tok"], r["block"]): r["postings"] for r in s.collect()}
@@ -2378,12 +2390,12 @@ def test_cooccurrence_and_triangles_known_graph(spark):
 
 
 def test_triangle_stats_default_routes_closing_join_by_count(spark, monkeypatch):
-    """The default closing-join strategy (broadcast_closing=None) must
-    MEASURE the oriented edge count against MAX_CENSUS_EDGES: a direct
-    triangle_stats call on a past-budget graph degrades to the
-    shuffle_hash closing join instead of attempting the broadcast (r11
-    VERDICT #4 — the old True default trusted the caller). Pinned by
-    shrinking the budget below a K4 graph and reading the plan."""
+    """The closing-join strategy must MEASURE the oriented edge count
+    against MAX_CENSUS_EDGES, read at call time: a triangle_stats call
+    on a past-budget graph degrades to the shuffle_hash closing join
+    instead of attempting the broadcast (r11 VERDICT #4 — the old True
+    default trusted the caller). Pinned by shrinking the budget below
+    a K4 graph and reading the plan."""
     from duckdb_dbt_finance_warehouse_spark.operators import graph
 
     rows = [(1, x) for x in "ABCD"]
@@ -2485,14 +2497,14 @@ def test_triangle_sample_unbiased_form_and_determinism(spark):
         graph.triangle_sample_stats(pairs, k=3)
 
 
-def test_triangle_auto_routes_census_vs_doulion(spark):
+def test_triangle_auto_routes_census_vs_doulion(spark, monkeypatch):
     """triangle_stats_auto (one entry point): within the WEDGE bound
-    (the census cost driver — r13 routing) it must return the EXACT
-    census values under method='census'; past the bound it must return
-    the DOULION estimate (n_triangles_sampled·k³, the unbiased
-    scale-up) under method='doulion_k<k>' with a NULL clustering
-    coefficient; force_census overrides the bound (census opt-in,
-    never silent)."""
+    MAX_CENSUS_WEDGES, read at call time (the census cost driver — r13
+    routing), it must return the EXACT census values under
+    method='census'; past the bound it must return the DOULION estimate
+    (n_triangles_sampled·k³, the unbiased scale-up) under
+    method='doulion_k<k>' with a NULL clustering coefficient; a census
+    past the broadcast budget still counts exactly."""
     from duckdb_dbt_finance_warehouse_spark.operators import graph
 
     rows = [(1, x) for x in "ABCDE"] + [(2, x) for x in "ABC"]
@@ -2506,44 +2518,48 @@ def test_triangle_auto_routes_census_vs_doulion(spark):
     assert auto["n_triangles_est"] == exact["n_triangles"]
     assert auto["clustering_coeff"] == exact["clustering_coeff"]
 
+    census_dtypes = dict(graph.triangle_stats_auto(pairs).dtypes)
     sampled = graph.triangle_sample_stats(pairs, k=4).first()
-    routed_df = graph.triangle_stats_auto(pairs, max_census_wedges=0, k=4)
+    monkeypatch.setattr(graph, "MAX_CENSUS_WEDGES", 0)
+    routed_df = graph.triangle_stats_auto(pairs, k=4)
     # both routes must share ONE schema (ADVICE r7: the sampled path's
     # lit(n_edges) inferred IntegerType; census counts are LongType)
-    assert dict(routed_df.dtypes) == dict(
-        graph.triangle_stats_auto(pairs).dtypes
-    )
+    assert dict(routed_df.dtypes) == census_dtypes
     routed = routed_df.first()
     assert routed["method"] == "doulion_k4"
     assert routed["n_edges"] == exact["n_edges"]  # full count, pre-sampling
     assert routed["n_triangles_est"] == sampled["n_triangles_sampled"] * 64
     assert routed["clustering_coeff"] is None
 
-    forced = graph.triangle_stats_auto(
-        pairs, max_census_wedges=0, force_census=True,
-        # past the broadcast budget too: the forced census must degrade
-        # its closing join, never attempt the broadcast
-        max_census_edges=0,
-    ).first()
-    assert forced["method"] == "census"
-    assert forced["n_triangles_est"] == exact["n_triangles"]
+    # within the wedge bound but past the broadcast budget: the census
+    # must degrade its closing join, never attempt the broadcast
+    monkeypatch.setattr(graph, "MAX_CENSUS_WEDGES", 400_000_000)
+    monkeypatch.setattr(graph, "MAX_CENSUS_EDGES", 0)
+    over_df = graph.triangle_stats_auto(pairs)
+    plan = over_df._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" not in plan
+    over = over_df.first()
+    assert over["method"] == "census"
+    assert over["n_triangles_est"] == exact["n_triangles"]
 
 
-def test_triangle_closing_join_broadcast_budget(spark):
+def test_triangle_closing_join_broadcast_budget(spark, monkeypatch):
     """r10 ADVICE (medium): 1/k of an unbounded graph is still
     unbounded, so the packed-long broadcast closing join must degrade
-    to shuffle_hash past the broadcast budget — on BOTH the sampled
-    path (survivor count over budget) and a force_census opt-in —
-    with bit-identical counts either way."""
+    to shuffle_hash past the broadcast budget MAX_CENSUS_EDGES — on
+    BOTH the census and the sampled path (survivor count over budget)
+    — with bit-identical counts either way."""
     from duckdb_dbt_finance_warehouse_spark.operators import graph
 
     rows = [(1, x) for x in "ABCDE"] + [(2, x) for x in "ABC"]
     df = spark.createDataFrame(rows, ["g", "item"])
     pairs = graph.cooccurrence_pairs(df, "g", "item")
 
-    # strategy flips the plan: broadcast build vs shuffled hash join
-    bcast = graph.triangle_stats(pairs, broadcast_closing=True)
-    shuf = graph.triangle_stats(pairs, broadcast_closing=False)
+    # the budget flips the plan: broadcast build vs shuffled hash join
+    bcast = graph.triangle_stats(pairs)
+    s_b = graph.triangle_sample_stats(pairs, k=4).first()
+    monkeypatch.setattr(graph, "MAX_CENSUS_EDGES", 0)
+    shuf = graph.triangle_stats(pairs)
     assert "BroadcastHashJoin" in bcast._jdf.queryExecution().executedPlan().toString()
     assert (
         "BroadcastHashJoin"
@@ -2551,10 +2567,9 @@ def test_triangle_closing_join_broadcast_budget(spark):
     )
     assert bcast.first() == shuf.first()
 
-    # standalone sampled path: explicit False == default (in-budget
-    # survivor count broadcasts) — values identical
-    s_b = graph.triangle_sample_stats(pairs, k=4).first()
-    s_s = graph.triangle_sample_stats(pairs, k=4, broadcast_closing=False).first()
+    # standalone sampled path: past-budget survivors == in-budget
+    # (broadcast) survivors — values identical
+    s_s = graph.triangle_sample_stats(pairs, k=4).first()
     assert s_b == s_s
 
 
@@ -3081,14 +3096,18 @@ def test_semantic_decontaminate_flags_planted_paraphrase(spark):
     ev = spark.createDataFrame(
         [(100, near), (101, evrow)], ["vec_id", "embedding"]
     )
+    # a held-out eval set joins the corpus frame and is marked by eval_pred
     out = {
         r["vec_id"]: r
         for r in similarity.semantic_decontaminate(
-            corpus, ev, threshold=0.9, n_tables=8, n_planes=2, dim=16
+            corpus.unionByName(ev), F.col("cand_id") >= 100,
+            threshold=0.9, n_tables=8, n_planes=2, dim=16,
         ).collect()
     }
     assert 7 in out and out[7]["max_cosine"] > 0.99
     assert 8 not in out
+    # eval examples are never reported as contaminated docs
+    assert not {100, 101} & set(out)
 
 
 def test_boilerplate_grams_finds_site_furniture(spark):
@@ -3149,9 +3168,8 @@ def test_ann_recall_audit_perfect_when_lsh_finds_all(spark):
         base[i % 4] = 1.0
         rows.append((i, [b + rnd.uniform(-0.05, 0.05) for b in base]))
     df = spark.createDataFrame(rows, ["vec_id", "embedding"])
-    probes = df.filter(F.col("vec_id") < 4)
     out = similarity.ann_recall_audit(
-        df, probes, k=3, n_tables=8, n_planes=2, dim=16
+        df, F.col("vec_id") < 4, k=3, n_tables=8, n_planes=2, dim=16
     ).collect()
     assert len(out) == 4
     for r in out:

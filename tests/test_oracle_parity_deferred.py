@@ -1,13 +1,15 @@
-"""Pytest-level oracle parity for the DEFERRED_NEXT_ROUND entries.
+"""Pytest-level oracle parity for the DEFERRED_NEXT_ROUND entries and
+the DRAINED_THIS_ROUND ones.
 
-The driver's 50-slot correctness window could not fit these this round
-(suite/__init__.py documents the drain schedule), so until their r7
+The driver's 50-slot correctness window could not fit the deferred
+entries this round, and the drained ones have not had their driver run
+yet (suite/__init__.py documents the drain schedule), so until their
 driver rows exist, this module pins each one with the SAME comparison
 the driver performs — Spark result vs DuckDB oracle at sf0.01, row
 count + column names + order-insensitive canonicalized values with
 columns sorted by name (``suite.parity``).  Independent, reproducible
-evidence instead of a builder's say-so; drops to a no-op once the list
-is drained.
+evidence instead of a builder's say-so; drops to a no-op once both lists
+are empty.
 """
 
 from __future__ import annotations
@@ -18,7 +20,11 @@ import duckdb
 import pytest
 
 from duckdb_dbt_finance_warehouse_spark.sources.tables import TESTDATA_TABLES
-from duckdb_dbt_finance_warehouse_spark.suite import DEFERRED_NEXT_ROUND, REGISTRY
+from duckdb_dbt_finance_warehouse_spark.suite import (
+    DEFERRED_NEXT_ROUND,
+    DRAINED_THIS_ROUND,
+    REGISTRY,
+)
 from duckdb_dbt_finance_warehouse_spark.suite.parity import compare
 
 SF_DIR = "/root/testdata/sf0.01"
@@ -37,7 +43,7 @@ def duck():
     con.close()
 
 
-@pytest.mark.parametrize("name", DEFERRED_NEXT_ROUND)
+@pytest.mark.parametrize("name", DRAINED_THIS_ROUND + DEFERRED_NEXT_ROUND)
 def test_deferred_entry_matches_oracle(name, spark, duck):
     spec = REGISTRY[name]
     sdf = spec.fn(spark, SF_DIR)

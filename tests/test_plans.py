@@ -529,18 +529,17 @@ def test_gram_verify_joins_never_broadcast_corpus_grams(spark):
 
 
 def test_bounded_probe_lsh_prunes_index_to_probed_buckets(spark):
-    """When the probe side is bounded by construction AND held out of
-    the index (the recall-audit panel), the corpus bucket stream must
-    be pre-filtered by a broadcast LEFT SEMI on the probed (tbl,
-    bucket) keys BEFORE the cogroup exchange — rows in never-probed
-    buckets are dropped map-side instead of riding a corpus-sized
-    shuffle. The table-sized probe path (x_ann_lsh_probe_table) must
-    NOT pay the semi join: its probes cover the key space. And an
-    INDEXED-SUBSET panel (x_semantic_decontaminate's standing eval
-    panel r9; x_ann_lsh_probe_table's serving panel r13) must take the
-    flagged single-exchange path: exactly one FlatMapGroupsInPandas
-    over the index stream, no cogroup, no semi join, no second Arrow
-    hash stage."""
+    """When the probe panel is bounded by construction (the
+    recall-audit panel), the index bucket stream must be pre-filtered
+    by a broadcast LEFT SEMI on the probed (tbl, bucket) keys BEFORE
+    the bucket exchange — rows in never-probed buckets are dropped
+    map-side instead of riding a corpus-sized shuffle. The table-sized
+    panels (x_ann_lsh_probe_table's serving panel,
+    x_semantic_decontaminate's standing eval panel) must NOT pay the
+    semi join — their probes cover the key space — and take the flagged
+    single-exchange path: exactly one FlatMapGroupsInPandas over the
+    index stream, no cogroup, no semi join, no second Arrow hash
+    stage."""
     p = plan_of(spark, "x_ann_recall_audit")
     assert "BroadcastHashJoin LeftSemi" in p
     assert "Left keys [2]: [tbl" in p

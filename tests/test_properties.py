@@ -453,13 +453,14 @@ def test_incremental_index_invariant_under_batching(spark, vals, mod):
     )
     assert got == sorted(map(tuple, full.collect()))
 
+    # every row probes: the panel is the whole indexed table
     inc_l = similarity.lsh_incremental_topk(
-        base, batch, probes, k=3, n_tables=2, n_planes=2, dim=4
+        base, batch, F.lit(True), k=3, n_tables=2, n_planes=2, dim=4
     )
     got_l = sorted(map(tuple, inc_l.collect()))
     release_persisted()
     full_l = similarity.lsh_ann_topk_probe_table(
-        df, probes, k=3, n_tables=2, n_planes=2, dim=4
+        df, F.lit(True), k=3, n_tables=2, n_planes=2, dim=4
     )
     assert got_l == sorted(map(tuple, full_l.collect()))
 
